@@ -8,13 +8,54 @@ deduplicated against the sink on a business key (the reference instead
 races a reader against a collection drop —
 dump_with_postgres.py:149-175 — which silently loses rows; we do not
 reproduce the race).
+
+``idempotent_append`` commits in two steps. The batch is written once,
+into a hidden ``<path>/_staging-<uuid>`` directory: Spark's file readers
+skip names that start with ``_``, so readers of ``path`` never see it.
+Its row count rides on that write as an ``Observation``. Only when the
+count is above zero are the staged data files renamed into ``path``
+(``k=v/`` subdirectories kept under ``partition_by``); the staging
+directory is deleted either way. A write of no rows would otherwise
+still leave an empty parquet file in the table. A crash between the
+renames leaves part of the batch committed and a stale staging
+directory that readers skip; the replay's anti-join on the key then
+appends only the rows still missing, so exactly-once holds through the
+key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import uuid
+
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..session import materialize
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, qualified Path) of ``path`` under the session's
+    Hadoop configuration."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(conf)
+    return fs, fs.makeQualified(p)
+
+
+def _promote(spark: SparkSession, fs, src, dest) -> None:
+    """Rename the data files under ``src`` into ``dest``, keeping the
+    directory layout; markers (``_SUCCESS``) and hidden files stay."""
+    for st in fs.listStatus(src):
+        name = st.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        target = spark._jvm.org.apache.hadoop.fs.Path(dest, name)
+        if st.isDirectory():
+            fs.mkdirs(target)
+            _promote(spark, fs, st.getPath(), target)
+        elif not fs.rename(st.getPath(), target):
+            raise OSError(f"could not move {st.getPath()} to {target}")
 
 
 def append_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -42,24 +83,37 @@ def idempotent_append(
 ) -> int:
     """Append only rows whose ``keys`` are not already in the sink.
 
-    Left-anti join against the existing table (keys-only scan: column
-    pruning means we read just the key columns of the sink). This is the
+    Left-anti join against the existing table's key columns, read with
+    their types from ``df`` (no schema-inference job). This is the
     Spark-idiomatic replacement for the reference's delete-after-load
     bookkeeping (bpi_crawler.py:37-41): retries and replays are safe
-    because the second attempt appends zero rows. Returns rows written.
+    because the second attempt appends zero rows. The batch runs once:
+    one staged write, then a rename commit (see the module docstring).
+    Returns rows written.
+
+    A table that exists but cannot be read raises; it is never taken
+    for an empty one.
     """
-    try:
-        existing = spark.read.parquet(path).select(*keys)
-    except Exception:
-        existing = None
+    fs, root = _hadoop_path(spark, path)
+    existed = fs.exists(root)
     fresh = df.dropDuplicates(keys)
-    if existing is not None:
+    if existed:
+        existing = spark.read.schema(df.select(*keys).schema).parquet(path)
         fresh = fresh.join(existing, on=keys, how="left_anti")
-    fresh = fresh.persist()
-    n = fresh.count()
-    if n:
-        append_parquet(fresh, path, partition_by)
-    fresh.unpersist()
+    obs = Observation()
+    fresh = fresh.observe(obs, F.count(F.lit(1)).alias("rows"))
+    staging = spark._jvm.org.apache.hadoop.fs.Path(root, f"_staging-{uuid.uuid4().hex}")
+    n = 0
+    try:
+        append_parquet(fresh, staging.toString(), partition_by)
+        n = obs.get["rows"]
+        if n:
+            _promote(spark, fs, staging, root)
+    finally:
+        fs.delete(staging, True)
+        # a first append of no rows leaves no table behind
+        if not existed and fs.exists(root) and not fs.listStatus(root):
+            fs.delete(root, False)
     return n
 
 
@@ -81,11 +135,14 @@ def merge_upsert(
     Returns the resulting row count.
     """
     batch = df.dropDuplicates(keys)
-    try:
+    fs, root = _hadoop_path(spark, path)
+    if fs.exists(root):
+        # a read error raises: overwriting with the batch alone would
+        # drop every existing row
         existing = spark.read.parquet(path)
         keep = existing.join(batch.select(*keys), on=keys, how="left_anti")
         merged = keep.unionByName(batch)
-    except Exception:
+    else:
         merged = batch
     # localCheckpoint truncates lineage so overwriting the path we just
     # read from cannot re-trigger a scan of the overwritten files

@@ -96,12 +96,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def read_json_payloads(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Read a directory of raw JSON payload files with a declared schema
-    (the batch stand-in for the reference's HTTP poll, SURVEY.md §2.1 S1)."""
-    return spark.read.schema(schema).json(path)
-
-
 def read_csv(
     spark: SparkSession,
     path: str,

@@ -83,19 +83,6 @@ def check_precomputed_params(df: DataFrame, expected: dict, op: str) -> None:
             )
 
 
-def _hash_params(n: int, seed: int = 42) -> list[tuple[int, int]]:
-    """n (a, b) pairs for h_i(x) = (a*x + b) mod p, reproducible."""
-    params = []
-    state = seed
-    for _ in range(n):
-        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
-        a = (state | 1) % _MERSENNE_P
-        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
-        b = state % _MERSENNE_P
-        params.append((a, b))
-    return params
-
-
 def _gate_corpus_size(df: DataFrame, cap: int | None, op: str, scale_alt: str) -> None:
     """Refuse an explicitly-quadratic baseline above ``cap`` rows.
 

@@ -2,7 +2,7 @@
 ``documents(doc_id, text, lang, source, n_chars)``.
 
 All pure Column expressions (codegen'd, shuffle-free per row):
-tokenization, token counting (whitespace + a BPE-ish regex splitter),
+tokenization, whitespace token counting,
 quality scoring (length / punctuation / stopword / repetition ratios),
 a rolling-hash document fingerprint, and an n-gram-profile language-ID
 heuristic.
@@ -28,16 +28,6 @@ def tokenize(col: Column | str) -> Column:
     """Whitespace tokens of the lowercased text (array<string>)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(F.split(F.lower(c), r"\s+"), lambda t: t != "")
-
-
-def bpe_ish_tokens(col: Column | str) -> Column:
-    """Sub-word-ish tokens: split on whitespace AND punctuation
-    boundaries (the regex a BPE pre-tokenizer applies before merges)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(
-        F.split(F.lower(c), r"[\s\p{Punct}]+"),
-        lambda t: t != "",
-    )
 
 
 def token_count(col: Column | str) -> Column:

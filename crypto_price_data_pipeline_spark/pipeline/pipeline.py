@@ -28,10 +28,14 @@ def run_pipeline(
 
     Returns the enriched DataFrame in the reference's 16-column sink
     order (bpi_crawler.py:172). If ``sink`` (a callable df→None) is
-    given, the gate is enforced on the sink's own action — single pass,
-    fail-closed (ValidationError raised after the write completes but
-    before the caller proceeds; pair with idempotent_append so a failed
-    batch can be retried safely).
+    given, the gate's metrics ride on the sink's own action, so the
+    batch is computed once. The order is write, then check: the sink
+    commits every row, bad ones included, and only then does
+    ``check_observation`` raise ``ValidationError``. This path is not
+    fail-closed; the reference validates before it loads
+    (bpi_crawler.py:214), and staging the write until the gate passes is
+    ROADMAP direction 5. Without a sink, the gate runs its own action
+    and raises before anything is returned.
     """
     enriched = join_idr_rate(flatten_payload(payloads, now=now), fx_rates)
     out = enriched.select(*ENRICHED_COLUMNS)

@@ -12,12 +12,53 @@ scales: the dimension is tiny, so the join is a broadcast hash join with
 no shuffle of the (huge) fact side. The multiplication
 ``usd_rate × fx_rate`` happens engine-side (the reference delegated it
 to the API).
+
+The dimension is read once per ``fx_rates`` DataFrame object: the first
+join against a frame materializes its ``(from_ccy, to_ccy)`` slice, and
+every later join against the same object reads that snapshot instead of
+re-evaluating the caller's plan. A streaming ingest joins one rates frame
+per trigger, and when that frame is a Python-built dimension
+(``createDataFrame`` from a list), re-scanning it cost more CPU than the
+trigger's own snapshots. The snapshot is what the frame held on first
+use; to pick up new rates, pass a new DataFrame. The memo holds its key
+weakly: when the caller drops the frame, the entry and its materialized
+blocks go with it. A streaming ``fx_rates`` is never memoized.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialize
+
+# fx_rates frame -> {(from_ccy, to_ccy): materialized (rate_date, rate) slice};
+# foreachBatch calls of concurrent streams may share one frame, hence the lock
+_SLICES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SLICES_LOCK = threading.Lock()
+
+
+def _rate_slice(fx_rates: DataFrame, from_ccy: str, to_ccy: str) -> DataFrame:
+    """The ``(rate_date, rate)`` rows of one currency pair, materialized
+    on first use of ``fx_rates`` and reused for the life of that object.
+
+    ``materialize``, not ``cache()``: a cached plan is registered with the
+    session's cache manager, where any query with a matching plan picks it
+    up, and it stays there until someone unpersists it.
+    """
+    dim = fx_rates.where(
+        (F.col("from_ccy") == from_ccy) & (F.col("to_ccy") == to_ccy)
+    ).select("rate_date", "rate")
+    if fx_rates.isStreaming:
+        return dim
+    with _SLICES_LOCK:
+        slices = _SLICES.setdefault(fx_rates, {})
+        if (from_ccy, to_ccy) not in slices:
+            slices[(from_ccy, to_ccy)] = dim.transform(materialize)
+        return slices[(from_ccy, to_ccy)]
 
 
 def join_idr_rate(
@@ -29,10 +70,10 @@ def join_idr_rate(
     """Attach ``bpi_idr_rate_float = bpi_usd_rate_float * rate`` for the
     rate row matching (pair, event date). Left join: a missing rate row
     yields NULL (caught by the validation gate), never a dropped snapshot.
+    The rates are a snapshot of ``fx_rates`` taken on its first use (see
+    :func:`_rate_slice`).
     """
-    dim = fx_rates.where(
-        (F.col("from_ccy") == from_ccy) & (F.col("to_ccy") == to_ccy)
-    ).select("rate_date", "rate")
+    dim = _rate_slice(fx_rates, from_ccy, to_ccy)
     return (
         enriched.join(
             F.broadcast(dim),

@@ -45,8 +45,8 @@ STRING_COLS = [
 
 
 class ValidationError(ValueError):
-    """Raised when a batch fails the expectation gate (pipeline halts
-    before the sink, matching the reference's task ordering)."""
+    """Raised when a batch fails the expectation gate. With a sink, it is
+    raised after the sink's write (see ``run_pipeline``)."""
 
 
 def _bad_format(col: str):
@@ -59,7 +59,7 @@ def expectation_gate(df: DataFrame) -> tuple[DataFrame, Observation]:
 
     Returns (observed_df, observation). Call :func:`check_observation`
     after the first action on ``observed_df`` (e.g. the sink write) to
-    enforce the gate — fail-closed, but single-pass.
+    enforce the gate — single-pass, but that action has already run.
     """
     schema = {f.name: f.dataType for f in df.schema.fields}
     for c in FLOAT_COLS:

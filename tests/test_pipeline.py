@@ -3,7 +3,16 @@ validate (FIXTURES.md §1-3, reference semantics per SURVEY.md §1.3)."""
 
 from __future__ import annotations
 
+import datetime as dt
+import gc
+import os
+import sys
+import threading
+import weakref
+
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from crypto_price_data_pipeline_spark.pipeline import (
@@ -76,6 +85,14 @@ def test_bad_timestamp_fails_gate_not_runtime(spark):
         run_pipeline(payloads, _rates(spark), now="2022-12-06 14:00:03")
 
 
+def _files(path):
+    return sorted(
+        os.path.relpath(os.path.join(root, f), path)
+        for root, _, files in os.walk(path)
+        for f in files
+    )
+
+
 def test_idempotent_append(spark, tmp_path):
     from crypto_price_data_pipeline_spark.io.sinks import idempotent_append
 
@@ -83,7 +100,138 @@ def test_idempotent_append(spark, tmp_path):
     out = run_pipeline(payloads, _rates(spark), now="2022-12-06 14:00:03")
     path = str(tmp_path / "warehouse")
     assert idempotent_append(spark, out, path, keys=["job_id"]) == 1
+    files = _files(path)
+    assert [f for f in files if f.endswith(".parquet")] and not any(
+        f.startswith("_staging-") for f in files
+    )
     # replay: same batch appends nothing (replaces reference's manual
-    # delete-after-load bookkeeping)
+    # delete-after-load bookkeeping) and commits no empty file
     assert idempotent_append(spark, out, path, keys=["job_id"]) == 0
+    assert _files(path) == files
     assert spark.read.parquet(path).count() == 1
+
+    # a batch of no rows into a missing table leaves no table behind
+    empty = str(tmp_path / "empty")
+    assert idempotent_append(spark, out.limit(0), empty, keys=["job_id"]) == 0
+    assert not os.path.exists(empty)
+
+    # partition_by: rows land under k=v/ and read back; a replay adds nothing
+    parted = str(tmp_path / "parted")
+    rows = spark.createDataFrame(
+        [(1, "a", "x"), (2, "b", "y"), (2, "b", "y")], "id long, v string, p string"
+    )
+    assert idempotent_append(spark, rows, parted, keys=["id"], partition_by=["p"]) == 2
+    assert {os.path.dirname(f) for f in _files(parted) if f.endswith(".parquet")} == {
+        "p=x",
+        "p=y",
+    }
+    assert idempotent_append(spark, rows, parted, keys=["id"], partition_by=["p"]) == 0
+    back = sorted(tuple(r) for r in spark.read.parquet(parted).select("id", "v", "p").collect())
+    assert back == [(1, "a", "x"), (2, "b", "y")]
+
+    # an existing warehouse that cannot be read raises; it is never taken
+    # for an empty table and re-appended to
+    for f in _files(path):
+        full = os.path.join(path, f)
+        if f.endswith(".crc"):
+            os.remove(full)
+        else:
+            with open(full, "wb") as fh:
+                fh.write(b"not parquet")
+    broken = _files(path)
+    with pytest.raises((PySparkException, Py4JJavaError)):
+        idempotent_append(spark, out, path, keys=["job_id"])
+    assert _files(path) == broken
+
+
+def _tapped_rates(spark, rate, hits):
+    """A rates frame evaluated in Python workers: ``hits`` counts every
+    row the engine reads from it."""
+
+    def tap(row):
+        hits.add(1)
+        return row
+
+    rows = [("USD", "IDR", dt.date(2022, 12, 6), rate)]
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2).map(tap),
+        "from_ccy string, to_ccy string, rate_date date, rate double",
+    )
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rates_read_once_per_frame(spark):
+    hits = spark.sparkContext.accumulator(0)
+    rates = _tapped_rates(spark, 15650.25, hits)
+    payloads = spark.createDataFrame([GOLDEN], BPI_PAYLOAD_SCHEMA)
+    now = "2022-12-06 14:00:03"
+
+    def run():
+        return [r.asDict() for r in run_pipeline(payloads, rates, now=now).collect()]
+
+    first, first_jobs = _jobs_in_group(spark, "rates_first", run)
+    read = hits.value
+    assert read > 0
+    # the same frame again: its rates are not read again, and the run
+    # issues one job fewer (the dimension's materialize)
+    second, second_jobs = _jobs_in_group(spark, "rates_second", run)
+    assert hits.value == read
+    assert len(second_jobs) == len(first_jobs) - 1
+    assert second == first
+    assert first[0]["bpi_idr_rate_float"] == 17091.0667 * 15650.25
+
+    # a different frame, even over the same pair, gets its own rates
+    other = _tapped_rates(spark, 2.0, hits)
+    row = run_pipeline(payloads, other, now=now).collect()[0]
+    assert row["bpi_idr_rate_float"] == 17091.0667 * 2.0
+    assert hits.value > read
+
+
+def test_rates_memo_released_with_frame(spark):
+    from crypto_price_data_pipeline_spark.pipeline.rates import _SLICES
+
+    payloads = spark.createDataFrame([GOLDEN], BPI_PAYLOAD_SCHEMA)
+    rates = _rates(spark)
+    run_pipeline(payloads, rates, now="2022-12-06 14:00:03")
+    assert rates in _SLICES
+    gc.collect()
+    held = len(_SLICES)
+    ref = weakref.ref(rates)
+    del rates
+    gc.collect()
+    assert ref() is None
+    assert len(_SLICES) == held - 1
+
+
+def test_rates_memo_one_materialize_under_threads(spark):
+    from crypto_price_data_pipeline_spark.pipeline.rates import _rate_slice
+
+    hits = spark.sparkContext.accumulator(0)
+    rates = _tapped_rates(spark, 15650.25, hits)
+    got = []
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=lambda: got.append(_rate_slice(rates, "USD", "IDR")))
+            for _ in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    # every thread got the one slice, and the rates were read by one job
+    assert len(got) == 8 and all(g is got[0] for g in got)
+    assert hits.value == 1

@@ -36,6 +36,30 @@ def test_merge_upsert(spark, tmp_path):
     assert rows == {1: "a", 2: "B", 3: "c"}
 
 
+def test_merge_upsert_unreadable_table_raises(spark, tmp_path):
+    import pytest
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    from crypto_price_data_pipeline_spark.io.sinks import merge_upsert
+
+    table = tmp_path / "dim"
+    v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    assert merge_upsert(spark, v1, str(table), keys=["id"]) == 2
+    for f in table.iterdir():
+        if f.name.endswith(".crc"):
+            f.unlink()
+        elif f.name.endswith(".parquet"):
+            f.write_bytes(b"not parquet")
+    before = {f.name: f.read_bytes() for f in table.iterdir()}
+    v2 = spark.createDataFrame([(3, "c")], "id long, v string")
+    # a read error must not turn into "no table yet": overwriting with
+    # the batch alone would drop rows 1 and 2
+    with pytest.raises((PySparkException, Py4JJavaError)):
+        merge_upsert(spark, v2, str(table), keys=["id"])
+    assert {f.name: f.read_bytes() for f in table.iterdir()} == before
+
+
 def test_quantize_int8_roundtrip_error(spark):
     from pyspark.sql import functions as F
 

@@ -25,7 +25,13 @@ def load(path: str) -> dict:
     raise SystemExit(f"{path}: no queries map")
 
 
+USAGE = "usage: python tools/bench_checklist.py BASELINE.json FINAL.json [FINAL2.json ...]"
+
+
 def main() -> None:
+    if len(sys.argv) < 3:
+        print(USAGE, file=sys.stderr)
+        raise SystemExit(2)
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     driver = load(os.path.join(here, "BENCH_r15.json"))
     base = load(sys.argv[1])
