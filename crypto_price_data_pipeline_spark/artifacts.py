@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
+from .session import scoped_conf
 
 # (artifact name, abspath of corpus dir) -> parquet dir, or the
 # _FALLBACK sentinel for corpora whose build round-trips empty.
@@ -152,13 +153,10 @@ def _artifact(
             # shuffle) with ZERO extra exchange — cheaper than an
             # explicit repartition; projection-only builds already
             # carry _scale_out's partitioning.
-            coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-            prev_coalesce = spark.conf.get(coalesce_key, "true")
-            spark.conf.set(coalesce_key, "false")
-            try:
+            with scoped_conf(
+                spark, **{"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+            ):
                 build().write.mode("overwrite").parquet(d)
-            finally:
-                spark.conf.set(coalesce_key, prev_coalesce)
             try:
                 spark.read.parquet(d).schema
             except Exception:

@@ -101,7 +101,7 @@ def bpe_learn(
       ceiling. A small bounded width keeps every stage multi-task at
       any corpus size while staying cheap locally (8 tasks/round).
     - AQE and the shuffle width are pinned DOWN for the duration of
-      the loop (restored in ``finally``): every per-round query here
+      the loop (``session.scoped_conf``): every per-round query here
       is vocab-sized, and AQE's per-exchange stage materialization
       costs one extra JOB per round plus a driver replan — measured at
       sf0.1: 19 jobs / min 3.31 s for the 8-round learn with AQE on
@@ -110,17 +110,20 @@ def bpe_learn(
       round FUSE into one job). Values are unaffected (AQE is an
       execution-time optimizer; merges asserted identical across all
       variants). The conf flips are session-visible while the loop
-      runs — bpe_learn is a synchronous build-path call (bench,
-      artifact store, tests), not something run concurrently with
-      other driver threads."""
-    from ..session import materialize
+      runs (the session conf is shared across threads; see
+      scoped_conf) — bpe_learn is a synchronous build-path call
+      (bench, artifact store, tests), not something run concurrently
+      with other driver threads."""
+    from ..session import materialize, scoped_conf
 
     spark = words.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_LEARN_WIDTH))
-    try:
+    with scoped_conf(
+        spark,
+        **{
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(_LEARN_WIDTH),
+        },
+    ):
         words = materialize(words.coalesce(_LEARN_WIDTH), reliable=False)
         merges: list[tuple[int, str, str, str, int]] = []
         for step in range(1, n_merges + 1):
@@ -161,9 +164,6 @@ def bpe_learn(
             l, r, c = best[0]["l"], best[0]["r"], int(best[0]["_c"])
             merges.append((step, l, r, l + r, c))
         return merges
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
 def bpe_symbols(word: Column, merges: list[tuple[str, str]]) -> Column:

@@ -26,13 +26,41 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..session import materialize as _eager_materialize
+from ..session import scoped_conf
 
-# deterministic universal-hash parameters (odd multipliers, fixed seed
-# lineage: simple LCG constants — public-domain folklore values).
-# 31-bit Mersenne prime: a*h stays < 2^62, so the universal hash never
-# overflows int64 under ANSI arithmetic; 31-bit minhash values are
-# ample for Jaccard estimation (collision prob 2^-31 per function).
+# 31-bit Mersenne prime modulus of the MinHash double hash; 31-bit
+# minhash values are ample for Jaccard estimation (collision prob 2^-31
+# per function). Overflow bound: see _check_num_hashes.
 _MERSENNE_P = (1 << 31) - 1
+_MAX_HASHES = 1 << 32
+# The minhash builders construct their double-hash expressions with ANSI
+# off: Catalyst fixes each Add/Multiply's eval mode when the expression
+# is analysed, so the plan keeps unchecked long arithmetic after the
+# conf is restored, and the rest of the session stays ANSI.
+_UNCHECKED = {"spark.sql.ansi.enabled": "false"}
+
+
+def _check_num_hashes(num_hashes: int) -> None:
+    """Driver-side overflow check for the Kirsch-Mitzenmacher double
+    hash h_i = (h1 + i·h2) mod p, i < num_hashes. h1 lies in [0, p) and
+    h2 in [1, p − 1] with p = 2^31 − 1, so h1 + i·h2 < num_hashes·2^31,
+    which is below 2^63 for every num_hashes ≤ 2^32. Within that bound
+    the long arithmetic provably cannot overflow, so the builders drop
+    ANSI's per-operation overflow checks (Math.addExact/multiplyExact
+    behind a closure and a boxed Long per operation) and check once here
+    instead."""
+    if not 1 <= num_hashes <= _MAX_HASHES:
+        raise ValueError(
+            f"num_hashes must be in [1, 2**32] so the double hash cannot"
+            f" overflow a long; got {num_hashes}"
+        )
+
+
+def _kth_hash_sql(i: int, h1: str, h2: str) -> str:
+    """SQL for the i-th MinHash function (h1 + i·h2) mod p over the
+    long columns (or lambda variables) ``h1``/``h2`` — the one
+    definition both signature builders evaluate."""
+    return f"pmod({h1} + {i} * {h2}, {_MERSENNE_P})"
 
 
 def check_precomputed_params(df: DataFrame, expected: dict, op: str) -> None:
@@ -204,34 +232,40 @@ def minhash_signatures(
     lambdas re-evaluate captured subtrees per reference — and
     explode + 64-column min-aggregate — Generate re-evaluates its
     child, plus a needless shuffle.)
+
+    Overflow: a + i·b < num_hashes·2^31 ≤ 2^63 for ``num_hashes`` in
+    [1, 2^32] (checked on the driver, ValueError otherwise), so the
+    hash projections are built with ANSI off and run as unchecked long
+    arithmetic; see :func:`_check_num_hashes`.
     """
+    _check_num_hashes(num_hashes)
     p = F.lit(_MERSENNE_P)
     base = with_shingles(df, id_col, text_col, shingle_k)
-    hashed = base.select(
-        id_col,
-        "_shingles",
-        F.transform("_shingles", lambda s: F.pmod(F.xxhash64(s), p)).alias("_H1"),
-        F.transform(
-            "_shingles", lambda s: F.pmod(F.xxhash64(s, F.lit(seed)), p - 1) + 1
-        ).alias("_H2"),
-    )
-
-    # one F.expr per hash function (the Column-API zip_with lambda cost
-    # ~6 py4j round-trips each; this path builds per STREAMING BATCH,
-    # so construction time is recurring, not one-off)
-    return hashed.select(
-        id_col,
-        "_shingles",
-        F.array(
-            *[
-                F.expr(
-                    f"array_min(zip_with(_H1, _H2,"
-                    f" (a, b) -> pmod(a + {i} * b, {_MERSENNE_P})))"
-                )
-                for i in range(num_hashes)
-            ]
-        ).alias("_minhash"),
-    )
+    with scoped_conf(base.sparkSession, **_UNCHECKED):
+        hashed = base.select(
+            id_col,
+            "_shingles",
+            F.transform("_shingles", lambda s: F.pmod(F.xxhash64(s), p)).alias("_H1"),
+            F.transform(
+                "_shingles", lambda s: F.pmod(F.xxhash64(s, F.lit(seed)), p - 1) + 1
+            ).alias("_H2"),
+        )
+        # one F.expr per hash function (the Column-API zip_with lambda
+        # cost ~6 py4j round-trips each; this path builds per STREAMING
+        # BATCH, so construction time is recurring, not one-off)
+        return hashed.select(
+            id_col,
+            "_shingles",
+            F.array(
+                *[
+                    F.expr(
+                        f"array_min(zip_with(_H1, _H2,"
+                        f" (a, b) -> {_kth_hash_sql(i, 'a', 'b')}))"
+                    )
+                    for i in range(num_hashes)
+                ]
+            ).alias("_minhash"),
+        )
 
 
 def minhash_min_cols(
@@ -253,8 +287,19 @@ def minhash_min_cols(
     with map-side partial aggregation, so the shuffle carries only
     |docs| × num_hashes longs — never the exploded postings. Values
     are bit-identical to minhash_signatures (same Kirsch-Mitzenmacher
-    double hash h_i = (h1 + i·h2) mod p; pinned by
-    tests/test_properties.py).
+    double hash h_i = (h1 + i·h2) mod p; pinned against both and a
+    pure-Python reference by
+    tests/test_properties.py::test_minhash_builders_match_reference).
+
+    Overflow: h1 + i·h2 < num_hashes·2^31 ≤ 2^63 for ``num_hashes`` in
+    [1, 2^32] (checked on the driver, ValueError otherwise), so the
+    explode projection and the minima aggregates are built with ANSI
+    off. Under ANSI every long + and * is Math.addExact/multiplyExact
+    behind a closure returning a boxed Long — two allocations per
+    operation, which a JIT without escape analysis (C1) does not
+    remove; built unchecked, the minhash_mins artifact rebuild took
+    about half the CPU under C1 with the minima byte-equal. See
+    :func:`_check_num_hashes`.
 
     ``base`` MUST be materialized (persisted/stored) first: exploding a
     freshly-built shingle expression re-evaluates the array build per
@@ -262,23 +307,25 @@ def minhash_min_cols(
     lang blocking key, a set-size prune column) ride through the
     grouping key — they are functionally dependent on the id, so the
     aggregate's cardinality is unchanged."""
+    _check_num_hashes(num_hashes)
     p = F.lit(_MERSENNE_P)
     keep = list(keep_cols or [])
-    ex = base.select(id_col, *keep, F.explode("_shingles").alias("_s")).select(
-        id_col,
-        *keep,
-        F.pmod(F.xxhash64("_s"), p).alias("_h1"),
-        (F.pmod(F.xxhash64("_s", F.lit(seed)), p - 1) + 1).alias("_h2"),
-    )
-    # expr strings: one py4j round-trip per aggregate instead of ~5
-    # (construction time, ~0.6s/call at 64 hashes, is part of query
-    # latency in serving paths)
-    return ex.groupBy(id_col, *keep).agg(
-        *[
-            F.expr(f"min(pmod(_h1 + {i} * _h2, {_MERSENNE_P}))").alias(f"_m{i}")
-            for i in range(num_hashes)
-        ]
-    )
+    with scoped_conf(base.sparkSession, **_UNCHECKED):
+        ex = base.select(id_col, *keep, F.explode("_shingles").alias("_s")).select(
+            id_col,
+            *keep,
+            F.pmod(F.xxhash64("_s"), p).alias("_h1"),
+            (F.pmod(F.xxhash64("_s", F.lit(seed)), p - 1) + 1).alias("_h2"),
+        )
+        # expr strings: one py4j round-trip per aggregate instead of ~5
+        # (construction time, ~0.6s/call at 64 hashes, is part of query
+        # latency in serving paths)
+        return ex.groupBy(id_col, *keep).agg(
+            *[
+                F.expr(f"min({_kth_hash_sql(i, '_h1', '_h2')})").alias(f"_m{i}")
+                for i in range(num_hashes)
+            ]
+        )
 
 
 def _band_bucket_sql(num_hashes: int, bands: int) -> list[str]:

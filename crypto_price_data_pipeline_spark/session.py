@@ -11,6 +11,8 @@ reference's UTC-source assumption (SURVEY.md §1.3).
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -89,6 +91,65 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# (session uuid, conf key) -> [state before the first open scope (None =
+# unset), [(scope token, value), ...] of the scopes still open, oldest first]
+_SCOPES: dict[tuple[str, str], list] = {}
+_SCOPES_LOCK = threading.Lock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, **overrides):
+    """Set runtime SQL confs for the ``with`` block, then restore each
+    key to its state before the block: a key that was set gets its old
+    value back, a key that was unset is ``unset()`` (not set to its
+    default), so the scope leaves no trace in ``spark.conf.getAll``.
+    Pass dotted keys by unpacking, e.g.
+    ``scoped_conf(spark, **{"spark.sql.shuffle.partitions": "4"})``.
+
+    The session conf is SHARED by every thread using the session (driver
+    threads, a stream's foreachBatch bodies on a session they share):
+    while a scope is open, any other query planned on the session sees
+    the override too. Callers that cannot accept that need a separate
+    session (``spark.newSession()``), which has its own conf. What this
+    helper does guarantee under threads: every read-modify-write of the
+    conf runs under one module lock, and open scopes on the same
+    (session, key) are tracked together — while any is open the key
+    holds the value of the newest one, and when the last one closes the
+    key returns to its state before the first, in whatever order the
+    scopes close. The lock is not held for the body, so a scope opened
+    on another thread inside this one (a foreachBatch body inside a
+    stream's scope) cannot deadlock."""
+    sid = spark._jsparkSession.sessionUUID()
+    token = object()
+    opened: list[str] = []
+    try:
+        with _SCOPES_LOCK:
+            for key, value in overrides.items():
+                entry = _SCOPES.get((sid, key))
+                if entry is None:
+                    prior = None
+                    if spark._jsparkSession.conf().contains(key):
+                        prior = spark.conf.get(key)
+                    entry = _SCOPES[(sid, key)] = [prior, []]
+                entry[1].append((token, value))
+                opened.append(key)
+                spark.conf.set(key, value)
+        yield
+    finally:
+        with _SCOPES_LOCK:
+            for key in opened:
+                prior, active = _SCOPES[(sid, key)]
+                active[:] = [(t, v) for t, v in active if t is not token]
+                if active:
+                    spark.conf.set(key, active[-1][1])
+                    continue
+                del _SCOPES[(sid, key)]
+                if prior is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, prior)
 
 
 def materialize(df, reliable: bool | None = None):

@@ -55,6 +55,7 @@ import time as _time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
 from .partial_store import run_partial_stream
 
 MINS_SCHEMA = (
@@ -224,11 +225,9 @@ def stream_artifact_index(
         # per-batch partials are one chunk's rows; 32-partition
         # shuffles × 4 writes × n_chunks batches is pure scheduling
         # overhead at test scale (cf. dedup_stream's note). Lowered
-        # for the stream, restored in finally; size to batch volume
+        # for the stream (scoped_conf); size to batch volume
         # in production.
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
+        with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
             run_partial_stream(
                 spark,
                 src=src,
@@ -236,8 +235,6 @@ def stream_artifact_index(
                 sink=sink,
                 ckpt=os.path.join(work, "ckpt"),
             )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     out: dict = read_artifact_store(spark, store)
     out["store_dir"] = store

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import band_buckets, minhash_signatures
+from ..session import scoped_conf
 
 
 def _write_batch(df: DataFrame, store: str, batch_id: int) -> None:
@@ -231,11 +232,9 @@ def stream_minhash_dedup(
     # per-batch state is tiny (one chunk's candidates); 32-partition
     # shuffles × several joins × n_chunks batches is pure scheduling
     # overhead at test scale. Session-global conf — lowered for the
-    # stream, restored in finally (cf. stream_click_attribution's note;
+    # stream by scoped_conf (cf. stream_click_attribution's note;
     # at production batch sizes, size this to candidate volume).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
         q = (
             stream.writeStream.foreachBatch(_process)
             .option("checkpointLocation", ckpt)
@@ -243,8 +242,6 @@ def stream_minhash_dedup(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         spark.read.schema(staged.schema)
         .option("recursiveFileLookup", "true")

@@ -16,6 +16,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 
 _STREAM_DIRS: dict[str, str] = {}
 
@@ -119,20 +121,16 @@ def tumbling_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch hourly aggregation — which the DuckDB oracle checks.
 
     NOTE: ``spark.sql.shuffle.partitions`` is session-global; it is
-    lowered for the duration of the streaming query and restored in a
-    ``finally`` — don't run concurrent queries on this session inside
+    lowered for the duration of the streaming query by
+    ``session.scoped_conf`` — don't run concurrent queries on this session inside
     that window."""
     agg = windowed_agg(_events_stream(spark, sf_dir))
     # a streaming agg materializes one state store PER shuffle partition
     # (checkpoint dirs, maintenance threads); size partitions to the
     # state cardinality (~|windows × keys|), not the batch default —
     # at production key counts, raise it with the key space
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
         data = _run_to_parquet(agg, mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.schema(agg.schema).parquet(data).select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
@@ -213,8 +211,8 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str, gap: str = "1 hou
     checks.
 
     NOTE: ``spark.sql.shuffle.partitions`` is session-global; it is
-    lowered for the duration of the streaming query and restored in a
-    ``finally`` — don't run concurrent queries on this session inside
+    lowered for the duration of the streaming query by
+    ``session.scoped_conf`` — don't run concurrent queries on this session inside
     that window."""
     ev = _events_stream(spark, sf_dir)
     joined = stream_stream_interval_join(ev, gap=gap)
@@ -222,12 +220,8 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str, gap: str = "1 hou
     # dominates wall time at test scale — 2 partitions is 5.7× faster
     # than 8 here (measured sf0.1: 1.5s vs 8.3s). At production key
     # cardinality, scale partitions with |buffered state|, not cores.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "2"}):
         data = _run_to_parquet(joined, mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         spark.read.schema(joined.schema).parquet(data)
         .groupBy("user_id")
@@ -253,12 +247,8 @@ def stream_funnel_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy(F.window("purchase_ts", "1 day").alias("w")).agg(
         F.count(F.lit(1)).alias("n_pairs")
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "2"}):
         data = _run_to_parquet(agg, mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.schema(agg.schema).parquet(data).select(
         F.date_format("w.start", "yyyy-MM-dd").alias("day"), "n_pairs"
     ).orderBy("day")

@@ -7,6 +7,7 @@ Few examples per property (Spark jobs are ~100ms+ each); deadline off.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -583,3 +584,165 @@ def test_kmv_bottom_k_and_merge_match_python(spark, keys, split, k):
         k=k,
     ).collect()
     assert [list(r.kmv) for r in merged] == [brute]
+
+
+_MINHASH_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "the quick brown fox jumped over the lazy dog"),
+    (3, "a b"),
+    (4, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"),
+    (5, "lorem ipsum dolor sit amet consectetur adipiscing elit sed"),
+    (6, "x"),
+]
+_ANSI = "spark.sql.ansi.enabled"
+
+
+def _conf_state(spark, key):
+    """(is the key set in the session, its value) — an unset key stays
+    distinguishable from one set to its default."""
+    return key in spark.conf.getAll, spark.conf.get(key, None)
+
+
+@pytest.mark.parametrize("num_hashes", [1, 16, 64])
+def test_minhash_builders_match_reference(spark, num_hashes):
+    """minhash_min_cols, minhash_signatures and a pure-Python double
+    hash min((h1 + i·h2) mod p) over Spark's (h1, h2) agree exactly,
+    in a session with ANSI on (the builders construct their hash
+    arithmetic with ANSI off; the values must not move)."""
+    from pyspark.sql import functions as F
+
+    from crypto_price_data_pipeline_spark.operators.dedup import (
+        minhash_min_cols,
+        minhash_signatures,
+        with_shingles,
+    )
+    from crypto_price_data_pipeline_spark.session import scoped_conf
+
+    p, seed = (1 << 31) - 1, 42
+    with scoped_conf(spark, **{_ANSI: "true"}):
+        df = spark.createDataFrame(_MINHASH_DOCS, "doc_id long, text string")
+        base = with_shingles(df, "doc_id", "text", 3).persist()
+        try:
+            h = base.select("doc_id", F.explode("_shingles").alias("s")).select(
+                "doc_id",
+                F.pmod(F.xxhash64("s"), F.lit(p)).alias("h1"),
+                (F.pmod(F.xxhash64("s", F.lit(seed)), F.lit(p - 1)) + 1).alias("h2"),
+            )
+            hashes: dict[int, list[tuple[int, int]]] = {}
+            for r in h.collect():
+                hashes.setdefault(r["doc_id"], []).append((r["h1"], r["h2"]))
+            expected = {
+                d: [min((h1 + i * h2) % p for h1, h2 in hs) for i in range(num_hashes)]
+                for d, hs in hashes.items()
+            }
+            mins = {
+                r["doc_id"]: [r[f"_m{i}"] for i in range(num_hashes)]
+                for r in minhash_min_cols(base, "doc_id", num_hashes, seed).collect()
+            }
+        finally:
+            base.unpersist()
+        sigs = {
+            r["doc_id"]: list(r["_minhash"])
+            for r in minhash_signatures(
+                df, "doc_id", "text", num_hashes, 3, seed
+            ).collect()
+        }
+        assert spark.conf.get(_ANSI) == "true"
+    assert len(expected) == len(_MINHASH_DOCS)
+    assert mins == expected
+    assert sigs == expected
+
+
+@pytest.mark.parametrize("num_hashes", [0, 2**32 + 1])
+def test_minhash_builders_reject_overflowing_num_hashes(num_hashes):
+    """The overflow bound is checked on the driver before anything is
+    built: the frame argument is never touched (a bare object would
+    raise AttributeError, not ValueError)."""
+    from crypto_price_data_pipeline_spark.operators.dedup import (
+        minhash_min_cols,
+        minhash_signatures,
+    )
+
+    with pytest.raises(ValueError, match="num_hashes"):
+        minhash_min_cols(object(), "doc_id", num_hashes)
+    with pytest.raises(ValueError, match="num_hashes"):
+        minhash_signatures(object(), "doc_id", "text", num_hashes)
+
+
+@pytest.mark.parametrize("prior", [None, "true", "false"])
+def test_minhash_builders_restore_session_conf(spark, prior):
+    """After either builder returns or raises, spark.sql.ansi.enabled
+    reads exactly as before — set keys keep their value, an unset key
+    stays unset (not set to its default)."""
+    from pyspark.errors import AnalysisException
+
+    from crypto_price_data_pipeline_spark.operators.dedup import (
+        minhash_min_cols,
+        minhash_signatures,
+        with_shingles,
+    )
+
+    saved = _conf_state(spark, _ANSI)
+    try:
+        if prior is None:
+            spark.conf.unset(_ANSI)
+        else:
+            spark.conf.set(_ANSI, prior)
+        before = _conf_state(spark, _ANSI)
+        assert before[0] is (prior is not None)
+        df = spark.createDataFrame(_MINHASH_DOCS, "doc_id long, text string")
+        base = with_shingles(df, "doc_id", "text", 3)
+        minhash_min_cols(base, "doc_id", 4)
+        assert _conf_state(spark, _ANSI) == before
+        minhash_signatures(df, "doc_id", "text", 4)
+        assert _conf_state(spark, _ANSI) == before
+        with pytest.raises(AnalysisException):
+            minhash_min_cols(base, "no_such_col", 4)
+        assert _conf_state(spark, _ANSI) == before
+        with pytest.raises(AnalysisException):
+            minhash_signatures(df, "doc_id", "no_such_col", 4)
+        assert _conf_state(spark, _ANSI) == before
+    finally:
+        if saved[0]:
+            spark.conf.set(_ANSI, saved[1])
+        else:
+            spark.conf.unset(_ANSI)
+
+
+def test_minhash_minima_compile_to_unchecked_arithmetic(spark):
+    """The minima aggregate keeps unchecked long arithmetic in an ANSI
+    session: its generated code calls no Math.addExact/multiplyExact
+    (each an allocated closure plus a boxed Long per operation), while
+    an ANSI-built control expression over the same input does."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from crypto_price_data_pipeline_spark.operators.dedup import (
+        minhash_min_cols,
+        with_shingles,
+    )
+    from crypto_price_data_pipeline_spark.session import scoped_conf
+
+    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+
+    def exact_calls(df):
+        df.collect()  # AQE: the final plan exists once the query ran
+        code = debug.codegenString(df._jdf.queryExecution().executedPlan())
+        return set(re.findall(r"\b(?:add|multiply)Exact\b", code))
+
+    with scoped_conf(spark, **{_ANSI: "true"}):
+        df = spark.createDataFrame(_MINHASH_DOCS, "doc_id long, text string")
+        base = with_shingles(df, "doc_id", "text", 3).persist()
+        try:
+            mins = minhash_min_cols(base, "doc_id", 8)
+            control = (
+                base.select("doc_id", F.explode("_shingles").alias("s"))
+                .select("doc_id", F.expr("pmod(s, 2147483647)").alias("h"))
+                .groupBy("doc_id")
+                .agg(F.expr("min(pmod(h + 3 * h, 2147483647))"))
+            )
+            assert exact_calls(mins) == set()
+            assert exact_calls(control) == {"addExact", "multiplyExact"}
+        finally:
+            base.unpersist()
