@@ -56,10 +56,7 @@ correctness is unchanged and the corpus is tiny by construction.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 import threading
 from typing import Callable
 
@@ -68,7 +65,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
-from .session import scoped_conf
+from .session import scoped_conf, scratch_dir
 
 # (artifact name, abspath of corpus dir) -> parquet dir, or the
 # _FALLBACK sentinel for corpora whose build round-trips empty.
@@ -137,8 +134,7 @@ def _artifact(
         if loc == _FALLBACK:
             return _stamp(build(), name, sf)
         if loc is None or not os.path.isdir(loc):
-            d = tempfile.mkdtemp(prefix=f"artifact_{name}_")
-            atexit.register(shutil.rmtree, d, ignore_errors=True)
+            d = scratch_dir(f"artifact_{name}_")
             # write MANY files, not whatever AQE coalesced the build's
             # final stage to (typically ONE at local scale): consumers'
             # zero-shuffle pair stages — scan → broadcast join →

@@ -61,3 +61,9 @@ def format_wall_ts(col: Column) -> Column:
     """Timestamp → ``"YYYY-MM-DD HH:MM:SS"`` string (tz dropped), the
     reference's canonical output encoding for all three *_updated cols."""
     return F.date_format(col, WALL_FMT)
+
+
+def _dec(col: Column) -> Column:
+    """Exact ``decimal(38,6)`` cast: the registry sums doubles through it so
+    Spark and DuckDB agree bit for bit (see queries.py's docstring)."""
+    return col.cast("decimal(38,6)")

@@ -16,27 +16,32 @@ parenthesization in both engines. Averages divide the exact decimal sum
 (as double) by the count. Top-k queries always order with a unique-key
 tiebreak.
 
-Non-SQL-expressible entries (MinHash/SimHash pairs — DuckDB lacks
-xxhash64 — ANN search, streaming state) carry no oracle: the driver
-records a rows-only check for them.
+Adding a query: decorate it with ``@query`` (registry.py) where it is
+defined. Its registry name is the function's ``__name__``; a name that
+is already registered raises at import. Its oracle is the defining
+module's ``Q_<NAME>_SQL`` constant (``q_foo`` → ``Q_FOO_SQL``), looked
+up by ``seal()`` below once every query module has been imported, so
+the constant may sit below the function. A query whose oracle is shared
+or computed passes ``@query(oracle=lambda: OTHER_SQL)``. A streamed or
+served twin passes ``@query(twin_of="q_batch")`` and inherits that
+query's oracle. A new query module goes into the import list at the
+bottom of this file. Every query has an oracle; queries whose values are
+engine-specific (xxhash64, ANN) are oracled on what they induce (see
+q_simhash_pairs, q_fingerprints, Q_ANN_RECALL_SQL).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .functions.scalars import _dec
 from .io.sources import load_table
+from .registry import ORACLES, QUERIES, query, seal
 from .session import materialize
 
 # ---------------------------------------------------------------- helpers
-
-
-def _dec(col: Column) -> Column:
-    return col.cast("decimal(38,6)")
 
 
 def dsum(col: Column) -> Column:
@@ -64,6 +69,7 @@ def S_DAVG(expr: str) -> str:
 # ------------------------------------------------------- relational core
 
 
+@query(oracle=lambda: Q01_SQL)
 def q01_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q1 shape: scan→filter→hash-agg→sort. The flagship query
     (SURVEY.md §7 'minimum end-to-end slice')."""
@@ -104,6 +110,7 @@ ORDER BY l_returnflag, l_linestatus
 """
 
 
+@query(oracle=lambda: Q02_SQL)
 def q02_filter_pushdown(spark: SparkSession, sf: str) -> DataFrame:
     """Projection + predicate — both reach the parquet scan (check
     PushedFilters/ReadSchema in .explain)."""
@@ -124,6 +131,7 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
 """
 
 
+@query(oracle=lambda: Q03_SQL)
 def q03_segment_top_orders(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q3 shape: 3-way join → agg → top-10 (TakeOrderedAndProject)."""
     cust = load_table(spark, sf, "customer").where(_col("c_mktsegment") == "BUILDING")
@@ -167,6 +175,7 @@ LIMIT 10
 """
 
 
+@query(oracle=lambda: Q05_SQL)
 def q05_region_revenue(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way star join; dims broadcast, facts shuffle
     once on the join keys."""
@@ -212,6 +221,7 @@ ORDER BY revenue DESC, n_name
 """
 
 
+@query(oracle=lambda: Q06_SQL)
 def q06_forecast_revenue(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan-filter-scalar-agg (no shuffle beyond
     the final single-row reduce)."""
@@ -235,6 +245,7 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
 """
 
 
+@query(oracle=lambda: Q_SEMI_SQL)
 def q_semi_join(spark: SparkSession, sf: str) -> DataFrame:
     """left_semi = EXISTS; segment counts of customers with ≥1 open order."""
     cust = load_table(spark, sf, "customer")
@@ -256,6 +267,7 @@ ORDER BY c_mktsegment
 """
 
 
+@query(oracle=lambda: Q_ANTI_SQL)
 def q_anti_join(spark: SparkSession, sf: str) -> DataFrame:
     """left_anti = NOT EXISTS; customers with no orders at all."""
     cust = load_table(spark, sf, "customer")
@@ -273,6 +285,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 """
 
 
+@query(oracle=lambda: Q_TOPK_GROUP_SQL)
 def q_topk_per_group(spark: SparkSession, sf: str) -> DataFrame:
     """Top-3 orders by totalprice per priority (ranking window)."""
     orders = load_table(spark, sf, "orders")
@@ -297,6 +310,7 @@ FROM (
 """
 
 
+@query
 def q_window_delta(spark: SparkSession, sf: str) -> DataFrame:
     """lag() analytic: per-user value delta between consecutive events."""
     ev = load_table(spark, sf, "events")
@@ -315,6 +329,7 @@ FROM events
 """
 
 
+@query
 def q_moving_avg(spark: SparkSession, sf: str) -> DataFrame:
     """24-row trailing moving average per user (rowsBetween frame)."""
     ev = load_table(spark, sf, "events")
@@ -335,6 +350,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 23 PRECEDIN
 """
 
 
+@query
 def q_rollup(spark: SparkSession, sf: str) -> DataFrame:
     """ROLLUP hierarchy totals with GROUPING markers."""
     li = load_table(spark, sf, "lineitem")
@@ -360,6 +376,7 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """
 
 
+@query
 def q_cube(spark: SparkSession, sf: str) -> DataFrame:
     """CUBE over (returnflag, linestatus)."""
     li = load_table(spark, sf, "lineitem")
@@ -376,6 +393,7 @@ FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
 """
 
 
+@query
 def q_setops(spark: SparkSession, sf: str) -> DataFrame:
     """UNION / INTERSECT / EXCEPT (distinct semantics throughout)."""
     cust = load_table(spark, sf, "customer")
@@ -400,6 +418,7 @@ SELECT c_custkey FROM (
 """
 
 
+@query
 def q_pivot(spark: SparkSession, sf: str) -> DataFrame:
     """Pivot linestatus into columns (explicit value list → single pass)."""
     li = load_table(spark, sf, "lineitem")
@@ -419,6 +438,7 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
 
+@query
 def q_agg_distinct(spark: SparkSession, sf: str) -> DataFrame:
     """COUNT(DISTINCT) alongside plain aggs (Catalyst expand rewrite)."""
     orders = load_table(spark, sf, "orders")
@@ -441,6 +461,7 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
 """
 
 
+@query(oracle=lambda: Q_ABOVE_AVG_SQL)
 def q_above_brand_avg(spark: SparkSession, sf: str) -> DataFrame:
     """Correlated-subquery shape, decorrelated as agg + broadcast join."""
     part = load_table(spark, sf, "part")
@@ -461,6 +482,7 @@ WHERE p_retailprice > brand_avg
 """
 
 
+@query
 def q_band_join(spark: SparkSession, sf: str) -> DataFrame:
     """Range/banding join against a tiny tiers dimension (broadcast-NL
     fast path of operators.range_join.band_join)."""
@@ -490,6 +512,7 @@ GROUP BY tier ORDER BY tier
 """
 
 
+@query(oracle=lambda: Q_ASOF_SQL)
 def q_asof_join(spark: SparkSession, sf: str) -> DataFrame:
     """As-of join: each purchase gets the latest prior click value of
     the same user (union+window rewrite; DuckDB verifies with its
@@ -532,6 +555,7 @@ def _asof_direction_query(spark: SparkSession, sf: str, direction: str, out_col:
     return out.withColumn("ts", F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS"))
 
 
+@query
 def q_asof_forward(spark: SparkSession, sf: str) -> DataFrame:
     """Forward as-of: each purchase gets the next click value at or
     after it (same union+window plan as backward, mirrored frame).
@@ -539,6 +563,7 @@ def q_asof_forward(spark: SparkSession, sf: str) -> DataFrame:
     return _asof_direction_query(spark, sf, "forward", "next_click_value")
 
 
+@query
 def q_asof_nearest(spark: SparkSession, sf: str) -> DataFrame:
     """Nearest as-of: closest click either side, ties backward —
     exercises the integer-microsecond distance compare."""
@@ -562,6 +587,7 @@ FROM events l WHERE l.event_type = 'purchase'
 """
 
 
+@query
 def q_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     """Sessionization: 30-min-gap cut via lag + running sum, then
     per-user session/event counts."""
@@ -604,6 +630,7 @@ GROUP BY user_id ORDER BY user_id
 """
 
 
+@query(oracle=lambda: Q_OHLC_SQL)
 def q_time_bucket_ohlc(spark: SparkSession, sf: str) -> DataFrame:
     """Hourly OHLC rollup per event type (hypertable-style time bucket;
     open/close via rank-1 rows in both engines for determinism)."""
@@ -666,6 +693,7 @@ _BPI_NOW = "2022-12-07 10:00:03"
 _DISCLAIMER = "This data was produced from the CoinDesk Bitcoin Price Index (USD)."
 
 
+@query(oracle=lambda: _bpi_oracle())
 def q_bpi_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """The reference's full flatten→fx-join→validate chain on a golden
     multi-snapshot fixture (reference: bpi_crawler.py:93-125, 62-91,
@@ -725,6 +753,7 @@ def _bpi_oracle() -> str:
 # ------------------------------------------------------ text / LLM ops
 
 
+@query(oracle=lambda: Q_DOC_TOKEN_SQL)
 def q_doc_token_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc token counting + length stats (whitespace tokenizer)."""
     from .operators.text import token_count
@@ -750,6 +779,7 @@ FROM documents
 """
 
 
+@query
 def q_lang_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus stats per (lang, source): doc counts + char-length profile."""
     docs = load_table(spark, sf, "documents")
@@ -773,6 +803,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source
 """
 
 
+@query
 def q_word_freq(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus term frequency top-20.
 
@@ -805,6 +836,7 @@ GROUP BY word ORDER BY n DESC, word LIMIT 20
 """
 
 
+@query
 def q_dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
     """Exact dedup keep-min-id per (lang, source) group — deterministic
     row-preserving dedup via ranking window."""
@@ -825,6 +857,7 @@ WHERE rn = 1
 """
 
 
+@query(oracle=lambda: Q_QUALITY_SQL)
 def q_quality_scores(spark: SparkSession, sf: str) -> DataFrame:
     """Doc quality features (repetition ratio + composite score)."""
     from .operators.text import tokenize
@@ -852,6 +885,7 @@ FROM (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x 
 """
 
 
+@query(oracle=lambda: Q_MEDIA_SQL)
 def q_media_bytes(spark: SparkSession, sf: str) -> DataFrame:
     """Multimodal plumbing: opaque binary payload + typed metadata
     (documents' UTF-8 bytes stand in for media payloads)."""
@@ -874,6 +908,7 @@ FROM documents
 """
 
 
+@query
 def q_embedding_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Brute-force cosine top-10 against the vec_id=0 embedding
     (exact ANN baseline; TakeOrderedAndProject, no shuffle)."""
@@ -939,6 +974,7 @@ LIMIT 10
 # -------------------------------------- no-oracle (rows-only) entries
 
 
+@query
 def q_minhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """MinHash-LSH near-dup candidate pairs w/ exact-Jaccard verify.
 
@@ -989,6 +1025,12 @@ WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
 """
 
 
+# q_simhash_pairs is oracled through induced structure (see its
+# docstring): identical-token-multiset pairs at xx_hamming 0 + the
+# cross-banding equivalence flag. Raw xxhash64 pair VALUES stay
+# engine-specific; the md5 twin q_simhash_md5_pairs carries the
+# bit-exact value-level oracle.
+@query(oracle=lambda: Q_SIMHASH_XX_SQL)
 def q_simhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """xxhash64-SimHash near-dup machinery, verified through its
     INDUCED STRUCTURE (the q_fingerprints trick, r6 VERDICT #2): the
@@ -1155,6 +1197,7 @@ def _ann_with_recall(exact: DataFrame, ann: DataFrame, k: int, floor: float) -> 
     )
 
 
+@query(oracle=lambda: Q_ANN_RECALL_SQL)
 def q_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     """ANN cosine top-10 via sign-random-projection LSH buckets
     (6 bits, multiprobe Hamming ≤2 → 22/64 buckets probed), reported as
@@ -1176,6 +1219,7 @@ def q_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     return _ann_with_recall(exact, ann, k=10, floor=0.5)
 
 
+@query(oracle=lambda: Q_ANN_RECALL_SQL)
 def q_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     """ANN cosine top-10 via an IVF index (k-means coarse quantizer,
     8 lists, 5 probed, exact re-rank), reported as the exact top-10
@@ -1195,6 +1239,7 @@ def q_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     return _ann_with_recall(exact, ann, k=10, floor=0.5)
 
 
+@query(twin_of="q_lsh_topk")
 def q_stream_ann(spark: SparkSession, sf: str) -> DataFrame:
     """ANN top-10 served from an INCREMENTALLY-built LSH index: the
     embedding table replays as a 3-micro-batch stream, each batch
@@ -1219,6 +1264,7 @@ def q_stream_ann(spark: SparkSession, sf: str) -> DataFrame:
     return _ann_with_recall(exact, ann, k=10, floor=0.5)
 
 
+@query
 def q_batch_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Exact cosine top-10 for a 5-query batch in ONE corpus pass
     (broadcast query table, nested-loop scores, per-query window
@@ -1260,6 +1306,7 @@ ORDER BY q_id, ROUND(sim, 9) DESC, vec_id
 """
 
 
+@query(oracle=lambda: Q_ANN_RECALL_SQL)
 def q_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     """ANN cosine top-10 via product quantization (8 subspaces × 16
     centroids → 32× compression) + ADC shortlist (200) + exact re-rank,
@@ -1283,6 +1330,7 @@ def q_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     return _ann_with_recall(exact, ann, k=10, floor=0.5)
 
 
+@query
 def q_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
     """Rolling-hash document fingerprints. The xxhash64 VALUES are
     engine-specific, but the fingerprint's semantic content — the
@@ -1307,6 +1355,7 @@ def q_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@query
 def q_stream_ohlc(spark: SparkSession, sf: str) -> DataFrame:
     """Structured Streaming tumbling-window rollup over the events table
     (file source, availableNow; complete-mode memory sink). The final
@@ -1327,298 +1376,22 @@ GROUP BY date_trunc('hour', ts), event_type
 
 # --------------------------------------------------------- the registry
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q01_pricing_summary": q01_pricing_summary,
-    "q02_filter_pushdown": q02_filter_pushdown,
-    "q03_segment_top_orders": q03_segment_top_orders,
-    "q05_region_revenue": q05_region_revenue,
-    "q06_forecast_revenue": q06_forecast_revenue,
-    "q_semi_join": q_semi_join,
-    "q_anti_join": q_anti_join,
-    "q_topk_per_group": q_topk_per_group,
-    "q_window_delta": q_window_delta,
-    "q_moving_avg": q_moving_avg,
-    "q_rollup": q_rollup,
-    "q_cube": q_cube,
-    "q_setops": q_setops,
-    "q_pivot": q_pivot,
-    "q_agg_distinct": q_agg_distinct,
-    "q_above_brand_avg": q_above_brand_avg,
-    "q_band_join": q_band_join,
-    "q_asof_join": q_asof_join,
-    "q_asof_forward": q_asof_forward,
-    "q_asof_nearest": q_asof_nearest,
-    "q_sessionize": q_sessionize,
-    "q_time_bucket_ohlc": q_time_bucket_ohlc,
-    "q_bpi_pipeline": q_bpi_pipeline,
-    "q_doc_token_stats": q_doc_token_stats,
-    "q_lang_stats": q_lang_stats,
-    "q_word_freq": q_word_freq,
-    "q_dedup_exact": q_dedup_exact,
-    "q_quality_scores": q_quality_scores,
-    "q_media_bytes": q_media_bytes,
-    "q_embedding_topk": q_embedding_topk,
-    "q_minhash_pairs": q_minhash_pairs,
-    "q_simhash_pairs": q_simhash_pairs,
-    "q_lsh_topk": q_lsh_topk,
-    "q_ivf_topk": q_ivf_topk,
-    "q_pq_topk": q_pq_topk,
-    "q_batch_topk": q_batch_topk,
-    "q_stream_ann": q_stream_ann,
-    "q_fingerprints": q_fingerprints,
-    "q_stream_ohlc": q_stream_ohlc,
-}
+# Every query module registers its queries as it loads (see the module
+# docstring); import each once, then resolve the oracles.
+from . import (  # noqa: E402, F401
+    queries_ext, queries_ext2, queries_ext3, queries_ext4, queries_ext5, queries_ext6,
+    queries_ext7, queries_ext8, queries_ext9, queries_ext10, queries_ext11,
+    queries_ext12, queries_ext13, queries_ext14, queries_ext15, queries_ext16,
+    queries_ext17, queries_ext18, queries_ext19, queries_ext20, queries_ext21,
+    queries_ext22, queries_ext23, queries_ext24, queries_ext25, queries_ext26,
+    queries_ext27, queries_ext28, queries_ext29, queries_ext30, queries_ext31,
+    queries_ext32, queries_ext33, queries_ext34, queries_ext35, queries_ext36,
+    queries_ext37, queries_ext38,
+)
 
-ORACLES: dict[str, str] = {
-    "q01_pricing_summary": Q01_SQL,
-    "q02_filter_pushdown": Q02_SQL,
-    "q03_segment_top_orders": Q03_SQL,
-    "q05_region_revenue": Q05_SQL,
-    "q06_forecast_revenue": Q06_SQL,
-    "q_semi_join": Q_SEMI_SQL,
-    "q_anti_join": Q_ANTI_SQL,
-    "q_topk_per_group": Q_TOPK_GROUP_SQL,
-    "q_window_delta": Q_WINDOW_DELTA_SQL,
-    "q_moving_avg": Q_MOVING_AVG_SQL,
-    "q_rollup": Q_ROLLUP_SQL,
-    "q_cube": Q_CUBE_SQL,
-    "q_setops": Q_SETOPS_SQL,
-    "q_pivot": Q_PIVOT_SQL,
-    "q_agg_distinct": Q_AGG_DISTINCT_SQL,
-    "q_above_brand_avg": Q_ABOVE_AVG_SQL,
-    "q_band_join": Q_BAND_JOIN_SQL,
-    "q_asof_join": Q_ASOF_SQL,
-    "q_asof_forward": Q_ASOF_FORWARD_SQL,
-    "q_asof_nearest": Q_ASOF_NEAREST_SQL,
-    "q_sessionize": Q_SESSIONIZE_SQL,
-    "q_time_bucket_ohlc": Q_OHLC_SQL,
-    "q_bpi_pipeline": _bpi_oracle(),
-    "q_doc_token_stats": Q_DOC_TOKEN_SQL,
-    "q_lang_stats": Q_LANG_STATS_SQL,
-    "q_word_freq": Q_WORD_FREQ_SQL,
-    "q_dedup_exact": Q_DEDUP_EXACT_SQL,
-    "q_quality_scores": Q_QUALITY_SQL,
-    "q_media_bytes": Q_MEDIA_SQL,
-    "q_embedding_topk": Q_EMBEDDING_TOPK_SQL,
-    "q_stream_ohlc": Q_STREAM_OHLC_SQL,
-    "q_minhash_pairs": Q_MINHASH_PAIRS_SQL,
-    "q_lsh_topk": Q_ANN_RECALL_SQL,
-    "q_ivf_topk": Q_ANN_RECALL_SQL,
-    "q_pq_topk": Q_ANN_RECALL_SQL,
-    "q_batch_topk": Q_BATCH_TOPK_SQL,
-    "q_stream_ann": Q_ANN_RECALL_SQL,
-    "q_fingerprints": Q_FINGERPRINTS_SQL,
-    # q_simhash_pairs is oracled through induced structure (see its
-    # docstring): identical-token-multiset pairs at xx_hamming 0 + the
-    # cross-banding equivalence flag. Raw xxhash64 pair VALUES stay
-    # engine-specific; the md5 twin q_simhash_md5_pairs carries the
-    # bit-exact value-level oracle.
-    "q_simhash_pairs": Q_SIMHASH_XX_SQL,
-}
-
-# second + third + fourth coverage waves
-from .queries_ext import EXT_ORACLES, EXT_QUERIES  # noqa: E402
-from .queries_ext2 import EXT2_ORACLES, EXT2_QUERIES  # noqa: E402
-from .queries_ext3 import EXT3_ORACLES, EXT3_QUERIES  # noqa: E402
-from .queries_ext4 import EXT4_ORACLES, EXT4_QUERIES  # noqa: E402
-
-QUERIES.update(EXT_QUERIES)
-ORACLES.update(EXT_ORACLES)
-QUERIES.update(EXT2_QUERIES)
-ORACLES.update(EXT2_ORACLES)
-QUERIES.update(EXT3_QUERIES)
-ORACLES.update(EXT3_ORACLES)
-QUERIES.update(EXT4_QUERIES)
-ORACLES.update(EXT4_ORACLES)
-from .queries_ext5 import EXT5_ORACLES, EXT5_QUERIES  # noqa: E402
-
-QUERIES.update(EXT5_QUERIES)
-ORACLES.update(EXT5_ORACLES)
-from .queries_ext6 import EXT6_ORACLES, EXT6_QUERIES  # noqa: E402
-
-QUERIES.update(EXT6_QUERIES)
-ORACLES.update(EXT6_ORACLES)
-from .queries_ext7 import EXT7_ORACLES, EXT7_QUERIES  # noqa: E402
-
-QUERIES.update(EXT7_QUERIES)
-ORACLES.update(EXT7_ORACLES)
-# the served-index probes carry the same exact-top-10 + recall oracle
-# as the other ANN families
-ORACLES["q_lsh_served_topk"] = Q_ANN_RECALL_SQL
-ORACLES["q_ivf_served_topk"] = Q_ANN_RECALL_SQL
-ORACLES["q_pq_served_topk"] = Q_ANN_RECALL_SQL
-from .queries_ext8 import EXT8_ORACLES, EXT8_QUERIES  # noqa: E402
-
-QUERIES.update(EXT8_QUERIES)
-ORACLES.update(EXT8_ORACLES)
-from .queries_ext9 import EXT9_ORACLES, EXT9_QUERIES  # noqa: E402
-
-QUERIES.update(EXT9_QUERIES)
-ORACLES.update(EXT9_ORACLES)
-from .queries_ext10 import EXT10_ORACLES, EXT10_QUERIES  # noqa: E402
-
-QUERIES.update(EXT10_QUERIES)
-ORACLES.update(EXT10_ORACLES)
-# streamed SCD2 ≡ batch SCD2: the batch oracle verbatim
-from .queries_ext4 import Q_SCD2_SQL  # noqa: E402
-
-ORACLES["q_stream_scd2"] = Q_SCD2_SQL
-from .queries_ext11 import EXT11_ORACLES, EXT11_QUERIES  # noqa: E402
-
-QUERIES.update(EXT11_QUERIES)
-ORACLES.update(EXT11_ORACLES)
-from .queries_ext12 import EXT12_ORACLES, EXT12_QUERIES  # noqa: E402
-
-QUERIES.update(EXT12_QUERIES)
-ORACLES.update(EXT12_ORACLES)
-from .queries_ext13 import EXT13_ORACLES, EXT13_QUERIES  # noqa: E402
-
-QUERIES.update(EXT13_QUERIES)
-ORACLES.update(EXT13_ORACLES)
-from .queries_ext14 import EXT14_ORACLES, EXT14_QUERIES  # noqa: E402
-
-QUERIES.update(EXT14_QUERIES)
-ORACLES.update(EXT14_ORACLES)
-# streamed moments ≡ batch moments: the batch oracle verbatim
-from .queries_ext3 import Q_STATS_MOMENTS_SQL as _QSM  # noqa: E402
-
-ORACLES["q_stream_moments"] = _QSM
-from .queries_ext15 import EXT15_ORACLES, EXT15_QUERIES  # noqa: E402
-
-QUERIES.update(EXT15_QUERIES)
-ORACLES.update(EXT15_ORACLES)
-from .queries_ext16 import EXT16_ORACLES, EXT16_QUERIES  # noqa: E402
-
-QUERIES.update(EXT16_QUERIES)
-ORACLES.update(EXT16_ORACLES)
-# streamed retention ≡ batch retention: the batch oracle verbatim
-from .queries_ext14 import Q_COHORT_RETENTION_SQL as _QCR  # noqa: E402
-
-ORACLES["q_stream_retention"] = _QCR
-from .queries_ext17 import EXT17_ORACLES, EXT17_QUERIES  # noqa: E402
-
-QUERIES.update(EXT17_QUERIES)
-ORACLES.update(EXT17_ORACLES)
-# streamed bigrams ≡ batch bigrams: the batch oracle verbatim
-from .queries_ext16 import Q_EVENT_BIGRAMS_SQL as _QEB  # noqa: E402
-
-ORACLES["q_stream_bigrams"] = _QEB
-from .queries_ext18 import EXT18_ORACLES, EXT18_QUERIES  # noqa: E402
-
-QUERIES.update(EXT18_QUERIES)
-ORACLES.update(EXT18_ORACLES)
-from .queries_ext19 import EXT19_ORACLES, EXT19_QUERIES  # noqa: E402
-
-QUERIES.update(EXT19_QUERIES)
-ORACLES.update(EXT19_ORACLES)
-from .queries_ext20 import EXT20_ORACLES, EXT20_QUERIES  # noqa: E402
-
-QUERIES.update(EXT20_QUERIES)
-ORACLES.update(EXT20_ORACLES)
-# streamed paths ≡ batch paths: the batch oracle verbatim
-from .queries_ext18 import Q_TOP_PATHS_SQL as _QTP  # noqa: E402
-
-ORACLES["q_stream_paths"] = _QTP
-from .queries_ext21 import EXT21_ORACLES, EXT21_QUERIES  # noqa: E402
-
-QUERIES.update(EXT21_QUERIES)
-ORACLES.update(EXT21_ORACLES)
-# streamed changepoint ≡ batch changepoint: the batch oracle verbatim
-from .queries_ext19 import Q_CHANGEPOINT_SQL as _QCP  # noqa: E402
-
-ORACLES["q_stream_changepoint"] = _QCP
-from .queries_ext22 import EXT22_ORACLES, EXT22_QUERIES  # noqa: E402
-
-QUERIES.update(EXT22_QUERIES)
-ORACLES.update(EXT22_ORACLES)
-from .queries_ext23 import EXT23_ORACLES, EXT23_QUERIES  # noqa: E402
-
-QUERIES.update(EXT23_QUERIES)
-ORACLES.update(EXT23_ORACLES)
-# streamed diversity ≡ batch diversity: the batch oracle verbatim
-from .queries_ext20 import Q_DIVERSITY_INDEX_SQL as _QDI  # noqa: E402
-
-ORACLES["q_stream_diversity"] = _QDI
-from .queries_ext24 import EXT24_ORACLES, EXT24_QUERIES  # noqa: E402
-
-QUERIES.update(EXT24_QUERIES)
-ORACLES.update(EXT24_ORACLES)
-from .queries_ext25 import EXT25_ORACLES, EXT25_QUERIES  # noqa: E402
-
-QUERIES.update(EXT25_QUERIES)
-ORACLES.update(EXT25_ORACLES)
-from .queries_ext26 import EXT26_ORACLES, EXT26_QUERIES  # noqa: E402
-
-QUERIES.update(EXT26_QUERIES)
-ORACLES.update(EXT26_ORACLES)
-# streamed attribution ≡ batch attribution: the batch oracle verbatim
-from .queries_ext25 import Q_ATTRIBUTION_SQL as _QAT  # noqa: E402
-
-ORACLES["q_stream_attribution"] = _QAT
-from .queries_ext27 import EXT27_ORACLES, EXT27_QUERIES  # noqa: E402
-
-QUERIES.update(EXT27_QUERIES)
-ORACLES.update(EXT27_ORACLES)
-from .queries_ext28 import EXT28_ORACLES, EXT28_QUERIES  # noqa: E402
-
-QUERIES.update(EXT28_QUERIES)
-ORACLES.update(EXT28_ORACLES)
-# streamed KS ≡ batch KS: the batch oracle verbatim
-from .queries_ext26 import Q_KS_STATISTIC_SQL as _QKS  # noqa: E402
-
-ORACLES["q_stream_ks"] = _QKS
-from .queries_ext29 import EXT29_ORACLES, EXT29_QUERIES  # noqa: E402
-
-QUERIES.update(EXT29_QUERIES)
-ORACLES.update(EXT29_ORACLES)
-from .queries_ext30 import EXT30_ORACLES, EXT30_QUERIES  # noqa: E402
-
-QUERIES.update(EXT30_QUERIES)
-ORACLES.update(EXT30_ORACLES)
-from .queries_ext31 import EXT31_ORACLES, EXT31_QUERIES  # noqa: E402
-
-QUERIES.update(EXT31_QUERIES)
-ORACLES.update(EXT31_ORACLES)
-# streamed reach ≡ batch reach: the batch oracle verbatim
-from .queries_ext30 import Q_CUMULATIVE_REACH_SQL as _QCRE  # noqa: E402
-
-ORACLES["q_stream_reach"] = _QCRE
-from .queries_ext32 import EXT32_ORACLES, EXT32_QUERIES  # noqa: E402
-
-QUERIES.update(EXT32_QUERIES)
-ORACLES.update(EXT32_ORACLES)
-# streamed survival ≡ batch survival: the batch oracle verbatim
-from .queries_ext31 import Q_SURVIVAL_CURVE_SQL as _QSC  # noqa: E402
-
-ORACLES["q_stream_survival"] = _QSC
-from .queries_ext33 import EXT33_ORACLES, EXT33_QUERIES  # noqa: E402
-
-QUERIES.update(EXT33_QUERIES)
-ORACLES.update(EXT33_ORACLES)
-from .queries_ext34 import EXT34_ORACLES, EXT34_QUERIES  # noqa: E402
-
-QUERIES.update(EXT34_QUERIES)
-ORACLES.update(EXT34_ORACLES)
-from .queries_ext35 import EXT35_ORACLES, EXT35_QUERIES  # noqa: E402
-
-QUERIES.update(EXT35_QUERIES)
-ORACLES.update(EXT35_ORACLES)
-from .queries_ext36 import EXT36_ORACLES, EXT36_QUERIES  # noqa: E402
-
-QUERIES.update(EXT36_QUERIES)
-ORACLES.update(EXT36_ORACLES)
-from .queries_ext37 import EXT37_ORACLES, EXT37_QUERIES  # noqa: E402
-
-QUERIES.update(EXT37_QUERIES)
-ORACLES.update(EXT37_ORACLES)
-from .queries_ext38 import EXT38_ORACLES, EXT38_QUERIES  # noqa: E402
-
-QUERIES.update(EXT38_QUERIES)
-ORACLES.update(EXT38_ORACLES)
-# heavy-oracle verification twins (wave 34): generated LAST so they
-# wrap the final registered callables/oracles
-from .queries_ext34 import make_verification_twins  # noqa: E402
-
-_TWIN_QUERIES, _TWIN_ORACLES = make_verification_twins(QUERIES, ORACLES)
-QUERIES.update(_TWIN_QUERIES)
-ORACLES.update(_TWIN_ORACLES)
+seal()
+# heavy-oracle verification twins: generated LAST so they wrap the final
+# registered callables/oracles
+_twin_queries, _twin_oracles = queries_ext34.make_verification_twins(QUERIES, ORACLES)
+QUERIES.update(_twin_queries)
+ORACLES.update(_twin_oracles)

@@ -1,8 +1,8 @@
 """Extended query registry — second coverage wave over SURVEY.md §2.
 
 Same determinism contract as queries.py (decimal-cast sums, double
-passthrough, unique-key tiebreaks). Registered into the main QUERIES /
-ORACLES dicts at import time by queries.py.
+passthrough, unique-key tiebreaks). Each query registers with
+``@query`` (registry.py).
 """
 
 from __future__ import annotations
@@ -11,17 +11,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .functions.scalars import _dec
 from .io.sources import load_table, register_views
-
-
-def _dec(col: Column) -> Column:
-    return col.cast("decimal(38,6)")
+from .registry import query
 
 
 def dsum(col: Column) -> Column:
     return F.sum(_dec(col)).cast("double")
 
 
+@query(oracle=lambda: Q04_SQL)
 def q04_order_priority(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS (left-semi) + count per priority."""
     orders = load_table(spark, sf, "orders").where(
@@ -49,6 +48,7 @@ ORDER BY o_orderpriority
 """
 
 
+@query(oracle=lambda: Q07_SQL)
 def q07_nation_volume(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q7 shape: customer-nation × supplier-nation trade volume
     per year (two broadcast dim joins + year extraction)."""
@@ -98,6 +98,7 @@ GROUP BY supp_nation, cust_nation, l_year
 """
 
 
+@query
 def q_grouping_sets(spark: SparkSession, sf: str) -> DataFrame:
     """GROUPING SETS via the SQL API (same Catalyst plan as DataFrame)."""
     register_views(spark, sf)
@@ -121,6 +122,7 @@ GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 """
 
 
+@query
 def q_string_funcs(spark: SparkSession, sf: str) -> DataFrame:
     """Scalar string surface (SURVEY §2.3 F1-F3 generalized): case
     transforms, substring, length, replace, concat."""
@@ -148,6 +150,7 @@ FROM customer WHERE c_custkey <= 1000
 """
 
 
+@query
 def q_case_null(spark: SparkSession, sf: str) -> DataFrame:
     """CASE/COALESCE/NULLIF null-handling surface."""
     orders = load_table(spark, sf, "orders")
@@ -182,6 +185,7 @@ ORDER BY price_bucket, status_norm
 """
 
 
+@query
 def q_union_by_name(spark: SparkSession, sf: str) -> DataFrame:
     """unionByName across differently-ordered projections (the `data` ∪
     `data_batched` view union of SURVEY §2.8), then per-user totals."""
@@ -210,6 +214,7 @@ GROUP BY user_id ORDER BY user_id
 """
 
 
+@query
 def q_range_frame(spark: SparkSession, sf: str) -> DataFrame:
     """RANGE window frame: trailing 1-hour sum per user over event time
     (ordered by epoch micros so the range bound is numeric)."""
@@ -238,6 +243,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
 """
 
 
+@query
 def q_first_last(spark: SparkSession, sf: str) -> DataFrame:
     """first_value/last_value/nth_value analytic functions."""
     orders = load_table(spark, sf, "orders")
@@ -266,6 +272,7 @@ WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_orderkey
 """
 
 
+@query
 def q_embedding_neardup(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (≥ 0.35 — calibrated to the synthetic corpus so the check is non-vacuous), blocked on the
     label column so the pair space is |label-group|², not n² — the
@@ -339,6 +346,7 @@ WHERE ROUND(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS 
 """
 
 
+@query(oracle=lambda: Q_ALNUM_TOKEN_SQL)
 def q_alnum_token_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Token stats under the alphanumeric (BPE-pre-tokenizer-style)
     splitter: total vs distinct token counts per doc."""
@@ -361,30 +369,3 @@ FROM (SELECT doc_id,
              list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS toks
       FROM documents)
 """
-
-
-EXT_QUERIES = {
-    "q04_order_priority": q04_order_priority,
-    "q07_nation_volume": q07_nation_volume,
-    "q_grouping_sets": q_grouping_sets,
-    "q_string_funcs": q_string_funcs,
-    "q_case_null": q_case_null,
-    "q_union_by_name": q_union_by_name,
-    "q_range_frame": q_range_frame,
-    "q_first_last": q_first_last,
-    "q_embedding_neardup": q_embedding_neardup,
-    "q_alnum_token_stats": q_alnum_token_stats,
-}
-
-EXT_ORACLES = {
-    "q04_order_priority": Q04_SQL,
-    "q07_nation_volume": Q07_SQL,
-    "q_grouping_sets": Q_GROUPING_SETS_SQL,
-    "q_string_funcs": Q_STRING_FUNCS_SQL,
-    "q_case_null": Q_CASE_NULL_SQL,
-    "q_union_by_name": Q_UNION_BY_NAME_SQL,
-    "q_range_frame": Q_RANGE_FRAME_SQL,
-    "q_first_last": Q_FIRST_LAST_SQL,
-    "q_embedding_neardup": Q_EMBEDDING_NEARDUP_SQL,
-    "q_alnum_token_stats": Q_ALNUM_TOKEN_SQL,
-}

@@ -23,26 +23,25 @@ long-lived 100-TB corpus runs around its queries.
   per format — the three rows must agree exactly, which is the check
   that a format migration or a mixed-landing-zone union loses nothing.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
-
-import atexit
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io.sources import load_table
 from .operators.text import tokenize
+from .registry import query
+from .session import scratch_dir
 
 
 # ------------------------------------- streamed SCD2 maintenance
 
 
+@query(twin_of="q_scd2")
 def q_stream_scd2(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed SCD2: the event feed replays in 3 micro-batch chunks;
     each batch lands its distinct (user, ts, MIN tier) partials in a
@@ -54,8 +53,7 @@ def q_stream_scd2(spark: SparkSession, sf: str) -> DataFrame:
     from .streaming.scd_stream import read_scd2, stream_scd2_log
 
     ev = load_table(spark, sf, "events").select("event_id", "user_id", "ts", "value")
-    work = tempfile.mkdtemp(prefix="stream_scd2_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_scd2_")
     src = f"{work}/src"
     for c in range(3):
         ev.where(F.col("event_id") % 3 == c).coalesce(1).write.parquet(
@@ -100,6 +98,7 @@ def q_stream_scd2(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------- right-to-be-forgotten cascade
 
 
+@query
 def q_forget_users(spark: SparkSession, sf: str) -> DataFrame:
     """Deletion-cascade audit: customers with c_custkey % 53 == 0 are
     the (deterministic, synthetic) forget list; their orders and those
@@ -160,6 +159,7 @@ ORDER BY table_name
 # -------------------------------------- curriculum training order
 
 
+@query
 def q_curriculum_order(spark: SparkSession, sf: str) -> DataFrame:
     """Curriculum order: rank docs by (quality bin ASC, md5 shuffle) —
     cleanest bin first, reproducibly shuffled within each bin — using
@@ -217,6 +217,7 @@ FROM q ORDER BY doc_id
 _FEDERATION_DIRS: dict[str, str] = {}
 
 
+@query
 def q_multi_format_union(spark: SparkSession, sf: str) -> DataFrame:
     """Source federation / migration check: the purchase slice of
     events lands once as parquet, csv, and json; the query reads all
@@ -228,8 +229,7 @@ def q_multi_format_union(spark: SparkSession, sf: str) -> DataFrame:
     agreement failures localize to the format that drifted."""
     key = sf
     if key not in _FEDERATION_DIRS:
-        d = tempfile.mkdtemp(prefix="federation_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        d = scratch_dir("federation_")
         slice_ = (
             load_table(spark, sf, "events")
             .where(F.col("event_type") == "purchase")
@@ -274,18 +274,3 @@ SELECT fmt, n, sum_value
 FROM a, (VALUES ('csv'), ('json'), ('parquet')) AS f(fmt)
 ORDER BY fmt
 """
-
-
-EXT10_QUERIES = {
-    "q_stream_scd2": q_stream_scd2,
-    "q_forget_users": q_forget_users,
-    "q_curriculum_order": q_curriculum_order,
-    "q_multi_format_union": q_multi_format_union,
-}
-
-EXT10_ORACLES = {
-    # streamed ≡ batch: the batch SCD2 oracle, unchanged
-    "q_forget_users": Q_FORGET_USERS_SQL,
-    "q_curriculum_order": Q_CURRICULUM_ORDER_SQL,
-    "q_multi_format_union": Q_MULTI_FORMAT_UNION_SQL,
-}

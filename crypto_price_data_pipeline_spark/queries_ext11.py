@@ -30,7 +30,7 @@ retrieval, vocabulary coverage, shard planning, hard-negative mining.
   query vectors, the top-3 most-similar items with a DIFFERENT label
   (broadcast-NLJ scored in one corpus pass, per-query window top-k).
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
@@ -42,11 +42,13 @@ from pyspark.sql.window import Window
 
 from .io.sources import load_table
 from .operators.text import tokenize
+from .registry import query
 
 
 # ----------------------------------------------- CDC merge (MERGE INTO)
 
 
+@query
 def q_merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
     """Apply the latest-event-per-user CDC batch to the customer
     snapshot: key = user_id + 100 (so the batch spans matched updates,
@@ -122,6 +124,7 @@ SELECT * FROM matched UNION ALL SELECT * FROM ins ORDER BY c_custkey
 # --------------------------------------- fixed-point weighted PageRank
 
 
+@query
 def q_graph_rank(spark: SparkSession, sf: str) -> DataFrame:
     """Source-authority ranking over the nation trade graph: edge
     (customer nation → supplier nation) weighted by lineitem count,
@@ -193,6 +196,7 @@ ORDER BY r5.node
 # ------------------------------------------- MMR diversified retrieval
 
 
+@query
 def q_mmr_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Diversified top-5 for the vec_id=7 query vector over a 12-item
     relevance shortlist, λ=0.7 — the greedy trade of relevance against
@@ -265,6 +269,7 @@ ORDER BY mmr_rank
 # ------------------------------------------ vocabulary / OOV coverage
 
 
+@query
 def q_vocab_coverage(spark: SparkSession, sf: str) -> DataFrame:
     """Build the top-256 doc-frequency vocabulary on the train split
     (q_train_split's md5-nibble rule), then measure held-out OOV per
@@ -365,6 +370,7 @@ GROUP BY h.lang ORDER BY h.lang
 # ------------------------------------------- token-budget shard plan
 
 
+@query
 def q_shard_manifest(spark: SparkSession, sf: str) -> DataFrame:
     """Output-shard planning: docs in the seeded epoch-shuffle order
     get exclusive cumulative token offsets (two-phase distributed
@@ -438,6 +444,7 @@ FROM o GROUP BY 1 ORDER BY 1
 # --------------------------------------------- hard-negative mining
 
 
+@query
 def q_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     """Retrieval-training hard negatives: for each of 8 query vectors,
     the 3 most-cosine-similar corpus items with a DIFFERENT label —
@@ -484,22 +491,3 @@ ranked AS (
 SELECT q_id, neg_rank, vec_id, ROUND(sim, 9) AS sim_r9
 FROM ranked WHERE neg_rank <= 3 ORDER BY q_id, neg_rank
 """
-
-
-EXT11_QUERIES = {
-    "q_merge_upsert": q_merge_upsert,
-    "q_graph_rank": q_graph_rank,
-    "q_mmr_topk": q_mmr_topk,
-    "q_vocab_coverage": q_vocab_coverage,
-    "q_shard_manifest": q_shard_manifest,
-    "q_hard_negatives": q_hard_negatives,
-}
-
-EXT11_ORACLES = {
-    "q_merge_upsert": Q_MERGE_UPSERT_SQL,
-    "q_graph_rank": Q_GRAPH_RANK_SQL,
-    "q_mmr_topk": Q_MMR_TOPK_SQL,
-    "q_vocab_coverage": Q_VOCAB_COVERAGE_SQL,
-    "q_shard_manifest": Q_SHARD_MANIFEST_SQL,
-    "q_hard_negatives": Q_HARD_NEGATIVES_SQL,
-}

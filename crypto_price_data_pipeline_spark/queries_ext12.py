@@ -27,30 +27,27 @@ time-weighted aggregation, planner stats, drift monitoring.
   against the frozen train-split vocabulary; per-chunk streamed
   metrics ≡ the batch per-chunk rule.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
-
-import atexit
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
-from .session import materialize
+from .session import materialize, scratch_dir
 from .streaming.partial_store import run_partial_stream
 from .operators.text import tokenize
-from .queries_ext11 import Q_MERGE_UPSERT_SQL
+from .registry import query
 
 
 # ------------------------------------------------ streamed MERGE INTO
 
 
+@query(twin_of="q_merge_upsert")
 def q_stream_merge(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed CDC merge: events replay in 3 chunks; per-batch
     latest-per-user partials land per-batch_id; read path re-reduces
@@ -63,8 +60,7 @@ def q_stream_merge(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="stream_merge_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_merge_")
     src = f"{work}/src"
     for c in range(3):
         ev.where(F.col("event_id") % 3 == c).coalesce(1).write.parquet(
@@ -141,6 +137,7 @@ def _skew_row(df: DataFrame, table: str, col: str) -> DataFrame:
     )
 
 
+@query
 def q_skew_report(spark: SparkSession, sf: str) -> DataFrame:
     """Join-key skew diagnostic: frequency-distribution stats per key
     column — the measurement that decides whether a join needs
@@ -183,6 +180,7 @@ ORDER BY table_name
 # ---------------------------------------- language-ID confusion matrix
 
 
+@query(oracle=lambda: _lang_confusion_sql())
 def q_lang_confusion(spark: SparkSession, sf: str) -> DataFrame:
     """Classifier eval: confusion matrix of the stopword-profile
     language ID against the ground-truth lang column — integer counts
@@ -233,6 +231,7 @@ FROM pred GROUP BY lang, lang_pred ORDER BY lang, lang_pred
 # -------------------------------------------- time-weighted average
 
 
+@query
 def q_time_weighted_avg(spark: SparkSession, sf: str) -> DataFrame:
     """Time-weighted mean of each user's irregular value series:
     Σ value·dt / Σ dt over consecutive-event intervals. Values scale
@@ -306,6 +305,7 @@ _STATS_COLS = [
 ]
 
 
+@query
 def q_table_stats(spark: SparkSession, sf: str) -> DataFrame:
     """ANALYZE-equivalent stats catalog: rows / exact NDV / nulls /
     min / max per column — the numbers a cost-based planner (or this
@@ -353,6 +353,7 @@ FROM {t}"""
 # ------------------------------------------ streamed vocabulary drift
 
 
+@query
 def q_stream_vocab_drift(spark: SparkSession, sf: str) -> DataFrame:
     """Ingest-time drift monitor: the corpus replays in 3 chunks; each
     micro-batch measures its token count and OOV rate against the
@@ -382,8 +383,7 @@ def q_stream_vocab_drift(spark: SparkSession, sf: str) -> DataFrame:
         .select("token", F.lit(1).alias("_in_vocab"))
         .transform(materialize)
     )
-    work = tempfile.mkdtemp(prefix="stream_vocab_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_vocab_")
     src = f"{work}/src"
     plain = docs
     for c in range(3):
@@ -455,22 +455,3 @@ SELECT a.chunk,
 FROM all_tok a LEFT JOIN vocab v ON a.token = v.token
 GROUP BY a.chunk ORDER BY a.chunk
 """
-
-
-EXT12_QUERIES = {
-    "q_stream_merge": q_stream_merge,
-    "q_skew_report": q_skew_report,
-    "q_lang_confusion": q_lang_confusion,
-    "q_time_weighted_avg": q_time_weighted_avg,
-    "q_table_stats": q_table_stats,
-    "q_stream_vocab_drift": q_stream_vocab_drift,
-}
-
-EXT12_ORACLES = {
-    "q_stream_merge": Q_MERGE_UPSERT_SQL,
-    "q_skew_report": Q_SKEW_REPORT_SQL,
-    "q_lang_confusion": _lang_confusion_sql(),
-    "q_time_weighted_avg": Q_TIME_WEIGHTED_AVG_SQL,
-    "q_table_stats": Q_TABLE_STATS_SQL,
-    "q_stream_vocab_drift": Q_STREAM_VOCAB_DRIFT_SQL,
-}

@@ -27,15 +27,11 @@ weighted curation sampling, robust statistics, interval algebra.
   islands via a running-max window, total covered micros + island
   count in exact integer arithmetic.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
-
-import atexit
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +41,8 @@ from .io.sources import load_table
 from .streaming.partial_store import run_partial_stream
 from .operators.text import tokenize
 from .queries import S_DSUM, dsum
+from .registry import query
+from .session import scratch_dir
 
 
 # ------------------------------------------------ exact heavy hitters
@@ -52,6 +50,7 @@ from .queries import S_DSUM, dsum
 _HH_DEN = 50
 
 
+@query
 def q_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus tokens with frequency > n/50, exact counts — via the
     Misra-Gries candidate pass + exact recount (no long-tail shuffle)."""
@@ -75,14 +74,14 @@ ORDER BY freq DESC, token
 """
 
 
+@query(twin_of="q_heavy_hitters")
 def q_stream_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed heavy hitters: docs replay in 3 chunks; each
     micro-batch lands its exact per-token counts (additive partials,
     per-batch_id overwrite); read re-sums and applies the identical
     integer threshold. Streamed ≡ batch whatever the chunking."""
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="stream_hh_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_hh_")
     src = f"{work}/src"
     for c in range(3):
         docs.where(F.col("doc_id") % 3 == c).coalesce(1).write.parquet(
@@ -119,6 +118,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
 # ------------------------------------------- fact-to-SCD2 as-of join
 
 
+@query
 def q_temporal_join(spark: SparkSession, sf: str) -> DataFrame:
     """Enrich the click stream with each user's tier VALID AT CLICK
     TIME, where tier history is the SCD2 collapse of purchase events
@@ -199,6 +199,7 @@ ORDER BY tier_asof
 # ------------------------------------- length-weighted hash sampling
 
 
+@query
 def q_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
     """Length-weighted deterministic Bernoulli sample: keep a doc iff
     ``hash64(doc) · 512 < n_tok · 2^32`` (P ≈ n_tok/512, docs ≥512
@@ -241,6 +242,7 @@ GROUP BY lang ORDER BY lang
 # ------------------------------------------ robust (median/IQR) scale
 
 
+@query
 def q_robust_scale(spark: SparkSession, sf: str) -> DataFrame:
     """Robust outlier cut per event type: |value − median| > 1.5·IQR
     — the heavy-tail-safe alternative to z-scores (median and exact
@@ -288,6 +290,7 @@ ORDER BY e.event_type
 # --------------------------------------- interval-union coverage
 
 
+@query
 def q_interval_coverage(spark: SparkSession, sf: str) -> DataFrame:
     """Gaps-and-islands interval union per user: each event covers
     [ts, ts + value µs-scaled]; overlapping intervals merge into
@@ -348,22 +351,3 @@ islands AS (
 SELECT user_id, COUNT(*) AS n_islands, CAST(SUM(covered) AS BIGINT) AS covered_micros
 FROM islands GROUP BY user_id ORDER BY user_id
 """
-
-
-EXT13_QUERIES = {
-    "q_heavy_hitters": q_heavy_hitters,
-    "q_stream_heavy_hitters": q_stream_heavy_hitters,
-    "q_temporal_join": q_temporal_join,
-    "q_weighted_sample": q_weighted_sample,
-    "q_robust_scale": q_robust_scale,
-    "q_interval_coverage": q_interval_coverage,
-}
-
-EXT13_ORACLES = {
-    "q_heavy_hitters": Q_HEAVY_HITTERS_SQL,
-    "q_stream_heavy_hitters": Q_HEAVY_HITTERS_SQL,
-    "q_temporal_join": Q_TEMPORAL_JOIN_SQL,
-    "q_weighted_sample": Q_WEIGHTED_SAMPLE_SQL,
-    "q_robust_scale": Q_ROBUST_SCALE_SQL,
-    "q_interval_coverage": Q_INTERVAL_COVERAGE_SQL,
-}

@@ -25,28 +25,28 @@ RAG chunking, incremental statistics, association analysis.
   and a single float division; bounded-quadratic by the vocabulary
   cap, the PMI-style co-occurrence miner.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.scalars import _dec
 from .io.sources import load_table
 from .streaming.partial_store import run_partial_stream
 from .operators.text import tokenize
-from .queries import _dec, dsum
+from .queries import dsum
+from .registry import query
+from .session import scratch_dir
 
 
 # ------------------------------------------------- cohort retention
 
 
+@query
 def q_cohort_retention(spark: SparkSession, sf: str) -> DataFrame:
     """Weekly retention triangle: cohort = ISO week of the user's
     first event; each (cohort, offset) cell counts distinct users
@@ -91,6 +91,7 @@ GROUP BY 1, 2 ORDER BY 1, 2
 # --------------------------------------------- A/B assignment readout
 
 
+@query
 def q_ab_assign(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic experiment split (md5 first nibble: 0-7 control,
     8-f treatment) + per-arm conversion metrics in one pass — hash
@@ -143,6 +144,7 @@ FROM tagged GROUP BY arm ORDER BY arm
 # ------------------------------------------- block-shuffled ordering
 
 
+@query
 def q_block_shuffle(spark: SparkSession, sf: str) -> DataFrame:
     """Shuffle-buffer training order: 64-doc blocks permuted by block
     hash, docs permuted within each block — preserves shard I/O
@@ -191,6 +193,7 @@ FROM ranked GROUP BY block ORDER BY block
 # --------------------------------------------- sliding-window chunks
 
 
+@query
 def q_sliding_chunks(spark: SparkSession, sf: str) -> DataFrame:
     """Overlapping RAG chunking: 32-token windows at stride 16
     (n_chunks = 1 + ⌊max(n_tok−32, 0)/16⌋), built in-row with
@@ -251,6 +254,7 @@ FROM chunks GROUP BY lang ORDER BY lang
 # ------------------------------------------ streamed second moments
 
 
+@query(twin_of="q_stats_moments")
 def q_stream_moments(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental statistics maintenance: lineitem replays in 3
     chunks; each micro-batch lands its exact DECIMAL(38,6) partial
@@ -261,8 +265,7 @@ def q_stream_moments(spark: SparkSession, sf: str) -> DataFrame:
     li = load_table(spark, sf, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity", "l_discount"
     )
-    work = tempfile.mkdtemp(prefix="stream_moments_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_moments_")
     src = f"{work}/src"
     for c in range(3):
         li.where(F.col("l_orderkey") % 3 == c).coalesce(1).write.parquet(
@@ -326,6 +329,7 @@ def q_stream_moments(spark: SparkSession, sf: str) -> DataFrame:
 # ------------------------------------------- co-occurrence lift
 
 
+@query
 def q_cooccurrence(spark: SparkSession, sf: str) -> DataFrame:
     """Association mining over the top-32 vocabulary: pair lift
     n_ab·N / (n_a·n_b) from exact integer document counts (single
@@ -384,21 +388,3 @@ SELECT tok_a, tok_b, CAST(n_ab AS BIGINT) AS n_ab,
 FROM pairs
 ORDER BY lift DESC, tok_a, tok_b LIMIT 20
 """
-
-
-EXT14_QUERIES = {
-    "q_cohort_retention": q_cohort_retention,
-    "q_ab_assign": q_ab_assign,
-    "q_block_shuffle": q_block_shuffle,
-    "q_sliding_chunks": q_sliding_chunks,
-    "q_stream_moments": q_stream_moments,
-    "q_cooccurrence": q_cooccurrence,
-}
-
-EXT14_ORACLES = {
-    "q_cohort_retention": Q_COHORT_RETENTION_SQL,
-    "q_ab_assign": Q_AB_ASSIGN_SQL,
-    "q_block_shuffle": Q_BLOCK_SHUFFLE_SQL,
-    "q_sliding_chunks": Q_SLIDING_CHUNKS_SQL,
-    "q_cooccurrence": Q_COOCCURRENCE_SQL,
-}

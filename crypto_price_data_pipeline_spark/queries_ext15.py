@@ -25,27 +25,27 @@ trend/decay analytics.
   pow, so both engines compute identical doubles before the one
   decimal-summed aggregate.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.scalars import _dec
 from .io.sources import load_table
 from .streaming.partial_store import run_partial_stream
 from .operators.text import tokenize
+from .registry import query
+from .session import scratch_dir
 
 
 # --------------------------------------------- data-quality contract
 
 
+@query
 def q_data_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
     """Six-rule expectations gate over the warehouse tables; one row
     per rule with exact violation counts. FK rules prune the parent
@@ -133,6 +133,7 @@ ORDER BY rule_name
 # ------------------------------------------ streamed quality monitor
 
 
+@query
 def q_stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
     """Ingest-time contract monitoring: the event feed replays in 3
     chunks; each micro-batch lands additive per-rule violation
@@ -142,8 +143,7 @@ def q_stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="stream_dq_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_dq_")
     src = f"{work}/src"
     for c in range(3):
         ev.where(F.col("event_id") % 3 == c).coalesce(1).write.parquet(
@@ -220,6 +220,7 @@ ORDER BY rule_name
 # ------------------------------------------------- prefix autocomplete
 
 
+@query
 def q_autocomplete(spark: SparkSession, sf: str) -> DataFrame:
     """Search-box autocomplete table: top-3 completions by corpus
     frequency per first-keystroke prefix (tie → token asc), prefixes
@@ -269,6 +270,7 @@ ORDER BY prefix, rank
 # ---------------------------------------------- text normalization
 
 
+@query
 def q_text_normalize(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic normalization pass (lowercase → strip
     non-alphanumerics → collapse runs of spaces → trim) with change
@@ -313,14 +315,13 @@ FROM n GROUP BY lang ORDER BY lang
 # ------------------------------------------------ OLS trend per group
 
 
+@query
 def q_linear_trend(spark: SparkSession, sf: str) -> DataFrame:
     """OLS slope of value vs time per event type, x in days since the
     global minimum timestamp (centering keeps x² sums far below the
     decimal→double double-rounding bound — the q_stats_moments
     contract). Assembled from exact decimal partial sums with
     identical final double arithmetic on both engines."""
-    from .queries import _dec
-
     ev = load_table(spark, sf, "events").select("event_type", "ts", "value")
     t0 = ev.agg(F.min(F.unix_micros("ts"))).first()[0]
     x = (F.unix_micros("ts") - F.lit(t0)).cast("double") / F.lit(86400000000.0)
@@ -372,13 +373,12 @@ FROM s ORDER BY event_type
 # ------------------------------------------- time-decayed popularity
 
 
+@query
 def q_decayed_score(spark: SparkSession, sf: str) -> DataFrame:
     """Time-decayed score per event type: Σ value · 2^(−age_days),
     weight built as 1/(1<<days) — an EXACT power of two, no libm pow,
     so the weighted values are bit-identical before the decimal sum.
     The freshness-weighted popularity every ranking feed uses."""
-    from .queries import _dec
-
     ev = load_table(spark, sf, "events").select("event_type", "ts", "value")
     tmax = ev.agg(F.max(F.unix_micros("ts"))).first()[0]
     if tmax is None:
@@ -410,22 +410,3 @@ SELECT event_type, COUNT(*) AS n,
        CAST(SUM(CAST(value * weight AS DECIMAL(38,6))) AS DOUBLE) AS decayed_score
 FROM w GROUP BY event_type ORDER BY event_type
 """
-
-
-EXT15_QUERIES = {
-    "q_data_quality_gate": q_data_quality_gate,
-    "q_stream_quality_gate": q_stream_quality_gate,
-    "q_autocomplete": q_autocomplete,
-    "q_text_normalize": q_text_normalize,
-    "q_linear_trend": q_linear_trend,
-    "q_decayed_score": q_decayed_score,
-}
-
-EXT15_ORACLES = {
-    "q_data_quality_gate": Q_DATA_QUALITY_GATE_SQL,
-    "q_stream_quality_gate": Q_STREAM_QUALITY_GATE_SQL,
-    "q_autocomplete": Q_AUTOCOMPLETE_SQL,
-    "q_text_normalize": Q_TEXT_NORMALIZE_SQL,
-    "q_linear_trend": Q_LINEAR_TREND_SQL,
-    "q_decayed_score": Q_DECAYED_SCORE_SQL,
-}

@@ -25,28 +25,27 @@ analysis, forensic auditing, sequence mining, streamed retention.
   per-batch_id; read-side re-min + re-distinct and the batch final
   join — streamed ≡ batch q_cohort_retention, same oracle verbatim.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .functions.scalars import _dec
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 from .streaming.partial_store import run_partial_stream
-from .queries import _dec
 
 
 # ------------------------------------------- hierarchical rollups
 
 
+@query
 def q_rollup_hierarchy(spark: SparkSession, sf: str) -> DataFrame:
     """Minute→hour→day rollup chain with DECIMAL intermediate sums —
     each level re-aggregates the level below (count-sum, decimal-sum,
@@ -101,6 +100,7 @@ FROM events GROUP BY 1 ORDER BY 1
 # ------------------------------------------- share-of-region report
 
 
+@query
 def q_share_report(spark: SparkSession, sf: str) -> DataFrame:
     """Contribution analysis: nation revenue and its share of the
     region total. Revenue stays DECIMAL through the window sum (exact,
@@ -156,6 +156,7 @@ FROM per_nation ORDER BY r_name, n_name
 # --------------------------------------------- ABC classification
 
 
+@query
 def q_abc_classification(spark: SparkSession, sf: str) -> DataFrame:
     """Pareto/ABC classes by exact cumulative revenue share: parts
     ordered by (revenue desc, partkey), decimal cumsum, class
@@ -269,6 +270,7 @@ _BENFORD = {
 }
 
 
+@query(oracle=lambda: _benford_sql())
 def q_benford_audit(spark: SparkSession, sf: str) -> DataFrame:
     """Benford's-law forensic audit of order totals: observed
     first-digit counts vs the expected distribution (hardcoded log10
@@ -320,6 +322,7 @@ FROM obs, tot ORDER BY digit
 # ------------------------------------------------- event bigrams
 
 
+@query
 def q_event_bigrams(spark: SparkSession, sf: str) -> DataFrame:
     """Sequence mining: the 10 most frequent consecutive event-type
     transitions per user timeline — one lead window + one count agg."""
@@ -353,6 +356,7 @@ LIMIT 10
 # --------------------------------------------- streamed retention
 
 
+@query(twin_of="q_cohort_retention")
 def q_stream_retention(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed cohort retention: events replay in 3 chunks; each
     micro-batch lands two mergeable partials — per-user MIN ts (MIN is
@@ -361,8 +365,7 @@ def q_stream_retention(spark: SparkSession, sf: str) -> DataFrame:
     final join, so streamed ≡ batch q_cohort_retention (same oracle),
     whatever the chunking."""
     ev = load_table(spark, sf, "events").select("event_id", "user_id", "ts")
-    work = tempfile.mkdtemp(prefix="stream_ret_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_ret_")
     src = f"{work}/src"
     for c in range(3):
         ev.where(F.col("event_id") % 3 == c).coalesce(1).write.parquet(
@@ -408,21 +411,3 @@ def q_stream_retention(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.countDistinct("user_id").alias("n_users"))
         .orderBy("cohort", "week_offset")
     )
-
-
-EXT16_QUERIES = {
-    "q_rollup_hierarchy": q_rollup_hierarchy,
-    "q_share_report": q_share_report,
-    "q_abc_classification": q_abc_classification,
-    "q_benford_audit": q_benford_audit,
-    "q_event_bigrams": q_event_bigrams,
-    "q_stream_retention": q_stream_retention,
-}
-
-EXT16_ORACLES = {
-    "q_rollup_hierarchy": Q_ROLLUP_HIERARCHY_SQL,
-    "q_share_report": Q_SHARE_REPORT_SQL,
-    "q_abc_classification": Q_ABC_CLASSIFICATION_SQL,
-    "q_benford_audit": _benford_sql(),
-    "q_event_bigrams": Q_EVENT_BIGRAMS_SQL,
-}

@@ -24,21 +24,19 @@ uncertainty quantification, order-sensitive streaming, TS bands.
   event value — the TS band chart feed (exact interpolated
   percentiles, q_percentiles contract).
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
-
-import atexit
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 from .streaming.partial_store import (
     day_chunk_expr,
     run_partial_stream,
@@ -49,6 +47,7 @@ from .streaming.partial_store import (
 # ---------------------------------------------- dedup provenance
 
 
+@query
 def q_dedup_provenance(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup clusters with full provenance: exact-verified MinHash
     pairs (Jaccard ≥ 0.5) → connected components → one row per
@@ -129,6 +128,7 @@ ORDER BY survivor
 # ------------------------------------------------- strict funnel
 
 
+@query
 def q_strict_funnel(spark: SparkSession, sf: str) -> DataFrame:
     """Ordered-stage funnel: users who signed up, then clicked AFTER
     their first signup, then purchased AFTER that first click.
@@ -192,6 +192,7 @@ SELECT (SELECT COUNT(*) FROM s1) AS n_signup,
 # ------------------------------------------- subsample uncertainty
 
 
+@query
 def q_subsample_ci(spark: SparkSession, sf: str) -> DataFrame:
     """RNG-free uncertainty band for a corpus metric: 16 disjoint md5
     subsamples, mean token count per bucket, spread of bucket means —
@@ -241,6 +242,7 @@ FROM b
 # --------------------------------------- order-sensitive streaming
 
 
+@query(twin_of="q_event_bigrams")
 def q_stream_bigrams(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed event-transition mining — the order-SENSITIVE case:
     pairs spanning batch boundaries are invisible to any per-batch
@@ -253,8 +255,7 @@ def q_stream_bigrams(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
-    work = tempfile.mkdtemp(prefix="stream_bigrams_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_bigrams_")
     src = f"{work}/src"
     write_day_chunks(ev, src)
     store = f"{work}/partials"
@@ -326,6 +327,7 @@ def q_stream_bigrams(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------- daily value bands
 
 
+@query
 def q_daily_bands(spark: SparkSession, sf: str) -> DataFrame:
     """Daily p10/p50/p90 bands of the event value — the band-chart
     feed; exact interpolated percentiles per day bucket, rounded to
@@ -355,19 +357,3 @@ SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
        ROUND(quantile_cont(value, 0.9), 9) AS p90
 FROM events GROUP BY 1 ORDER BY 1
 """
-
-
-EXT17_QUERIES = {
-    "q_dedup_provenance": q_dedup_provenance,
-    "q_strict_funnel": q_strict_funnel,
-    "q_subsample_ci": q_subsample_ci,
-    "q_stream_bigrams": q_stream_bigrams,
-    "q_daily_bands": q_daily_bands,
-}
-
-EXT17_ORACLES = {
-    "q_dedup_provenance": Q_DEDUP_PROVENANCE_SQL,
-    "q_strict_funnel": Q_STRICT_FUNNEL_SQL,
-    "q_subsample_ci": Q_SUBSAMPLE_CI_SQL,
-    "q_daily_bands": Q_DAILY_BANDS_SQL,
-}

@@ -26,7 +26,7 @@ skyline, embedding drift, Zipf diagnostics, and path mining.
   user, ordered by (ts, event_id)) — sequence mining's workhorse
   aggregation.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py (DECIMAL(38,6) sums; sqrt/abs/div IEEE-safe;
 no exp/ln/pow in oracled values).
 """
@@ -37,12 +37,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .functions.scalars import _dec
 from .io.sources import load_table
+from .registry import query
 
 
 # ------------------------------------- sparse TF-IDF cosine pairs
 
 
+@query
 def q_tfidf_cosine_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Doc pairs with trigram-TF-IDF cosine ≥ 0.25 via inverted index.
 
@@ -64,7 +67,6 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf: str) -> DataFrame:
     a parquet scan, computes norms, and runs the posting self-join.
     """
     from .artifacts import tfidf_weights
-    from .queries import _dec
 
     w = tfidf_weights(spark, sf)
     norms = w.groupBy("doc_id").agg(
@@ -140,6 +142,7 @@ ORDER BY id_a, id_b
 # ------------------------------------------------ k-anonymity audit
 
 
+@query
 def q_k_anonymity(spark: SparkSession, sf: str) -> DataFrame:
     """Quasi-identifier groups below the k=4 anonymity floor.
 
@@ -175,6 +178,7 @@ ORDER BY 1, 2, 3
 # ----------------------------------------------------- 2-D skyline
 
 
+@query
 def q_pareto_front(spark: SparkSession, sf: str) -> DataFrame:
     """Pareto-optimal parts: minimize retail price, maximize size.
 
@@ -228,6 +232,7 @@ ORDER BY p_partkey
 # ------------------------------------------------ embedding drift
 
 
+@query
 def q_embedding_drift(spark: SparkSession, sf: str) -> DataFrame:
     """Per-dimension centroid drift between two disjoint md5 halves.
 
@@ -238,8 +243,6 @@ def q_embedding_drift(spark: SparkSession, sf: str) -> DataFrame:
     vector — one narrow explode + one hash agg, no shuffle wider than
     the (half, dim) key space (128 groups at any corpus size).
     """
-    from .queries import _dec
-
     emb = load_table(spark, sf, "embeddings")
     half = (
         F.conv(
@@ -299,6 +302,7 @@ ORDER BY dim
 # ------------------------------------------------ Zipf diagnostics
 
 
+@query
 def q_zipf_check(spark: SparkSession, sf: str) -> DataFrame:
     """Rank-frequency head with the exact Zipf product r·f(r).
 
@@ -357,6 +361,7 @@ FROM ranked WHERE rank <= 20 ORDER BY rank
 # ------------------------------------------------ top user journeys
 
 
+@query
 def q_top_paths(spark: SparkSession, sf: str) -> DataFrame:
     """Top-10 user journey prefixes: each user's first 5 events (by
     ts, event_id — a total order) joined into a '>' path, counted
@@ -397,22 +402,3 @@ SELECT path, COUNT(*) AS n_users
 FROM paths GROUP BY path
 ORDER BY n_users DESC, path LIMIT 10
 """
-
-
-EXT18_QUERIES = {
-    "q_tfidf_cosine_pairs": q_tfidf_cosine_pairs,
-    "q_k_anonymity": q_k_anonymity,
-    "q_pareto_front": q_pareto_front,
-    "q_embedding_drift": q_embedding_drift,
-    "q_zipf_check": q_zipf_check,
-    "q_top_paths": q_top_paths,
-}
-
-EXT18_ORACLES = {
-    "q_tfidf_cosine_pairs": Q_TFIDF_COSINE_PAIRS_SQL,
-    "q_k_anonymity": Q_K_ANONYMITY_SQL,
-    "q_pareto_front": Q_PARETO_FRONT_SQL,
-    "q_embedding_drift": Q_EMBEDDING_DRIFT_SQL,
-    "q_zipf_check": Q_ZIPF_CHECK_SQL,
-    "q_top_paths": Q_TOP_PATHS_SQL,
-}

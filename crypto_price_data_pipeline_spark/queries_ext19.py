@@ -26,7 +26,7 @@ inequality, change-point detection, RFM segmentation.
   metrics (ties broken by custkey — deterministic in both engines),
   rolled up to segment counts.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
@@ -36,7 +36,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .functions.scalars import _dec
 from .io.sources import load_table
+from .registry import query
 
 
 # ------------------------------------------------------ BM25 top-k
@@ -46,6 +48,7 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
+@query
 def q_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Top-10 docs for the fixed query by rational-idf BM25.
 
@@ -57,7 +60,6 @@ def q_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     the per-doc sum goes through DECIMAL(38,6) so summation order
     can't drift the hash. k1=1.2, b=0.75 (Robertson's defaults).
     """
-    from .queries import _dec
     from .operators.text import tokenize
 
     docs = load_table(spark, sf, "documents")
@@ -134,6 +136,7 @@ ORDER BY bm25_r9 DESC, doc_id LIMIT 10
 # ------------------------------------------------ association rules
 
 
+@query
 def q_lift_rules(spark: SparkSession, sf: str) -> DataFrame:
     """Event-type association rules over per-user baskets.
 
@@ -213,6 +216,7 @@ ORDER BY type_a, type_b
 # ------------------------------------------------ revenue inequality
 
 
+@query
 def q_gini_by_nation(spark: SparkSession, sf: str) -> DataFrame:
     """Per-nation Gini coefficient of customer lifetime spend.
 
@@ -289,6 +293,7 @@ FROM agg ORDER BY c_nationkey
 # ------------------------------------------------ change-point scan
 
 
+@query
 def q_changepoint(spark: SparkSession, sf: str) -> DataFrame:
     """CUSUM change-point over the daily event-value series.
 
@@ -298,8 +303,6 @@ def q_changepoint(spark: SparkSession, sf: str) -> DataFrame:
     statistic |S_t·N − S_N·n_t| per candidate split → argmax with an
     earliest-day tie-break. Means reported for both segments.
     """
-    from .queries import _dec
-
     ev = load_table(spark, sf, "events")
     daily = ev.groupBy(
         F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
@@ -371,6 +374,7 @@ ORDER BY stat DESC, split_day LIMIT 1
 # ------------------------------------------------ RFM segmentation
 
 
+@query
 def q_rfm_segments(spark: SparkSession, sf: str) -> DataFrame:
     """RFM segment rollup: quartile scores for recency / frequency /
     monetary per ordering customer, aggregated to segment counts.
@@ -527,20 +531,3 @@ SELECT r_score, f_score, m_score, COUNT(*) AS n_customers
 FROM scored GROUP BY 1, 2, 3
 ORDER BY 1, 2, 3
 """
-
-
-EXT19_QUERIES = {
-    "q_bm25_topk": q_bm25_topk,
-    "q_lift_rules": q_lift_rules,
-    "q_gini_by_nation": q_gini_by_nation,
-    "q_changepoint": q_changepoint,
-    "q_rfm_segments": q_rfm_segments,
-}
-
-EXT19_ORACLES = {
-    "q_bm25_topk": Q_BM25_TOPK_SQL,
-    "q_lift_rules": Q_LIFT_RULES_SQL,
-    "q_gini_by_nation": Q_GINI_BY_NATION_SQL,
-    "q_changepoint": Q_CHANGEPOINT_SQL,
-    "q_rfm_segments": Q_RFM_SEGMENTS_SQL,
-}

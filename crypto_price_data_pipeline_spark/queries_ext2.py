@@ -1,6 +1,6 @@
 """Third coverage wave: more TPC-H query shapes + math scalar surface.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
@@ -9,17 +9,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.scalars import _dec
 from .io.sources import load_table
-
-
-def _dec(col: Column) -> Column:
-    return col.cast("decimal(38,6)")
+from .registry import query
 
 
 def dsum(col: Column) -> Column:
     return F.sum(_dec(col)).cast("double")
 
 
+@query(oracle=lambda: Q10_SQL)
 def q10_returned_items(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q10 shape: revenue lost to returns per customer, top 20."""
     li = load_table(spark, sf, "lineitem").where(F.col("l_returnflag") == "R")
@@ -57,6 +56,7 @@ LIMIT 20
 """
 
 
+@query(oracle=lambda: Q12_SQL)
 def q12_priority_by_status(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q12 shape: conditional aggregation (urgent vs other order
     counts) per line status."""
@@ -90,6 +90,7 @@ ORDER BY l_linestatus
 """
 
 
+@query(oracle=lambda: Q14_SQL)
 def q14_promo_share(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q14 shape: conditional revenue ratio (promo share).
 
@@ -124,6 +125,7 @@ WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
 """
 
 
+@query(oracle=lambda: Q18_SQL)
 def q18_large_orders(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q18 shape: HAVING over a grouped sum, re-joined to the
     order/customer detail."""
@@ -168,6 +170,7 @@ LIMIT 100
 """
 
 
+@query(oracle=lambda: Q19_SQL)
 def q19_multi_predicate(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q19 shape: disjunctive multi-attribute predicates (brand ×
     size × quantity bands) — exercises OR-predicate pushdown/folding."""
@@ -197,6 +200,7 @@ WHERE (p_brand = 'Brand#1' AND p_size <= 10 AND l_quantity BETWEEN 1 AND 20)
 """
 
 
+@query(oracle=lambda: Q_MATH_SQL)
 def q_math_funcs(spark: SparkSession, sf: str) -> DataFrame:
     """Math scalar surface: abs/floor/ceil/round/sqrt/mod — the
     IEEE-deterministic subset (exp/ln differ in final ulp across libm
@@ -226,6 +230,7 @@ FROM lineitem WHERE l_orderkey <= 2000
 """
 
 
+@query
 def q_date_funcs(spark: SparkSession, sf: str) -> DataFrame:
     """Datetime scalar surface (SURVEY §2.3 F4-F7 generalized):
     truncation, extraction, arithmetic, formatting."""
@@ -259,6 +264,7 @@ FROM orders WHERE o_orderkey <= 2000
 """
 
 
+@query
 def q_json_extract(spark: SparkSession, sf: str) -> DataFrame:
     """JSON decode over the events.props column (SURVEY §2.3 F10):
     path extraction + typed cast + aggregation."""
@@ -286,6 +292,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 """
 
 
+@query
 def q_embedding_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """Dedup clustering: connected components over the embedding
     near-dup pair graph (iterative hash-min label propagation). The
@@ -326,6 +333,7 @@ SELECT n AS vec_id, MIN(l) AS cluster_id FROM reach GROUP BY n
 """
 
 
+@query
 def q_approx_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Sketch-based aggregates (HLL distinct, approximate quantiles) —
     the constant-memory statistics used at 100 TB where exact
@@ -366,30 +374,3 @@ SELECT l_returnflag,
        TRUE AS hll_ok, TRUE AS q50_ok, TRUE AS q95_ok
 FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """
-
-
-EXT2_QUERIES = {
-    "q_embedding_clusters": q_embedding_clusters,
-    "q_approx_stats": q_approx_stats,
-    "q_date_funcs": q_date_funcs,
-    "q_json_extract": q_json_extract,
-    "q10_returned_items": q10_returned_items,
-    "q12_priority_by_status": q12_priority_by_status,
-    "q14_promo_share": q14_promo_share,
-    "q18_large_orders": q18_large_orders,
-    "q19_multi_predicate": q19_multi_predicate,
-    "q_math_funcs": q_math_funcs,
-}
-
-EXT2_ORACLES = {
-    "q_embedding_clusters": Q_EMBEDDING_CLUSTERS_SQL,
-    "q_date_funcs": Q_DATE_FUNCS_SQL,
-    "q_json_extract": Q_JSON_EXTRACT_SQL,
-    "q10_returned_items": Q10_SQL,
-    "q12_priority_by_status": Q12_SQL,
-    "q14_promo_share": Q14_SQL,
-    "q18_large_orders": Q18_SQL,
-    "q19_multi_predicate": Q19_SQL,
-    "q_math_funcs": Q_MATH_SQL,
-    "q_approx_stats": Q_APPROX_STATS_SQL,
-}

@@ -25,28 +25,27 @@ mergeable top-paths.
   so the read side just re-ranks the union. Streamed ≡ batch
   q_top_paths, same oracle verbatim.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .functions.scalars import _dec
 from .io.sources import load_table
-from .session import materialize
+from .registry import query
+from .session import materialize, scratch_dir
 from .streaming.partial_store import run_partial_stream, write_day_chunks
 
 
 # ------------------------------------------------ BFS hop distance
 
 
+@query
 def q_bfs_hops(spark: SparkSession, sf: str) -> DataFrame:
     """(doc_id, survivor, dist) for every doc in a non-singleton
     near-dup cluster: dist = fewest pair-graph hops to the cluster's
@@ -127,6 +126,7 @@ ORDER BY c.doc_id
 # ------------------------------------------ Wilson-bound ranking
 
 
+@query
 def q_wilson_ranking(spark: SparkSession, sf: str) -> DataFrame:
     """Top-10 users by the Wilson-score lower bound of click share.
 
@@ -194,6 +194,7 @@ ORDER BY wilson_lb_r9 DESC, user_id LIMIT 10
 # ---------------------------------------- day-of-week seasonality
 
 
+@query
 def q_dow_seasonality(spark: SparkSession, sf: str) -> DataFrame:
     """Day-of-week seasonal profile of daily event value: centered
     7-day moving-average trend (full windows only — edge days with a
@@ -206,8 +207,6 @@ def q_dow_seasonality(spark: SparkSession, sf: str) -> DataFrame:
     on the ~|days| table — window and agg are negligible at any
     corpus scale.
     """
-    from .queries import _dec
-
     ev = load_table(spark, sf, "events")
     daily = ev.groupBy(
         F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
@@ -259,6 +258,7 @@ FROM resid GROUP BY 1 ORDER BY 1
 # ------------------------------------------------ corpus diversity
 
 
+@query
 def q_diversity_index(spark: SparkSession, sf: str) -> DataFrame:
     """Per-source language diversity: Gini-Simpson 1 − Σp² and the
     effective number of languages 1/Σp² — the rational diversity
@@ -266,8 +266,6 @@ def q_diversity_index(spark: SparkSession, sf: str) -> DataFrame:
     contract bans from oracled values; ENL plays the same role as
     perplexity). Two nested hash aggregates over (source, lang).
     """
-    from .queries import _dec
-
     docs = load_table(spark, sf, "documents")
     counts = docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("nl")
@@ -315,6 +313,7 @@ FROM agg ORDER BY source
 # ------------------------------------------ streamed top paths
 
 
+@query(twin_of="q_top_paths")
 def q_stream_paths(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed q_top_paths: per-batch candidate first-5-per-user rows
     are mergeable state — the global first-5 of a union is always a
@@ -326,8 +325,7 @@ def q_stream_paths(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
-    work = tempfile.mkdtemp(prefix="stream_paths_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_paths_")
     src = f"{work}/src"
     write_day_chunks(ev, src)
     store = f"{work}/candidates"
@@ -369,19 +367,3 @@ def q_stream_paths(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.col("n_users").desc(), "path")
         .limit(10)
     )
-
-
-EXT20_QUERIES = {
-    "q_bfs_hops": q_bfs_hops,
-    "q_wilson_ranking": q_wilson_ranking,
-    "q_dow_seasonality": q_dow_seasonality,
-    "q_diversity_index": q_diversity_index,
-    "q_stream_paths": q_stream_paths,
-}
-
-EXT20_ORACLES = {
-    "q_bfs_hops": Q_BFS_HOPS_SQL,
-    "q_wilson_ranking": Q_WILSON_RANKING_SQL,
-    "q_dow_seasonality": Q_DOW_SEASONALITY_SQL,
-    "q_diversity_index": Q_DIVERSITY_INDEX_SQL,
-}

@@ -24,21 +24,20 @@ plus a streamed change-point.
   by day and runs the identical change-point scan. Streamed ≡ batch
   q_changepoint, same oracle verbatim.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .functions.scalars import _dec
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 from .streaming.partial_store import run_partial_stream, write_day_chunks
 
 
@@ -62,6 +61,7 @@ def _spread16(col: Column) -> Column:
 _BOX_LO, _BOX_HI = 6554, 13107
 
 
+@query
 def q_zorder_layout(spark: SparkSession, sf: str) -> DataFrame:
     """One-row layout audit: buckets/rows a 2-D box predicate scans
     under Z-order vs linear clustering of lineitem (partkey, suppkey).
@@ -188,6 +188,7 @@ SELECT * FROM zaudit UNION ALL SELECT * FROM laudit ORDER BY layout
 # ------------------------------------- equi-depth histogram (CBO)
 
 
+@query
 def q_equi_depth_histogram(spark: SparkSession, sf: str) -> DataFrame:
     """16-bucket equi-depth histogram of o_totalprice — the planner
     statistic (selectivity estimation) as a query, with NTILE(16)
@@ -255,6 +256,7 @@ FROM t GROUP BY 1 ORDER BY 1
 # ------------------------------------------- clustering factor
 
 
+@query
 def q_clustering_factor(spark: SparkSession, sf: str) -> DataFrame:
     """Storage-order monotonicity of lineitem date columns: within
     each order (linenumber = stored sequence), count breaks (a row
@@ -332,6 +334,7 @@ FROM per ORDER BY column_name
 # ------------------------------------------- streamed change-point
 
 
+@query(twin_of="q_changepoint")
 def q_stream_changepoint(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed CUSUM change-point: per-batch (day, Σ value, n)
     decimal partials are additive semigroup state — the read side
@@ -339,11 +342,8 @@ def q_stream_changepoint(spark: SparkSession, sf: str) -> DataFrame:
     batch q_changepoint (same oracle). Per-batch_id overwrite keeps
     replays idempotent.
     """
-    from .queries import _dec
-
     ev = load_table(spark, sf, "events").select("event_id", "ts", "value")
-    work = tempfile.mkdtemp(prefix="stream_cpt_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_cpt_")
     src = f"{work}/src"
     write_day_chunks(ev, src)
     store = f"{work}/partials"
@@ -395,17 +395,3 @@ def q_stream_changepoint(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.col("stat").desc(), "split_day")
         .limit(1)
     )
-
-
-EXT21_QUERIES = {
-    "q_zorder_layout": q_zorder_layout,
-    "q_equi_depth_histogram": q_equi_depth_histogram,
-    "q_clustering_factor": q_clustering_factor,
-    "q_stream_changepoint": q_stream_changepoint,
-}
-
-EXT21_ORACLES = {
-    "q_zorder_layout": Q_ZORDER_LAYOUT_SQL,
-    "q_equi_depth_histogram": Q_EQUI_DEPTH_HISTOGRAM_SQL,
-    "q_clustering_factor": Q_CLUSTERING_FACTOR_SQL,
-}

@@ -24,7 +24,7 @@ normalization.
   of document length (the cross-corpus score equalizer used before
   mixing sources); top-3 per language shown.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
+from .registry import query
 
 _WEEK_US = 7 * 86_400_000_000
 
@@ -42,6 +43,7 @@ _WEEK_US = 7 * 86_400_000_000
 # ------------------------------------------- windowed funnel
 
 
+@query
 def q_funnel_windowed(spark: SparkSession, sf: str) -> DataFrame:
     """Deadline funnel: signup → click ≤7d later → purchase ≤7d after
     the click. One pass builds per-user min signup; two conditional
@@ -122,6 +124,7 @@ FROM n
 # ------------------------------------- retrieval agreement eval
 
 
+@query
 def q_retrieval_agreement(spark: SparkSession, sf: str) -> DataFrame:
     """Overlap@10 and rank displacement: BM25 vs raw term-frequency
     ranking for the fixed 3-term query. Reuses q_bm25_topk's ranking
@@ -225,6 +228,7 @@ FROM joined
 # ------------------------------------------- CBO cardinality audit
 
 
+@query
 def q_join_cardinality(spark: SparkSession, sf: str) -> DataFrame:
     """Textbook join-size estimate vs truth for two equi-joins.
 
@@ -304,6 +308,7 @@ FROM u ORDER BY join_name
 # ------------------------------------------- watermark lateness
 
 
+@query
 def q_lateness_audit(spark: SparkSession, sf: str) -> DataFrame:
     """Out-of-orderness audit for watermark sizing: within each user's
     arrival order (event_id — the ingest sequence), lateness = running
@@ -359,6 +364,7 @@ FROM lat
 # ---------------------------------------- quantile normalization
 
 
+@query
 def q_quantile_normalize(spark: SparkSession, sf: str) -> DataFrame:
     """Per-language percent-rank of document length — the
     cross-source score equalizer (a 90th-percentile doc means the
@@ -402,20 +408,3 @@ SELECT lang, doc_id, n_chars, pct_rank_r9
 FROM top WHERE rn <= 3
 ORDER BY lang, pct_rank_r9 DESC, doc_id
 """
-
-
-EXT22_QUERIES = {
-    "q_funnel_windowed": q_funnel_windowed,
-    "q_retrieval_agreement": q_retrieval_agreement,
-    "q_join_cardinality": q_join_cardinality,
-    "q_lateness_audit": q_lateness_audit,
-    "q_quantile_normalize": q_quantile_normalize,
-}
-
-EXT22_ORACLES = {
-    "q_funnel_windowed": Q_FUNNEL_WINDOWED_SQL,
-    "q_retrieval_agreement": Q_RETRIEVAL_AGREEMENT_SQL,
-    "q_join_cardinality": Q_JOIN_CARDINALITY_SQL,
-    "q_lateness_audit": Q_LATENESS_AUDIT_SQL,
-    "q_quantile_normalize": Q_QUANTILE_NORMALIZE_SQL,
-}

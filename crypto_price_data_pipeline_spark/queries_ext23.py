@@ -21,27 +21,27 @@ correlation, weighted median, streamed diversity.
   side merges and computes the identical index. Streamed ≡ batch
   q_diversity_index, same oracle verbatim.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .functions.scalars import _dec
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 from .streaming.partial_store import run_partial_stream
 
 
 # ------------------------------------------- peak concurrency
 
 
+@query
 def q_peak_concurrency(spark: SparkSession, sf: str) -> DataFrame:
     """One row: peak concurrent intervals, first instant it occurs,
     interval count.
@@ -126,6 +126,7 @@ FROM swept ORDER BY cur DESC, t LIMIT 1
 # ------------------------------------------- rolling correlation
 
 
+@query
 def q_rolling_corr(spark: SparkSession, sf: str) -> DataFrame:
     """7-day rolling Pearson r between daily click and purchase value
     totals. Day rollup is the only corpus-scale stage; the rolling
@@ -133,8 +134,6 @@ def q_rolling_corr(spark: SparkSession, sf: str) -> DataFrame:
     window aggregates exact; the correlation assembles in the
     FMA-safe subform and degenerate windows are dropped by an
     identical predicate in both engines."""
-    from .queries import _dec
-
     ev = load_table(spark, sf, "events")
     daily = ev.groupBy(
         F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
@@ -205,6 +204,7 @@ ORDER BY day
 # ------------------------------------------- weighted median
 
 
+@query
 def q_weighted_median(spark: SparkSession, sf: str) -> DataFrame:
     """Per-nation weighted median of customer lifetime spend (weight =
     order count): the first customer, in (spend, custkey) order, whose
@@ -275,16 +275,14 @@ FROM crossed WHERE rn = 1 ORDER BY c_nationkey
 # ------------------------------------------- streamed diversity
 
 
+@query(twin_of="q_diversity_index")
 def q_stream_diversity(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed Gini-Simpson diversity: per-batch (source, lang, n)
     counts are additive semigroup state (per-batch_id overwrite →
     replay-idempotent); the read side merges and computes the same
     index as batch q_diversity_index (same oracle)."""
-    from .queries import _dec
-
     docs = load_table(spark, sf, "documents").select("doc_id", "source", "lang")
-    work = tempfile.mkdtemp(prefix="stream_div_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_div_")
     src = f"{work}/src"
     for c in range(3):
         docs.where(F.col("doc_id") % 3 == c).coalesce(1).write.parquet(
@@ -325,17 +323,3 @@ def q_stream_diversity(spark: SparkSession, sf: str) -> DataFrame:
         F.round(F.lit(1.0) - F.col("sum_p2"), 9).alias("gini_simpson_r9"),
         F.round(F.lit(1.0) / F.col("sum_p2"), 9).alias("effective_langs_r9"),
     ).orderBy("source")
-
-
-EXT23_QUERIES = {
-    "q_peak_concurrency": q_peak_concurrency,
-    "q_rolling_corr": q_rolling_corr,
-    "q_weighted_median": q_weighted_median,
-    "q_stream_diversity": q_stream_diversity,
-}
-
-EXT23_ORACLES = {
-    "q_peak_concurrency": Q_PEAK_CONCURRENCY_SQL,
-    "q_rolling_corr": Q_ROLLING_CORR_SQL,
-    "q_weighted_median": Q_WEIGHTED_MEDIAN_SQL,
-}

@@ -27,7 +27,7 @@ fusion, experiment readout, graph motifs, temporal anomaly.
   z from exact decimal partial sums in the FMA-safe subform; days
   with |z| > 2 reported.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
@@ -37,7 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .functions.scalars import _dec
 from .io.sources import load_table
+from .registry import query
 from .session import materialize
 
 _DIM = 64
@@ -50,6 +52,7 @@ _RRF_K = 60
 _POWER_ITERS = 12
 
 
+@query
 def q_power_iteration(spark: SparkSession, sf: str) -> DataFrame:
     """64 rows: (dim, loading_r9) — the normalized top principal
     direction after 12 power steps from v₀ = e₀ (the synthetic
@@ -73,7 +76,6 @@ def q_power_iteration(spark: SparkSession, sf: str) -> DataFrame:
     power-of-two rescale variant measurably drowned the iterate in
     rounding noise at one sf or overflowed the ceiling at another.
     """
-    from .queries import _dec
     from .operators.similarity import _dot
 
     emb = load_table(spark, sf, "embeddings").select(
@@ -151,6 +153,7 @@ Q_POWER_ITERATION_SQL = _power_iteration_sql(_POWER_ITERS)
 # ------------------------------------------- RRF hybrid fusion
 
 
+@query
 def q_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
     """Reciprocal-rank fusion of BM25 and raw-TF top-10s for the fixed
     query: rrf = Σ_lists 1/(60 + rank) — absent-from-list contributes
@@ -254,6 +257,7 @@ ORDER BY rrf_r9 DESC, doc_id LIMIT 10
 # ------------------------------------------- A/B readout
 
 
+@query
 def q_ab_readout(spark: SparkSession, sf: str) -> DataFrame:
     """Experiment decision row: per-arm user-conversion (q_ab_assign's
     md5-nibble split), absolute and relative lift, pooled
@@ -354,6 +358,7 @@ FROM j
 # ------------------------------------------- triangle count
 
 
+@query
 def q_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
     """Graph motifs on the thresholded nation trade graph: undirected
     edges where the customer-nation ↔ supplier-nation lineitem weight
@@ -451,13 +456,12 @@ FROM agg
 # ------------------------------------------- rolling z-score
 
 
+@query
 def q_rolling_zscore(spark: SparkSession, sf: str) -> DataFrame:
     """Temporal anomaly days: daily per-type value totals vs the
     TRAILING 7 days (excluding today); |z| > 2 reported. Exact
     decimal window sums, FMA-safe variance subform, degenerate
     windows filtered identically."""
-    from .queries import _dec
-
     ev = load_table(spark, sf, "events")
     daily = ev.groupBy(
         "event_type",
@@ -512,20 +516,3 @@ FROM scored
 WHERE var > 0 AND ABS(ROUND((xd - s / CAST(n AS DOUBLE)) / sqrt(var), 9)) > 2.0
 ORDER BY event_type, day
 """
-
-
-EXT24_QUERIES = {
-    "q_power_iteration": q_power_iteration,
-    "q_rrf_fusion": q_rrf_fusion,
-    "q_ab_readout": q_ab_readout,
-    "q_triangle_count": q_triangle_count,
-    "q_rolling_zscore": q_rolling_zscore,
-}
-
-EXT24_ORACLES = {
-    "q_power_iteration": Q_POWER_ITERATION_SQL,
-    "q_rrf_fusion": Q_RRF_FUSION_SQL,
-    "q_ab_readout": Q_AB_READOUT_SQL,
-    "q_triangle_count": Q_TRIANGLE_COUNT_SQL,
-    "q_rolling_zscore": Q_ROLLING_ZSCORE_SQL,
-}

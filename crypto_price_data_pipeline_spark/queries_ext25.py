@@ -17,7 +17,7 @@ k-fold assignment audit.
   doc counts and token sums — the disjoint-and-complete check a
   training pipeline runs before launching k jobs.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
@@ -27,13 +27,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .functions.scalars import _dec
 from .io.sources import load_table
+from .registry import query
 from .session import materialize
 
 
 # ------------------------------------------- last-touch attribution
 
 
+@query
 def q_attribution(spark: SparkSession, sf: str) -> DataFrame:
     """One row: purchases attributed to a prior same-user click,
     unattributed purchases, and the attribution-gap stats. The carry
@@ -85,6 +88,7 @@ FROM carried WHERE event_type = 'purchase'
 # ------------------------------------------- composed forecast
 
 
+@query
 def q_seasonal_forecast(spark: SparkSession, sf: str) -> DataFrame:
     """7 rows: (future day index 1..7, isodow, forecast_r9) — linear
     trend over the observed daily totals plus the dow seasonal index.
@@ -96,8 +100,6 @@ def q_seasonal_forecast(spark: SparkSession, sf: str) -> DataFrame:
     ~|days| table; all arithmetic is decimal-exact or IEEE-safe on
     identical inputs.
     """
-    from .queries import _dec
-
     ev = load_table(spark, sf, "events")
     daily = (
         ev.groupBy(F.date_trunc("day", "ts").cast("date").alias("d"))
@@ -210,6 +212,7 @@ FROM future ORDER BY h
 # ------------------------------------------- k-fold audit
 
 
+@query
 def q_kfold_assign(spark: SparkSession, sf: str) -> DataFrame:
     """5-fold assignment audit: fold = md5 nibble mod 5 (RNG-free,
     engine-portable), per (fold, lang): doc count and token sum. The
@@ -250,16 +253,3 @@ SELECT ('0x' || substr(md5('fold:' || CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT %
 FROM documents
 GROUP BY 1, 2 ORDER BY 1, 2
 """
-
-
-EXT25_QUERIES = {
-    "q_attribution": q_attribution,
-    "q_seasonal_forecast": q_seasonal_forecast,
-    "q_kfold_assign": q_kfold_assign,
-}
-
-EXT25_ORACLES = {
-    "q_attribution": Q_ATTRIBUTION_SQL,
-    "q_seasonal_forecast": Q_SEASONAL_FORECAST_SQL,
-    "q_kfold_assign": Q_KFOLD_ASSIGN_SQL,
-}

@@ -21,21 +21,19 @@ distributed exact order statistics, two-sample distribution testing.
   achieving value reported. The distribution-drift test next to
   q_embedding_drift / q_stream_vocab_drift.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
-
-import atexit
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 from .streaming.partial_store import (
     day_chunk_expr,
     run_partial_stream,
@@ -46,6 +44,7 @@ from .streaming.partial_store import (
 # --------------------------------------- streamed attribution
 
 
+@query(twin_of="q_attribution")
 def q_stream_attribution(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed q_attribution (one summary row, same oracle). State
     per batch: attributed-gap rows + orphan purchases + per-(user,
@@ -56,8 +55,7 @@ def q_stream_attribution(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events").select(
         "user_id", "event_id", "event_type", "ts"
     )
-    work = tempfile.mkdtemp(prefix="stream_attr_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_attr_")
     src = f"{work}/src"
     write_day_chunks(ev, src)
     store = f"{work}/state"
@@ -142,6 +140,7 @@ def q_stream_attribution(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------- 2-pass exact median
 
 
+@query
 def q_exact_median_2pass(spark: SparkSession, sf: str) -> DataFrame:
     """One row: (n, k, exact_median) — the k-th smallest event value
     (lower median), found by range-bucket counting + a single-bucket
@@ -205,6 +204,7 @@ FROM n
 # --------------------------------------- KS two-sample statistic
 
 
+@query
 def q_ks_statistic(spark: SparkSession, sf: str) -> DataFrame:
     """One row: (n_click, n_purchase, d_r9, at_value) — the
     two-sample KS distance between the click and purchase value
@@ -276,15 +276,3 @@ SELECT na AS n_click, nb AS n_purchase,
        ROUND(d, 9) AS d_r9, ROUND(value, 6) AS at_value_r6
 FROM scored ORDER BY d DESC, value LIMIT 1
 """
-
-
-EXT26_QUERIES = {
-    "q_stream_attribution": q_stream_attribution,
-    "q_exact_median_2pass": q_exact_median_2pass,
-    "q_ks_statistic": q_ks_statistic,
-}
-
-EXT26_ORACLES = {
-    "q_exact_median_2pass": Q_EXACT_MEDIAN_2PASS_SQL,
-    "q_ks_statistic": Q_KS_STATISTIC_SQL,
-}

@@ -12,7 +12,7 @@ daily.
   acquisition-vs-retention dashboard primitive (per-user first-day is
   one hash agg, then a broadcast-sized join back).
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
@@ -22,11 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io.sources import load_table
+from .registry import query
 
 
 # ------------------------------------------- fulfillment SLA
 
 
+@query
 def q_ship_lag_sla(spark: SparkSession, sf: str) -> DataFrame:
     """Per order month: lineitem ship-lag days p50/p90 (r9) and the
     fraction shipped within 30 days. The join is the standard
@@ -71,6 +73,7 @@ FROM lag GROUP BY month ORDER BY month
 # ------------------------------------------- calendar heatmap
 
 
+@query
 def q_calendar_heatmap(spark: SparkSession, sf: str) -> DataFrame:
     """isodow × hour event counts with share-of-total — one hash agg
     over a 168-key space plus a broadcast scalar for the share."""
@@ -110,6 +113,7 @@ FROM cells, tot ORDER BY isodow, hour
 # ------------------------------------------- audience composition
 
 
+@query
 def q_new_vs_returning(spark: SparkSession, sf: str) -> DataFrame:
     """Per day: active users, new (first-seen today), returning, and
     the new share. Per-user first-day is one hash agg; the day table
@@ -164,16 +168,3 @@ SELECT day,
              / COUNT(*), 9) AS new_share_r9
 FROM joined GROUP BY day ORDER BY day
 """
-
-
-EXT27_QUERIES = {
-    "q_ship_lag_sla": q_ship_lag_sla,
-    "q_calendar_heatmap": q_calendar_heatmap,
-    "q_new_vs_returning": q_new_vs_returning,
-}
-
-EXT27_ORACLES = {
-    "q_ship_lag_sla": Q_SHIP_LAG_SLA_SQL,
-    "q_calendar_heatmap": Q_CALENDAR_HEATMAP_SQL,
-    "q_new_vs_returning": Q_NEW_VS_RETURNING_SQL,
-}

@@ -17,34 +17,32 @@ cycles, growth reporting, engagement stickiness.
   per-day active users, bounded 30-day width) + distinct count — the
   exact rolling-distinct shape; swap in HLL sketch state at 100 TB.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
-
-import atexit
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 from .streaming.partial_store import run_partial_stream, write_day_chunks
 
 
 # ------------------------------------------------ streamed KS
 
 
+@query(twin_of="q_ks_statistic")
 def q_stream_ks(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed q_ks_statistic (same oracle): per-batch (value, ca,
     cb) counts merge by addition; the final cumulative scan runs on
     the merged value domain."""
     ev = load_table(spark, sf, "events").select("event_id", "ts", "event_type", "value")
-    work = tempfile.mkdtemp(prefix="stream_ks_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_ks_")
     src = f"{work}/src"
     write_day_chunks(ev, src)
     store = f"{work}/counts"
@@ -96,6 +94,7 @@ def q_stream_ks(spark: SparkSession, sf: str) -> DataFrame:
 # ------------------------------------------- repeat purchase cycle
 
 
+@query
 def q_repeat_purchase_cycle(spark: SparkSession, sf: str) -> DataFrame:
     """One row: buyers, repeat buyers, repeat gaps count, and the
     cycle-length percentiles (days, r9 per determinism rule 8 —
@@ -141,6 +140,7 @@ FROM g
 # ------------------------------------------------ MoM growth
 
 
+@query
 def q_mom_growth(spark: SparkSession, sf: str) -> DataFrame:
     """Month-over-month revenue growth: exact decimal monthly revenue,
     one ordered lag over the ~|months| table, ratio guarded on a
@@ -187,6 +187,7 @@ FROM lagged ORDER BY month
 # ------------------------------------------- DAU/MAU stickiness
 
 
+@query
 def q_dau_mau_stickiness(spark: SparkSession, sf: str) -> DataFrame:
     """Per day: DAU, trailing-30-day MAU, stickiness = DAU/MAU. The
     MAU side is a bounded interval join (|days| × active pairs within
@@ -236,17 +237,3 @@ SELECT strftime(dau.d, '%Y-%m-%d') AS day, dau.dau AS dau, mau.mau AS mau,
 FROM dau JOIN mau ON mau.d = dau.d
 ORDER BY day
 """
-
-
-EXT28_QUERIES = {
-    "q_stream_ks": q_stream_ks,
-    "q_repeat_purchase_cycle": q_repeat_purchase_cycle,
-    "q_mom_growth": q_mom_growth,
-    "q_dau_mau_stickiness": q_dau_mau_stickiness,
-}
-
-EXT28_ORACLES = {
-    "q_repeat_purchase_cycle": Q_REPEAT_PURCHASE_CYCLE_SQL,
-    "q_mom_growth": Q_MOM_GROWTH_SQL,
-    "q_dau_mau_stickiness": Q_DAU_MAU_STICKINESS_SQL,
-}

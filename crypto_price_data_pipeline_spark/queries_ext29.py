@@ -16,7 +16,7 @@ revenue concentration.
   thresholds), complementing Gini/ABC with a percentile-anchored
   statistic.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
@@ -26,11 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io.sources import load_table
+from .registry import query
 
 
 # ------------------------------------------------ fairness audit
 
 
+@query
 def q_fairness_audit(spark: SparkSession, sf: str) -> DataFrame:
     """Per customer segment: order participation rate (customers with
     ≥1 order / customers), ratio to the overall rate, and the
@@ -109,6 +111,7 @@ FROM seg ORDER BY c_mktsegment
 _YIELD_THRESHOLDS = (0.0, 0.2, 0.4, 0.6, 0.8)
 
 
+@query
 def q_yield_curve(spark: SparkSession, sf: str) -> DataFrame:
     """Docs/tokens surviving each distinct-token-ratio cutoff (keep
     docs whose distinct/total ratio ≥ thr — low ratio = repetitive).
@@ -177,6 +180,7 @@ GROUP BY thr ORDER BY thr
 # --------------------------------------- percentile contribution
 
 
+@query
 def q_percentile_contribution(spark: SparkSession, sf: str) -> DataFrame:
     """One row: p90 order-value threshold, the order count above it,
     and the revenue share those tail orders carry — the percentile-
@@ -220,16 +224,3 @@ SELECT COUNT(*) AS n_orders,
          AS tail_revenue_share_r9
 FROM orders
 """
-
-
-EXT29_QUERIES = {
-    "q_fairness_audit": q_fairness_audit,
-    "q_yield_curve": q_yield_curve,
-    "q_percentile_contribution": q_percentile_contribution,
-}
-
-EXT29_ORACLES = {
-    "q_fairness_audit": Q_FAIRNESS_AUDIT_SQL,
-    "q_yield_curve": Q_YIELD_CURVE_SQL,
-    "q_percentile_contribution": Q_PERCENTILE_CONTRIBUTION_SQL,
-}

@@ -4,7 +4,7 @@ p_retailprice or lineitem aggregates instead; the plan SHAPES — correlated
 scalar subqueries, decorrelated min-subquery joins, outer-join count
 distributions, exists/not-exists — are what is exercised).
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism contract
+Each query registers with ``@query`` (registry.py). Same determinism contract
 as queries.py (decimal(38,6) sums cast back to double, unique-key
 tiebreaks on every top-k).
 """
@@ -14,11 +14,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.scalars import _dec
 from .io.sources import load_table
-
-
-def _dec(col: Column) -> Column:
-    return col.cast("decimal(38,6)")
+from .registry import query
+from .session import scratch_dir
 
 
 def dsum(col: Column) -> Column:
@@ -32,6 +31,7 @@ def davg(col: Column) -> Column:
 # --------------------------------------------------------------- Q2 shape
 
 
+@query(oracle=lambda: Q02_MIN_COST_SQL)
 def q02_min_cost_supplier(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q2 shape: correlated MIN subquery, decorrelated into an
     aggregate + equi-join (exactly what Catalyst does to the SQL form).
@@ -90,6 +90,7 @@ LIMIT 100
 # --------------------------------------------------------------- Q8 shape
 
 
+@query(oracle=lambda: Q08_SQL)
 def q08_market_share(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q8 shape: market share of NATION_1 suppliers within AMERICA
     customers' orders, per year. Conditional ratio of two decimal sums;
@@ -150,6 +151,7 @@ ORDER BY o_year
 # --------------------------------------------------------------- Q9 shape
 
 
+@query(oracle=lambda: Q09_SQL)
 def q09_nation_profit(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q9 shape: profit per supplier-nation per year. The classic
     uses ps_supplycost (no partsupp table here) — p_retailprice stands in
@@ -196,6 +198,7 @@ ORDER BY nation, o_year DESC
 # -------------------------------------------------------------- Q11 shape
 
 
+@query(oracle=lambda: Q11_SQL)
 def q11_important_stock(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q11 shape: HAVING against a scalar subquery over the whole
     table (group value > fraction of global total). Shipped value per
@@ -229,6 +232,7 @@ ORDER BY part_value DESC, l_partkey
 # -------------------------------------------------------------- Q13 shape
 
 
+@query(oracle=lambda: Q13_SQL)
 def q13_customer_distribution(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q13 shape: LEFT OUTER join + two-level aggregation — orders
     per customer, then customers per order-count (zero-order customers
@@ -265,6 +269,7 @@ ORDER BY custdist DESC, c_count DESC
 # -------------------------------------------------------------- Q15 shape
 
 
+@query(oracle=lambda: Q15_SQL)
 def q15_top_supplier(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q15 shape: revenue view + join against its own MAX (scalar
     subquery). Revenue per supplier in 1997H1; keep supplier(s) at the
@@ -308,6 +313,7 @@ ORDER BY s_suppkey
 # -------------------------------------------------------------- Q16 shape
 
 
+@query(oracle=lambda: Q16_SQL)
 def q16_supplier_cnt(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q16 shape: NOT IN subquery (anti join) + COUNT(DISTINCT)
     per attribute group. Distinct suppliers per (p_brand, p_size) for
@@ -343,6 +349,7 @@ LIMIT 50
 # -------------------------------------------------------------- Q17 shape
 
 
+@query(oracle=lambda: Q17_SQL)
 def q17_small_quantity(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q17 shape: correlated AVG subquery, decorrelated into a
     per-part aggregate + broadcast join. Revenue from lineitems below
@@ -376,6 +383,7 @@ WHERE p_brand = 'Brand#1'
 # -------------------------------------------------------------- Q20 shape
 
 
+@query(oracle=lambda: Q20_SQL)
 def q20_part_shippers(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q20 shape: nested semi-join chain — suppliers that shipped
     more than 60 units of any part whose name contains '3', joined to
@@ -420,6 +428,7 @@ ORDER BY s_name
 # -------------------------------------------------------------- Q21 shape
 
 
+@query(oracle=lambda: Q21_SQL)
 def q21_waiting_supplier(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q21 shape: EXISTS / NOT EXISTS over sibling rows of the
     same order. No receipt/commit dates in this schema, so the 'late'
@@ -488,6 +497,7 @@ LIMIT 100
 # -------------------------------------------------------------- Q22 shape
 
 
+@query(oracle=lambda: Q22_SQL)
 def q22_idle_customers(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q22 shape: scalar AVG subquery + anti join. Customers with
     above-average account balance and no RECENT orders (every customer
@@ -539,6 +549,7 @@ ORDER BY n_name
 _TS_PATTERN = [0.0, 0.0, 0.0, 1.0, 0.0, 0.0, 0.0, 0.0]  # a spike
 
 
+@query(oracle=lambda: _ts_sql())
 def q_ts_similarity(spark: SparkSession, sf: str) -> DataFrame:
     """UCR-style subsequence similarity search: the 10 length-8 windows
     of the per-type event series whose z-normalized shape is closest to
@@ -590,6 +601,7 @@ SELECT event_id, event_type, dist FROM m3 ORDER BY dist, event_id LIMIT 10
 # ------------------------------------------------------ count-min sketch
 
 
+@query
 def q_cms_counts(spark: SparkSession, sf: str) -> DataFrame:
     """Count-Min sketch frequency estimates for every event type: build
     the (4 × 1024) sketch over the events stream, then point-query each
@@ -635,6 +647,7 @@ ORDER BY event_type
 # ------------------------------------------------- continuous aggregate
 
 
+@query
 def q_continuous_agg(spark: SparkSession, sf: str) -> DataFrame:
     """Hypertable-rollup (continuous aggregate) end-to-end: maintain an
     hourly rollup of the events stream via checkpointed foreachBatch
@@ -642,18 +655,13 @@ def q_continuous_agg(spark: SparkSession, sf: str) -> DataFrame:
     reader. The oracle is the plain GROUP BY — the pattern's invariant
     is that incremental maintenance + tail union ≡ one-shot
     aggregation."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .streaming.continuous_agg import read_with_tail, start_continuous_rollup
 
     events = load_table(spark, sf, "events")
     # the rollup dir must outlive this call (the result is lazy — no
     # driver-side collect); removed at interpreter exit like the other
     # streaming wrapper sinks
-    work = tempfile.mkdtemp(prefix="contagg_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("contagg_")
     raw_dir = f"{work}/raw"
     events.write.parquet(raw_dir)
     schema = spark.read.parquet(raw_dir).schema
@@ -684,6 +692,7 @@ GROUP BY date_trunc('hour', ts), event_type
 # ---------------------------------------------------- portable fingerprint
 
 
+@query
 def q_fingerprint_md5(spark: SparkSession, sf: str) -> DataFrame:
     """Cross-engine-verifiable document fingerprints: chained md5 fold
     over the token stream (the portable twin of the xxhash64 rolling
@@ -709,6 +718,7 @@ ORDER BY doc_id
 # ------------------------------------------------- full quality features
 
 
+@query
 def q_quality_full(spark: SparkSession, sf: str) -> DataFrame:
     """The complete Gopher/C4-style quality feature set from the actual
     ``quality_scores`` operator (q_quality_scores re-derives only the
@@ -765,6 +775,7 @@ ORDER BY doc_id
 # ----------------------------------------------------------- language ID
 
 
+@query
 def q_language_id(spark: SparkSession, sf: str) -> DataFrame:
     """Stopword-profile language ID over documents: per-language hit
     rates → argmax (ties resolve en > de > es > fr, no hits → 'und').
@@ -813,6 +824,7 @@ ORDER BY doc_id
 # --------------------------------------------------- n-gram Jaccard dedup
 
 
+@query
 def q_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     """Exact word-3-gram Jaccard near-dup pairs, language-blocked — the
     non-probabilistic baseline the MinHash path approximates, and the
@@ -831,6 +843,14 @@ def q_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
+# NOTE: exact-equality oracle is data/seed-pinned — LSH banding
+# recall is probabilistic (miss prob (1-s^2)^32 ≈ 0.4% at s=0.4's
+# boundary), and this corpus/seed/banding combination happens to
+# have full recall. If the testdata, seed=42, or r=2/b=32 banding
+# changes and this row starts failing, diagnose as an expected LSH
+# miss (compare against q_ngram_jaccard's pair set) before
+# suspecting the operator.
+@query(oracle=lambda: Q_NGRAM_JACCARD_SQL)
 def q_minhash_exact(spark: SparkSession, sf: str) -> DataFrame:
     """The scale path for exact n-gram Jaccard dedup: MinHash-LSH
     candidate generation → exact Jaccard verify, language-blocked. Same
@@ -887,6 +907,7 @@ ORDER BY id_a, id_b
 # ------------------------------------------------------- full outer join
 
 
+@query
 def q_full_outer(spark: SparkSession, sf: str) -> DataFrame:
     """FULL OUTER join of two per-nation aggregates (customer count vs
     supplier count) with COALESCE over both null sides — the join type
@@ -926,6 +947,7 @@ ORDER BY nationkey
 # ------------------------------------------------------- ranking family
 
 
+@query
 def q_rank_funcs(spark: SparkSession, sf: str) -> DataFrame:
     """The full ranking-function family over one deterministic ordering:
     rank, dense_rank, percent_rank, cume_dist, ntile(4). Supplier
@@ -962,6 +984,7 @@ ORDER BY s_nationkey, s_suppkey
 # ------------------------------------------------- deterministic sampling
 
 
+@query
 def q_hash_sample(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic hash sampling (~1/8 of rows by md5 prefix of the
     business key) + aggregate over the sample. ``df.sample`` uses
@@ -998,37 +1021,10 @@ ORDER BY l_returnflag
 """
 
 
-# ---------------------------------------------------- ordered statistics
+# ------------------------------------------------------ moment statistics
 
 
-def q_percentiles(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact ordered statistics: median and p95 per group. Spark's
-    ``percentile`` and DuckDB's ``quantile_cont`` both interpolate on
-    the sorted values — measured bit-exact on this data (the approximate
-    sketch twins live in q_approx_stats)."""
-    li = load_table(spark, sf, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.expr("percentile(l_extendedprice, 0.5)").alias("median_price"),
-            F.expr("percentile(l_extendedprice, 0.95)").alias("p95_price"),
-            F.expr("percentile(l_quantity, 0.25)").alias("q1_qty"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-Q_PERCENTILES_SQL = """
-SELECT l_returnflag,
-       quantile_cont(l_extendedprice, 0.5) AS median_price,
-       quantile_cont(l_extendedprice, 0.95) AS p95_price,
-       quantile_cont(l_quantity, 0.25) AS q1_qty
-FROM lineitem
-GROUP BY l_returnflag
-ORDER BY l_returnflag
-"""
-
-
+@query
 def q_stats_moments(spark: SparkSession, sf: str) -> DataFrame:
     """Second-moment statistics (sample variance/stddev, covariance,
     correlation) built from exact decimal sums — the engines' native
@@ -1105,6 +1101,7 @@ ORDER BY l_returnflag
 # ------------------------------------------------------- array surface
 
 
+@query
 def q_array_funcs(spark: SparkSession, sf: str) -> DataFrame:
     """ArrayType surface: collect_set/sort_array/size/contains/slice plus
     the transform & filter higher-order functions (all JVM-side codegen —
@@ -1159,6 +1156,7 @@ ORDER BY l_returnflag
 # ------------------------------------------------- multimodal frame sample
 
 
+@query
 def q_frame_sample(spark: SparkSession, sf: str) -> DataFrame:
     """Multimodal frame sampling ([EXT] §2.11): every 4th 64-byte frame
     of each document payload via mapInPandas (per-batch explode — output
@@ -1193,6 +1191,7 @@ FROM documents, LATERAL (
 # ------------------------------------------------- stdlib PNG decode
 
 
+@query
 def q_png_decode(spark: SparkSession, sf: str) -> DataFrame:
     """Real image decode through the multimodal plumbing ([EXT] §2.11):
     each document's first 64 bytes become an 8×8 grayscale PNG via the
@@ -1247,6 +1246,7 @@ def q_png_decode(spark: SparkSession, sf: str) -> DataFrame:
 # -------------------------------------------- stdlib Y4M frame sample
 
 
+@query
 def q_y4m_frames(spark: SparkSession, sf: str) -> DataFrame:
     """Real video-container frame sampling ([EXT] §2.11): each
     document's first 128 bytes (right-padded with 'x' — an ASCII pad
@@ -1305,6 +1305,7 @@ ORDER BY media_id, frame_idx
 # ------------------------------------------------- stdlib WAV decode
 
 
+@query
 def q_wav_decode(spark: SparkSession, sf: str) -> DataFrame:
     """Real audio decode through the multimodal plumbing ([EXT] §2.11),
     the PNG query's audio twin: each document's first 64 bytes map to
@@ -1404,75 +1405,3 @@ SELECT doc_id AS media_id,
        CAST(SUM(v * i) AS BIGINT) AS px_dot
 FROM px GROUP BY doc_id ORDER BY media_id
 """
-
-
-EXT3_QUERIES = {
-    "q_ts_similarity": q_ts_similarity,
-    "q_png_decode": q_png_decode,
-    "q_wav_decode": q_wav_decode,
-    "q_y4m_frames": q_y4m_frames,
-    "q_cms_counts": q_cms_counts,
-    "q_continuous_agg": q_continuous_agg,
-    "q_fingerprint_md5": q_fingerprint_md5,
-    "q_quality_full": q_quality_full,
-    "q_language_id": q_language_id,
-    "q_ngram_jaccard": q_ngram_jaccard,
-    "q_minhash_exact": q_minhash_exact,
-    "q_full_outer": q_full_outer,
-    "q_rank_funcs": q_rank_funcs,
-    "q_hash_sample": q_hash_sample,
-    "q_percentiles": q_percentiles,
-    "q_stats_moments": q_stats_moments,
-    "q_array_funcs": q_array_funcs,
-    "q_frame_sample": q_frame_sample,
-    "q02_min_cost_supplier": q02_min_cost_supplier,
-    "q08_market_share": q08_market_share,
-    "q09_nation_profit": q09_nation_profit,
-    "q11_important_stock": q11_important_stock,
-    "q13_customer_distribution": q13_customer_distribution,
-    "q15_top_supplier": q15_top_supplier,
-    "q16_supplier_cnt": q16_supplier_cnt,
-    "q17_small_quantity": q17_small_quantity,
-    "q20_part_shippers": q20_part_shippers,
-    "q21_waiting_supplier": q21_waiting_supplier,
-    "q22_idle_customers": q22_idle_customers,
-}
-
-EXT3_ORACLES = {
-    "q_ts_similarity": _ts_sql(),
-    "q_png_decode": Q_PNG_DECODE_SQL,
-    "q_wav_decode": Q_WAV_DECODE_SQL,
-    "q_y4m_frames": Q_Y4M_FRAMES_SQL,
-    "q_cms_counts": Q_CMS_COUNTS_SQL,
-    "q_continuous_agg": Q_CONTINUOUS_AGG_SQL,
-    "q_fingerprint_md5": Q_FINGERPRINT_MD5_SQL,
-    "q_quality_full": Q_QUALITY_FULL_SQL,
-    "q_language_id": Q_LANGUAGE_ID_SQL,
-    "q_ngram_jaccard": Q_NGRAM_JACCARD_SQL,
-    # NOTE: exact-equality oracle is data/seed-pinned — LSH banding
-    # recall is probabilistic (miss prob (1-s^2)^32 ≈ 0.4% at s=0.4's
-    # boundary), and this corpus/seed/banding combination happens to
-    # have full recall. If the testdata, seed=42, or r=2/b=32 banding
-    # changes and this row starts failing, diagnose as an expected LSH
-    # miss (compare against q_ngram_jaccard's pair set) before
-    # suspecting the operator.
-    "q_minhash_exact": Q_NGRAM_JACCARD_SQL,
-    "q_full_outer": Q_FULL_OUTER_SQL,
-    "q_rank_funcs": Q_RANK_FUNCS_SQL,
-    "q_hash_sample": Q_HASH_SAMPLE_SQL,
-    "q_percentiles": Q_PERCENTILES_SQL,
-    "q_stats_moments": Q_STATS_MOMENTS_SQL,
-    "q_array_funcs": Q_ARRAY_FUNCS_SQL,
-    "q_frame_sample": Q_FRAME_SAMPLE_SQL,
-    "q02_min_cost_supplier": Q02_MIN_COST_SQL,
-    "q08_market_share": Q08_SQL,
-    "q09_nation_profit": Q09_SQL,
-    "q11_important_stock": Q11_SQL,
-    "q13_customer_distribution": Q13_SQL,
-    "q15_top_supplier": Q15_SQL,
-    "q16_supplier_cnt": Q16_SQL,
-    "q17_small_quantity": Q17_SQL,
-    "q20_part_shippers": Q20_SQL,
-    "q21_waiting_supplier": Q21_SQL,
-    "q22_idle_customers": Q22_SQL,
-}

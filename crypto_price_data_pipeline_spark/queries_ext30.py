@@ -14,7 +14,7 @@ cross-sell mining.
   the per-order pair expansion is bounded by C(25,2) regardless of
   order size — distinct-before-pairing is the scale discipline).
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
@@ -25,11 +25,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
+from .registry import query
 
 
 # ---------------------------------------------- cumulative reach
 
 
+@query
 def q_cumulative_reach(spark: SparkSession, sf: str) -> DataFrame:
     """Per day: new users and the cumulative unique-user count —
     first-seen days aggregate once, then one ordered cumsum over the
@@ -64,6 +66,7 @@ FROM per_day ORDER BY day
 # ---------------------------------------------- top movers
 
 
+@query
 def q_top_movers(spark: SparkSession, sf: str) -> DataFrame:
     """Top-10 (month, segment) revenue moves by absolute MoM delta:
     month×segment decimal rollup (needs the customer dim broadcast),
@@ -122,6 +125,7 @@ LIMIT 10
 # ---------------------------------------------- cross-sell matrix
 
 
+@query
 def q_cross_sell_matrix(spark: SparkSession, sf: str) -> DataFrame:
     """Brand pairs co-purchased in the same order: support, both
     confidences, lift — the retail cross-sell feed. Distinct (order,
@@ -191,16 +195,3 @@ JOIN singles nb ON nb.p_brand = brand_b
 ORDER BY n_ab DESC, brand_a, brand_b
 LIMIT 20
 """
-
-
-EXT30_QUERIES = {
-    "q_cumulative_reach": q_cumulative_reach,
-    "q_top_movers": q_top_movers,
-    "q_cross_sell_matrix": q_cross_sell_matrix,
-}
-
-EXT30_ORACLES = {
-    "q_cumulative_reach": Q_CUMULATIVE_REACH_SQL,
-    "q_top_movers": Q_TOP_MOVERS_SQL,
-    "q_cross_sell_matrix": Q_CROSS_SELL_MATRIX_SQL,
-}

@@ -16,27 +16,26 @@ reach.
   merge on read and feed the identical day rollup. Same oracle
   verbatim.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
-
-import atexit
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 from .streaming.partial_store import run_partial_stream, write_day_chunks
 
 
 # ---------------------------------------------- survival curve
 
 
+@query
 def q_survival_curve(spark: SparkSession, sf: str) -> DataFrame:
     """30 rows: (k, n_surviving, survival_r9) — users whose span
     reaches k days. Span histogram (hash agg over users) × a 30-row
@@ -87,6 +86,7 @@ GROUP BY k ORDER BY k
 # ---------------------------------------------- cohort LTV triangle
 
 
+@query
 def q_cohort_ltv(spark: SparkSession, sf: str) -> DataFrame:
     """(cohort_month, age_months, n_customers, cum_revenue_r6): the
     LTV triangle. Cohort = first order month per customer (one hash
@@ -167,13 +167,13 @@ ORDER BY c.cohort_month, c.age_months
 # ---------------------------------------------- streamed reach
 
 
+@query(twin_of="q_cumulative_reach")
 def q_stream_reach(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed q_cumulative_reach (same oracle): per-batch per-user
     MIN day partials are semilattice state; the read-side merge takes
     the global min per user, then the identical day rollup."""
     ev = load_table(spark, sf, "events").select("event_id", "ts", "user_id")
-    work = tempfile.mkdtemp(prefix="stream_reach_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_reach_")
     src = f"{work}/src"
     write_day_chunks(ev, src)
     store = f"{work}/first_seen"
@@ -203,15 +203,3 @@ def q_stream_reach(spark: SparkSession, sf: str) -> DataFrame:
         "new_users",
         F.sum("new_users").over(wcum).alias("cumulative_users"),
     ).orderBy("day")
-
-
-EXT31_QUERIES = {
-    "q_survival_curve": q_survival_curve,
-    "q_cohort_ltv": q_cohort_ltv,
-    "q_stream_reach": q_stream_reach,
-}
-
-EXT31_ORACLES = {
-    "q_survival_curve": Q_SURVIVAL_CURVE_SQL,
-    "q_cohort_ltv": Q_COHORT_LTV_SQL,
-}

@@ -14,27 +14,25 @@ health, streamed survival.
   mergeable), so per-batch partials stitch exactly. Same oracle
   verbatim.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io.sources import load_table
-from .session import materialize
+from .registry import query
+from .session import materialize, scratch_dir
 from .streaming.partial_store import run_partial_stream, write_day_chunks
 
 
 # ---------------------------------------------- GMV waterfall
 
 
+@query
 def q_gmv_waterfall(spark: SparkSession, sf: str) -> DataFrame:
     """One row: gross → discount → net → tax → billed, all exact
     decimal sums, plus the discount and tax rates as r9 ratios."""
@@ -92,6 +90,7 @@ FROM agg
 # ------------------------------------------ per-source dedup rate
 
 
+@query
 def q_dedup_rate_by_source(spark: SparkSession, sf: str) -> DataFrame:
     """Per source: docs, absorbed near-dups (non-survivor members of
     exact-verified MinHash clusters), and the absorbed rate. The
@@ -178,13 +177,13 @@ GROUP BY d.source ORDER BY d.source
 # ------------------------------------------ streamed survival
 
 
+@query(twin_of="q_survival_curve")
 def q_stream_survival(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed q_survival_curve (same oracle): per-batch per-user
     (min day, max day) partials are a semilattice merge; the read
     side folds them to global spans and runs the identical ladder."""
     ev = load_table(spark, sf, "events").select("event_id", "ts", "user_id")
-    work = tempfile.mkdtemp(prefix="stream_surv_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_surv_")
     src = f"{work}/src"
     write_day_chunks(ev, src)
     store = f"{work}/spans"
@@ -224,15 +223,3 @@ def q_stream_survival(spark: SparkSession, sf: str) -> DataFrame:
         )
         .orderBy("k")
     )
-
-
-EXT32_QUERIES = {
-    "q_gmv_waterfall": q_gmv_waterfall,
-    "q_dedup_rate_by_source": q_dedup_rate_by_source,
-    "q_stream_survival": q_stream_survival,
-}
-
-EXT32_ORACLES = {
-    "q_gmv_waterfall": Q_GMV_WATERFALL_SQL,
-    "q_dedup_rate_by_source": Q_DEDUP_RATE_BY_SOURCE_SQL,
-}

@@ -33,20 +33,20 @@ evolution story; both queries are [EXT] §2.11 surface.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 
 # ----------------------------------- streamed artifact maintenance
 
 
+@query
 def q_stream_artifact_index(spark: SparkSession, sf: str) -> DataFrame:
     """Serve a per-doc verification row from the INCREMENTALLY
     maintained artifact stores (4-micro-batch replay): lang,
@@ -214,8 +214,7 @@ def evolved_landing_dir(spark: SparkSession, sf: str) -> str:
     if cached and os.path.isdir(cached):
         return cached
     orders = load_table(spark, sf, "orders")
-    d = tempfile.mkdtemp(prefix="evolved_landing_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    d = scratch_dir("evolved_landing_")
     orders.where(F.expr("o_orderkey % 2 = 0")).selectExpr(
         "CAST(o_orderkey AS INT) AS o_orderkey",
         "CAST(o_custkey AS INT) AS o_custkey",
@@ -247,6 +246,7 @@ def read_evolved(spark: SparkSession, path: str, schema: str) -> DataFrame:
     )
 
 
+@query
 def q_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
     """Aggregate across a two-generation landing read through the
     unified schema: legacy rows (no priority column) fill NULL →
@@ -296,14 +296,3 @@ SELECT COALESCE(o_orderpriority, '0-LEGACY') AS priority_class,
 FROM unified
 GROUP BY 1 ORDER BY 1
 """
-
-
-EXT33_QUERIES = {
-    "q_stream_artifact_index": q_stream_artifact_index,
-    "q_schema_evolution": q_schema_evolution,
-}
-
-EXT33_ORACLES = {
-    "q_stream_artifact_index": Q_STREAM_ARTIFACT_INDEX_SQL,
-    "q_schema_evolution": Q_SCHEMA_EVOLUTION_SQL,
-}

@@ -35,17 +35,16 @@ reference (bpi_crawler.py) has no test oracles at all.
 
 from __future__ import annotations
 
-import atexit
 import os
 import re
-import shutil
-import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 
 # the heavy-exact registry names (NOTES r11's 14): quadratic pair
 # oracles and recursive-CTE closures. tools/check_oracle.py --routine
@@ -97,8 +96,7 @@ def sampled_sf_dir(
     cached = _SUB_DIRS.get(key)
     if cached and os.path.isdir(cached):
         return cached
-    d = tempfile.mkdtemp(prefix="sub_corpus_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    d = scratch_dir("sub_corpus_")
     for tbl, id_col in (("documents", "doc_id"), ("embeddings", "vec_id")):
         nib = F.substring(F.md5(F.col(id_col).cast("string")), 1, 1)
         load_table(spark, sf, tbl).where(nib.isin(*nibbles)).write.mode(
@@ -176,6 +174,7 @@ def make_verification_twins(
 # ------------------------------------------- dup-heavy pair hardening
 
 
+@query
 def q_simhash_dupheavy(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash pair extraction on a DUP-HEAVY corpus (r11 verdict item
     5): every document deterministically replicated 20× (new id =
@@ -259,6 +258,7 @@ Q_SIMHASH_DUPHEAVY_SQL = _dupheavy_oracle()
 _MH_R = 12  # replica multiplicity of the minhash dup-heavy corpus
 
 
+@query
 def q_minhash_dupheavy(spark: SparkSession, sf: str) -> DataFrame:
     """MinHash-LSH pair extraction on a NEAR-dup-heavy corpus (r13,
     the minhash complement of q_simhash_dupheavy): each md5-quarter
@@ -378,12 +378,3 @@ FROM allp GROUP BY 1, 2 ORDER BY 1, 2
 
 
 Q_MINHASH_DUPHEAVY_SQL = _mh_dupheavy_oracle()
-
-EXT34_QUERIES = {
-    "q_simhash_dupheavy": q_simhash_dupheavy,
-    "q_minhash_dupheavy": q_minhash_dupheavy,
-}
-EXT34_ORACLES = {
-    "q_simhash_dupheavy": Q_SIMHASH_DUPHEAVY_SQL,
-    "q_minhash_dupheavy": Q_MINHASH_DUPHEAVY_SQL,
-}

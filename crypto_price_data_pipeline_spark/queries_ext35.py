@@ -48,8 +48,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 
 
+@query(oracle=lambda: Q_DSIR_SQL)
 def q_dsir_sample(spark: SparkSession, sf: str) -> DataFrame:
     """Top-50 non-English-labeled documents ranked by unigram DSIR
     importance against the English-labeled target slice: the docs a
@@ -150,6 +153,7 @@ LIMIT 50
 """
 
 
+@query(oracle=lambda: Q_KMV_SQL)
 def q_kmv_overlap(spark: SparkSession, sf: str) -> DataFrame:
     """Pairwise audience-overlap estimates between event types from
     K-minimum-values (bottom-k, theta-family) distinct sketches over
@@ -203,6 +207,7 @@ def _kmv_pairs_output(sk: DataFrame) -> DataFrame:
     )
 
 
+@query(twin_of="q_kmv_overlap")
 def q_stream_kmv(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed q_kmv_overlap (same oracle): the per-type bottom-k
     sketch maintained incrementally — each micro-batch lands its own
@@ -214,16 +219,11 @@ def q_stream_kmv(spark: SparkSession, sf: str) -> DataFrame:
     (unit-pinned bit-equal to the batch sketch). A corpus append costs
     one batch sketch, never a rescan — the same maintenance shape as
     the artifact-index stream."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .operators.sketch import kmv_build, kmv_explode, kmv_from_hashes
     from .streaming.partial_store import run_partial_stream, write_day_chunks
 
     ev = load_table(spark, sf, "events").select("event_id", "ts", "user_id", "event_type")
-    work = tempfile.mkdtemp(prefix="stream_kmv_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_kmv_")
     src = f"{work}/src"
     write_day_chunks(ev, src)
     store = f"{work}/kmv"
@@ -332,6 +332,7 @@ def _kmv_rolling_from_events(ev: DataFrame, k: int = 128) -> DataFrame:
     ).orderBy("event_type", "day")
 
 
+@query
 def q_kmv_rolling(spark: SparkSession, sf: str) -> DataFrame:
     """Rolling 7-day distinct-user estimates per event type from MERGED
     daily KMV sketches — the sketch's flagship warehouse use: exact
@@ -388,18 +389,3 @@ SELECT event_type, wday AS day,
              6) AS est_uniques_7d
 FROM sk ORDER BY 1, 2
 """
-
-
-EXT35_QUERIES = {
-    "q_dsir_sample": q_dsir_sample,
-    "q_kmv_overlap": q_kmv_overlap,
-    "q_stream_kmv": q_stream_kmv,
-    "q_kmv_rolling": q_kmv_rolling,
-}
-EXT35_ORACLES = {
-    "q_dsir_sample": Q_DSIR_SQL,
-    "q_kmv_overlap": Q_KMV_SQL,
-    # streamed ≡ batch: the twin hits the identical estimator oracle
-    "q_stream_kmv": Q_KMV_SQL,
-    "q_kmv_rolling": Q_KMV_ROLLING_SQL,
-}

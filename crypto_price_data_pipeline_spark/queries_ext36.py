@@ -43,10 +43,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 
 _LANGS = ["en", "de", "es", "fr"]
 
 
+@query(oracle=lambda: _nb_sql())
 def q_nb_language_id(spark: SparkSession, sf: str) -> DataFrame:
     """Per-document Naive-Bayes-style language ID: score each doc by
     the MEAN per-token POSTERIOR under each language's corpus-trained
@@ -242,6 +245,7 @@ def _exact_replicas(docs: DataFrame, r: int, *keep: str) -> DataFrame:
     ).selectExpr(f"doc_id * {r} + _r as doc_id", "text", *keep)
 
 
+@query(oracle=lambda: _winnow_dupheavy_oracle())
 def q_winnow_dupheavy(spark: SparkSession, sf: str) -> DataFrame:
     """Winnowing near-dup pairs on a 60×-exact-replica corpus — PAST
     the stop-fingerprint cliff (every cluster fingerprint's raw df is
@@ -338,6 +342,7 @@ ORDER BY within, n_shared
 """
 
 
+@query(oracle=lambda: _overlap_dupheavy_oracle())
 def q_overlap_dupheavy(spark: SparkSession, sf: str) -> DataFrame:
     """Containment (overlap-coefficient) near-dup pairs on the same
     60×-exact-replica corpus, language-blocked. ngram_overlap_pairs
@@ -467,6 +472,7 @@ def _quantile_sketch_from_events(ev: DataFrame, k: int = 128) -> DataFrame:
     ).orderBy("event_type", "day")
 
 
+@query
 def q_quantile_sketch(spark: SparkSession, sf: str) -> DataFrame:
     """Rolling 7-day p50/p90 of event value per event type from MERGED
     daily bottom-k-by-hash samples (operators.sketch.kmv_sample) — the
@@ -530,6 +536,7 @@ FROM sk ORDER BY 1, 2
 """
 
 
+@query
 def q_stream_quantile(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed per-type value quantiles (p50/p90) from an
     INCREMENTALLY maintained bottom-k value sample — the 20th
@@ -543,10 +550,6 @@ def q_stream_quantile(spark: SparkSession, sf: str) -> DataFrame:
     costs one batch sample, never a rescan. The oracle rebuilds the
     whole-corpus sample and the lower-nearest-rank quantiles exactly —
     streamed ≡ batch by construction."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .operators.sketch import (
         kmv_sample,
         kmv_sample_explode,
@@ -559,8 +562,7 @@ def q_stream_quantile(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="stream_quantile_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_quantile_")
     src = f"{work}/src"
     write_day_chunks(ev, src)
     store = f"{work}/smp"
@@ -666,6 +668,7 @@ def _contamination_output(sk: DataFrame, k: int) -> DataFrame:
     )
 
 
+@query
 def q_kmv_contamination(spark: SparkSession, sf: str) -> DataFrame:
     """Train/held n-gram contamination MONITOR from KMV sketches: per
     source, the estimated Jaccard / union / intersection of the word-
@@ -690,6 +693,7 @@ def q_kmv_contamination(spark: SparkSession, sf: str) -> DataFrame:
     return _contamination_output(sk, k)
 
 
+@query(twin_of="q_kmv_contamination")
 def q_stream_kmv_contamination(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed q_kmv_contamination (same oracle): the per-(source,
     split) shingle sketches maintained INCREMENTALLY — each micro-batch
@@ -701,17 +705,12 @@ def q_stream_kmv_contamination(spark: SparkSession, sf: str) -> DataFrame:
     q_stream_kmv argument). This is the monitor's production shape: a
     corpus append costs one batch sketch; the continuous contamination
     readout never rescans the corpus."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .operators.sketch import kmv_build, kmv_explode, kmv_from_hashes
     from .streaming.partial_store import run_partial_stream
 
     k = 256
     docs = load_table(spark, sf, "documents").select("doc_id", "source", "text")
-    work = tempfile.mkdtemp(prefix="stream_kmv_contam_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_kmv_contam_")
     src = f"{work}/src"
     store = f"{work}/sk"
     for c in range(3):
@@ -791,6 +790,7 @@ FROM est ORDER BY source
 """
 
 
+@query
 def q_jpeg_decode(spark: SparkSession, sf: str) -> DataFrame:
     """Real COMPRESSED image decode through the multimodal plumbing
     (r13): each document's first 256 bytes become a 16×16 grayscale
@@ -877,6 +877,7 @@ FROM documents ORDER BY doc_id
 """
 
 
+@query
 def q_flac_decode(spark: SparkSession, sf: str) -> DataFrame:
     """Real COMPRESSED audio decode through the multimodal plumbing
     (r13): each document's first 64 bytes map to deterministic int16
@@ -944,6 +945,7 @@ def q_flac_decode(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("media_id")
 
 
+@query
 def q_mjpeg_frames(spark: SparkSession, sf: str) -> DataFrame:
     """Real COMPRESSED video-container frame sampling (r13): each
     document's first 1024 bytes ('x'-padded) become a 4-frame 16×16
@@ -1046,30 +1048,3 @@ SELECT doc_id AS media_id,
        CAST(SUM(v * i) AS BIGINT) AS s_dot
 FROM px GROUP BY doc_id ORDER BY media_id
 """
-
-
-EXT36_QUERIES = {
-    "q_nb_language_id": q_nb_language_id,
-    "q_winnow_dupheavy": q_winnow_dupheavy,
-    "q_overlap_dupheavy": q_overlap_dupheavy,
-    "q_quantile_sketch": q_quantile_sketch,
-    "q_stream_quantile": q_stream_quantile,
-    "q_jpeg_decode": q_jpeg_decode,
-    "q_flac_decode": q_flac_decode,
-    "q_mjpeg_frames": q_mjpeg_frames,
-    "q_kmv_contamination": q_kmv_contamination,
-    "q_stream_kmv_contamination": q_stream_kmv_contamination,
-}
-EXT36_ORACLES = {
-    "q_nb_language_id": _nb_sql(),
-    "q_winnow_dupheavy": _winnow_dupheavy_oracle(),
-    "q_overlap_dupheavy": _overlap_dupheavy_oracle(),
-    "q_quantile_sketch": Q_QUANTILE_SKETCH_SQL,
-    "q_stream_quantile": Q_STREAM_QUANTILE_SQL,
-    "q_jpeg_decode": Q_JPEG_DECODE_SQL,
-    "q_flac_decode": Q_FLAC_DECODE_SQL,
-    "q_mjpeg_frames": Q_MJPEG_FRAMES_SQL,
-    "q_kmv_contamination": Q_KMV_CONTAMINATION_SQL,
-    # streamed ≡ batch: the twin hits the identical estimator oracle
-    "q_stream_kmv_contamination": Q_KMV_CONTAMINATION_SQL,
-}

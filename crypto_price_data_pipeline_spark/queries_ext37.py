@@ -24,8 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 
 
+@query
 def q_boilerplate_strip(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus-wide boilerplate span removal at k=8 chars, df cap 50:
     every normalized-character position covered by an 8-gram present
@@ -92,6 +95,7 @@ FROM rebuilt ORDER BY doc_id
 """
 
 
+@query(twin_of="q_boilerplate_strip")
 def q_stream_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed q_boilerplate_strip (same oracle): the gram
     document-frequency state maintained INCREMENTALLY — each
@@ -106,10 +110,6 @@ def q_stream_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
     batch df partial; the expensive corpus-wide state never rebuilds
     from scratch, and the rewrite itself stays a single read-time
     pass. Streamed ≡ batch by construction."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from .operators.text import boilerplate_strip
@@ -118,8 +118,7 @@ def q_stream_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
 
     k, cap = 8, 50
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="stream_boiler_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_boiler_")
     src = f"{work}/src"
     store = f"{work}/df"
     for c in range(3):
@@ -175,6 +174,7 @@ def _bpe_merge_pairs(spark: SparkSession, sf: str) -> list[tuple[str, str]]:
     return [(r["left_sym"], r["right_sym"]) for r in rows]
 
 
+@query(oracle=lambda: _bpe_oracle(8))
 def q_bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
     """Tokenizer induction: the first 8 BPE merges learned from the
     corpus word-frequency table (operators/bpe.bpe_learn) — (step,
@@ -200,6 +200,7 @@ def q_bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
     return bpe_merge_table(spark, sf).orderBy("step")
 
 
+@query(oracle=lambda: _bpe_vocab_oracle(8))
 def q_bpe_vocab(spark: SparkSession, sf: str) -> DataFrame:
     """The learned tokenizer SERVING: segment every corpus word with
     the 8 learned merges (bpe_segment — merges are literals, so the
@@ -302,18 +303,3 @@ FROM (SELECT string_split(trim(enc), '  ') AS syms, freq FROM w{n_merges}),
 GROUP BY 1 ORDER BY n DESC, symbol LIMIT 50
 """
     )
-
-
-EXT37_QUERIES = {
-    "q_boilerplate_strip": q_boilerplate_strip,
-    "q_stream_boilerplate": q_stream_boilerplate,
-    "q_bpe_merges": q_bpe_merges,
-    "q_bpe_vocab": q_bpe_vocab,
-}
-EXT37_ORACLES = {
-    "q_boilerplate_strip": Q_BOILERPLATE_STRIP_SQL,
-    # streamed ≡ batch: incremental df state, identical rebuild + oracle
-    "q_stream_boilerplate": Q_BOILERPLATE_STRIP_SQL,
-    "q_bpe_merges": _bpe_oracle(8),
-    "q_bpe_vocab": _bpe_vocab_oracle(8),
-}

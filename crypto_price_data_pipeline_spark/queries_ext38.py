@@ -27,11 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io.sources import load_table
+from .registry import query
 
 BPE_SEQ_LEN = 128
 BPE_N_MERGES = 8
 
 
+@query(oracle=lambda: _bpe_chunks_oracle())
 def q_bpe_chunks(spark: SparkSession, sf: str) -> DataFrame:
     """Pack the BPE-tokenized corpus into 128-token training
     sequences: read the learned 8-merge table from the stored
@@ -164,6 +166,7 @@ ORDER BY 1
     )
 
 
+@query
 def q_pack_slices(spark: SparkSession, sf: str) -> DataFrame:
     """The trainer-facing half of sequence packing: materialize every
     (document, sequence) SLICE — which contiguous token range of each
@@ -247,6 +250,7 @@ _BASE_ALPHABET = [chr(c) for c in range(ord("a"), ord("z") + 1)] + list(
 )
 
 
+@query(oracle=lambda: _wordpiece_oracle())
 def q_wordpiece_vocab(spark: SparkSession, sf: str) -> DataFrame:
     """The THIRD tokenizer family: WordPiece-style greedy
     longest-match serving (operators/bpe.greedy_segment) over the
@@ -329,6 +333,7 @@ LIMIT 50
     )
 
 
+@query(oracle=lambda: _bpe_compression_oracle())
 def q_bpe_compression(spark: SparkSession, sf: str) -> DataFrame:
     """Tokenizer fertility / compression audit per language — the
     numbers a tokenizer team tracks before committing a vocab to a
@@ -392,17 +397,3 @@ GROUP BY lang
 ORDER BY lang
 """
     )
-
-
-EXT38_QUERIES = {
-    "q_bpe_chunks": q_bpe_chunks,
-    "q_pack_slices": q_pack_slices,
-    "q_wordpiece_vocab": q_wordpiece_vocab,
-    "q_bpe_compression": q_bpe_compression,
-}
-EXT38_ORACLES = {
-    "q_bpe_chunks": _bpe_chunks_oracle(),
-    "q_pack_slices": Q_PACK_SLICES_SQL,
-    "q_wordpiece_vocab": _wordpiece_oracle(),
-    "q_bpe_compression": _bpe_compression_oracle(),
-}

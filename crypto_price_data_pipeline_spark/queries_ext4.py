@@ -2,7 +2,7 @@
 documents corpus — PII scrubbing, deterministic stratified sampling,
 length-distribution profiling, and TF-IDF term ranking.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py. The PII query PLANTS deterministic PII into
 the (synthetic, PII-free) corpus on both engines so the oracle
 actually exercises the scrub patterns rather than passing on identity.
@@ -15,11 +15,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
+from .registry import query
 
 
 # ----------------------------------------------------------- PII scrub
 
 
+@query
 def q_pii_scrub(spark: SparkSession, sf: str) -> DataFrame:
     """Privacy pass for pre-training corpora: plant a deterministic
     email / IPv4 / phone per doc, then scrub with the engine-portable
@@ -65,6 +67,7 @@ ORDER BY doc_id
 # ---------------------------------------------- stratified hash sampling
 
 
+@query
 def q_stratified_sample(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic stratified sampling: the same md5-prefix rule
     applied within every language stratum keeps ~25% of each language
@@ -99,6 +102,7 @@ GROUP BY lang ORDER BY lang
 # ------------------------------------------------- length distribution
 
 
+@query
 def q_length_histogram(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus length profile: width-100-char buckets per language —
     the standard pre-filter diagnostic before length cutoffs. Pure
@@ -129,6 +133,7 @@ ORDER BY lang, bucket
 # --------------------------------------------------- TF-IDF term ranking
 
 
+@query
 def q_tfidf_terms(spark: SparkSession, sf: str) -> DataFrame:
     """Top-5 characteristic terms per language by a rational TF-IDF
     (tf · n_docs/df — the log-free form keeps the score exact-rational
@@ -190,6 +195,7 @@ FROM ranked WHERE rnk <= 5 ORDER BY lang, rnk
 # ------------------------------------------------------ salted skew join
 
 
+@query
 def q_salted_join(spark: SparkSession, sf: str) -> DataFrame:
     """Skew-mitigated fact join: lineitem (skewed side, salted over 8
     deterministic buckets) ⨝ orders (replicated ×8), then priority
@@ -230,6 +236,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority
 # --------------------------------------------- crypto price indicators
 
 
+@query
 def q_crypto_indicators(spark: SparkSession, sf: str) -> DataFrame:
     """EWMA / MACD price indicators — the reference's domain (crypto
     price series) computed with the BOUNDED-memory chunked fold
@@ -281,6 +288,7 @@ FROM ordered ORDER BY user_id
 """
 
 
+@query
 def q_drawdown(spark: SparkSession, sf: str) -> DataFrame:
     """Max drawdown per user: running peak via an expanding window max,
     drawdown = value − peak, aggregate min. One (key, time) sort
@@ -316,6 +324,7 @@ GROUP BY user_id ORDER BY user_id
 # ------------------------------------------------- chunk-level dedup
 
 
+@query
 def q_chunk_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Chunk-granularity dedup statistics: every doc splits into
     fixed 32-token chunks (the unit LLM pipelines dedup at when
@@ -384,6 +393,7 @@ FROM per_chunk GROUP BY lang ORDER BY lang
 # -------------------------------------- chained stateful stream funnel
 
 
+@query
 def q_stream_funnel(spark: SparkSession, sf: str) -> DataFrame:
     """Chained stateful streaming (stream-stream join → tumbling daily
     agg in one append-mode query). Emitted = windows closed by the
@@ -415,6 +425,7 @@ ORDER BY day
 # ------------------------------------------------- snapshot diff (CDF)
 
 
+@query
 def q_table_diff(spark: SparkSession, sf: str) -> DataFrame:
     """Change-data-feed between two synthetic snapshots of orders
     (`operators.scd.table_diff`): the "old" snapshot drops a key range
@@ -467,6 +478,7 @@ ORDER BY o_orderkey
 # ---------------------------------------------------- fuzzy matching
 
 
+@query
 def q_fuzzy_match(spark: SparkSession, sf: str) -> DataFrame:
     """Edit-distance entity resolution: match misspelled country names
     against the nation dimension with levenshtein ≤ 2 (classic DP
@@ -499,6 +511,7 @@ ORDER BY dirty_name, n_name
 # ------------------------------------------------- int8 quantization
 
 
+@query
 def q_quantize_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     """Symmetric int8 embedding quantization
     (`operators.similarity.quantize_int8`) summarized per vector
@@ -537,6 +550,7 @@ FROM q ORDER BY vec_id
 # ------------------------------------------------ map higher-order fns
 
 
+@query
 def q_map_funcs(spark: SparkSession, sf: str) -> DataFrame:
     """Map-typed higher-order functions: per-user event-type counts
     packed into a map (map_from_entries ∘ collect_list), doubled with
@@ -576,6 +590,7 @@ ORDER BY user_id, event_type
 # ------------------------------------- cluster representative selection
 
 
+@query
 def q_cluster_representatives(spark: SparkSession, sf: str) -> DataFrame:
     """End-to-end near-dup collapse, the full LLM-corpus pattern in one
     query: embedding near-dup pairs → connected components → join the
@@ -645,6 +660,7 @@ FROM members WHERE rn = 1 ORDER BY cluster_id
 # --------------------------------------------- token-budget corpus mix
 
 
+@query
 def q_token_budget_mix(spark: SparkSession, sf: str) -> DataFrame:
     """Data-mixing selection: within each language take the
     longest-first documents until a 5,000-token budget fills — the
@@ -697,6 +713,7 @@ ORDER BY lang, n_chars DESC, doc_id
 # --------------------------------------------------- column profiling
 
 
+@query
 def q_profile_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Column-profiling pass (null counts + exact distinct cardinality
     per column) — the expectation-gate companion every ingest pipeline
@@ -745,6 +762,7 @@ ORDER BY col_name
 # ------------------------------------------------------- SCD2 history
 
 
+@query
 def q_scd2(spark: SparkSession, sf: str) -> DataFrame:
     """SCD2 dimension history from the event stream: per-user value
     tier, versioned with effective_from/effective_to/is_current and
@@ -803,6 +821,7 @@ FROM vers ORDER BY user_id, effective_from
 # ------------------------------------------------ stream-stream join
 
 
+@query
 def q_stream_join(spark: SparkSession, sf: str) -> DataFrame:
     """Stream-stream interval join (purchase ↔ same-user clicks in the
     prior hour) executed through real Structured Streaming machinery
@@ -824,46 +843,3 @@ JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'click') c
  AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 1 HOUR
 GROUP BY p.user_id ORDER BY user_id
 """
-
-
-EXT4_QUERIES = {
-    "q_pii_scrub": q_pii_scrub,
-    "q_stratified_sample": q_stratified_sample,
-    "q_length_histogram": q_length_histogram,
-    "q_tfidf_terms": q_tfidf_terms,
-    "q_salted_join": q_salted_join,
-    "q_stream_join": q_stream_join,
-    "q_scd2": q_scd2,
-    "q_profile_stats": q_profile_stats,
-    "q_cluster_representatives": q_cluster_representatives,
-    "q_token_budget_mix": q_token_budget_mix,
-    "q_map_funcs": q_map_funcs,
-    "q_quantize_embeddings": q_quantize_embeddings,
-    "q_table_diff": q_table_diff,
-    "q_fuzzy_match": q_fuzzy_match,
-    "q_stream_funnel": q_stream_funnel,
-    "q_chunk_dedup": q_chunk_dedup,
-    "q_crypto_indicators": q_crypto_indicators,
-    "q_drawdown": q_drawdown,
-}
-
-EXT4_ORACLES = {
-    "q_pii_scrub": Q_PII_SCRUB_SQL,
-    "q_stratified_sample": Q_STRATIFIED_SAMPLE_SQL,
-    "q_length_histogram": Q_LENGTH_HISTOGRAM_SQL,
-    "q_tfidf_terms": Q_TFIDF_TERMS_SQL,
-    "q_salted_join": Q_SALTED_JOIN_SQL,
-    "q_stream_join": Q_STREAM_JOIN_SQL,
-    "q_scd2": Q_SCD2_SQL,
-    "q_profile_stats": Q_PROFILE_STATS_SQL,
-    "q_cluster_representatives": Q_CLUSTER_REPRESENTATIVES_SQL,
-    "q_token_budget_mix": Q_TOKEN_BUDGET_MIX_SQL,
-    "q_map_funcs": Q_MAP_FUNCS_SQL,
-    "q_quantize_embeddings": Q_QUANTIZE_EMBEDDINGS_SQL,
-    "q_table_diff": Q_TABLE_DIFF_SQL,
-    "q_fuzzy_match": Q_FUZZY_MATCH_SQL,
-    "q_stream_funnel": Q_STREAM_FUNNEL_SQL,
-    "q_chunk_dedup": Q_CHUNK_DEDUP_SQL,
-    "q_crypto_indicators": Q_CRYPTO_INDICATORS_SQL,
-    "q_drawdown": Q_DRAWDOWN_SQL,
-}

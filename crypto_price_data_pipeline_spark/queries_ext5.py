@@ -2,7 +2,7 @@
 date-partitioned staging reads with partition pruning, and ANN recall
 reporting.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
@@ -12,11 +12,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io.sources import load_table
+from .registry import query
+from .session import scratch_dir
 
 
 # ------------------------------------------------- md5-bit SimHash
 
 
+@query(oracle=lambda: Q_SIMHASH_MD5_SQL)
 def q_simhash_md5_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup pairs on the 32-bit md5-derived SimHash
     (`operators.dedup.simhash_md5_pairs`). Unlike the xxhash64 twin
@@ -87,10 +90,7 @@ def partitioned_staging_dir(spark: SparkSession, sf: str) -> str:
     the directory — the layout every 100 TB staging table should have
     so date-ranged readers get partition pruning instead of full scans.
     One dir per (process, sf), built on first use, removed at exit."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     key = f"_staging_{sf.replace('/', '_')}"
     cached = _STAGING_DIRS.get(key)
@@ -99,8 +99,7 @@ def partitioned_staging_dir(spark: SparkSession, sf: str) -> str:
     from .io.sinks import overwrite_parquet
 
     ev = load_table(spark, sf, "events")
-    d = tempfile.mkdtemp(prefix="staging_dt_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    d = scratch_dir("staging_dt_")
     overwrite_parquet(
         ev.withColumn("dt", F.date_format("ts", "yyyy-MM-dd")),
         d,
@@ -132,6 +131,7 @@ def read_partitioned_staging(spark: SparkSession, sf: str) -> DataFrame:
     return spark.read.parquet(d)
 
 
+@query
 def q_partitioned_staging(spark: SparkSession, sf: str) -> DataFrame:
     """Date-ranged rollup over the dt-partitioned staging table. The dt
     predicate is a PARTITION filter — the scan plans only the 3 of 30
@@ -167,6 +167,7 @@ GROUP BY 1, 2 ORDER BY 1, 2
 # ------------------------------------------------- chunked series fold
 
 
+@query
 def q_ema_chunked(spark: SparkSession, sf: str) -> DataFrame:
     """EMA per user via the bounded-memory chunked fold
     (`operators.series.ema_by_key_chunked`, chunk_size forced below the
@@ -204,6 +205,7 @@ FROM ordered ORDER BY user_id
 # ---------------------------------------------------- unpivot / melt
 
 
+@query
 def q_unpivot(spark: SparkSession, sf: str) -> DataFrame:
     """Wide→long reshaping (`DataFrame.unpivot`, the inverse of
     q_pivot): per-flag measure columns melt into (flag, measure, value)
@@ -241,6 +243,7 @@ ORDER BY l_returnflag, measure
 # -------------------------------------------------- UDTF (LATERAL)
 
 
+@query
 def q_udtf_chunks(spark: SparkSession, sf: str) -> DataFrame:
     """Python UDTF surface, driver-verified: a LATERAL table function
     chunks each document into 32-token pieces and emits
@@ -303,6 +306,7 @@ ORDER BY doc_id, chunk_idx
 # ------------------------------------------- test-set contamination
 
 
+@query
 def q_contamination(spark: SparkSession, sf: str) -> DataFrame:
     """Benchmark-contamination scan: for every eval-set document, the
     training document with the highest 5-gram containment
@@ -427,6 +431,7 @@ SELECT eval_id, train_id, containment FROM ranked WHERE rn = 1 ORDER BY eval_id
 # ------------------------------------------------- exact percentiles
 
 
+@query
 def q_percentiles(spark: SparkSession, sf: str) -> DataFrame:
     """Exact interpolated percentiles (median / p90 / p99) of the
     extended price per return flag — the `percentile` aggregate (exact,
@@ -461,6 +466,7 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 # ------------------------------------------------- CSV round-trip
 
 
+@query
 def q_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """CSV source/sink coverage: events → CSV (header, explicitly
     formatted timestamps — never writer-default tz rendering) → read
@@ -469,14 +475,9 @@ def q_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     round-trip is proven lossless for string/timestamp/double columns.
     At scale, CSV is an ingest format only — the first job should land
     it as partitioned parquet (q_partitioned_staging's layout)."""
-    import atexit
-    import shutil
-    import tempfile
-
     d = _CSV_DIRS.get(sf)
     if d is None:
-        d = tempfile.mkdtemp(prefix="events_csv_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        d = scratch_dir("events_csv_")
         ev = load_table(spark, sf, "events")
         (
             ev.select(
@@ -524,26 +525,3 @@ SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS bucket, event_ty
 FROM events
 GROUP BY 1, 2 ORDER BY 1, 2
 """
-
-
-EXT5_QUERIES = {
-    "q_simhash_md5_pairs": q_simhash_md5_pairs,
-    "q_ema_chunked": q_ema_chunked,
-    "q_partitioned_staging": q_partitioned_staging,
-    "q_percentiles": q_percentiles,
-    "q_csv_roundtrip": q_csv_roundtrip,
-    "q_contamination": q_contamination,
-    "q_udtf_chunks": q_udtf_chunks,
-    "q_unpivot": q_unpivot,
-}
-
-EXT5_ORACLES = {
-    "q_simhash_md5_pairs": Q_SIMHASH_MD5_SQL,
-    "q_ema_chunked": Q_EMA_CHUNKED_SQL,
-    "q_partitioned_staging": Q_PARTITIONED_STAGING_SQL,
-    "q_percentiles": Q_PERCENTILES_SQL,
-    "q_csv_roundtrip": Q_CSV_ROUNDTRIP_SQL,
-    "q_contamination": Q_CONTAMINATION_SQL,
-    "q_udtf_chunks": Q_UDTF_CHUNKS_SQL,
-    "q_unpivot": Q_UNPIVOT_SQL,
-}

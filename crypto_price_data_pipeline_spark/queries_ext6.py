@@ -2,7 +2,7 @@
 packing (concat-and-chunk), deterministic train/val/test hash splits,
 and per-day content novelty (incremental-dedup accounting).
 
-Registered into QUERIES/ORACLES by queries.py; same determinism
+Each query registers with ``@query`` (registry.py); same determinism
 contract (integer arithmetic or int/int doubles only, md5 as the
 cross-engine hash, string-formatted dates).
 """
@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 from .io.sources import load_table
 from .operators.packing import pack_sequences
 from .operators.text import tokenize
+from .registry import query
 
 SEQ_LEN = 128
 
@@ -23,6 +24,7 @@ SEQ_LEN = 128
 # ----------------------------------------------------- sequence packing
 
 
+@query
 def q_seq_packing(spark: SparkSession, sf: str) -> DataFrame:
     """Pack the documents corpus into 128-token training sequences
     (concat in doc_id order, chunk every 128 tokens) and report, per
@@ -79,6 +81,7 @@ ORDER BY 1
 # ------------------------------------------------ deterministic splits
 
 
+@query
 def q_train_split(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic train/val/test split by md5 of the stable doc id
     (first hex nibble: 12/16 train, 2/16 val, 2/16 test) — the
@@ -132,6 +135,7 @@ ORDER BY split
 # --------------------------------------------------- content novelty
 
 
+@query
 def q_novelty_rate(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental-dedup accounting: per ingest day, how many events
     arrived, how many distinct content hashes they carried, and how
@@ -184,6 +188,7 @@ ORDER BY d
 # ------------------------------------------- containment near-dup
 
 
+@query
 def q_ngram_overlap(spark: SparkSession, sf: str) -> DataFrame:
     """Overlap-coefficient (containment) near-dup pairs, language-
     blocked: |A∩B| / min(|A|,|B|) over word-3-gram shingle sets — the
@@ -227,10 +232,10 @@ ORDER BY id_a, id_b
 """
 
 
-
 # ------------------------------------------- streaming incremental dedup
 
 
+@query
 def q_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental near-dup dedup through REAL streaming machinery:
     the corpus replays as 4 micro-batches (file source, id order), each
@@ -294,10 +299,10 @@ ORDER BY lang
 """
 
 
-
 # ------------------------------------------- stream-static enrichment
 
 
+@query
 def q_stream_enrich(spark: SparkSession, sf: str) -> DataFrame:
     """Stream-static broadcast join through real streaming machinery:
     events replay as a stream, each micro-batch joins the static
@@ -318,10 +323,10 @@ GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-
 # ------------------------------------------------- time-bucket gapfill
 
 
+@query
 def q_gapfill(spark: SparkSession, sf: str) -> DataFrame:
     """Hypertable-style ``time_bucket_gapfill`` + LOCF: hourly buckets
     per event type over the full observed range, missing hours
@@ -396,7 +401,7 @@ ORDER BY 1, 2
 """
 
 
-
+@query
 def q_interpolate(spark: SparkSession, sf: str) -> DataFrame:
     """Gap-fill by LINEAR interpolation (the ``interpolate()`` of
     hypertable rollups): observed hourly averages anchor a lerp across
@@ -520,6 +525,7 @@ ORDER BY 1, 2
 # -------------------------------------- dominant-repetition quality cut
 
 
+@query
 def q_repetition_topgrams(spark: SparkSession, sf: str) -> DataFrame:
     """Gopher's dominant-repetition filter: fraction of word 2-grams /
     3-grams taken by each doc's single most frequent n-gram, plus the
@@ -580,6 +586,7 @@ ORDER BY 1
 # ------------------------------------ winnowing fingerprint near-dups
 
 
+@query
 def q_winnowing_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Substring-level near-dup pairs via shared winnowing fingerprints
     (MOSS sketch, k=8 chars, window w=8): any shared substring of
@@ -640,6 +647,7 @@ ORDER BY 1, 2
 # ---------------------------------------- end-to-end curation pipeline
 
 
+@query
 def q_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """The flagship composition: a complete corpus-curation pass as ONE
     declarative chain — Gopher quality gate (composite score ≥ 0.75) →
@@ -758,32 +766,3 @@ SELECT split, COUNT(*) AS n_docs,
        CAST(SUM(doc_id) AS BIGINT) AS id_checksum
 FROM tagged GROUP BY split ORDER BY split
 """
-
-
-EXT6_QUERIES = {
-    "q_seq_packing": q_seq_packing,
-    "q_train_split": q_train_split,
-    "q_novelty_rate": q_novelty_rate,
-    "q_ngram_overlap": q_ngram_overlap,
-    "q_stream_dedup": q_stream_dedup,
-    "q_stream_enrich": q_stream_enrich,
-    "q_gapfill": q_gapfill,
-    "q_interpolate": q_interpolate,
-    "q_repetition_topgrams": q_repetition_topgrams,
-    "q_winnowing_pairs": q_winnowing_pairs,
-    "q_curation_pipeline": q_curation_pipeline,
-}
-
-EXT6_ORACLES = {
-    "q_seq_packing": Q_SEQ_PACKING_SQL,
-    "q_train_split": Q_TRAIN_SPLIT_SQL,
-    "q_novelty_rate": Q_NOVELTY_RATE_SQL,
-    "q_ngram_overlap": Q_NGRAM_OVERLAP_SQL,
-    "q_stream_dedup": Q_STREAM_DEDUP_SQL,
-    "q_stream_enrich": Q_STREAM_ENRICH_SQL,
-    "q_gapfill": Q_GAPFILL_SQL,
-    "q_interpolate": Q_INTERPOLATE_SQL,
-    "q_repetition_topgrams": Q_REPETITION_TOPGRAMS_SQL,
-    "q_winnowing_pairs": Q_WINNOWING_PAIRS_SQL,
-    "q_curation_pipeline": Q_CURATION_PIPELINE_SQL,
-}

@@ -3,26 +3,26 @@ path (partition-pruned probes against a ``write_lsh_index`` table),
 batched ANN retrieval routed through the index, and the winnowing
 substring-dedup cut.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io.sources import load_table
+from .queries_ext5 import Q_CONTAMINATION_SQL
+from .registry import query
+from .session import scratch_dir
 from .streaming.partial_store import run_partial_stream
 
 
 # ----------------------------------------- persisted-index serving
 
 
+@query(twin_of="q_lsh_topk")
 def q_lsh_served_topk(spark: SparkSession, sf: str) -> DataFrame:
     """ANN top-10 served from a PERSISTED LSH index: build the bucketed
     table once, write it partitioned by ``_bucket``
@@ -51,14 +51,14 @@ def q_lsh_served_topk(spark: SparkSession, sf: str) -> DataFrame:
         return spark.createDataFrame([], "vec_id bigint, cosine_sim_r9 double, recall_ok boolean")
     query = [float(x) for x in _row["embedding"]]
     exact = cosine_topk(emb, query, k=10)
-    work = tempfile.mkdtemp(prefix="lsh_index_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("lsh_index_")
     write_lsh_index(hyperplane_lsh_buckets(emb, dim=len(query), bits=6), work)
     served = read_lsh_index(spark, work)
     ann = lsh_cosine_topk(served, query, k=10, bits=6, probe_radius=2)
     return _ann_with_recall(exact, ann, k=10, floor=0.5)
 
 
+@query(twin_of="q_ivf_topk")
 def q_ivf_served_topk(spark: SparkSession, sf: str) -> DataFrame:
     """ANN top-10 served from a PERSISTED IVF index (assigned table
     partitioned by ``_list`` + centroid JSON sidecar): the probe reads
@@ -81,8 +81,7 @@ def q_ivf_served_topk(spark: SparkSession, sf: str) -> DataFrame:
         return spark.createDataFrame([], "vec_id bigint, cosine_sim_r9 double, recall_ok boolean")
     query = [float(x) for x in _row["embedding"]]
     exact = cosine_topk(emb, query, k=10)
-    work = tempfile.mkdtemp(prefix="ivf_index_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("ivf_index_")
     assigned, centroids = ivf_build(emb, n_lists=8)
     write_ivf_index(assigned, centroids, work)
     served, served_centroids = read_ivf_index(spark, work)
@@ -90,6 +89,7 @@ def q_ivf_served_topk(spark: SparkSession, sf: str) -> DataFrame:
     return _ann_with_recall(exact, ann, k=10, floor=0.5)
 
 
+@query(twin_of="q_pq_topk")
 def q_pq_served_topk(spark: SparkSession, sf: str) -> DataFrame:
     """ANN top-10 served from a PERSISTED PQ index (32×-compressed
     codes table + codebook JSON sidecar): the ADC scan touches only the
@@ -114,8 +114,7 @@ def q_pq_served_topk(spark: SparkSession, sf: str) -> DataFrame:
         return spark.createDataFrame([], "vec_id bigint, cosine_sim_r9 double, recall_ok boolean")
     query = [float(x) for x in _row["embedding"]]
     exact = cosine_topk(emb, query, k=10)
-    work = tempfile.mkdtemp(prefix="pq_index_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("pq_index_")
     codes, codebooks = pq_build(emb, m=8, codebook_k=16)
     write_pq_index(codes, codebooks, work)
     served_codes, served_books = read_pq_index(spark, work)
@@ -157,6 +156,7 @@ def _batch_with_recall(exact: DataFrame, ann: DataFrame, floor: float) -> DataFr
     )
 
 
+@query(oracle=lambda: Q_BATCH_LSH_SQL)
 def q_batch_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Batched ANN retrieval THROUGH the LSH index — the scale path
     cosine_topk_batch's docstring names: each of the 5 queries computes
@@ -217,6 +217,7 @@ ORDER BY q_id, ROUND(sim, 9) DESC, vec_id
 # ----------------------------------------- curation pipeline v2
 
 
+@query(oracle=lambda: _curation_v2_oracle())
 def q_curation_pipeline_v2(spark: SparkSession, sf: str) -> DataFrame:
     """The round-7 flagship composition: corpus curation with the new
     operator wave chained onto the v1 stages — Gopher quality gate →
@@ -340,6 +341,7 @@ FROM mixed GROUP BY lang ORDER BY lang
 # ----------------------------------------- compacted rollup serving
 
 
+@query
 def q_compacted_rollup(spark: SparkSession, sf: str) -> DataFrame:
     """Continuous-aggregate maintenance WITH compaction, end-to-end:
     the events stream rolls up across multiple micro-batches
@@ -358,8 +360,7 @@ def q_compacted_rollup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     events = load_table(spark, sf, "events")
-    work = tempfile.mkdtemp(prefix="compact_rollup_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("compact_rollup_")
     raw = f"{work}/raw"
     events.repartition(4).write.parquet(raw)
     schema = spark.read.parquet(raw).schema
@@ -394,6 +395,7 @@ GROUP BY date_trunc('hour', ts), event_type
 # ----------------------------------------- winnowing dedup cut
 
 
+@query
 def q_winnow_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """ExactSubstr-style dedup DECISION from the winnowing pair signal
     (closing the loop r6's VERDICT noted open: winnowing_pairs emits
@@ -478,6 +480,7 @@ ORDER BY doc_id
 """
 
 
+@query(twin_of="q_mixture_sample_hash")
 def q_stream_mixture(spark: SparkSession, sf: str) -> DataFrame:
     """Ingest-time training-mix enforcement: the documents table
     replays as a multi-batch stream and each micro-batch applies the
@@ -491,8 +494,7 @@ def q_stream_mixture(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.sampling import stratified_sample_hash
 
     docs = load_table(spark, sf, "documents").select("doc_id", "lang")
-    work = tempfile.mkdtemp(prefix="stream_mix_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_mix_")
     src = f"{work}/src"
     store = f"{work}/picked"
     for c in range(3):
@@ -520,6 +522,7 @@ def q_stream_mixture(spark: SparkSession, sf: str) -> DataFrame:
 # ----------------------------------------- bloom contamination prefilter
 
 
+@query
 def q_bloom_contamination(spark: SparkSession, sf: str) -> DataFrame:
     """Bloom pre-filter in front of the contamination scan
     (operators/bloom.py): the benchmark side (planted exactly like
@@ -586,6 +589,9 @@ ORDER BY eval_id
 """
 
 
+# the composed pipeline must equal the unfiltered exact answer — same
+# oracle as q_contamination (see its docstring)
+@query(oracle=lambda: Q_CONTAMINATION_SQL)
 def q_contamination_prefiltered(spark: SparkSession, sf: str) -> DataFrame:
     """The composed two-stage contamination pipeline: Bloom pre-filter
     (stage 1, in-row bitmap probe) feeding the exact 5-gram containment
@@ -671,6 +677,7 @@ def q_contamination_prefiltered(spark: SparkSession, sf: str) -> DataFrame:
 # ----------------------------------------- bigram LM fluency score
 
 
+@query
 def q_lm_scores(spark: SparkSession, sf: str) -> DataFrame:
     """Self-trained bigram LM fluency scores over the documents table
     (the CCNet-style perplexity-filtering signal, in log-free
@@ -733,6 +740,7 @@ _MIX = {"en": 1.0, "de": 0.5, "fr": 0.5, "es": 0.25, "zh": 0.1}
 _MIX_VALUES_SQL = ",".join(f"('{k}', {v})" for k, v in _MIX.items())
 
 
+@query
 def q_mixture_sample(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic training-mix construction (exact variant): per
     language stratum, keep ceil(fraction·n) docs chosen by md5(doc_id)
@@ -764,6 +772,8 @@ ORDER BY lang, doc_id
 """
 
 
+# same selection rule, two-phase plan — equality IS the point
+@query(oracle=lambda: Q_MIXTURE_SAMPLE_SQL)
 def q_mixture_sample_scalable(spark: SparkSession, sf: str) -> DataFrame:
     """The two-phase bucketed exact mixture sampler
     (operators.sampling.stratified_sample_exact_scalable): identical
@@ -781,6 +791,7 @@ def q_mixture_sample_scalable(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@query
 def q_mixture_sample_hash(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic training-mix construction (shuffle-free 100-TB
     variant): keep a row iff the first 8 md5(doc_id) hex chars read as
@@ -815,43 +826,3 @@ FROM h JOIN f USING (lang)
 WHERE h.bucket < f.frac * 4294967296
 ORDER BY lang, doc_id
 """
-
-
-EXT7_QUERIES = {
-    "q_lsh_served_topk": q_lsh_served_topk,
-    "q_ivf_served_topk": q_ivf_served_topk,
-    "q_pq_served_topk": q_pq_served_topk,
-    "q_batch_lsh_topk": q_batch_lsh_topk,
-    "q_winnow_dedup": q_winnow_dedup,
-    "q_curation_pipeline_v2": q_curation_pipeline_v2,
-    "q_compacted_rollup": q_compacted_rollup,
-    "q_mixture_sample": q_mixture_sample,
-    "q_mixture_sample_scalable": q_mixture_sample_scalable,
-    "q_mixture_sample_hash": q_mixture_sample_hash,
-    "q_stream_mixture": q_stream_mixture,
-    "q_lm_scores": q_lm_scores,
-    "q_bloom_contamination": q_bloom_contamination,
-    "q_contamination_prefiltered": q_contamination_prefiltered,
-}
-
-EXT7_ORACLES: dict[str, str] = {
-    "q_batch_lsh_topk": Q_BATCH_LSH_SQL,
-    "q_winnow_dedup": Q_WINNOW_DEDUP_SQL,
-    "q_curation_pipeline_v2": _curation_v2_oracle(),
-    "q_compacted_rollup": Q_COMPACTED_ROLLUP_SQL,
-    "q_mixture_sample": Q_MIXTURE_SAMPLE_SQL,
-    # same selection rule, two-phase plan — equality IS the point
-    "q_mixture_sample_scalable": Q_MIXTURE_SAMPLE_SQL,
-    "q_mixture_sample_hash": Q_MIXTURE_SAMPLE_HASH_SQL,
-    # streamed per-batch application of the same pure predicate must
-    # equal the batch selection — same oracle
-    "q_stream_mixture": Q_MIXTURE_SAMPLE_HASH_SQL,
-    "q_lm_scores": Q_LM_SCORES_SQL,
-    "q_bloom_contamination": Q_BLOOM_CONTAMINATION_SQL,
-}
-
-# the composed pipeline must equal the unfiltered exact answer — same
-# oracle as q_contamination (see q_contamination_prefiltered docstring)
-from .queries_ext5 import Q_CONTAMINATION_SQL  # noqa: E402
-
-EXT7_ORACLES["q_contamination_prefiltered"] = Q_CONTAMINATION_SQL

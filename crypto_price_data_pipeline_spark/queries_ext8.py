@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .io.sources import load_table
 from .operators.text import feature_hash_embed
+from .registry import query
 
 _DIM = 64
 
@@ -62,6 +63,7 @@ vecs AS (
 """
 
 
+@query
 def q_text_embed_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Semantic search over raw text: hash-embed every document in-plan
     and return the exact cosine top-10 against doc 0's vector. Same
@@ -96,6 +98,7 @@ LIMIT 10
 """
 
 
+@query
 def q_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """SemDeDup-shaped curation stage on DERIVED embeddings: hash-embed
     the corpus, pair docs whose cosine (rounded to 9) ≥ 0.995 —
@@ -165,6 +168,7 @@ ORDER BY cluster_id, doc_id
 """
 
 
+@query
 def q_knn_join(spark: SparkSession, sf: str) -> DataFrame:
     """Exact kNN self-join (k=3) over the embeddings table via
     operators.similarity.knn_join — per-item nearest neighbors for
@@ -198,6 +202,7 @@ ORDER BY vec_id, rnk
 """
 
 
+@query
 def q_stream_text_ann(spark: SparkSession, sf: str) -> DataFrame:
     """Ingest-time text indexing end-to-end: the raw documents table
     replays as a 3-micro-batch stream; each batch is feature-hash
@@ -246,21 +251,7 @@ LIMIT 10
 """
 
 
-EXT8_QUERIES = {
-    "q_text_embed_topk": q_text_embed_topk,
-    "q_semantic_dedup": q_semantic_dedup,
-    "q_knn_join": q_knn_join,
-    "q_stream_text_ann": q_stream_text_ann,
-}
-
-EXT8_ORACLES = {
-    "q_text_embed_topk": Q_TEXT_EMBED_TOPK_SQL,
-    "q_semantic_dedup": Q_SEMANTIC_DEDUP_SQL,
-    "q_knn_join": Q_KNN_JOIN_SQL,
-    "q_stream_text_ann": Q_STREAM_TEXT_ANN_SQL,
-}
-
-
+@query
 def q_stream_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Ingest-time semantic dedup through real streaming machinery: the
     corpus replays as 4 micro-batches; each batch feature-hash embeds
@@ -306,10 +297,7 @@ ORDER BY lang
 """
 
 
-EXT8_QUERIES["q_stream_semantic_dedup"] = q_stream_semantic_dedup
-EXT8_ORACLES["q_stream_semantic_dedup"] = Q_STREAM_SEMANTIC_DEDUP_SQL
-
-
+@query
 def q_cross_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Cross-corpus decontamination by near-dup: split the corpus into a
     "reference" (even doc_id) and a "new crawl" (odd doc_id) and report
@@ -354,10 +342,7 @@ WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
 """
 
 
-EXT8_QUERIES["q_cross_dedup"] = q_cross_dedup
-EXT8_ORACLES["q_cross_dedup"] = Q_CROSS_DEDUP_SQL
-
-
+@query
 def q_rag_index(spark: SparkSession, sf: str) -> DataFrame:
     """The canonical RAG ingestion + retrieval pipeline as ONE
     declarative chain: tokenize → 32-token chunks (in-row HOF slicing,
@@ -446,10 +431,7 @@ LIMIT 10
 """
 
 
-EXT8_QUERIES["q_rag_index"] = q_rag_index
-EXT8_ORACLES["q_rag_index"] = Q_RAG_INDEX_SQL
-
-
+@query
 def q_quality_topfrac(spark: SparkSession, sf: str) -> DataFrame:
     """Quantile-threshold curation (dynamic cut, vs the fixed-constant
     gates of the curation pipelines): keep the least-repetitive 75% of
@@ -503,7 +485,3 @@ WHERE rep <= (SELECT thr FROM t)
 GROUP BY lang
 ORDER BY lang
 """
-
-
-EXT8_QUERIES["q_quality_topfrac"] = q_quality_topfrac
-EXT8_ORACLES["q_quality_topfrac"] = Q_QUALITY_TOPFRAC_SQL

@@ -31,15 +31,11 @@ runs around its filters.
   doubles), |z| > 2.5 rows emitted. One map-side-combinable agg +
   broadcast join back; the anomaly gate for metric streams.
 
-Registered into QUERIES/ORACLES by queries.py. Same determinism
+Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
 """
 
 from __future__ import annotations
-
-import atexit
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,11 +44,14 @@ from pyspark.sql.window import Window
 from .io.sources import load_table
 from .streaming.partial_store import run_partial_stream
 from .operators.text import tokenize
+from .registry import query
+from .session import scratch_dir
 
 
 # ------------------------------------ deterministic epoch shuffle
 
 
+@query
 def q_training_order(spark: SparkSession, sf: str) -> DataFrame:
     """Reproducible global training order (the epoch shuffle): rank
     every doc by ``md5('epoch0:' || doc_id)`` via the bucketed
@@ -74,6 +73,7 @@ FROM documents ORDER BY doc_id
 # ------------------------------------------ curation funnel report
 
 
+@query
 def q_curation_report(spark: SparkSession, sf: str) -> DataFrame:
     """Sequential-gate audit report in ONE corpus pass: every doc's
     stage flags are conditional expressions in a single projection, the
@@ -150,6 +150,7 @@ ORDER BY stage
 # ------------------------------------------- per-source quota cap
 
 
+@query
 def q_source_cap(spark: SparkSession, sf: str) -> DataFrame:
     """Per-source absolute quota (keep ≤15 docs per source by
     md5(doc_id) order — the C4/CCNet host-level clip). Two-phase
@@ -193,6 +194,7 @@ WHERE rn <= 15 ORDER BY source, doc_id
 # -------------------------------------- chunk re-assembly integrity
 
 
+@query
 def q_chunk_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """Chunking losslessness gate: split every doc into the 32-token
     chunks the dedup/RAG queries use (q_chunk_dedup's chunker, with
@@ -289,6 +291,7 @@ def _grams5(tok_col):
     ).otherwise(F.array(F.array_join(tok_col, " ")))
 
 
+@query
 def q_stream_contamination(spark: SparkSession, sf: str) -> DataFrame:
     """Ingest-time benchmark decontamination: the corpus replays as a
     3-chunk stream; each micro-batch explodes its docs' distinct
@@ -316,8 +319,7 @@ def q_stream_contamination(spark: SparkSession, sf: str) -> DataFrame:
     )
     bench.persist().count()  # settle the benchmark side once, pre-stream
 
-    work = tempfile.mkdtemp(prefix="stream_decon_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_decon_")
     src = f"{work}/src"
     store = f"{work}/dropped"
     for c in range(3):
@@ -388,6 +390,7 @@ ORDER BY doc_id
 # ------------------------------------------ statistical outlier cut
 
 
+@query
 def q_zscore_outliers(spark: SparkSession, sf: str) -> DataFrame:
     """Per-event-type z-score outliers (|z| > 2.5): the anomaly gate
     for metric streams. Mean/stddev are assembled from exact
@@ -439,6 +442,7 @@ _BUCKET_DB = "wh_buckets"
 _BUCKET_DIRS: dict[str, tuple[str, str]] = {}
 
 
+@query
 def q_bucketed_join(spark: SparkSession, sf: str) -> DataFrame:
     """Co-located join via BUCKETED tables — the layout lever for the
     repeated 100-TB fact⋈dim join: both sides are written once with
@@ -453,8 +457,7 @@ def q_bucketed_join(spark: SparkSession, sf: str) -> DataFrame:
 
     key = f"{sf}"
     if key not in _BUCKET_DIRS:
-        loc = tempfile.mkdtemp(prefix="bucketed_wh_")
-        atexit.register(shutil.rmtree, loc, ignore_errors=True)
+        loc = scratch_dir("bucketed_wh_")
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {_BUCKET_DB} LOCATION '{loc}'")
         suffix = re.sub(r"\W", "_", key).strip("_")
         ob, cb = f"{_BUCKET_DB}.orders_b_{suffix}", f"{_BUCKET_DB}.cust_b_{suffix}"
@@ -492,6 +495,7 @@ GROUP BY c_mktsegment ORDER BY c_mktsegment
 # ------------------------- dynamic partition pruning (runtime prune)
 
 
+@query
 def q_dpp_join(spark: SparkSession, sf: str) -> DataFrame:
     """Dynamic partition pruning: the dt-partitioned staging table
     joins a dim whose filter (day-of-month ∈ {10,11,12}) only resolves
@@ -533,26 +537,3 @@ FROM events
 WHERE EXTRACT(day FROM ts) IN (10, 11, 12)
 GROUP BY 1, 2 ORDER BY 1, 2
 """
-
-
-EXT9_QUERIES = {
-    "q_training_order": q_training_order,
-    "q_curation_report": q_curation_report,
-    "q_source_cap": q_source_cap,
-    "q_chunk_roundtrip": q_chunk_roundtrip,
-    "q_stream_contamination": q_stream_contamination,
-    "q_zscore_outliers": q_zscore_outliers,
-    "q_bucketed_join": q_bucketed_join,
-    "q_dpp_join": q_dpp_join,
-}
-
-EXT9_ORACLES = {
-    "q_training_order": Q_TRAINING_ORDER_SQL,
-    "q_curation_report": Q_CURATION_REPORT_SQL,
-    "q_source_cap": Q_SOURCE_CAP_SQL,
-    "q_chunk_roundtrip": Q_CHUNK_ROUNDTRIP_SQL,
-    "q_stream_contamination": Q_STREAM_CONTAMINATION_SQL,
-    "q_zscore_outliers": Q_ZSCORE_OUTLIERS_SQL,
-    "q_bucketed_join": Q_BUCKETED_JOIN_SQL,
-    "q_dpp_join": Q_DPP_JOIN_SQL,
-}

@@ -10,7 +10,10 @@ reference's UTC-source assumption (SURVEY.md §1.3).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import threading
 from contextlib import contextmanager
 
@@ -150,6 +153,14 @@ def scoped_conf(spark: SparkSession, **overrides):
                     spark.conf.unset(key)
                 else:
                     spark.conf.set(key, prior)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory from ``tempfile.mkdtemp(prefix=prefix)`` (so under
+    ``TMPDIR``), removed with its contents when the interpreter exits."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def materialize(df, reliable: bool | None = None):

@@ -27,14 +27,12 @@ rotation.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.similarity import hyperplane_lsh_buckets
+from ..session import scratch_dir
 
 
 def stream_lsh_index(
@@ -59,8 +57,7 @@ def stream_lsh_index(
     per-row derivation so replayed batches rewrite identical content
     (the exactly-once contract) and the streamed index stays
     row-identical to a batch build."""
-    work = tempfile.mkdtemp(prefix="stream_ann_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_ann_")
     src = os.path.join(work, "src")
     store = os.path.join(work, "index")
     ckpt = os.path.join(work, "ckpt")

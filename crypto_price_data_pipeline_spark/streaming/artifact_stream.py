@@ -46,16 +46,13 @@ this is [EXT] §2.11 surface (verdict r10 item 4).
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import scoped_conf
+from ..session import scoped_conf, scratch_dir
 from .partial_store import run_partial_stream
 
 MINS_SCHEMA = (
@@ -160,8 +157,7 @@ def stream_artifact_index(
     from ..operators.dedup import minhash_min_cols, simhash_md5, with_shingles
     from ..operators.text import _winnowing_fp_hashes, tokenize
 
-    work = tempfile.mkdtemp(prefix="stream_artifact_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_artifact_")
     src = os.path.join(work, "src")
     store = os.path.join(work, "store")
     staged = docs.select("doc_id", "text", "lang")

@@ -35,16 +35,13 @@ is exact.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import band_buckets, minhash_signatures
-from ..session import scoped_conf
+from ..session import scoped_conf, scratch_dir
 
 
 def _write_batch(df: DataFrame, store: str, batch_id: int) -> None:
@@ -164,8 +161,7 @@ def stream_minhash_dedup(
     """Replay ``docs`` as an ``n_chunks``-micro-batch stream through
     the incremental dedup above; returns the survivor table (id,
     *keep_cols) read back from the parquet sink."""
-    work = tempfile.mkdtemp(prefix="stream_dedup_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_dedup_")
     src = os.path.join(work, "src")
     out = os.path.join(work, "out")
     post_store = os.path.join(work, "postings")

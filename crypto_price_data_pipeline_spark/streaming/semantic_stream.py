@@ -37,16 +37,13 @@ dedup_stream (replay rewrites identical bytes).
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import cosine_pairs, norm_vectors
-from ..session import materialize
+from ..session import materialize, scratch_dir
 from ..operators.text import feature_hash_embed
 
 
@@ -122,8 +119,7 @@ def stream_semantic_dedup(
     """Replay ``docs`` as an ``n_chunks``-micro-batch stream through the
     incremental semantic dedup; returns the survivor table (id,
     text, *keep_cols) read back from the parquet sink."""
-    work = tempfile.mkdtemp(prefix="stream_semdedup_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_semdedup_")
     src = os.path.join(work, "src")
     out = os.path.join(work, "out")
     vec_store = os.path.join(work, "vectors")

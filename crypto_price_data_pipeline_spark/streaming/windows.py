@@ -8,15 +8,12 @@ cadence maps onto. File sources stand in for the HTTP poll in tests
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import scoped_conf
+from ..session import scoped_conf, scratch_dir
 
 
 _STREAM_DIRS: dict[str, str] = {}
@@ -35,8 +32,7 @@ def _run_to_parquet(df: DataFrame, mode: str = "append") -> str:
     which for an availableNow replay runs exactly one final batch.
     Directories are removed at interpreter exit, keeping the returned
     DataFrame readable for the caller's lifetime."""
-    work = tempfile.mkdtemp(prefix="stream_sink_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch_dir("stream_sink_")
     data, ckpt = os.path.join(work, "data"), os.path.join(work, "ckpt")
     if mode == "append":
         writer = (
@@ -61,10 +57,6 @@ def _run_to_parquet(df: DataFrame, mode: str = "append") -> str:
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.types as T
 
-    import atexit
-    import shutil
-    import tempfile
-
     path = os.path.join(sf_dir, "events.parquet")
     if os.path.isfile(path):
         # the parquet file source requires a directory; expose the single
@@ -72,10 +64,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # dir per source path, removed at interpreter exit — no leak.
         d = _STREAM_DIRS.get(path)
         if d is None or not os.path.isdir(d):
-            d = tempfile.mkdtemp(prefix="events_stream_")
+            d = scratch_dir("events_stream_")
             os.symlink(path, os.path.join(d, "events.parquet"))
             _STREAM_DIRS[path] = d
-            atexit.register(shutil.rmtree, d, ignore_errors=True)
         src = d
     else:
         src = path

@@ -9,12 +9,15 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 HEADER = "## Registry index (all registered query names, by module)"
+COVERAGE = os.path.join(REPO, "COVERAGE.md")
 
 
-def main() -> None:
+def index_lines() -> list[str]:
+    """The section's lines, header first, as main() writes them."""
     from crypto_price_data_pipeline_spark.queries import QUERIES
 
     bymod: dict[str, list[str]] = {}
@@ -31,11 +34,17 @@ def main() -> None:
     for mod in sorted(bymod):
         names = " ".join(f"`{n}`" for n in bymod[mod])
         lines.append(f"- **{mod}** ({len(bymod[mod])}): {names}")
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "COVERAGE.md")
-    text = open(path).read()
+    return lines
+
+
+def main() -> None:
+    lines = index_lines()
+    text = open(COVERAGE).read()
     head = text.split(HEADER)[0].rstrip() + "\n\n"
-    open(path, "w").write(head + "\n".join(lines) + "\n")
-    print(f"wrote {sum(map(len, bymod.values()))} names across {len(bymod)} modules")
+    open(COVERAGE, "w").write(head + "\n".join(lines) + "\n")
+    modules = [line for line in lines if line.startswith("- **")]
+    names = sum(line.count(" `") for line in modules)
+    print(f"wrote {names} names across {len(modules)} modules")
 
 
 if __name__ == "__main__":
