@@ -262,11 +262,7 @@ def simhash32_table(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import fp_group_stats, simhash_md5
 
     def _build() -> DataFrame:
-        vocab = (
-            token_lang_counts(spark, sf)
-            .select(F.col("w").alias("_t"))
-            .distinct()
-        )
+        vocab = token_lang_counts(spark, sf).select(F.col("w").alias("_t"))
         return simhash_md5(
             _scale_out(load_table(spark, sf, "documents")), vocab=vocab
         )

@@ -27,33 +27,45 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import materialize
+from ..session import materialize, per_gateway
+
+
+@per_gateway
+def _path_class():
+    """Hadoop's ``Path`` class: looking it up through ``spark._jvm`` is
+    one py4j round trip per package segment."""
+    return SparkContext._jvm.org.apache.hadoop.fs.Path
+
+
+@per_gateway
+def _row_count() -> Column:
+    return F.count(F.lit(1)).alias("rows")
 
 
 def _hadoop_path(spark: SparkSession, path: str):
     """(FileSystem, qualified Path) of ``path`` under the session's
     Hadoop configuration."""
-    jvm = spark._jvm
     conf = spark._jsparkSession.sessionState().newHadoopConf()
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    p = _path_class()(path)
     fs = p.getFileSystem(conf)
     return fs, fs.makeQualified(p)
 
 
-def _promote(spark: SparkSession, fs, src, dest) -> None:
+def _promote(fs, src, dest) -> None:
     """Rename the data files under ``src`` into ``dest``, keeping the
     directory layout; markers (``_SUCCESS``) and hidden files stay."""
     for st in fs.listStatus(src):
         name = st.getPath().getName()
         if name.startswith(("_", ".")):
             continue
-        target = spark._jvm.org.apache.hadoop.fs.Path(dest, name)
+        target = _path_class()(dest, name)
         if st.isDirectory():
             fs.mkdirs(target)
-            _promote(spark, fs, st.getPath(), target)
+            _promote(fs, st.getPath(), target)
         elif not fs.rename(st.getPath(), target):
             raise OSError(f"could not move {st.getPath()} to {target}")
 
@@ -101,14 +113,14 @@ def idempotent_append(
         existing = spark.read.schema(df.select(*keys).schema).parquet(path)
         fresh = fresh.join(existing, on=keys, how="left_anti")
     obs = Observation()
-    fresh = fresh.observe(obs, F.count(F.lit(1)).alias("rows"))
-    staging = spark._jvm.org.apache.hadoop.fs.Path(root, f"_staging-{uuid.uuid4().hex}")
+    fresh = fresh.observe(obs, _row_count())
+    staging = _path_class()(root, f"_staging-{uuid.uuid4().hex}")
     n = 0
     try:
         append_parquet(fresh, staging.toString(), partition_by)
         n = obs.get["rows"]
         if n:
-            _promote(spark, fs, staging, root)
+            _promote(fs, staging, root)
     finally:
         fs.delete(staging, True)
         # a first append of no rows leaves no table behind

@@ -1009,18 +1009,21 @@ def simhash_md5(
     ``df``'s distinct ``tokens_col`` tokens (the per-token join below
     is inner from the token-stream side, so extra vocab rows are
     harmless and a MISSING token would silently drop its votes — the
-    caller owns that contract). When omitted, the vocabulary is
-    derived from ``df`` itself, which plans a SECOND full scan +
-    tokenize of the corpus (column pruning trims it to the text
-    column, but at 100 TB it is still a second pass over the data).
+    caller owns that contract). Repeated vocab rows are fine: the
+    vocabulary is de-duplicated here, since each copy of a token would
+    otherwise join every occurrence again and multiply its votes. When
+    omitted, the vocabulary is derived from ``df`` itself, which plans a
+    SECOND full scan + tokenize of the corpus (column pruning trims it
+    to the text column, but at 100 TB it is still a second pass over
+    the data).
     The artifact build passes the stored counting cube's vocabulary —
     the same tokenizer over the same corpus, so the sets are equal and
     the fingerprints bit-identical, with the second corpus pass
     replaced by a vocabulary-sized cube scan."""
     toks = df.select(F.col(id_col), F.explode(tokens_col(text_col)).alias("_t"))
     if vocab is None:
-        vocab = toks.select("_t").distinct()
-    vocab = vocab.select(
+        vocab = toks.select("_t")
+    vocab = vocab.distinct().select(
         "_t",
         F.conv(F.substring(F.md5("_t"), 1, 8), 16, 10).cast("long").alias("_h"),
     )

@@ -20,36 +20,22 @@ from ..functions.scalars import (
     parse_bpi_updated,
     parse_iso_offset,
 )
+from ..session import per_gateway
 
 
-def _ccy(df: DataFrame, code: str) -> Column:
-    """Currency sub-struct access for both encodings (struct / map)."""
-    bpi_type = df.schema["bpi"].dataType
-    if isinstance(bpi_type, T.MapType):
-        return F.col("bpi").getItem(code)
-    return F.col(f"bpi.{code}")
+@per_gateway
+def _projection(bpi_is_map: bool, now: str | None) -> tuple[Column, ...]:
+    """The 17 output Columns (16 record columns + ``_event_ts``) for one
+    ``bpi`` encoding (struct or map) and one ``now``, built once."""
 
+    def ccy(code: str) -> Column:
+        return F.col("bpi").getItem(code) if bpi_is_map else F.col(f"bpi.{code}")
 
-def flatten_payload(
-    payloads: DataFrame,
-    now: str | None = None,
-    job_id: Column | None = None,
-) -> DataFrame:
-    """Payload rows → flat enriched rows (minus the IDR join, see rates.py).
-
-    ``now`` freezes the wall-clock ``last_updated`` (reference:
-    ``datetime.now()`` at bpi_crawler.py:118) for deterministic tests;
-    ``job_id`` overrides the surrogate key (reference: Mongo ObjectId hex,
-    bpi_crawler.py:171) — default is a deterministic content hash so that
-    retries produce the same key (idempotent sink friendly), with
-    ``F.expr("uuid()")`` as the engine-generated alternative.
-    """
-    usd, gbp, eur = _ccy(payloads, "USD"), _ccy(payloads, "GBP"), _ccy(payloads, "EUR")
-    if job_id is None:
-        job_id = F.md5(F.concat_ws("|", F.col("time.updatedISO"), F.col("chartName")))
+    usd, gbp, eur = ccy("USD"), ccy("GBP"), ccy("EUR")
+    job_id = F.md5(F.concat_ws("|", F.col("time.updatedISO"), F.col("chartName")))
     now_col = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
-
-    return payloads.select(
+    event_ts = parse_iso_offset(F.col("time.updatedISO"))
+    return (
         job_id.alias("job_id"),
         F.col("disclaimer"),
         F.col("chartName").alias("chart_name"),
@@ -66,9 +52,35 @@ def flatten_payload(
         eur["description"].alias("bpi_eur_description"),
         # string-formatted timestamps, tz dropped (bpi_crawler.py:114-118)
         format_wall_ts(parse_bpi_updated(F.col("time.updated"))).alias("time_updated"),
-        format_wall_ts(parse_iso_offset(F.col("time.updatedISO"))).alias("time_updated_iso"),
+        format_wall_ts(event_ts).alias("time_updated_iso"),
         format_wall_ts(now_col).alias("last_updated"),
         # typed event-time column kept for the rates join & streaming
         # surface (internal; dropped by the sink projection).
-        parse_iso_offset(F.col("time.updatedISO")).alias("_event_ts"),
+        event_ts.alias("_event_ts"),
     )
+
+
+def flatten_payload(
+    payloads: DataFrame,
+    now: str | None = None,
+    job_id: Column | None = None,
+) -> DataFrame:
+    """Payload rows → flat enriched rows (minus the IDR join, see rates.py).
+
+    ``now`` freezes the wall-clock ``last_updated`` (reference:
+    ``datetime.now()`` at bpi_crawler.py:118) for deterministic tests;
+    ``job_id`` overrides the surrogate key (reference: Mongo ObjectId hex,
+    bpi_crawler.py:171) — default is a deterministic content hash so that
+    retries produce the same key (idempotent sink friendly), with
+    ``F.expr("uuid()")`` as the engine-generated alternative.
+
+    The projection's Columns are built once per ``bpi`` encoding and
+    ``now`` value (see ``session.per_gateway``), not on every call: a
+    streaming ingest flattens one small batch per trigger, and
+    rebuilding them cost more driver CPU than the batch itself.
+    """
+    bpi_is_map = isinstance(payloads.schema["bpi"].dataType, T.MapType)
+    cols = _projection(bpi_is_map, now)
+    if job_id is not None:
+        cols = (job_id.alias("job_id"), *cols[1:])
+    return payloads.select(*cols)

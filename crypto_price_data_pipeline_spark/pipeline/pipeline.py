@@ -10,12 +10,19 @@ load is whatever sink the caller points at.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
+from ..session import per_gateway
 from .flatten import flatten_payload
 from .rates import join_idr_rate
 from .schema import ENRICHED_COLUMNS
 from .validate import check_observation, expectation_gate
+
+
+@per_gateway
+def _sink_columns() -> tuple[Column, ...]:
+    return tuple(F.col(c) for c in ENRICHED_COLUMNS)
 
 
 def run_pipeline(
@@ -38,7 +45,7 @@ def run_pipeline(
     and raises before anything is returned.
     """
     enriched = join_idr_rate(flatten_payload(payloads, now=now), fx_rates)
-    out = enriched.select(*ENRICHED_COLUMNS)
+    out = enriched.select(*_sink_columns())
     if sink is not None:
         observed, obs = expectation_gate(out)
         sink(observed)

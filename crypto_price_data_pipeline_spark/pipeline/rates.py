@@ -30,10 +30,10 @@ from __future__ import annotations
 import threading
 import weakref
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import materialize
+from ..session import materialize, per_gateway
 
 # fx_rates frame -> {(from_ccy, to_ccy): materialized (rate_date, rate) slice};
 # foreachBatch calls of concurrent streams may share one frame, hence the lock
@@ -49,6 +49,11 @@ def _rate_slice(fx_rates: DataFrame, from_ccy: str, to_ccy: str) -> DataFrame:
     session's cache manager, where any query with a matching plan picks it
     up, and it stays there until someone unpersists it.
     """
+    key = (from_ccy, to_ccy)
+    with _SLICES_LOCK:
+        memo = _SLICES.get(fx_rates, {}).get(key)
+    if memo is not None:  # a streaming frame never gets here
+        return memo
     dim = fx_rates.where(
         (F.col("from_ccy") == from_ccy) & (F.col("to_ccy") == to_ccy)
     ).select("rate_date", "rate")
@@ -56,9 +61,16 @@ def _rate_slice(fx_rates: DataFrame, from_ccy: str, to_ccy: str) -> DataFrame:
         return dim
     with _SLICES_LOCK:
         slices = _SLICES.setdefault(fx_rates, {})
-        if (from_ccy, to_ccy) not in slices:
-            slices[(from_ccy, to_ccy)] = dim.transform(materialize)
-        return slices[(from_ccy, to_ccy)]
+        if key not in slices:
+            slices[key] = dim.transform(materialize)
+        return slices[key]
+
+
+@per_gateway
+def _join_exprs() -> tuple[Column, Column]:
+    """(join condition, IDR product): name-bound, so built once."""
+    on = F.to_date(F.col("_event_ts")) == F.col("rate_date")
+    return on, F.col("bpi_usd_rate_float") * F.col("rate")
 
 
 def join_idr_rate(
@@ -71,17 +83,13 @@ def join_idr_rate(
     rate row matching (pair, event date). Left join: a missing rate row
     yields NULL (caught by the validation gate), never a dropped snapshot.
     The rates are a snapshot of ``fx_rates`` taken on its first use (see
-    :func:`_rate_slice`).
+    :func:`_rate_slice`). The condition and the product are built once
+    (see ``session.per_gateway``): they name ``_event_ts``, ``rate_date``
+    and ``rate``, which only one side of the join carries.
     """
-    dim = _rate_slice(fx_rates, from_ccy, to_ccy)
+    on, idr = _join_exprs()
     return (
-        enriched.join(
-            F.broadcast(dim),
-            F.to_date(enriched["_event_ts"]) == dim["rate_date"],
-            "left",
-        )
-        .withColumn(
-            "bpi_idr_rate_float", F.col("bpi_usd_rate_float") * F.col("rate")
-        )
+        enriched.join(F.broadcast(_rate_slice(fx_rates, from_ccy, to_ccy)), on, "left")
+        .withColumn("bpi_idr_rate_float", idr)
         .drop("rate_date", "rate")
     )

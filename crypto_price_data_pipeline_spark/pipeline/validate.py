@@ -18,9 +18,11 @@ metrics, so validation costs **zero extra passes** over the data
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import per_gateway
 
 WALL_RE = r"^\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}$"
 
@@ -54,12 +56,26 @@ def _bad_format(col: str):
     return F.sum((c.isNull() | ~c.rlike(WALL_RE)).cast("long")).alias(f"bad_{col}")
 
 
+@per_gateway
+def _gate_metrics() -> tuple[Column, ...]:
+    """The gate's observed metrics: row count, per-column format misses
+    and float nulls. Name-bound, so built once."""
+    return (
+        F.count(F.lit(1)).alias("n_rows"),
+        *[_bad_format(c) for c in FORMAT_COLS],
+        *[F.sum(F.col(c).isNull().cast("long")).alias(f"null_{c}") for c in FLOAT_COLS],
+    )
+
+
 def expectation_gate(df: DataFrame) -> tuple[DataFrame, Observation]:
     """Static dtype checks now; attach format-match metrics via observe().
 
     Returns (observed_df, observation). Call :func:`check_observation`
     after the first action on ``observed_df`` (e.g. the sink write) to
     enforce the gate — single-pass, but that action has already run.
+    The metric Columns are built once (see ``session.per_gateway``);
+    only the ``Observation`` is new per call, since each one observes a
+    single DataFrame.
     """
     schema = {f.name: f.dataType for f in df.schema.fields}
     for c in FLOAT_COLS:
@@ -70,13 +86,7 @@ def expectation_gate(df: DataFrame) -> tuple[DataFrame, Observation]:
             raise ValidationError(f"expected string dtype for {c}, got {schema.get(c)}")
 
     obs = Observation("expectation_gate")
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        *[_bad_format(c) for c in FORMAT_COLS],
-        *[F.sum(F.col(c).isNull().cast("long")).alias(f"null_{c}") for c in FLOAT_COLS],
-    )
-    return observed, obs
+    return df.observe(obs, *_gate_metrics()), obs
 
 
 def check_observation(obs: Observation) -> dict:

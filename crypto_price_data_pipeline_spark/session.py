@@ -11,12 +11,14 @@ reference's UTC-source assumption (SURVEY.md §1.3).
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 import shutil
 import tempfile
 import threading
 from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -153,6 +155,26 @@ def scoped_conf(spark: SparkSession, **overrides):
                     spark.conf.unset(key)
                 else:
                     spark.conf.set(key, prior)
+
+
+def per_gateway(fn):
+    """Memoize ``fn``, which makes py4j handles (unresolved Columns, JVM
+    class handles), per live py4j gateway and argument tuple.
+
+    An unresolved Column names its inputs instead of binding them to a
+    plan, so one built once can be reused in every DataFrame; building
+    it costs a dozen py4j round trips per function call, which a
+    per-trigger stream pays on every batch. The handles live in the JVM
+    behind the gateway, so a new gateway (a relaunched JVM) gets fresh
+    ones. ``fn``'s arguments must be hashable.
+    """
+    cached = functools.lru_cache(maxsize=64)(lambda gateway, *args: fn(*args))
+
+    @functools.wraps(fn)
+    def wrapper(*args):
+        return cached(SparkContext._gateway, *args)
+
+    return wrapper
 
 
 def scratch_dir(prefix: str) -> str:

@@ -7,11 +7,27 @@ source: each micro-batch fetches whatever snapshots arrived since the
 last committed offset, so checkpointing gives exactly-once delivery
 into the pipeline with no XCom/Mongo bookkeeping.
 
+The reader is a ``SimpleDataSourceStreamReader``, so the poll runs on
+the driver. Each trigger, ``read(start)`` fetches the next
+``ticksPerBatch`` ticks inside the stream's long-lived planner process
+(Spark's ``latestOffset`` step) and returns their end offset; the rows
+go to the JVM as cached Arrow blocks, and the batch's scan reads those
+blocks. No Python worker task runs per trigger. A poll batch is a
+handful of small JSON strings, where a worker task cost far more CPU to
+start than the read itself. The offsets are a pure function of
+``start``, so a restarted stream resumes from its checkpoint. A batch
+planned before a crash but not committed is replayed through
+``readBetweenOffsets(start, end)``, which re-fetches exactly the ticks
+the offset log recorded (in a Python worker: the restarted planner has
+no cached rows).
+
 Network access is injected: the source takes a ``fetcher`` module path
 resolving to ``fetch(from_offset: int, to_offset: int) -> list[str]``
 (JSON payload strings). The default fetcher is a deterministic
 generator (for tests/CI); a production deployment points it at a real
-HTTP client with the same contract.
+HTTP client with the same contract. ``fetch`` must return the same
+payloads when asked for the same ticks again (a replay); the driver-side
+poll suits small batches, since one process reads every row.
 """
 
 from __future__ import annotations
@@ -20,7 +36,7 @@ import importlib
 import json
 from collections.abc import Iterator
 
-from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 
 def default_fetch(from_offset: int, to_offset: int) -> list[str]:
@@ -56,13 +72,7 @@ def default_fetch(from_offset: int, to_offset: int) -> list[str]:
     return out
 
 
-class _PollPartition(InputPartition):
-    def __init__(self, start: int, end: int):
-        self.start = start
-        self.end = end
-
-
-class HttpPollStreamReader(DataSourceStreamReader):
+class HttpPollStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict):
         self._batch_ticks = int(options.get("ticksperbatch", "3"))
         fetcher = options.get("fetcher")
@@ -71,25 +81,19 @@ class HttpPollStreamReader(DataSourceStreamReader):
             self._fetch = getattr(importlib.import_module(mod), name)
         else:
             self._fetch = default_fetch
-        self._offset = 0
 
     def initialOffset(self) -> dict:
         return {"tick": 0}
 
-    def latestOffset(self) -> dict:
+    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         # each trigger advances the poll window by ticksPerBatch
-        self._offset += self._batch_ticks
-        return {"tick": self._offset}
+        end = {"tick": start["tick"] + self._batch_ticks}
+        return self.readBetweenOffsets(start, end), end
 
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        return [_PollPartition(start["tick"], end["tick"])]
-
-    def commit(self, end: dict) -> None:
-        pass
-
-    def read(self, partition: _PollPartition) -> Iterator[tuple]:
-        for raw in self._fetch(partition.start, partition.end):
-            yield (raw,)
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+        # a list iterator: Spark copies the iterator it caches, which a
+        # generator does not allow
+        return iter([(raw,) for raw in self._fetch(start["tick"], end["tick"])])
 
 
 class HttpPollDataSource(DataSource):
@@ -104,7 +108,7 @@ class HttpPollDataSource(DataSource):
     def schema(self) -> str:
         return "value string"
 
-    def streamReader(self, schema) -> HttpPollStreamReader:
+    def simpleStreamReader(self, schema) -> HttpPollStreamReader:
         return HttpPollStreamReader(self.options)
 
 

@@ -1242,3 +1242,30 @@ def test_simhash_md5_external_vocab_bit_identical(spark):
             for r in simhash_md5(docs, vocab=vocab).collect()
         }
         assert got == ref
+
+
+def test_simhash_md5_duplicated_vocab_same_fingerprints(spark):
+    """A vocabulary with repeated rows (the counting cube holds one row
+    per (word, lang)) gives the same fingerprints: each copy of a token
+    would otherwise join its occurrences again and multiply its votes."""
+    from pyspark.sql import functions as F
+
+    from crypto_price_data_pipeline_spark.operators.dedup import (
+        simhash_md5,
+        tokens_col,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta gamma alpha"),
+            (2, "beta gamma delta"),
+            (3, "unrelated words entirely different"),
+        ],
+        "doc_id long, text string",
+    )
+    ref = {r["doc_id"]: r["simhash32"] for r in simhash_md5(docs).collect()}
+    vocab = docs.select(F.explode(tokens_col("text")).alias("_t"))  # a row per occurrence
+    # "alpha" and "gamma" once more: uneven copies change the votes' balance
+    vocab = vocab.union(spark.createDataFrame([("alpha",), ("gamma",)], "_t string"))
+    got = {r["doc_id"]: r["simhash32"] for r in simhash_md5(docs, vocab=vocab).collect()}
+    assert got == ref

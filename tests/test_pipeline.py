@@ -9,6 +9,7 @@ import os
 import sys
 import threading
 import weakref
+from contextlib import contextmanager
 
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -21,6 +22,7 @@ from crypto_price_data_pipeline_spark.pipeline import (
     ValidationError,
     run_pipeline,
 )
+from crypto_price_data_pipeline_spark.pipeline.schema import BPI_PAYLOAD_MAP_SCHEMA
 
 GOLDEN = (
     {"updated": "Dec 6, 2022 13:31:00 UTC", "updatedISO": "2022-12-06T13:31:00+00:00"},
@@ -235,3 +237,71 @@ def test_rates_memo_one_materialize_under_threads(spark):
     # every thread got the one slice, and the rates were read by one job
     assert len(got) == 8 and all(g is got[0] for g in got)
     assert hits.value == 1
+
+
+@contextmanager
+def _py4j_commands(spark):
+    """Count the py4j commands this process sends to the JVM in the block."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counting(*args, **kwargs):
+        sent[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield sent
+    finally:
+        del client.send_command  # the class's method again
+
+
+# A repeat call sent ~1,500 commands while it rebuilt its Column
+# expressions per call; with them built once it sends 220-290.
+REPEAT_CALL_COMMANDS = 500
+
+
+def test_repeat_pipeline_call_sends_bounded_py4j_commands(spark, tmp_path):
+    """A repeat ``run_pipeline(..., sink=idempotent_append)`` call landing
+    a 10-row batch, as one ingest trigger does, sends a bounded number of
+    py4j commands: its expressions are built once, not per call. A new
+    ``now`` value and the map ``bpi`` encoding each get their own
+    projection (checked on the rows they land), then are as cheap."""
+    from crypto_price_data_pipeline_spark.io.sinks import idempotent_append
+    from crypto_price_data_pipeline_spark.streaming.http_source import default_fetch
+
+    rates = _rates(spark)
+    warehouse = str(tmp_path / "warehouse")
+
+    def payloads(start, schema):
+        raw = [(v,) for v in default_fetch(start, start + 10)]
+        return spark.createDataFrame(raw, "value string").select(
+            F.from_json("value", schema).alias("p")
+        ).select("p.*")
+
+    def land(start, now, schema=BPI_PAYLOAD_SCHEMA):
+        batch = payloads(start, schema)
+        with _py4j_commands(spark) as sent:
+            run_pipeline(
+                batch,
+                rates,
+                now=now,
+                sink=lambda d: idempotent_append(spark, d, warehouse, keys=["job_id"]),
+            )
+        return sent[0]
+
+    first, second = "2022-12-06 14:00:03", "2022-12-06 15:30:00"
+    cases = [(0, first, BPI_PAYLOAD_SCHEMA), (20, second, BPI_PAYLOAD_SCHEMA),
+             (40, first, BPI_PAYLOAD_MAP_SCHEMA)]
+    for start, now, schema in cases:
+        land(start, now, schema)  # first use of this key builds its expressions
+        assert land(start + 10, now, schema) < REPEAT_CALL_COMMANDS
+
+    got = {r["time_updated_iso"]: r.asDict() for r in spark.read.parquet(warehouse).collect()}
+    assert len(got) == 60
+    for start, now, schema in cases:
+        want = run_pipeline(payloads(start, BPI_PAYLOAD_SCHEMA), rates, now=now).collect()
+        want += run_pipeline(payloads(start + 10, BPI_PAYLOAD_SCHEMA), rates, now=now).collect()
+        assert [got[r["time_updated_iso"]] for r in want] == [r.asDict() for r in want]
+        assert {r["last_updated"] for r in want} == {now}
