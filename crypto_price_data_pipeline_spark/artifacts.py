@@ -48,10 +48,15 @@ own arguments — a caller wiring the store into a differently-
 parameterized operator gets an error, not silently wrong results.
 Caller-built tables without a stamp skip the check (trusted).
 
+Known-schema reads: the store records the schema of the DataFrame it
+writes and reads every artifact back with ``spark.read.schema``. A
+parquet read with no schema infers one from the footers in a Spark job
+of its own, which here would only re-learn what the build just said.
+
 Degenerate corpora: a 0-row build can write a footer-less parquet
-directory (only _SUCCESS), which Spark refuses to read back. Such
-corpora fall back to returning the lazily-built DataFrame directly —
-correctness is unchanged and the corpus is tiny by construction.
+directory (only _SUCCESS). Schema inference refuses it, but a read with
+the recorded schema returns an empty table with the artifact's columns,
+so such corpora take the normal path: built once, stamped, served.
 """
 
 from __future__ import annotations
@@ -62,15 +67,15 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
 from .session import scoped_conf, scratch_dir
 
-# (artifact name, abspath of corpus dir) -> parquet dir, or the
-# _FALLBACK sentinel for corpora whose build round-trips empty.
-_DIRS: dict[tuple[str, str], str] = {}
-_FALLBACK = "__lazy_fallback__"
+# (artifact name, abspath of corpus dir) -> (parquet dir, schema it
+# was written with)
+_DIRS: dict[tuple[str, str], tuple[str, StructType]] = {}
 _LOCK = threading.RLock()
 
 # build parameters each artifact is constructed with — the stamp
@@ -130,11 +135,10 @@ def _artifact(
 ) -> DataFrame:
     key = (name, os.path.abspath(sf))
     with _LOCK:
-        loc = _DIRS.get(key)
-        if loc == _FALLBACK:
-            return _stamp(build(), name, sf)
-        if loc is None or not os.path.isdir(loc):
+        entry = _DIRS.get(key)
+        if entry is None or not os.path.isdir(entry[0]):
             d = scratch_dir(f"artifact_{name}_")
+            df = build()
             # write MANY files, not whatever AQE coalesced the build's
             # final stage to (typically ONE at local scale): consumers'
             # zero-shuffle pair stages — scan → broadcast join →
@@ -152,24 +156,16 @@ def _artifact(
             with scoped_conf(
                 spark, **{"spark.sql.adaptive.coalescePartitions.enabled": "false"}
             ):
-                build().write.mode("overwrite").parquet(d)
-            try:
-                spark.read.parquet(d).schema
-            except Exception:
-                _DIRS[key] = _FALLBACK
-                if stats_fn is not None:
-                    try:
-                        _STATS[key] = stats_fn(build())
-                    except Exception:
-                        _STATS.pop(key, None)
-                return _stamp(build(), name, sf)
+                df.write.mode("overwrite").parquet(d)
+            # what Spark reads back: the build's schema made nullable
+            stored = spark.read.schema(df.schema).parquet(d)
+            entry = (d, stored.schema)
             if stats_fn is not None:
                 # measured over the settled parquet (columnar scan),
                 # once per build — consumers read it from the stamp
-                _STATS[key] = stats_fn(spark.read.parquet(d))
-            _DIRS[key] = d
-            loc = d
-    return _stamp(spark.read.parquet(loc), name, sf)
+                _STATS[key] = stats_fn(stored)
+            _DIRS[key] = entry
+    return _stamp(spark.read.schema(entry[1]).parquet(entry[0]), name, sf)
 
 
 def rebuild(spark: SparkSession, sf: str, name: str) -> DataFrame:

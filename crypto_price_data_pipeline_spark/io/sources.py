@@ -35,18 +35,56 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# load_table's memos; a race between threads only repeats idempotent
+# work. Session UUIDs whose conf load_table has set:
+_CONF_SESSIONS: set[str] = set()
+# absolute table path -> (data-file stamp, schema inferred from it)
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """(path, size, mtime_ns) of every data file of a local parquet
+    table, a single file or a directory; ``None`` for a path this
+    process cannot stat. Names starting with ``_`` or ``.`` are skipped,
+    as Spark skips them (``_SUCCESS``, ``.crc`` files)."""
+    if os.path.isfile(path):
+        files = [path]
+    elif os.path.isdir(path):
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            files += [os.path.join(root, f) for f in sorted(names)
+                      if not f.startswith(("_", "."))]
+    else:
+        return None
+    stats = [os.stat(f) for f in files]
+    return tuple((f, st.st_size, st.st_mtime_ns) for f, st in zip(files, stats))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table. Plain `spark.read.parquet` so predicate
     pushdown / column pruning stay available to every downstream query.
+
+    Schema memo: a parquet read with no schema infers one from the
+    footers, and that inference is a Spark job of its own (about
+    80-100 ms of CPU at 4 cores against 10-20 ms for a read with the
+    schema given). The first read of a table infers; its schema is kept
+    per absolute path together with the size and ``mtime_ns`` of each
+    data file, and a later read whose files are unchanged passes it to
+    ``spark.read.schema``. A table rewritten in place changes those
+    stamps, so it is inferred again. Paths this process cannot stat
+    (a remote filesystem) are inferred on every read.
 
     events.ts is TIMESTAMP(NANOS) in the parquet footer; with
     ``spark.sql.legacy.parquet.nanosAsLong`` it surfaces as a long of
     nanoseconds — normalize to micro-precision TimestampType (truncating
     like DuckDB does) so downstream operators see one timestamp type.
 
-    The conf is set here (runtime SQL conf, idempotent) rather than only
-    in the session factory so the read also works under an externally
-    provided SparkSession (e.g. the driver's harness).
+    The confs are set here (runtime SQL conf) rather than only in the
+    session factory so the read also works under an externally provided
+    SparkSession (e.g. an embedding harness). They are set once per live
+    session, keyed on its UUID: ``spark.newSession()`` has its own conf
+    and gets them on its first ``load_table``.
 
     HOST-APPLICATION CAVEAT (intentional, by the oracle contract): the
     three ``spark.conf.set`` calls below mutate SESSION-WIDE state —
@@ -54,23 +92,35 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     UNRELATED reads/queries in that session also see UTC session time,
     no NTZ inference, and nanos-as-long parquet reads. Embedders who
     need different timestamp semantics for their own tables should use
-    a separate SparkSession (or save/restore these three confs around
-    load_table); this engine's own queries all assume the UTC contract.
+    a separate SparkSession; this engine's own queries all assume the
+    UTC contract, and a session whose caller changes these confs after
+    its first ``load_table`` does not get them set again.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Testdata regenerated with plain timestamp[us] (isAdjustedToUTC=false)
-    # reads as TIMESTAMP_NTZ under Spark 4's default inference, which
-    # breaks watermarks (`withWatermark` requires TIMESTAMP) and
-    # `unix_micros`. Disable NTZ inference so unannotated parquet
-    # timestamps surface as TimestampType (UTC instants — the session tz
-    # is pinned to UTC, so values match the DuckDB oracle's naive reads).
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # Timestamp VALUES (collect, date_format, casts) depend on the
-    # session tz; the whole oracle contract assumes UTC. Runtime-set it
-    # here too so an externally built session (driver harness) in any
-    # host timezone still produces oracle-identical values.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    sid = spark._jsparkSession.sessionUUID()
+    if sid not in _CONF_SESSIONS:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Testdata regenerated with plain timestamp[us] (isAdjustedToUTC=false)
+        # reads as TIMESTAMP_NTZ under Spark 4's default inference, which
+        # breaks watermarks (`withWatermark` requires TIMESTAMP) and
+        # `unix_micros`. Disable NTZ inference so unannotated parquet
+        # timestamps surface as TimestampType (UTC instants — the session tz
+        # is pinned to UTC, so values match the DuckDB oracle's naive reads).
+        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # Timestamp VALUES (collect, date_format, casts) depend on the
+        # session tz; the whole oracle contract assumes UTC. Runtime-set it
+        # here too so an externally built session (embedding harness) in any
+        # host timezone still produces oracle-identical values.
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        _CONF_SESSIONS.add(sid)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key, stamp = os.path.abspath(path), _file_stamp(path)
+    known = _SCHEMAS.get(key)
+    if known and known[0] == stamp:
+        df = spark.read.schema(known[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if stamp is not None:
+            _SCHEMAS[key] = (stamp, df.schema)
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         # integer `div`, not `/` — float division loses microseconds on
         # int64 nanos (> 2^53)

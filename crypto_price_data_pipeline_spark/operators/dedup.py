@@ -563,7 +563,10 @@ def minhash_lsh_pairs(
     inspection), in which case the caller owns the signature cache for
     the session's lifetime. At warehouse scale, write signatures to a
     parquet/Delta table instead of caching — pass them back in via
-    ``base``/``mins``.
+    ``base``/``mins``. Stored ``base``/``mins`` (the artifact store's
+    tables) pin nothing, so such callers pass ``materialize=False``:
+    the eager pass would only add a construct-time job and hide the
+    pair plan behind a checkpoint scan.
 
     ``base``/``mins``: optional precomputed signature tables — a
     with_shingles() table and its minhash_min_cols() minima (e.g. read

@@ -990,7 +990,9 @@ def q_minhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
     Signatures come from the corpus artifact store (artifacts.py): the
     shingle base and the minima are per-corpus stored tables shared
     with q_minhash_exact — built once, read as parquet scans (bench
-    times the cold build separately as artifact_minhash_*_build)."""
+    times the cold build separately as artifact_minhash_*_build). Both
+    are stored tables, so there is no signature cache to release and
+    the pair plan stays lazy (``materialize=False``)."""
     from .artifacts import minhash_base, minhash_mins
     from .operators.dedup import minhash_lsh_pairs
 
@@ -998,6 +1000,7 @@ def q_minhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
     return minhash_lsh_pairs(
         docs,
         threshold=0.5,
+        materialize=False,
         base=minhash_base(spark, sf),
         mins=minhash_mins(spark, sf),
     )

@@ -1,13 +1,28 @@
 """Corpus artifact store (artifacts.py): build-once semantics, parquet
-round-trip fidelity, degenerate-corpus fallback, forced rebuild."""
+round-trip fidelity, degenerate corpora, forced rebuild, and the Spark
+jobs a served read does not start."""
 
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
 SF = "/root/testdata/sf0.001"
+
+
+def _jobs_started(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_minhash_artifacts_match_direct_build(spark):
@@ -68,9 +83,10 @@ def test_artifact_builds_once_then_reads_parquet(spark):
 
 
 def test_artifact_empty_corpus_falls_back_lazy(spark, tmp_path):
-    """A corpus whose build writes an unreadable (footer-less) parquet
-    must fall back to the lazy plan and keep returning correct empty
-    results instead of crashing."""
+    """A corpus whose build writes a footer-less parquet directory (only
+    _SUCCESS), which schema inference refuses, must keep returning
+    correct empty results instead of crashing: the store reads it back
+    with the schema it recorded at the write."""
     from crypto_price_data_pipeline_spark import artifacts
     from crypto_price_data_pipeline_spark.io.sources import load_table
 
@@ -248,3 +264,72 @@ def test_every_stamped_field_checked_not_just_first(spark):
         check_precomputed_params(
             second_disagrees, {"artifact": "x", "k": 8}, "unit_b_bad"
         )
+
+
+def test_empty_corpus_minhash_artifacts_served_without_rebuild(spark, tmp_path):
+    """minhash_base and minhash_mins over an empty documents table are
+    stored like any other build: 0 rows with the artifact's columns and
+    parameter stamp, and a second accessor call reads the stored
+    directory instead of building again."""
+    from crypto_price_data_pipeline_spark import artifacts
+    from crypto_price_data_pipeline_spark.io.sources import load_table
+
+    empty_dir = str(tmp_path / "empty_sf")
+    os.makedirs(empty_dir)
+    load_table(spark, SF, "documents").limit(0).write.parquet(
+        os.path.join(empty_dir, "documents.parquet")
+    )
+    for name in ("minhash_base", "minhash_mins"):
+        accessor = artifacts.BUILDERS[name]
+        out = accessor(spark, empty_dir)
+        assert out.count() == 0, name
+        assert out.columns == accessor(spark, SF).columns, name
+        stamp = out.schema.fields[0].metadata["artifact_params"]
+        assert stamp["artifact"] == name
+        assert {k: stamp[k] for k in artifacts.PARAMS[name]} == artifacts.PARAMS[name]
+        key = (name, os.path.abspath(empty_dir))
+        entry = artifacts._DIRS[key]
+        assert _jobs_started(spark, lambda: accessor(spark, empty_dir)) == 0, name
+        assert artifacts._DIRS[key] == entry, f"second {name} call rebuilt"
+    stamp = artifacts.minhash_mins(spark, empty_dir).schema.fields[0].metadata
+    assert stamp["artifact_params"]["mh_n"] == 0
+
+
+def test_repeat_artifact_accessor_starts_no_job(spark):
+    """A served artifact is read with the schema recorded at its write,
+    so a repeat accessor call starts no schema-inference job."""
+    from crypto_price_data_pipeline_spark import artifacts
+
+    artifacts.minhash_mins(spark, SF)
+    assert _jobs_started(spark, lambda: artifacts.minhash_mins(spark, SF)) == 0
+
+
+def test_repeat_load_table_starts_no_job(spark):
+    """load_table infers a source's schema once; a repeat read of the
+    unchanged table starts no Spark job."""
+    from crypto_price_data_pipeline_spark.io.sources import load_table
+
+    load_table(spark, SF, "events")
+    assert _jobs_started(spark, lambda: load_table(spark, SF, "events")) == 0
+
+
+def test_q_minhash_pairs_construct_starts_no_job(spark):
+    """q_minhash_pairs serves from stored signature tables: constructing
+    it reads them with known schemas, takes the strategy from the stamp
+    and returns the lazy pair plan, so construct starts no job."""
+    from crypto_price_data_pipeline_spark.queries import QUERIES
+
+    QUERIES["q_minhash_pairs"](spark, SF)  # builds the artifacts if needed
+    assert _jobs_started(spark, lambda: QUERIES["q_minhash_pairs"](spark, SF)) == 0
+
+
+def test_recorded_artifact_schema_matches_inferred(spark):
+    """The schema the store records for each artifact is the one Spark
+    infers from the written directory, so a known-schema read of it
+    sees the same table an inferring read would."""
+    from crypto_price_data_pipeline_spark import artifacts
+
+    for name, accessor in artifacts.BUILDERS.items():
+        accessor(spark, SF)
+        d, schema = artifacts._DIRS[(name, os.path.abspath(SF))]
+        assert schema == spark.read.parquet(d).schema, name
