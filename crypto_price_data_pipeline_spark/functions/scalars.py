@@ -67,3 +67,13 @@ def _dec(col: Column) -> Column:
     """Exact ``decimal(38,6)`` cast: the registry sums doubles through it so
     Spark and DuckDB agree bit for bit (see queries.py's docstring)."""
     return col.cast("decimal(38,6)")
+
+
+def dsum(col: Column) -> Column:
+    """Deterministic double sum: the exact decimal sum, cast back to double."""
+    return F.sum(_dec(col)).cast("double")
+
+
+def davg(col: Column) -> Column:
+    """Deterministic double average: :func:`dsum` over the row count."""
+    return dsum(col) / F.count(col)

@@ -27,7 +27,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["merge_upsert"]
+__all__ = ["latest_per_key", "merge_upsert"]
+
+
+def latest_per_key(df: DataFrame, key_col: str, ts_col: str, tiebreak_col: str) -> DataFrame:
+    """Each key's latest row of ``df`` (ORDER BY ts DESC, tiebreak
+    DESC). An argmax over a total order is associative, so the latest
+    rows of several batches, reduced again, are the latest rows of
+    their union — the CDC change set merges from per-batch partials."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(key_col).orderBy(F.col(ts_col).desc(), F.col(tiebreak_col).desc())
+    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
 
 
 def merge_upsert(

@@ -308,6 +308,13 @@ def gram_doc_freq(posting: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def hot_grams(doc_freq: DataFrame, max_doc_freq: int) -> DataFrame:
+    """(``_g``): the grams of a :func:`gram_doc_freq` table present in
+    more than ``max_doc_freq`` documents — the spans
+    :func:`boilerplate_strip` masks."""
+    return doc_freq.where(F.col("_df") > max_doc_freq).select("_g")
+
+
 def boilerplate_strip(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -359,11 +366,7 @@ def boilerplate_strip(
     cleaned, posting = gram_postings(df, id_col, text_col, k)
     n = F.length("_s")
     if hot is None:
-        hot = (
-            gram_doc_freq(posting, id_col)
-            .where(F.col("_df") > max_doc_freq)
-            .select("_g")
-        )
+        hot = hot_grams(gram_doc_freq(posting, id_col), max_doc_freq)
     starts = (
         posting.join(hot, "_g")
         .groupBy(id_col)

@@ -36,21 +36,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .functions.scalars import _dec
+from .functions.scalars import _dec, dsum, davg
 from .io.sources import load_table
 from .registry import ORACLES, QUERIES, query, seal
 from .session import materialize
 
 # ---------------------------------------------------------------- helpers
-
-
-def dsum(col: Column) -> Column:
-    """Deterministic double sum (see module docstring)."""
-    return F.sum(_dec(col)).cast("double")
-
-
-def davg(col: Column) -> Column:
-    return F.sum(_dec(col)).cast("double") / F.count(col)
 
 
 def _col(name: str) -> Column:

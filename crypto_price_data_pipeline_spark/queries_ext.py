@@ -7,17 +7,13 @@ passthrough, unique-key tiebreaks). Each query registers with
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .functions.scalars import _dec
+from .functions.scalars import _dec, dsum
 from .io.sources import load_table, register_views
 from .registry import query
-
-
-def dsum(col: Column) -> Column:
-    return F.sum(_dec(col)).cast("double")
 
 
 @query(oracle=lambda: Q04_SQL)

@@ -2,8 +2,8 @@
 long-lived 100-TB corpus runs around its queries.
 
 - ``q_stream_scd2`` — streamed dimension-history maintenance: SCD2
-  built incrementally from micro-batches via the append-only version
-  log + merge-on-read suppression (``streaming/scd_stream.py``);
+  built incrementally from micro-batches via the append-only snapshot
+  log (``streaming/partial_store.py``) + merge-on-read suppression;
   streamed history ≡ the batch q_scd2 rule (same oracle), whatever the
   chunking.
 - ``q_forget_users`` — right-to-be-forgotten cascade report: a
@@ -36,6 +36,7 @@ from .io.sources import load_table
 from .operators.text import tokenize
 from .registry import query
 from .session import scratch_dir
+from .streaming.partial_store import stream_partials
 
 
 # ------------------------------------- streamed SCD2 maintenance
@@ -44,55 +45,19 @@ from .session import scratch_dir
 @query(twin_of="q_scd2")
 def q_stream_scd2(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed SCD2: the event feed replays in 3 micro-batch chunks;
-    each batch lands its distinct (user, ts, MIN tier) partials in a
-    per-batch_id overwrite store (replay-idempotent), and the read
-    path re-dedups across batches and runs the one batch window pass
-    (streaming/scd_stream.py). MIN is associative, so per-batch MIN +
-    cross-batch MIN ≡ the batch q_scd2 dedup exactly — the oracle is
-    the batch rule, unchanged."""
-    from .streaming.scd_stream import read_scd2, stream_scd2_log
+    each batch lands its distinct (user, ts, MIN tier) snapshots in a
+    per-batch_id overwrite store (replay-idempotent). A late snapshot
+    can split or extend a version an earlier batch already closed, so
+    versions are never built per batch: the read path re-dedups
+    (user, ts) across batches with the same MIN and runs q_scd2's one
+    window pass over the merged snapshots. MIN is associative, so
+    streamed ≡ batch exactly — the oracle is the batch rule,
+    unchanged."""
+    from .queries_ext4 import _scd2_finish, _scd2_partial
 
     ev = load_table(spark, sf, "events").select("event_id", "user_id", "ts", "value")
-    work = scratch_dir("stream_scd2_")
-    src = f"{work}/src"
-    for c in range(3):
-        ev.where(F.col("event_id") % 3 == c).coalesce(1).write.parquet(
-            f"{src}/chunk_{c}"
-        )
-    tier = (
-        F.when(F.col("value") < 50, "low")
-        .when(F.col("value") < 150, "mid")
-        .otherwise("high")
-    )
-    stream_scd2_log(
-        spark,
-        src,
-        ev.schema,
-        f"{work}/log",
-        f"{work}/ckpt",
-        ["user_id"],
-        "ts",
-        {"tier": tier},
-    )
-    hist = read_scd2(
-        spark,
-        f"{work}/log",
-        "user_id long, ts timestamp, tier string",
-        ["user_id"],
-        "ts",
-        ["tier"],
-    )
-    return hist.select(
-        "user_id",
-        F.date_format("effective_from", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-            "effective_from"
-        ),
-        F.date_format("effective_to", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-            "effective_to"
-        ),
-        "tier",
-        "is_current",
-    ).orderBy("user_id", "effective_from")
+    snaps = stream_partials(spark, ev, F.col("event_id") % 3, _scd2_partial, "stream_scd2_")
+    return _scd2_finish(snaps.groupBy("user_id", "ts").agg(F.min("tier").alias("tier")))
 
 
 # --------------------------------- right-to-be-forgotten cascade

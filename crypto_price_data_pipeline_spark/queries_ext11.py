@@ -48,30 +48,25 @@ from .registry import query
 # ----------------------------------------------- CDC merge (MERGE INTO)
 
 
-@query
-def q_merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
-    """Apply the latest-event-per-user CDC batch to the customer
-    snapshot: key = user_id + 100 (so the batch spans matched updates,
-    matched deletes, AND beyond-the-snapshot inserts), ``error``
-    events delete, everything else upserts the account balance.
-    Cites reference ``dump_with_postgres.py`` row-maintenance loop —
-    re-expressed as one declarative MERGE plan."""
+def _cdc_partial(ev: DataFrame) -> DataFrame:
+    """Each user's latest event — the change row q_merge_upsert applies.
+    Also the ``merge`` of stored partials (latest of latests)."""
+    from .operators.merge import latest_per_key
+
+    cols = ev.select("event_id", "ts", "user_id", "event_type", "value")
+    return latest_per_key(cols, "user_id", "ts", "event_id")
+
+
+def _cdc_finish(spark: SparkSession, sf: str, latest: DataFrame) -> DataFrame:
+    """Apply the per-user latest events to the customer snapshot."""
     from .operators.merge import merge_upsert
 
-    ev = load_table(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    changes = (
-        ev.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            (F.col("user_id") + F.lit(100)).alias("c_custkey"),
-            F.when(F.col("event_type") == "error", "delete")
-            .otherwise("upsert")
-            .alias("op"),
-            F.col("value").alias("new_bal"),
-        )
+    changes = latest.select(
+        (F.col("user_id") + F.lit(100)).alias("c_custkey"),
+        F.when(F.col("event_type") == "error", "delete")
+        .otherwise("upsert")
+        .alias("op"),
+        F.col("value").alias("new_bal"),
     )
     base = load_table(spark, sf, "customer")
     merged = merge_upsert(
@@ -87,6 +82,17 @@ def q_merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
         },
     )
     return merged.orderBy("c_custkey")
+
+
+@query
+def q_merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
+    """Apply the latest-event-per-user CDC batch to the customer
+    snapshot: key = user_id + 100 (so the batch spans matched updates,
+    matched deletes, AND beyond-the-snapshot inserts), ``error``
+    events delete, everything else upserts the account balance.
+    Cites reference ``dump_with_postgres.py`` row-maintenance loop —
+    re-expressed as one declarative MERGE plan."""
+    return _cdc_finish(spark, sf, _cdc_partial(load_table(spark, sf, "events")))
 
 
 Q_MERGE_UPSERT_SQL = """

@@ -38,8 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
-from .session import materialize, scratch_dir
-from .streaming.partial_store import run_partial_stream
+from .session import materialize
+from .streaming.partial_store import merge_sums, stream_partials
 from .operators.text import tokenize
 from .registry import query
 
@@ -50,62 +50,16 @@ from .registry import query
 @query(twin_of="q_merge_upsert")
 def q_stream_merge(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed CDC merge: events replay in 3 chunks; per-batch
-    latest-per-user partials land per-batch_id; read path re-reduces
-    across batches (associative argmax ⇒ global latest) and applies
-    the one batch MERGE. Oracle = the batch q_merge_upsert rule,
-    unchanged."""
-    from .operators.merge import merge_upsert
-    from .streaming.merge_stream import read_cdc_changes, stream_cdc_log
+    latest-per-user partials land per-batch_id; the read path
+    re-reduces across batches (associative argmax ⇒ global latest) and
+    applies q_merge_upsert's own MERGE."""
+    from .queries_ext11 import _cdc_finish, _cdc_partial
 
     ev = load_table(spark, sf, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    work = scratch_dir("stream_merge_")
-    src = f"{work}/src"
-    for c in range(3):
-        ev.where(F.col("event_id") % 3 == c).coalesce(1).write.parquet(
-            f"{src}/chunk_{c}"
-        )
-    stream_cdc_log(
-        spark,
-        src,
-        ev.schema,
-        f"{work}/log",
-        f"{work}/ckpt",
-        "user_id",
-        "ts",
-        "event_id",
-        ["event_type", "value"],
-    )
-    latest = read_cdc_changes(
-        spark,
-        f"{work}/log",
-        "user_id long, ts timestamp, event_id long, event_type string, value double",
-        "user_id",
-        "ts",
-        "event_id",
-    )
-    changes = latest.select(
-        (F.col("user_id") + F.lit(100)).alias("c_custkey"),
-        F.when(F.col("event_type") == "error", "delete")
-        .otherwise("upsert")
-        .alias("op"),
-        F.col("value").alias("new_bal"),
-    )
-    base = load_table(spark, sf, "customer")
-    merged = merge_upsert(
-        base,
-        changes,
-        "c_custkey",
-        update_set={"c_acctbal": "new_bal"},
-        insert_values={
-            "c_name": F.concat(F.lit("cdc-"), F.col("c_custkey").cast("string")),
-            "c_nationkey": (F.col("c_custkey") % 25).cast("int"),
-            "c_acctbal": F.col("_chg_new_bal"),
-            "c_mktsegment": F.lit("CDC"),
-        },
-    )
-    return merged.orderBy("c_custkey")
+    stored = stream_partials(spark, ev, F.col("event_id") % 3, _cdc_partial, "stream_merge_")
+    return _cdc_finish(spark, sf, _cdc_partial(stored))
 
 
 # ---------------------------------------------- join-key skew report
@@ -383,23 +337,14 @@ def q_stream_vocab_drift(spark: SparkSession, sf: str) -> DataFrame:
         .select("token", F.lit(1).alias("_in_vocab"))
         .transform(materialize)
     )
-    work = scratch_dir("stream_vocab_")
-    src = f"{work}/src"
-    plain = docs
-    for c in range(3):
-        plain.where(F.col("doc_id") % 3 == c).coalesce(1).write.parquet(
-            f"{src}/chunk_{c}"
-        )
 
-    store = f"{work}/metrics"
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
+    def metrics(batch: DataFrame) -> DataFrame:
         toks = batch.select(
             (F.col("doc_id") % 3).alias("chunk"),
             "doc_id",
             F.explode(tokens_col("text")).alias("token"),
         )
-        partial = (
+        return (
             toks.join(F.broadcast(vocab), "token", "left")
             .groupBy("chunk")
             .agg(
@@ -410,22 +355,10 @@ def q_stream_vocab_drift(spark: SparkSession, sf: str) -> DataFrame:
                 ).alias("n_oov"),
             )
         )
-        partial.write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
 
-    run_partial_stream(
-        spark, src=src, schema=plain.schema, sink=sink, ckpt=f"{work}/ckpt"
-    )
-
-    metrics = spark.read.schema(
-        "chunk long, n_docs bigint, n_tok bigint, n_oov bigint"
-    ).option("recursiveFileLookup", "true").parquet(store)
+    stored = stream_partials(spark, docs, F.col("doc_id") % 3, metrics, "stream_vocab_")
     return (
-        metrics.groupBy("chunk")
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_tok").alias("n_tok"),
-            F.sum("n_oov").alias("n_oov"),
-        )
+        merge_sums(stored, "chunk")
         .withColumn(
             "oov_rate", F.col("n_oov").cast("double") / F.col("n_tok").cast("double")
         )

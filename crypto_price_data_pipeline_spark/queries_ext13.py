@@ -38,11 +38,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
-from .streaming.partial_store import run_partial_stream
+from .streaming.partial_store import merge_sums, stream_partials
 from .operators.text import tokenize
-from .queries import S_DSUM, dsum
+from .functions.scalars import dsum
+from .queries import S_DSUM
 from .registry import query
-from .session import scratch_dir
 
 
 # ------------------------------------------------ exact heavy hitters
@@ -79,38 +79,23 @@ def q_stream_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed heavy hitters: docs replay in 3 chunks; each
     micro-batch lands its exact per-token counts (additive partials,
     per-batch_id overwrite); read re-sums and applies the identical
-    integer threshold. Streamed ≡ batch whatever the chunking."""
+    integer threshold. Streamed ≡ batch whatever the chunking. The
+    batch query keeps its Misra-Gries candidate pass, which avoids
+    exactly the full per-token count these partials store."""
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
-    work = scratch_dir("stream_hh_")
-    src = f"{work}/src"
-    for c in range(3):
-        docs.where(F.col("doc_id") % 3 == c).coalesce(1).write.parquet(
-            f"{src}/chunk_{c}"
-        )
-    store = f"{work}/counts"
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        partial = (
+    def counts(batch: DataFrame) -> DataFrame:
+        return (
             batch.select(F.explode(tokenize("text")).alias("token"))
             .groupBy("token")
             .agg(F.count(F.lit(1)).alias("freq"))
         )
-        partial.write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
 
-    run_partial_stream(
-        spark, src=src, schema=docs.schema, sink=sink, ckpt=f"{work}/ckpt"
-    )
-
-    counts = (
-        spark.read.schema("token string, freq bigint")
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-        .groupBy("token")
-        .agg(F.sum("freq").alias("freq"))
-    )
-    n = counts.agg(F.sum("freq")).first()[0] or 0
+    stored = stream_partials(spark, docs, F.col("doc_id") % 3, counts, "stream_hh_")
+    merged = merge_sums(stored, "token")
+    n = merged.agg(F.sum("freq")).first()[0] or 0
     return (
-        counts.where(F.col("freq") * F.lit(_HH_DEN) > F.lit(n))
+        merged.where(F.col("freq") * F.lit(_HH_DEN) > F.lit(n))
         .orderBy(F.col("freq").desc(), F.col("token"))
     )
 

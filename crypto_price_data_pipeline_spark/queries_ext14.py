@@ -17,9 +17,9 @@ RAG chunking, incremental statistics, association analysis.
   the final per-language aggregate).
 - ``q_stream_moments`` — incremental second-moment maintenance: each
   micro-batch lands exact DECIMAL(38,6) partial sums (n, Σx, Σy, Σxx,
-  Σyy, Σxy) per group; read-side decimal re-sum + the identical final
-  double arithmetic ⇒ streamed ≡ batch q_stats_moments, same oracle
-  verbatim (partials are associative by construction).
+  Σyy, Σxy) per group; read-side decimal re-sum + q_stats_moments' own
+  finish ⇒ streamed ≡ batch, same oracle verbatim (partials are
+  associative by construction).
 - ``q_cooccurrence`` — token association lift over the top-32
   vocabulary: lift = n_ab·N / (n_a·n_b) with exact integer products
   and a single float division; bounded-quadratic by the vocabulary
@@ -34,31 +34,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.scalars import _dec
+from .functions.scalars import dsum
 from .io.sources import load_table
-from .streaming.partial_store import run_partial_stream
+from .streaming.partial_store import merge_sums, stream_partials
 from .operators.text import tokenize
-from .queries import dsum
 from .registry import query
-from .session import scratch_dir
 
 
 # ------------------------------------------------- cohort retention
 
 
-@query
-def q_cohort_retention(spark: SparkSession, sf: str) -> DataFrame:
-    """Weekly retention triangle: cohort = ISO week of the user's
-    first event; each (cohort, offset) cell counts distinct users
-    active that many weeks later. Two aggs + one broadcast join —
-    integer day arithmetic only (week offsets divide exactly by 7)."""
-    ev = load_table(spark, sf, "events").select("user_id", "ts")
-    first = ev.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).alias("cohort_ts")
+def _retention_partial(ev: DataFrame) -> dict[str, DataFrame]:
+    """Per-user first activity (MIN ts) and the distinct (user, week)
+    pairs — MIN and distinct-union both merge across any row split."""
+    return {
+        "firsts": ev.groupBy("user_id").agg(F.min("ts").alias("min_ts")),
+        "weeks": ev.select(
+            "user_id", F.date_trunc("week", "ts").alias("week_ts")
+        ).distinct(),
+    }
+
+
+def _retention_finish(firsts: DataFrame, weeks: DataFrame) -> DataFrame:
+    first = firsts.select(
+        "user_id", F.date_trunc("week", "min_ts").alias("cohort_ts")
     )
-    weeks = ev.select(
-        "user_id", F.date_trunc("week", F.col("ts")).alias("week_ts")
-    ).distinct()
     return (
         weeks.join(F.broadcast(first), "user_id")
         .select(
@@ -72,6 +72,16 @@ def q_cohort_retention(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.countDistinct("user_id").alias("n_users"))
         .orderBy("cohort", "week_offset")
     )
+
+
+@query
+def q_cohort_retention(spark: SparkSession, sf: str) -> DataFrame:
+    """Weekly retention triangle: cohort = ISO week of the user's
+    first event; each (cohort, offset) cell counts distinct users
+    active that many weeks later. Two aggs + one broadcast join —
+    integer day arithmetic only (week offsets divide exactly by 7)."""
+    parts = _retention_partial(load_table(spark, sf, "events").select("user_id", "ts"))
+    return _retention_finish(parts["firsts"], parts["weeks"])
 
 
 Q_COHORT_RETENTION_SQL = """
@@ -260,70 +270,17 @@ def q_stream_moments(spark: SparkSession, sf: str) -> DataFrame:
     chunks; each micro-batch lands its exact DECIMAL(38,6) partial
     sums per return flag (the map-side-combinable subform of
     q_stats_moments — associative, so any chunking re-sums to the
-    batch totals bit-exactly); read-side applies the identical final
-    double arithmetic. Oracle = Q_STATS_MOMENTS_SQL verbatim."""
+    batch totals bit-exactly); the read side re-sums and runs
+    q_stats_moments' own finish. Oracle = Q_STATS_MOMENTS_SQL verbatim."""
+    from .queries_ext3 import _moments_finish, _moments_partial
+
     li = load_table(spark, sf, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity", "l_discount"
     )
-    work = scratch_dir("stream_moments_")
-    src = f"{work}/src"
-    for c in range(3):
-        li.where(F.col("l_orderkey") % 3 == c).coalesce(1).write.parquet(
-            f"{src}/chunk_{c}"
-        )
-    store = f"{work}/partials"
-    x, y = F.col("l_quantity"), F.col("l_discount")
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        partial = batch.groupBy("l_returnflag").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_dec(x)).alias("sx"),
-            F.sum(_dec(y)).alias("sy"),
-            F.sum(_dec(x * x)).alias("sxx"),
-            F.sum(_dec(y * y)).alias("syy"),
-            F.sum(_dec(x * y)).alias("sxy"),
-        )
-        partial.write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=li.schema, sink=sink, ckpt=f"{work}/ckpt"
+    sums = stream_partials(
+        spark, li, F.col("l_orderkey") % 3, _moments_partial, "stream_moments_"
     )
-
-    totals = (
-        spark.read.schema(
-            "l_returnflag string, n bigint, sx decimal(38,6), sy decimal(38,6),"
-            " sxx decimal(38,6), syy decimal(38,6), sxy decimal(38,6)"
-        )
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum("n").cast("double").alias("n"),
-            F.sum("sx").cast("double").alias("sx"),
-            F.sum("sy").cast("double").alias("sy"),
-            F.sum("sxx").cast("double").alias("sxx"),
-            F.sum("syy").cast("double").alias("syy"),
-            F.sum("sxy").cast("double").alias("sxy"),
-        )
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
-    # n==1 / zero-variance groups -> NULL (q_stats_moments' guards,
-    # applied identically so streamed == batch on degenerate input)
-    var_x = F.when(n > 1.0, (sxx - sx * sx / n) / (n - F.lit(1.0)))
-    var_y = F.when(n > 1.0, (syy - sy * sy / n) / (n - F.lit(1.0)))
-    cov = F.when(n > 1.0, (sxy - sx * sy / n) / (n - F.lit(1.0)))
-    corr = F.when(
-        (var_x > 0) & (var_y > 0), cov / (F.sqrt(var_x) * F.sqrt(var_y))
-    )
-    return totals.select(
-        "l_returnflag",
-        var_x.alias("var_qty"),
-        F.sqrt(var_x).alias("stddev_qty"),
-        var_y.alias("var_disc"),
-        cov.alias("covar_qty_disc"),
-        corr.alias("corr_qty_disc"),
-    ).orderBy("l_returnflag")
+    return _moments_finish(merge_sums(sums, "l_returnflag"))
 
 
 # ------------------------------------------- co-occurrence lift

@@ -36,10 +36,9 @@ from pyspark.sql import functions as F
 
 from .functions.scalars import _dec
 from .io.sources import load_table
-from .streaming.partial_store import run_partial_stream
+from .streaming.partial_store import merge_sums, stream_partials
 from .operators.text import tokenize
 from .registry import query
-from .session import scratch_dir
 
 
 # --------------------------------------------- data-quality contract
@@ -143,17 +142,10 @@ def q_stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    work = scratch_dir("stream_dq_")
-    src = f"{work}/src"
-    for c in range(3):
-        ev.where(F.col("event_id") % 3 == c).coalesce(1).write.parquet(
-            f"{src}/chunk_{c}"
-        )
-    store = f"{work}/partials"
     known = ["click", "error", "purchase", "signup", "view"]
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        partial = batch.agg(
+    def violations(batch: DataFrame) -> DataFrame:
+        return batch.agg(
             F.count(F.lit(1)).alias("n_checked"),
             F.sum(F.when(F.col("value").isNull(), 1).otherwise(0)).alias(
                 "v_null_value"
@@ -165,26 +157,9 @@ def q_stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
                 "v_value_range"
             ),
         )
-        partial.write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
 
-    run_partial_stream(
-        spark, src=src, schema=ev.schema, sink=sink, ckpt=f"{work}/ckpt"
-    )
-
-    totals = (
-        spark.read.schema(
-            "n_checked bigint, v_null_value bigint, v_unknown_type bigint,"
-            " v_value_range bigint"
-        )
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-        .agg(
-            F.sum("n_checked").alias("n_checked"),
-            F.sum("v_null_value").alias("v_null_value"),
-            F.sum("v_unknown_type").alias("v_unknown_type"),
-            F.sum("v_value_range").alias("v_value_range"),
-        )
-    )
+    stored = stream_partials(spark, ev, F.col("event_id") % 3, violations, "stream_dq_")
+    totals = merge_sums(stored)
     unpivoted = totals.selectExpr(
         "n_checked",
         "stack(3, 'events_value_not_null', v_null_value,"

@@ -22,8 +22,8 @@ analysis, forensic auditing, sequence mining, streamed retention.
   event-type pairs per user (one lag/lead window + one count agg).
 - ``q_stream_retention`` — streamed cohort retention: per-batch
   mergeable partials (per-user MIN first-ts; distinct user-weeks) land
-  per-batch_id; read-side re-min + re-distinct and the batch final
-  join — streamed ≡ batch q_cohort_retention, same oracle verbatim.
+  per-batch_id; read-side re-min + re-distinct and q_cohort_retention's
+  own finish — streamed ≡ batch, same oracle verbatim.
 
 Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
@@ -38,8 +38,7 @@ from pyspark.sql.window import Window
 from .functions.scalars import _dec
 from .io.sources import load_table
 from .registry import query
-from .session import scratch_dir
-from .streaming.partial_store import run_partial_stream
+from .streaming.partial_store import stream_partials
 
 
 # ------------------------------------------- hierarchical rollups
@@ -361,53 +360,14 @@ def q_stream_retention(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed cohort retention: events replay in 3 chunks; each
     micro-batch lands two mergeable partials — per-user MIN ts (MIN is
     associative) and the batch's distinct (user, week) pairs (distinct
-    union re-distincts on read). The read side then runs the batch
-    final join, so streamed ≡ batch q_cohort_retention (same oracle),
-    whatever the chunking."""
+    union re-distincts on read). The read side then runs
+    q_cohort_retention's own finish, so streamed ≡ batch (same
+    oracle), whatever the chunking."""
+    from .queries_ext14 import _retention_finish, _retention_partial
+
     ev = load_table(spark, sf, "events").select("event_id", "user_id", "ts")
-    work = scratch_dir("stream_ret_")
-    src = f"{work}/src"
-    for c in range(3):
-        ev.where(F.col("event_id") % 3 == c).coalesce(1).write.parquet(
-            f"{src}/chunk_{c}"
-        )
-    store = f"{work}/partials"
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        firsts = batch.groupBy("user_id").agg(F.min("ts").alias("min_ts"))
-        weeks = batch.select(
-            "user_id", F.date_trunc("week", "ts").alias("week_ts")
-        ).distinct()
-        firsts.write.mode("overwrite").parquet(f"{store}/firsts/batch_{batch_id:05d}")
-        weeks.write.mode("overwrite").parquet(f"{store}/weeks/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=ev.schema, sink=sink, ckpt=f"{work}/ckpt"
+    parts = stream_partials(
+        spark, ev, F.col("event_id") % 3, _retention_partial, "stream_ret_"
     )
-
-    firsts = (
-        spark.read.schema("user_id long, min_ts timestamp")
-        .option("recursiveFileLookup", "true")
-        .parquet(f"{store}/firsts")
-        .groupBy("user_id")
-        .agg(F.date_trunc("week", F.min("min_ts")).alias("cohort_ts"))
-    )
-    weeks = (
-        spark.read.schema("user_id long, week_ts timestamp")
-        .option("recursiveFileLookup", "true")
-        .parquet(f"{store}/weeks")
-        .distinct()
-    )
-    return (
-        weeks.join(F.broadcast(firsts), "user_id")
-        .select(
-            F.date_format("cohort_ts", "yyyy-MM-dd").alias("cohort"),
-            (F.datediff(F.col("week_ts"), F.col("cohort_ts")) / 7)
-            .cast("int")
-            .alias("week_offset"),
-            "user_id",
-        )
-        .groupBy("cohort", "week_offset")
-        .agg(F.countDistinct("user_id").alias("n_users"))
-        .orderBy("cohort", "week_offset")
-    )
+    firsts = parts["firsts"].groupBy("user_id").agg(F.min("min_ts").alias("min_ts"))
+    return _retention_finish(firsts, parts["weeks"].distinct())

@@ -36,12 +36,7 @@ from pyspark.sql.window import Window
 
 from .io.sources import load_table
 from .registry import query
-from .session import scratch_dir
-from .streaming.partial_store import (
-    day_chunk_expr,
-    run_partial_stream,
-    write_day_chunks,
-)
+from .streaming.partial_store import day_chunk_expr, stream_partials
 
 
 # ---------------------------------------------- dedup provenance
@@ -251,16 +246,14 @@ def q_stream_bigrams(spark: SparkSession, sf: str) -> DataFrame:
     last(chunk) → first(user's next present chunk). Chunks cut on
     TIME (10-day ranges), so per-user in-batch order is globally
     contiguous — the precondition the stitching relies on. Streamed
-    top-10 ≡ batch q_event_bigrams, same oracle."""
+    top-10 ≡ batch q_event_bigrams, same oracle. The batch query keeps
+    its one lead window: run over the whole table as one batch, the
+    stitch would count every cross-chunk transition a second time."""
     ev = load_table(spark, sf, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
-    work = scratch_dir("stream_bigrams_")
-    src = f"{work}/src"
-    write_day_chunks(ev, src)
-    store = f"{work}/partials"
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
+    def partial(batch: DataFrame) -> dict[str, DataFrame]:
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         pairs = (
             batch.select(
@@ -281,25 +274,10 @@ def q_stream_bigrams(spark: SparkSession, sf: str) -> DataFrame:
                 "last_type"
             ),
         )
-        pairs.write.mode("overwrite").parquet(f"{store}/pairs/batch_{batch_id:05d}")
-        bounds.write.mode("overwrite").parquet(f"{store}/bounds/batch_{batch_id:05d}")
+        return {"pairs": pairs, "bounds": bounds}
 
-    run_partial_stream(
-        spark, src=src, schema=ev.schema, sink=sink, ckpt=f"{work}/ckpt"
-    )
-
-    in_batch = (
-        spark.read.schema("from_type string, to_type string, n bigint")
-        .option("recursiveFileLookup", "true")
-        .parquet(f"{store}/pairs")
-    )
-    bounds = (
-        spark.read.schema(
-            "user_id long, chunk long, first_type string, last_type string"
-        )
-        .option("recursiveFileLookup", "true")
-        .parquet(f"{store}/bounds")
-    )
+    parts = stream_partials(spark, ev, day_chunk_expr(), partial, "stream_bigrams_")
+    in_batch, bounds = parts["pairs"], parts["bounds"]
     wseq = Window.partitionBy("user_id").orderBy("chunk")
     stitched = (
         bounds.select(

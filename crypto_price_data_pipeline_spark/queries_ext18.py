@@ -361,18 +361,18 @@ FROM ranked WHERE rank <= 20 ORDER BY rank
 # ------------------------------------------------ top user journeys
 
 
-@query
-def q_top_paths(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-10 user journey prefixes: each user's first 5 events (by
-    ts, event_id — a total order) joined into a '>' path, counted
-    across users. collect_list + array_sort keeps the path build
-    in-row after one partitionBy(user) shuffle; ties broken
-    deterministically for both ranking and output order.
-    """
-    ev = load_table(spark, sf, "events")
+def _first5(ev: DataFrame) -> DataFrame:
+    """Each user's first 5 events by (ts, event_id). Min-k is a
+    semilattice merge: the first 5 of a union are among the union of
+    the parts' first 5s, so this is both the partial and the merge."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    first5 = ev.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 5)
-    paths = first5.groupBy("user_id").agg(
+    return ev.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 5)
+
+
+def _top_paths_finish(events: DataFrame) -> DataFrame:
+    """Top-10 '>'-joined first-5 paths over ``events`` (any superset of
+    every user's first 5 events)."""
+    paths = _first5(events).groupBy("user_id").agg(
         F.array_join(
             F.expr(
                 "transform(array_sort(collect_list(struct(ts, event_id, event_type))),"
@@ -387,6 +387,17 @@ def q_top_paths(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.col("n_users").desc(), "path")
         .limit(10)
     )
+
+
+@query
+def q_top_paths(spark: SparkSession, sf: str) -> DataFrame:
+    """Top-10 user journey prefixes: each user's first 5 events (by
+    ts, event_id — a total order) joined into a '>' path, counted
+    across users. collect_list + array_sort keeps the path build
+    in-row after one partitionBy(user) shuffle; ties broken
+    deterministically for both ranking and output order.
+    """
+    return _top_paths_finish(load_table(spark, sf, "events"))
 
 
 Q_TOP_PATHS_SQL = """

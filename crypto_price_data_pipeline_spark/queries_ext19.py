@@ -293,23 +293,18 @@ FROM agg ORDER BY c_nationkey
 # ------------------------------------------------ change-point scan
 
 
-@query
-def q_changepoint(spark: SparkSession, sf: str) -> DataFrame:
-    """CUSUM change-point over the daily event-value series.
-
-    Daily exact-decimal sums/counts → one cumulative window (30-ish
-    rows: the day table, not the event table — the expensive part is
-    the day rollup, one map-side-combined shuffle) → the two-sample
-    statistic |S_t·N − S_N·n_t| per candidate split → argmax with an
-    earliest-day tie-break. Means reported for both segments.
-    """
-    ev = load_table(spark, sf, "events")
-    daily = ev.groupBy(
+def _changepoint_partial(ev: DataFrame) -> DataFrame:
+    """Daily exact-decimal value sums and counts — additive, so stored
+    partials merge with ``merge_sums(_, "day")``."""
+    return ev.groupBy(
         F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
     ).agg(
         F.sum(_dec(F.col("value"))).alias("s"),
         F.count(F.lit(1)).alias("c"),
     )
+
+
+def _changepoint_finish(daily: DataFrame) -> DataFrame:
     wcum = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     cum = daily.select(
         "day",
@@ -345,6 +340,19 @@ def q_changepoint(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.col("stat").desc(), "split_day")
         .limit(1)
     )
+
+
+@query
+def q_changepoint(spark: SparkSession, sf: str) -> DataFrame:
+    """CUSUM change-point over the daily event-value series.
+
+    Daily exact-decimal sums/counts → one cumulative window (30-ish
+    rows: the day table, not the event table — the expensive part is
+    the day rollup, one map-side-combined shuffle) → the two-sample
+    statistic |S_t·N − S_N·n_t| per candidate split → argmax with an
+    earliest-day tie-break. Means reported for both segments.
+    """
+    return _changepoint_finish(_changepoint_partial(load_table(spark, sf, "events")))
 
 
 Q_CHANGEPOINT_SQL = """

@@ -6,16 +6,12 @@ contract as queries.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.scalars import _dec
+from .functions.scalars import _dec, dsum
 from .io.sources import load_table
 from .registry import query
-
-
-def dsum(col: Column) -> Column:
-    return F.sum(_dec(col)).cast("double")
 
 
 @query(oracle=lambda: Q10_SQL)

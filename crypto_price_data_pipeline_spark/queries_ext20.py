@@ -38,8 +38,8 @@ from pyspark.sql.window import Window
 from .functions.scalars import _dec
 from .io.sources import load_table
 from .registry import query
-from .session import materialize, scratch_dir
-from .streaming.partial_store import run_partial_stream, write_day_chunks
+from .session import materialize
+from .streaming.partial_store import day_chunk_expr, stream_partials
 
 
 # ------------------------------------------------ BFS hop distance
@@ -258,22 +258,16 @@ FROM resid GROUP BY 1 ORDER BY 1
 # ------------------------------------------------ corpus diversity
 
 
-@query
-def q_diversity_index(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-source language diversity: Gini-Simpson 1 − Σp² and the
-    effective number of languages 1/Σp² — the rational diversity
-    measures (Shannon entropy needs ln, which the determinism
-    contract bans from oracled values; ENL plays the same role as
-    perplexity). Two nested hash aggregates over (source, lang).
-    """
-    docs = load_table(spark, sf, "documents")
-    counts = docs.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("nl")
-    )
+def _diversity_partial(docs: DataFrame) -> DataFrame:
+    """Per-(source, lang) document counts — additive, so stored
+    partials merge with ``merge_sums(_, "source", "lang")``."""
+    return docs.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("nl"))
+
+
+def _diversity_finish(counts: DataFrame) -> DataFrame:
     wtot = Window.partitionBy("source")
     probs = counts.select(
         "source",
-        "nl",
         (
             F.col("nl").cast("double")
             / F.sum("nl").over(wtot).cast("double")
@@ -289,6 +283,17 @@ def q_diversity_index(spark: SparkSession, sf: str) -> DataFrame:
         F.round(F.lit(1.0) - F.col("sum_p2"), 9).alias("gini_simpson_r9"),
         F.round(F.lit(1.0) / F.col("sum_p2"), 9).alias("effective_langs_r9"),
     ).orderBy("source")
+
+
+@query
+def q_diversity_index(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-source language diversity: Gini-Simpson 1 − Σp² and the
+    effective number of languages 1/Σp² — the rational diversity
+    measures (Shannon entropy needs ln, which the determinism
+    contract bans from oracled values; ENL plays the same role as
+    perplexity). Two nested hash aggregates over (source, lang).
+    """
+    return _diversity_finish(_diversity_partial(load_table(spark, sf, "documents")))
 
 
 Q_DIVERSITY_INDEX_SQL = """
@@ -318,52 +323,21 @@ def q_stream_paths(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed q_top_paths: per-batch candidate first-5-per-user rows
     are mergeable state — the global first-5 of a union is always a
     subset of the union of per-chunk first-5s (min-k is a semilattice
-    merge), so each batch lands ≤5 rows per present user and the read
-    side re-ranks the union. Per-batch_id overwrite keeps replays
-    idempotent; streamed top-10 ≡ batch q_top_paths, same oracle.
+    merge), so each batch lands ≤5 rows per present user and
+    q_top_paths' own finish re-ranks the union. Per-batch_id overwrite
+    keeps replays idempotent; streamed top-10 ≡ batch q_top_paths,
+    same oracle.
     """
+    from .queries_ext18 import _first5, _top_paths_finish
+
     ev = load_table(spark, sf, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
-    work = scratch_dir("stream_paths_")
-    src = f"{work}/src"
-    write_day_chunks(ev, src)
-    store = f"{work}/candidates"
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        first5 = batch.withColumn("rn", F.row_number().over(w)).where(
-            F.col("rn") <= 5
-        )
-        first5.select("event_id", "user_id", "ts", "event_type").write.mode(
-            "overwrite"
-        ).parquet(f"{store}/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=ev.schema, sink=sink, ckpt=f"{work}/ckpt"
+    cand = stream_partials(
+        spark,
+        ev,
+        day_chunk_expr(),
+        lambda b: _first5(b).select("event_id", "user_id", "ts", "event_type"),
+        "stream_paths_",
     )
-
-    cand = (
-        spark.read.schema(ev.schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    first5 = cand.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= 5
-    )
-    paths = first5.groupBy("user_id").agg(
-        F.array_join(
-            F.expr(
-                "transform(array_sort(collect_list(struct(ts, event_id, event_type))),"
-                " x -> x.event_type)"
-            ),
-            ">",
-        ).alias("path")
-    )
-    return (
-        paths.groupBy("path")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-        .orderBy(F.col("n_users").desc(), "path")
-        .limit(10)
-    )
+    return _top_paths_finish(cand)

@@ -21,7 +21,7 @@ plus a streamed change-point.
   decides whether re-sorting a table is worth the shuffle.
 - ``q_stream_changepoint`` — streamed CUSUM: per-batch daily
   (Σ value, n) partials are ADDITIVE state, so the read side merges
-  by day and runs the identical change-point scan. Streamed ≡ batch
+  by day and runs q_changepoint's own scan. Streamed ≡ batch
   q_changepoint, same oracle verbatim.
 
 Each query registers with ``@query`` (registry.py). Same determinism
@@ -34,11 +34,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .functions.scalars import _dec
 from .io.sources import load_table
 from .registry import query
-from .session import scratch_dir
-from .streaming.partial_store import run_partial_stream, write_day_chunks
+from .streaming.partial_store import day_chunk_expr, merge_sums, stream_partials
 
 
 # ------------------------------------------------ Z-order layout
@@ -338,60 +336,14 @@ FROM per ORDER BY column_name
 def q_stream_changepoint(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed CUSUM change-point: per-batch (day, Σ value, n)
     decimal partials are additive semigroup state — the read side
-    merges by day and runs the identical argmax scan, so streamed ≡
-    batch q_changepoint (same oracle). Per-batch_id overwrite keeps
+    sums them by day and runs q_changepoint's own argmax scan, so
+    streamed ≡ batch (same oracle). Per-batch_id overwrite keeps
     replays idempotent.
     """
+    from .queries_ext19 import _changepoint_finish, _changepoint_partial
+
     ev = load_table(spark, sf, "events").select("event_id", "ts", "value")
-    work = scratch_dir("stream_cpt_")
-    src = f"{work}/src"
-    write_day_chunks(ev, src)
-    store = f"{work}/partials"
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        part = batch.groupBy(
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
-        ).agg(
-            F.sum(_dec(F.col("value"))).alias("s"),
-            F.count(F.lit(1)).alias("c"),
-        )
-        part.write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=ev.schema, sink=sink, ckpt=f"{work}/ckpt"
+    daily = stream_partials(
+        spark, ev, day_chunk_expr(), _changepoint_partial, "stream_cpt_"
     )
-
-    daily = (
-        spark.read.schema("day string, s decimal(38,6), c bigint")
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-        .groupBy("day")
-        .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
-    )
-    wcum = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    cum = daily.select(
-        "day",
-        F.sum("s").over(wcum).alias("st"),
-        F.sum("c").over(wcum).alias("nt"),
-    )
-    tot = daily.agg(F.sum("s").alias("s_tot"), F.sum("c").alias("n_tot"))
-    scored = cum.crossJoin(F.broadcast(tot)).where(F.col("nt") < F.col("n_tot"))
-    stat = F.abs(F.col("st") * F.col("n_tot") - F.col("s_tot") * F.col("nt"))
-    return (
-        scored.select(
-            F.col("day").alias("split_day"),
-            F.col("nt").alias("n_left"),
-            (F.col("n_tot") - F.col("nt")).alias("n_right"),
-            F.round(
-                F.col("st").cast("double") / F.col("nt").cast("double"), 9
-            ).alias("mean_left_r9"),
-            F.round(
-                (F.col("s_tot") - F.col("st")).cast("double")
-                / (F.col("n_tot") - F.col("nt")).cast("double"),
-                9,
-            ).alias("mean_right_r9"),
-            stat.cast("double").alias("stat"),
-        )
-        .orderBy(F.col("stat").desc(), "split_day")
-        .limit(1)
-    )
+    return _changepoint_finish(merge_sums(daily, "day"))

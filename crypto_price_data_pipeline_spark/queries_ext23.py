@@ -18,8 +18,8 @@ correlation, weighted median, streamed diversity.
   ordered window (cumulative weight crossing half the total).
 - ``q_stream_diversity`` — streamed Gini-Simpson language diversity:
   per-batch (source, lang, n) counts are additive state; the read
-  side merges and computes the identical index. Streamed ≡ batch
-  q_diversity_index, same oracle verbatim.
+  side merges and runs q_diversity_index's own finish. Streamed ≡
+  batch, same oracle verbatim.
 
 Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
@@ -34,8 +34,7 @@ from pyspark.sql.window import Window
 from .functions.scalars import _dec
 from .io.sources import load_table
 from .registry import query
-from .session import scratch_dir
-from .streaming.partial_store import run_partial_stream
+from .streaming.partial_store import merge_sums, stream_partials
 
 
 # ------------------------------------------- peak concurrency
@@ -279,47 +278,12 @@ FROM crossed WHERE rn = 1 ORDER BY c_nationkey
 def q_stream_diversity(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed Gini-Simpson diversity: per-batch (source, lang, n)
     counts are additive semigroup state (per-batch_id overwrite →
-    replay-idempotent); the read side merges and computes the same
-    index as batch q_diversity_index (same oracle)."""
+    replay-idempotent); the read side sums them and runs
+    q_diversity_index's own finish (same oracle)."""
+    from .queries_ext20 import _diversity_finish, _diversity_partial
+
     docs = load_table(spark, sf, "documents").select("doc_id", "source", "lang")
-    work = scratch_dir("stream_div_")
-    src = f"{work}/src"
-    for c in range(3):
-        docs.where(F.col("doc_id") % 3 == c).coalesce(1).write.parquet(
-            f"{src}/chunk_{c}"
-        )
-    store = f"{work}/partials"
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        batch.groupBy("source", "lang").agg(
-            F.count(F.lit(1)).alias("nl")
-        ).write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=docs.schema, sink=sink, ckpt=f"{work}/ckpt"
+    counts = stream_partials(
+        spark, docs, F.col("doc_id") % 3, _diversity_partial, "stream_div_"
     )
-
-    counts = (
-        spark.read.schema("source string, lang string, nl bigint")
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-        .groupBy("source", "lang")
-        .agg(F.sum("nl").alias("nl"))
-    )
-    wtot = Window.partitionBy("source")
-    probs = counts.select(
-        "source",
-        (F.col("nl").cast("double") / F.sum("nl").over(wtot).cast("double")).alias(
-            "p"
-        ),
-    )
-    agg = probs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_langs"),
-        F.sum(_dec(F.col("p") * F.col("p"))).cast("double").alias("sum_p2"),
-    )
-    return agg.select(
-        "source",
-        "n_langs",
-        F.round(F.lit(1.0) - F.col("sum_p2"), 9).alias("gini_simpson_r9"),
-        F.round(F.lit(1.0) / F.col("sum_p2"), 9).alias("effective_langs_r9"),
-    ).orderBy("source")
+    return _diversity_finish(merge_sums(counts, "source", "lang"))

@@ -33,15 +33,49 @@ from pyspark.sql.window import Window
 
 from .io.sources import load_table
 from .registry import query
-from .session import scratch_dir
-from .streaming.partial_store import (
-    day_chunk_expr,
-    run_partial_stream,
-    write_day_chunks,
-)
+from .streaming.partial_store import day_chunk_expr, stream_partials
 
 
 # --------------------------------------- streamed attribution
+
+
+def _attribution_partial(batch: DataFrame) -> dict[str, DataFrame]:
+    """One batch's attribution state: gaps of the purchases attributed
+    in the batch, the purchases with no earlier click in it (orphans),
+    and each user's last click per chunk."""
+    b = batch.select(
+        "user_id",
+        "event_id",
+        "event_type",
+        F.unix_micros("ts").alias("us"),
+        day_chunk_expr().alias("chunk"),
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("us", "event_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    carried = b.withColumn(
+        "last_click_us",
+        F.last(
+            F.when(F.col("event_type") == "click", F.col("us")),
+            ignorenulls=True,
+        ).over(w),
+    )
+    purchases = carried.where(F.col("event_type") == "purchase")
+    return {
+        "gaps": purchases.where(F.col("last_click_us").isNotNull()).select(
+            (F.col("us") - F.col("last_click_us")).alias("gap_us")
+        ),
+        # event_id rides along so two same-instant purchases stay two
+        # rows through the read-side groupBy
+        "orphans": purchases.where(F.col("last_click_us").isNull()).select(
+            "user_id", "event_id", "chunk", "us"
+        ),
+        "clicks": b.where(F.col("event_type") == "click")
+        .groupBy("user_id", "chunk")
+        .agg(F.max("us").alias("last_click_us")),
+    }
 
 
 @query(twin_of="q_attribution")
@@ -51,70 +85,15 @@ def q_stream_attribution(spark: SparkSession, sf: str) -> DataFrame:
     chunk) last click — all per-batch_id overwritten (replay-safe).
     The read-side stitch attributes each orphan to the max last-click
     over strictly earlier chunks (time-range chunks make that the
-    true global predecessor)."""
+    true global predecessor). The batch query keeps its own single
+    window: the stitch would add a join to it."""
     ev = load_table(spark, sf, "events").select(
         "user_id", "event_id", "event_type", "ts"
     )
-    work = scratch_dir("stream_attr_")
-    src = f"{work}/src"
-    write_day_chunks(ev, src)
-    store = f"{work}/state"
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        b = batch.select(
-            "user_id",
-            "event_id",
-            "event_type",
-            F.unix_micros("ts").alias("us"),
-            day_chunk_expr().alias("chunk"),
-        )
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy("us", "event_id")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carried = b.withColumn(
-            "last_click_us",
-            F.last(
-                F.when(F.col("event_type") == "click", F.col("us")),
-                ignorenulls=True,
-            ).over(w),
-        )
-        purchases = carried.where(F.col("event_type") == "purchase")
-        purchases.where(F.col("last_click_us").isNotNull()).select(
-            (F.col("us") - F.col("last_click_us")).alias("gap_us")
-        ).write.mode("overwrite").parquet(f"{store}/gaps/batch_{batch_id:05d}")
-        # event_id rides along so two same-instant purchases stay two
-        # rows through the read-side groupBy
-        purchases.where(F.col("last_click_us").isNull()).select(
-            "user_id", "event_id", "chunk", "us"
-        ).write.mode("overwrite").parquet(
-            f"{store}/orphans/batch_{batch_id:05d}"
-        )
-        b.where(F.col("event_type") == "click").groupBy(
-            "user_id", "chunk"
-        ).agg(F.max("us").alias("last_click_us")).write.mode(
-            "overwrite"
-        ).parquet(f"{store}/clicks/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=ev.schema, sink=sink, ckpt=f"{work}/ckpt"
+    state = stream_partials(
+        spark, ev, day_chunk_expr(), _attribution_partial, "stream_attr_"
     )
-
-    opt = {"recursiveFileLookup": "true"}
-    gaps = (
-        spark.read.schema("gap_us long").options(**opt).parquet(f"{store}/gaps")
-    )
-    orphans = (
-        spark.read.schema("user_id long, event_id long, chunk long, us long")
-        .options(**opt)
-        .parquet(f"{store}/orphans")
-    )
-    clicks = (
-        spark.read.schema("user_id long, chunk long, last_click_us long")
-        .options(**opt)
-        .parquet(f"{store}/clicks")
-    )
+    gaps, orphans, clicks = state["gaps"], state["orphans"], state["clicks"]
     resolved = (
         orphans.alias("o")
         .join(
@@ -204,33 +183,31 @@ FROM n
 # --------------------------------------- KS two-sample statistic
 
 
-@query
-def q_ks_statistic(spark: SparkSession, sf: str) -> DataFrame:
-    """One row: (n_click, n_purchase, d_r9, at_value) — the
-    two-sample KS distance between the click and purchase value
-    distributions, evaluated on pooled distinct values (exact, tie-
-    correct). Value-level compression (the groupBy) happens before
-    the ordered cumulative window; at warehouse scale that window is
-    the two-phase prefix sum (packing.py shape) over the compressed
-    value domain."""
-    ev = load_table(spark, sf, "events").where(
-        F.col("event_type").isin("click", "purchase")
-    )
-    counts = ev.groupBy("value").agg(
+def _ks_partial(ev: DataFrame) -> DataFrame:
+    """Per-value click and purchase counts: additive over any split of
+    the rows, so stored partials merge with ``merge_sums(_, "value")``."""
+    ev = ev.where(F.col("event_type").isin("click", "purchase"))
+    return ev.groupBy("value").agg(
         F.sum((F.col("event_type") == "click").cast("long")).alias("ca"),
         F.sum((F.col("event_type") == "purchase").cast("long")).alias("cb"),
     )
-    tot = ev.agg(
-        F.sum((F.col("event_type") == "click").cast("long")).alias("na"),
-        F.sum((F.col("event_type") == "purchase").cast("long")).alias("nb"),
-    )
+
+
+def _ks_finish(counts: DataFrame) -> DataFrame:
+    """KS distance from the per-value counts: cumulative scan over the
+    value domain, then the earliest value achieving the maximum. The
+    sample totals are whole-frame windows in the same single partition
+    as the scan, so no second pass over the counts."""
     wcum = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
+    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     cum = counts.select(
         "value",
         F.sum("ca").over(wcum).alias("cca"),
         F.sum("cb").over(wcum).alias("ccb"),
+        F.sum("ca").over(wall).alias("na"),
+        F.sum("cb").over(wall).alias("nb"),
     )
-    scored = cum.crossJoin(F.broadcast(tot)).select(
+    scored = cum.select(
         "value",
         F.abs(
             F.col("cca").cast("double") / F.col("na").cast("double")
@@ -246,6 +223,18 @@ def q_ks_statistic(spark: SparkSession, sf: str) -> DataFrame:
         F.round("d", 9).alias("d_r9"),
         F.round("value", 6).alias("at_value_r6"),
     )
+
+
+@query
+def q_ks_statistic(spark: SparkSession, sf: str) -> DataFrame:
+    """One row: (n_click, n_purchase, d_r9, at_value) — the
+    two-sample KS distance between the click and purchase value
+    distributions, evaluated on pooled distinct values (exact, tie-
+    correct). Value-level compression (the groupBy) happens before
+    the ordered cumulative window; at warehouse scale that window is
+    the two-phase prefix sum (packing.py shape) over the compressed
+    value domain."""
+    return _ks_finish(_ks_partial(load_table(spark, sf, "events")))
 
 
 Q_KS_STATISTIC_SQL = """

@@ -3,7 +3,7 @@ cycles, growth reporting, engagement stickiness.
 
 - ``q_stream_ks`` — streamed two-sample KS: per-value per-sample
   counts are additive semigroup state (per-batch_id overwrite), so
-  the read side merges and runs the identical cumulative-ECDF scan.
+  the read side sums them and runs q_ks_statistic's own finish.
   Streamed ≡ batch q_ks_statistic, same oracle verbatim.
 - ``q_repeat_purchase_cycle`` — purchase-cycle analytics: per-user
   consecutive-purchase gaps (lag over the per-user order), repeat-
@@ -29,8 +29,8 @@ from pyspark.sql.window import Window
 
 from .io.sources import load_table
 from .registry import query
-from .session import scratch_dir
-from .streaming.partial_store import run_partial_stream, write_day_chunks
+from .queries_ext26 import _ks_finish, _ks_partial
+from .streaming.partial_store import day_chunk_expr, merge_sums, stream_partials
 
 
 # ------------------------------------------------ streamed KS
@@ -42,53 +42,8 @@ def q_stream_ks(spark: SparkSession, sf: str) -> DataFrame:
     cb) counts merge by addition; the final cumulative scan runs on
     the merged value domain."""
     ev = load_table(spark, sf, "events").select("event_id", "ts", "event_type", "value")
-    work = scratch_dir("stream_ks_")
-    src = f"{work}/src"
-    write_day_chunks(ev, src)
-    store = f"{work}/counts"
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        batch.where(F.col("event_type").isin("click", "purchase")).groupBy(
-            "value"
-        ).agg(
-            F.sum((F.col("event_type") == "click").cast("long")).alias("ca"),
-            F.sum((F.col("event_type") == "purchase").cast("long")).alias("cb"),
-        ).write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=ev.schema, sink=sink, ckpt=f"{work}/ckpt"
-    )
-
-    counts = (
-        spark.read.schema("value double, ca long, cb long")
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-        .groupBy("value")
-        .agg(F.sum("ca").alias("ca"), F.sum("cb").alias("cb"))
-    )
-    tot = counts.agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb"))
-    wcum = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
-    cum = counts.select(
-        "value",
-        F.sum("ca").over(wcum).alias("cca"),
-        F.sum("cb").over(wcum).alias("ccb"),
-    )
-    scored = cum.crossJoin(F.broadcast(tot)).select(
-        "value",
-        F.abs(
-            F.col("cca").cast("double") / F.col("na").cast("double")
-            - F.col("ccb").cast("double") / F.col("nb").cast("double")
-        ).alias("d"),
-        "na",
-        "nb",
-    )
-    top = scored.orderBy(F.col("d").desc(), "value").limit(1)
-    return top.select(
-        F.col("na").alias("n_click"),
-        F.col("nb").alias("n_purchase"),
-        F.round("d", 9).alias("d_r9"),
-        F.round("value", 6).alias("at_value_r6"),
-    )
+    counts = stream_partials(spark, ev, day_chunk_expr(), _ks_partial, "stream_ks_")
+    return _ks_finish(merge_sums(counts, "value"))
 
 
 # ------------------------------------------- repeat purchase cycle

@@ -11,21 +11,13 @@ tiebreaks on every top-k).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.scalars import _dec
+from .functions.scalars import _dec, dsum, davg
 from .io.sources import load_table
 from .registry import query
 from .session import scratch_dir
-
-
-def dsum(col: Column) -> Column:
-    return F.sum(_dec(col)).cast("double")
-
-
-def davg(col: Column) -> Column:
-    return F.sum(_dec(col)).cast("double") / F.count(col)
 
 
 # --------------------------------------------------------------- Q2 shape
@@ -1040,19 +1032,30 @@ def q_stats_moments(spark: SparkSession, sf: str) -> DataFrame:
     above that, DuckDB's decimal->double cast double-rounds (int128 ->
     double -> scale) where Spark rounds once, so sums of squared PRICES
     drift a ulp. See NOTES.md determinism contract."""
-    li = load_table(spark, sf, "lineitem")
-    x = F.col("l_quantity")
-    y = F.col("l_discount")
-    agg = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        dsum(x).alias("sx"),
-        dsum(y).alias("sy"),
-        dsum(x * x).alias("sxx"),
-        dsum(y * y).alias("syy"),
-        dsum(x * y).alias("sxy"),
+    return _moments_finish(_moments_partial(load_table(spark, sf, "lineitem")))
+
+
+def _moments_partial(li: DataFrame) -> DataFrame:
+    """Per return flag: n and the exact DECIMAL(38,6) sums Σx, Σy, Σxx,
+    Σyy, Σxy — associative, so stored partials merge with
+    ``merge_sums(_, "l_returnflag")`` to the whole-table sums bit-exactly."""
+    x, y = F.col("l_quantity"), F.col("l_discount")
+    return li.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(_dec(x)).alias("sx"),
+        F.sum(_dec(y)).alias("sy"),
+        F.sum(_dec(x * x)).alias("sxx"),
+        F.sum(_dec(y * y)).alias("syy"),
+        F.sum(_dec(x * y)).alias("sxy"),
     )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
+
+
+def _moments_finish(sums: DataFrame) -> DataFrame:
+    """The moments from the exact sums, in double arithmetic both
+    engines evaluate identically."""
+    n, sx, sy, sxx, syy, sxy = (
+        F.col(c).cast("double") for c in ("n", "sx", "sy", "sxx", "syy", "sxy")
+    )
     # n==1 (sample variance undefined) and zero-variance groups go
     # NULL instead of raising ANSI DIVIDE_BY_ZERO — the guards are
     # no-ops on any group with >=2 rows and non-constant values
@@ -1064,7 +1067,7 @@ def q_stats_moments(spark: SparkSession, sf: str) -> DataFrame:
     corr = F.when(
         (var_x > 0) & (var_y > 0), cov / (F.sqrt(var_x) * F.sqrt(var_y))
     )
-    return agg.select(
+    return sums.select(
         "l_returnflag",
         var_x.alias("var_qty"),
         F.sqrt(var_x).alias("stddev_qty"),

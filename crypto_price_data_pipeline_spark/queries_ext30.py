@@ -31,16 +31,15 @@ from .registry import query
 # ---------------------------------------------- cumulative reach
 
 
-@query
-def q_cumulative_reach(spark: SparkSession, sf: str) -> DataFrame:
-    """Per day: new users and the cumulative unique-user count —
-    first-seen days aggregate once, then one ordered cumsum over the
-    ~|days| table."""
-    ev = load_table(spark, sf, "events").select(
-        "user_id",
-        F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
+def _reach_partial(ev: DataFrame) -> DataFrame:
+    """Per-user first-seen day — MIN merges across any row split."""
+    day = F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
+    return ev.select("user_id", day.alias("day")).groupBy("user_id").agg(
+        F.min("day").alias("day")
     )
-    first_day = ev.groupBy("user_id").agg(F.min("day").alias("day"))
+
+
+def _reach_finish(first_day: DataFrame) -> DataFrame:
     per_day = first_day.groupBy("day").agg(F.count(F.lit(1)).alias("new_users"))
     wcum = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     return per_day.select(
@@ -48,6 +47,14 @@ def q_cumulative_reach(spark: SparkSession, sf: str) -> DataFrame:
         "new_users",
         F.sum("new_users").over(wcum).alias("cumulative_users"),
     ).orderBy("day")
+
+
+@query
+def q_cumulative_reach(spark: SparkSession, sf: str) -> DataFrame:
+    """Per day: new users and the cumulative unique-user count —
+    first-seen days aggregate once, then one ordered cumsum over the
+    ~|days| table."""
+    return _reach_finish(_reach_partial(load_table(spark, sf, "events")))
 
 
 Q_CUMULATIVE_REACH_SQL = """

@@ -13,8 +13,8 @@ reach.
   revenue + running cumsum per cohort).
 - ``q_stream_reach`` — streamed q_cumulative_reach: per-user
   first-seen day is MIN-mergeable state; per-batch partial minima
-  merge on read and feed the identical day rollup. Same oracle
-  verbatim.
+  merge on read and feed q_cumulative_reach's own day rollup. Same
+  oracle verbatim.
 
 Each query registers with ``@query`` (registry.py). Same determinism
 contract as queries.py.
@@ -28,11 +28,19 @@ from pyspark.sql.window import Window
 
 from .io.sources import load_table
 from .registry import query
-from .session import scratch_dir
-from .streaming.partial_store import run_partial_stream, write_day_chunks
+from .streaming.partial_store import day_chunk_expr, stream_partials
 
 
 # ---------------------------------------------- survival curve
+
+
+def _survival_partial(ev: DataFrame) -> DataFrame:
+    """Per-user first and last active day — MIN / MAX merge across any
+    row split."""
+    d = F.date_trunc("day", "ts").cast("date")
+    return ev.select("user_id", d.alias("d")).groupBy("user_id").agg(
+        F.min("d").alias("dmin"), F.max("d").alias("dmax")
+    )
 
 
 @query
@@ -40,11 +48,8 @@ def q_survival_curve(spark: SparkSession, sf: str) -> DataFrame:
     """30 rows: (k, n_surviving, survival_r9) — users whose span
     reaches k days. Span histogram (hash agg over users) × a 30-row
     broadcast ladder; no per-user expansion."""
-    ev = load_table(spark, sf, "events").select(
-        "user_id", F.date_trunc("day", "ts").cast("date").alias("d")
-    )
-    spans = ev.groupBy("user_id").agg(
-        F.datediff(F.max("d"), F.min("d")).alias("span")
+    spans = _survival_partial(load_table(spark, sf, "events")).select(
+        "user_id", F.datediff("dmax", "dmin").alias("span")
     )
     # histogram FIRST: the ladder joins against ≤|distinct spans| rows
     # (≤ the calendar window in days), never the per-user table — the
@@ -171,35 +176,9 @@ ORDER BY c.cohort_month, c.age_months
 def q_stream_reach(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed q_cumulative_reach (same oracle): per-batch per-user
     MIN day partials are semilattice state; the read-side merge takes
-    the global min per user, then the identical day rollup."""
+    the global min per user, then q_cumulative_reach's own day rollup."""
+    from .queries_ext30 import _reach_finish, _reach_partial
+
     ev = load_table(spark, sf, "events").select("event_id", "ts", "user_id")
-    work = scratch_dir("stream_reach_")
-    src = f"{work}/src"
-    write_day_chunks(ev, src)
-    store = f"{work}/first_seen"
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        batch.groupBy("user_id").agg(
-            F.min(
-                F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-            ).alias("day")
-        ).write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=ev.schema, sink=sink, ckpt=f"{work}/ckpt"
-    )
-
-    first_day = (
-        spark.read.schema("user_id long, day string")
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-        .groupBy("user_id")
-        .agg(F.min("day").alias("day"))
-    )
-    per_day = first_day.groupBy("day").agg(F.count(F.lit(1)).alias("new_users"))
-    wcum = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    return per_day.select(
-        "day",
-        "new_users",
-        F.sum("new_users").over(wcum).alias("cumulative_users"),
-    ).orderBy("day")
+    first = stream_partials(spark, ev, day_chunk_expr(), _reach_partial, "stream_reach_")
+    return _reach_finish(first.groupBy("user_id").agg(F.min("day").alias("day")))

@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 
 from .io.sources import load_table
 from .registry import query
-from .session import materialize, scratch_dir
-from .streaming.partial_store import run_partial_stream, write_day_chunks
+from .session import materialize
+from .streaming.partial_store import day_chunk_expr, stream_partials
 
 
 # ---------------------------------------------- GMV waterfall
@@ -180,32 +180,18 @@ GROUP BY d.source ORDER BY d.source
 @query(twin_of="q_survival_curve")
 def q_stream_survival(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed q_survival_curve (same oracle): per-batch per-user
-    (min day, max day) partials are a semilattice merge; the read
-    side folds them to global spans and runs the identical ladder."""
+    (min day, max day) partials — q_survival_curve's own partial — are
+    a semilattice merge; the read side folds them to global spans and
+    runs the 30-row ladder against the spans directly. The batch
+    query's span histogram would add a shuffle stage (one more Spark
+    job per call at sf0.001) after the merge's own per-user
+    aggregation, so the two ladders stay separate."""
+    from .queries_ext31 import _survival_partial
+
     ev = load_table(spark, sf, "events").select("event_id", "ts", "user_id")
-    work = scratch_dir("stream_surv_")
-    src = f"{work}/src"
-    write_day_chunks(ev, src)
-    store = f"{work}/spans"
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        batch.groupBy("user_id").agg(
-            F.min(F.date_trunc("day", "ts").cast("date")).alias("dmin"),
-            F.max(F.date_trunc("day", "ts").cast("date")).alias("dmax"),
-        ).write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=ev.schema, sink=sink, ckpt=f"{work}/ckpt"
-    )
-
-    spans = (
-        spark.read.schema("user_id long, dmin date, dmax date")
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-        .groupBy("user_id")
-        .agg(
-            F.datediff(F.max("dmax"), F.min("dmin")).alias("span")
-        )
+    stored = stream_partials(spark, ev, day_chunk_expr(), _survival_partial, "stream_surv_")
+    spans = stored.groupBy("user_id").agg(
+        F.datediff(F.max("dmax"), F.min("dmin")).alias("span")
     )
     n_users = spans.count()
     ks = spark.createDataFrame([(k,) for k in range(30)], "k long")

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from .io.sources import load_table
 from .registry import query
-from .session import scratch_dir
+from .streaming.partial_store import day_chunk_expr, stream_partials
 
 
 @query(oracle=lambda: Q_DSIR_SQL)
@@ -167,21 +167,22 @@ def q_kmv_overlap(spark: SparkSession, sf: str) -> DataFrame:
     inputs. The 5 per-type sketches pair through a broadcast
     nested-loop join of ≤k-long arrays; at 100 TB the sketches are
     still ≤k longs per group (the point of the sketch)."""
-    from .operators.sketch import kmv_build
-
-    ev = load_table(spark, sf, "events")
-    sk = kmv_build(
-        ev.select("event_type", _kmv_key().alias("_k")),
-        F.col("_k"),
-        ["event_type"],
-    )
-    return _kmv_pairs_output(sk)
+    return _kmv_pairs_output(_kmv_partial(load_table(spark, sf, "events")))
 
 
 def _kmv_key():
     """Active user-day key (user_id·100 + day-of-month) — the distinct
     unit both KMV queries sketch."""
     return (F.col("user_id") * 100 + F.dayofmonth("ts")).cast("long")
+
+
+def _kmv_partial(ev: DataFrame) -> DataFrame:
+    """Per-type bottom-k sketch of the active user-days of ``ev``."""
+    from .operators.sketch import kmv_build
+
+    return kmv_build(
+        ev.select("event_type", _kmv_key().alias("_k")), F.col("_k"), ["event_type"]
+    )
 
 
 def _kmv_pairs_output(sk: DataFrame) -> DataFrame:
@@ -219,37 +220,16 @@ def q_stream_kmv(spark: SparkSession, sf: str) -> DataFrame:
     (unit-pinned bit-equal to the batch sketch). A corpus append costs
     one batch sketch, never a rescan — the same maintenance shape as
     the artifact-index stream."""
-    from .operators.sketch import kmv_build, kmv_explode, kmv_from_hashes
-    from .streaming.partial_store import run_partial_stream, write_day_chunks
+    from .operators.sketch import kmv_explode, kmv_from_hashes
 
     ev = load_table(spark, sf, "events").select("event_id", "ts", "user_id", "event_type")
-    work = scratch_dir("stream_kmv_")
-    src = f"{work}/src"
-    write_day_chunks(ev, src)
-    store = f"{work}/kmv"
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        kmv_build(
-            batch.select("event_type", _kmv_key().alias("_k")),
-            F.col("_k"),
-            ["event_type"],
-        ).write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=ev.schema, sink=sink, ckpt=f"{work}/ckpt"
-    )
-
     # schema-INFERRED read: the parquet footer restores the sketch's
     # (k, hash_bits) param stamp, so kmv_explode/kmv_from_hashes
     # hard-fail if this merge ever met partials built with another k
-    merged = kmv_from_hashes(
-        kmv_explode(
-            spark.read.option("recursiveFileLookup", "true").parquet(store),
-            ["event_type"],
-            k=256,
-        ),
-        ["event_type"],
+    stored = stream_partials(
+        spark, ev, day_chunk_expr(), _kmv_partial, "stream_kmv_", infer_schema=True
     )
+    merged = kmv_from_hashes(kmv_explode(stored, ["event_type"], k=256), ["event_type"])
     return _kmv_pairs_output(merged)
 
 

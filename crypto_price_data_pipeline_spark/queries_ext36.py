@@ -44,7 +44,6 @@ from pyspark.sql import functions as F
 
 from .io.sources import load_table
 from .registry import query
-from .session import scratch_dir
 
 _LANGS = ["en", "de", "es", "fr"]
 
@@ -556,36 +555,24 @@ def q_stream_quantile(spark: SparkSession, sf: str) -> DataFrame:
         kmv_sample_from_hashes,
         kmv_sample_quantile,
     )
-    from .streaming.partial_store import run_partial_stream, write_day_chunks
+    from .streaming.partial_store import day_chunk_expr, stream_partials
 
     k = 256
     ev = load_table(spark, sf, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    work = scratch_dir("stream_quantile_")
-    src = f"{work}/src"
-    write_day_chunks(ev, src)
-    store = f"{work}/smp"
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        kmv_sample(
-            batch, F.col("event_id"), F.col("value"), ["event_type"], k=k
-        ).write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=ev.schema, sink=sink, ckpt=f"{work}/ckpt"
-    )
-
     # schema-INFERRED read: the parquet footer restores the sample's
     # (k, hash_bits) stamp, so a cross-k merge hard-fails here
+    stored = stream_partials(
+        spark,
+        ev,
+        day_chunk_expr(),
+        lambda b: kmv_sample(b, F.col("event_id"), F.col("value"), ["event_type"], k=k),
+        "stream_quantile_",
+        infer_schema=True,
+    )
     merged = kmv_sample_from_hashes(
-        kmv_sample_explode(
-            spark.read.option("recursiveFileLookup", "true").parquet(store),
-            ["event_type"],
-            k=k,
-        ),
-        ["event_type"],
-        k=k,
+        kmv_sample_explode(stored, ["event_type"], k=k), ["event_type"], k=k
     )
     return merged.select(
         "event_type",
@@ -644,6 +631,16 @@ def _contamination_keyed(docs: DataFrame) -> DataFrame:
     )
 
 
+_CONTAM_K = 256
+
+
+def _contamination_partial(docs: DataFrame) -> DataFrame:
+    """Per-(source, split) bottom-k shingle sketches of ``docs``."""
+    from .operators.sketch import kmv_build
+
+    return kmv_build(_contamination_keyed(docs), F.col("_g"), ["source", "_split"], k=_CONTAM_K)
+
+
 def _contamination_output(sk: DataFrame, k: int) -> DataFrame:
     """Per-source train/held estimator rows from the (source, _split)
     sketch table — pure array algebra over the stored cells."""
@@ -683,14 +680,10 @@ def q_kmv_contamination(spark: SparkSession, sf: str) -> DataFrame:
     literal space-joined token strings, so the DuckDB oracle rebuilds
     sketch AND estimator bit-exactly (the q_kmv_overlap contract);
     k=256 per (source, split)."""
-    from .operators.sketch import kmv_build
     from .session import scale_out
 
-    k = 256
     docs = load_table(spark, sf, "documents").select("doc_id", "source", "text")
-    keyed = _contamination_keyed(scale_out(docs))
-    sk = kmv_build(keyed, F.col("_g"), ["source", "_split"], k=k)
-    return _contamination_output(sk, k)
+    return _contamination_output(_contamination_partial(scale_out(docs)), _CONTAM_K)
 
 
 @query(twin_of="q_kmv_contamination")
@@ -705,38 +698,23 @@ def q_stream_kmv_contamination(spark: SparkSession, sf: str) -> DataFrame:
     q_stream_kmv argument). This is the monitor's production shape: a
     corpus append costs one batch sketch; the continuous contamination
     readout never rescans the corpus."""
-    from .operators.sketch import kmv_build, kmv_explode, kmv_from_hashes
-    from .streaming.partial_store import run_partial_stream
+    from .operators.sketch import kmv_explode, kmv_from_hashes
+    from .streaming.partial_store import stream_partials
 
-    k = 256
+    k = _CONTAM_K
     docs = load_table(spark, sf, "documents").select("doc_id", "source", "text")
-    work = scratch_dir("stream_kmv_contam_")
-    src = f"{work}/src"
-    store = f"{work}/sk"
-    for c in range(3):
-        docs.where(F.col("doc_id") % 3 == c).coalesce(1).write.parquet(
-            f"{src}/chunk_{c}"
-        )
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        kmv_build(
-            _contamination_keyed(batch), F.col("_g"), ["source", "_split"], k=k
-        ).write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=docs.schema, sink=sink, ckpt=f"{work}/ckpt"
-    )
-
     # schema-INFERRED read: the parquet footer restores the (k,
     # hash_bits) stamp, so a cross-k partial merge hard-fails here
+    stored = stream_partials(
+        spark,
+        docs,
+        F.col("doc_id") % 3,
+        _contamination_partial,
+        "stream_kmv_contam_",
+        infer_schema=True,
+    )
     merged = kmv_from_hashes(
-        kmv_explode(
-            spark.read.option("recursiveFileLookup", "true").parquet(store),
-            ["source", "_split"],
-            k=k,
-        ),
-        ["source", "_split"],
-        k=k,
+        kmv_explode(stored, ["source", "_split"], k=k), ["source", "_split"], k=k
     )
     return _contamination_output(merged, k)
 

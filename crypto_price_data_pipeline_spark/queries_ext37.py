@@ -25,7 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .io.sources import load_table
 from .registry import query
-from .session import scratch_dir
+from .streaming.partial_store import merge_sums, stream_partials
+
+# gram width and document-frequency cap of the boilerplate pair
+_BP_K, _BP_CAP = 8, 50
 
 
 @query
@@ -43,7 +46,7 @@ def q_boilerplate_strip(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
     return boilerplate_strip(
-        scale_out(docs), "doc_id", "text", k=8, max_doc_freq=50
+        scale_out(docs), "doc_id", "text", k=_BP_K, max_doc_freq=_BP_CAP
     ).orderBy("doc_id")
 
 
@@ -100,56 +103,31 @@ def q_stream_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
     """Streamed q_boilerplate_strip (same oracle): the gram
     document-frequency state maintained INCREMENTALLY — each
     micro-batch lands its own (gram, df) partial in a per-batch_id
-    overwrite store (22nd `run_partial_stream` stream,
-    crash/restart-covered by name), correct because batches PARTITION
-    the docs, so each doc contributes its distinct grams to exactly
-    one partial and per-gram df is a plain additive sum of partials.
-    The read side sums the partials, cuts at the cap, and hands the
-    hot set to the SAME rebuild (`boilerplate_strip(hot=...)`). This
-    is the transform's production shape: a corpus append costs one
-    batch df partial; the expensive corpus-wide state never rebuilds
-    from scratch, and the rewrite itself stays a single read-time
-    pass. Streamed ≡ batch by construction."""
+    overwrite store (crash/restart-covered by name). The read side
+    sums the partials, cuts them with the batch operator's own
+    ``hot_grams`` rule, and hands the hot set to the SAME rebuild
+    (`boilerplate_strip(hot=...)`). This is the transform's production
+    shape: a corpus append costs one batch df partial; the expensive
+    corpus-wide state never rebuilds from scratch, and the rewrite
+    itself stays a single read-time pass. Streamed ≡ batch by
+    construction."""
     from pyspark.sql import functions as F
 
-    from .operators.text import boilerplate_strip
+    from .operators.text import boilerplate_strip, gram_doc_freq, gram_postings, hot_grams
     from .session import scale_out
-    from .streaming.partial_store import run_partial_stream
 
-    k, cap = 8, 50
+    def partial(batch: DataFrame) -> DataFrame:
+        # the SAME posting + df rule as the batch operator. Batches
+        # partition the docs, so each doc contributes its distinct
+        # grams to exactly one partial and per-gram df is a plain sum
+        _, posting = gram_postings(batch, "doc_id", "text", _BP_K)
+        return gram_doc_freq(posting, "doc_id")
+
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
-    work = scratch_dir("stream_boiler_")
-    src = f"{work}/src"
-    store = f"{work}/df"
-    for c in range(3):
-        docs.where(F.col("doc_id") % 3 == c).coalesce(1).write.parquet(
-            f"{src}/chunk_{c}"
-        )
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        # the SAME normalization + posting + df rule as the batch
-        # operator — shared helper, so streamed ≡ batch cannot drift
-        from .operators.text import gram_doc_freq, gram_postings
-
-        _, posting = gram_postings(batch, "doc_id", "text", k)
-        gram_doc_freq(posting, "doc_id").write.mode("overwrite").parquet(
-            f"{store}/batch_{batch_id:05d}"
-        )
-
-    run_partial_stream(
-        spark, src=src, schema=docs.schema, sink=sink, ckpt=f"{work}/ckpt"
-    )
-
-    hot = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(store)
-        .groupBy("_g")
-        .agg(F.sum("_df").alias("_df"))
-        .where(F.col("_df") > cap)
-        .select("_g")
-    )
+    doc_freq = stream_partials(spark, docs, F.col("doc_id") % 3, partial, "stream_boiler_")
+    hot = hot_grams(merge_sums(doc_freq, "_g"), _BP_CAP)
     return boilerplate_strip(
-        scale_out(docs), "doc_id", "text", k=k, max_doc_freq=cap, hot=hot
+        scale_out(docs), "doc_id", "text", k=_BP_K, max_doc_freq=_BP_CAP, hot=hot
     ).orderBy("doc_id")
 
 

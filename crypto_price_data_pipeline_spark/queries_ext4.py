@@ -762,27 +762,22 @@ ORDER BY col_name
 # ------------------------------------------------------- SCD2 history
 
 
-@query
-def q_scd2(spark: SparkSession, sf: str) -> DataFrame:
-    """SCD2 dimension history from the event stream: per-user value
-    tier, versioned with effective_from/effective_to/is_current and
-    consecutive-duplicate suppression — one window shuffle, no
-    self-join (`operators.scd.scd2_history`). Snapshots are first
-    deduped to one per (user, ts) with MIN(tier) so window order is
-    total in both engines."""
-    from .operators.scd import scd2_history
-
-    ev = load_table(spark, sf, "events")
+def _scd2_partial(ev: DataFrame) -> DataFrame:
+    """One snapshot per (user, ts): MIN of the value tier, so window
+    order is total in both engines. MIN is associative — stored
+    partials merge with the same MIN per (user, ts)."""
     tier = (
         F.when(F.col("value") < 50, "low")
         .when(F.col("value") < 150, "mid")
         .otherwise("high")
     )
-    snaps = (
-        ev.select("user_id", "ts", tier.alias("tier"))
-        .groupBy("user_id", "ts")
-        .agg(F.min("tier").alias("tier"))
-    )
+    snaps = ev.select("user_id", "ts", tier.alias("tier"))
+    return snaps.groupBy("user_id", "ts").agg(F.min("tier").alias("tier"))
+
+
+def _scd2_finish(snaps: DataFrame) -> DataFrame:
+    from .operators.scd import scd2_history
+
     hist = scd2_history(snaps, ["user_id"], "ts", ["tier"])
     return hist.select(
         "user_id",
@@ -791,6 +786,17 @@ def q_scd2(spark: SparkSession, sf: str) -> DataFrame:
         "tier",
         "is_current",
     ).orderBy("user_id", "effective_from")
+
+
+@query
+def q_scd2(spark: SparkSession, sf: str) -> DataFrame:
+    """SCD2 dimension history from the event stream: per-user value
+    tier, versioned with effective_from/effective_to/is_current and
+    consecutive-duplicate suppression — one window shuffle, no
+    self-join (`operators.scd.scd2_history`). Snapshots are first
+    deduped to one per (user, ts) with MIN(tier) so window order is
+    total in both engines."""
+    return _scd2_finish(_scd2_partial(load_table(spark, sf, "events")))
 
 
 Q_SCD2_SQL = """

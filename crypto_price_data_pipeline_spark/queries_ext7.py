@@ -16,7 +16,7 @@ from .io.sources import load_table
 from .queries_ext5 import Q_CONTAMINATION_SQL
 from .registry import query
 from .session import scratch_dir
-from .streaming.partial_store import run_partial_stream
+from .streaming.partial_store import stream_partials
 
 
 # ----------------------------------------- persisted-index serving
@@ -491,32 +491,11 @@ def q_stream_mixture(spark: SparkSession, sf: str) -> DataFrame:
     EXACTLY — same oracle SQL as q_mixture_sample_hash — no matter how
     the corpus was chunked. This is how a mix is enforced while 100 TB
     streams in, instead of re-scanning after landing."""
-    from .operators.sampling import stratified_sample_hash
-
     docs = load_table(spark, sf, "documents").select("doc_id", "lang")
-    work = scratch_dir("stream_mix_")
-    src = f"{work}/src"
-    store = f"{work}/picked"
-    for c in range(3):
-        docs.where(F.col("doc_id") % 3 == c).coalesce(1).write.parquet(
-            f"{src}/chunk_{c}"
-        )
-
-    def sink(batch, batch_id):
-        stratified_sample_hash(batch, "lang", _MIX, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(f"{store}/batch_{batch_id:05d}")
-
-    run_partial_stream(
-        spark, src=src, schema=docs.schema, sink=sink, ckpt=f"{work}/ckpt"
+    picked = stream_partials(
+        spark, docs, F.col("doc_id") % 3, _mixture_partial, "stream_mix_"
     )
-    return (
-        spark.read.schema(docs.schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-        .select("doc_id", "lang")
-        .orderBy("lang", "doc_id")
-    )
+    return _mixture_finish(picked)
 
 
 # ----------------------------------------- bloom contamination prefilter
@@ -791,6 +770,18 @@ def q_mixture_sample_scalable(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _mixture_partial(docs: DataFrame) -> DataFrame:
+    """The hash-threshold picks of any subset of the documents — a
+    per-row predicate, so stored partials merge by plain union."""
+    from .operators.sampling import stratified_sample_hash
+
+    return stratified_sample_hash(docs.select("doc_id", "lang"), "lang", _MIX, "doc_id")
+
+
+def _mixture_finish(picked: DataFrame) -> DataFrame:
+    return picked.select("doc_id", "lang").orderBy("lang", "doc_id")
+
+
 @query
 def q_mixture_sample_hash(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic training-mix construction (shuffle-free 100-TB
@@ -799,14 +790,7 @@ def q_mixture_sample_hash(spark: SparkSession, sf: str) -> DataFrame:
     shuffle, same row SET regardless of partitioning. Counts are
     binomially approximate; the selection rule is exact, which the
     oracle verifies row-for-row."""
-    from .operators.sampling import stratified_sample_hash
-
-    docs = load_table(spark, sf, "documents")
-    return (
-        stratified_sample_hash(docs, "lang", _MIX, "doc_id")
-        .select("doc_id", "lang")
-        .orderBy("lang", "doc_id")
-    )
+    return _mixture_finish(_mixture_partial(load_table(spark, sf, "documents")))
 
 
 # hex→int via the base-16 digit fold already proven portable by the

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .io.sources import load_table
-from .streaming.partial_store import run_partial_stream
+from .streaming.partial_store import stream_partials
 from .operators.text import tokenize
 from .registry import query
 from .session import scratch_dir
@@ -319,39 +319,23 @@ def q_stream_contamination(spark: SparkSession, sf: str) -> DataFrame:
     )
     bench.persist().count()  # settle the benchmark side once, pre-stream
 
-    work = scratch_dir("stream_decon_")
-    src = f"{work}/src"
-    store = f"{work}/dropped"
-    for c in range(3):
-        docs.where(F.col("doc_id") % 3 == c).coalesce(1).write.parquet(
-            f"{src}/chunk_{c}"
-        )
-
-    def sink(batch, batch_id):
+    def dropped(batch: DataFrame) -> DataFrame:
         b = batch.select(
             "doc_id",
             F.filter(
                 F.split(F.lower(F.col("text")), r"[^a-z0-9]+"), lambda t: t != ""
             ).alias("_t"),
         ).where(F.col("doc_id") % 97 != 0)
-        dropped = (
+        return (
             b.select("doc_id", F.explode(_grams5(F.col("_t"))).alias("gram"))
             .join(F.broadcast(bench), "gram")
             .select("doc_id")
             .distinct()
         )
-        dropped.write.mode("overwrite").parquet(f"{store}/batch_{batch_id:05d}")
 
-    run_partial_stream(
-        spark, src=src, schema=docs.schema, sink=sink, ckpt=f"{work}/ckpt"
-    )
+    out = stream_partials(spark, docs, F.col("doc_id") % 3, dropped, "stream_decon_")
     bench.unpersist()
-    return (
-        spark.read.schema("doc_id long")
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-        .orderBy("doc_id")
-    )
+    return out.orderBy("doc_id")
 
 
 Q_STREAM_CONTAMINATION_SQL = """

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.similarity import hyperplane_lsh_buckets
 from ..session import scratch_dir
+from .partial_store import write_batch
 
 
 def stream_lsh_index(
@@ -126,9 +127,7 @@ def write_index_batch(
     store is exactly-once without a transaction log."""
     if transform is not None:
         batch = transform(batch)
-    hyperplane_lsh_buckets(batch, dim, bits, seed).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(store, f"batch_{batch_id:010d}"))
+    write_batch(hyperplane_lsh_buckets(batch, dim, bits, seed), store, batch_id)
 
 
 def start_index_maintenance(

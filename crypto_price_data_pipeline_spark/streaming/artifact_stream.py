@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import scoped_conf, scratch_dir
-from .partial_store import run_partial_stream
+from .partial_store import run_partial_stream, write_batch
 
 MINS_SCHEMA = (
     "doc_id long, _n int, lang string, "
@@ -184,21 +184,21 @@ def stream_artifact_index(
     def sink(batch: DataFrame, batch_id: int) -> None:
         # all four partials are per-doc functions of THIS batch's rows
         # — no cross-batch reads, so append-only maintenance is exact.
-        tag = f"batch_{batch_id:05d}"
         base_b = (
             with_shingles(batch, "doc_id", "text", k=3, keep_cols=["lang"])
             .withColumn("_n", F.size("_shingles"))
             .persist()
         )
         try:
-            minhash_min_cols(base_b, "doc_id", 64, 42, keep_cols=["_n", "lang"]) \
-                .write.mode("overwrite").parquet(f"{store}/mins/{tag}")
-            base_b.select("doc_id", "lang", "_n").write.mode("overwrite").parquet(
-                f"{store}/base_n/{tag}"
+            write_batch(
+                minhash_min_cols(base_b, "doc_id", 64, 42, keep_cols=["_n", "lang"]),
+                f"{store}/mins",
+                batch_id,
             )
+            write_batch(base_b.select("doc_id", "lang", "_n"), f"{store}/base_n", batch_id)
         finally:
             base_b.unpersist()
-        simhash_md5(batch).write.mode("overwrite").parquet(f"{store}/simhash/{tag}")
+        write_batch(simhash_md5(batch), f"{store}/simhash", batch_id)
         terms = batch.select(
             "doc_id", tokenize("text").alias("t")
         ).where(F.size("t") >= 3).select(
@@ -210,12 +210,14 @@ def stream_artifact_index(
                 )
             ).alias("term"),
         )
-        terms.groupBy("doc_id", "term").agg(
-            F.count(F.lit(1)).alias("tf")
-        ).write.mode("overwrite").parquet(f"{store}/tf/{tag}")
-        _winnowing_fp_hashes(batch, "doc_id", "text", 8, 8).write.mode(
-            "overwrite"
-        ).parquet(f"{store}/winnow/{tag}")
+        write_batch(
+            terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")),
+            f"{store}/tf",
+            batch_id,
+        )
+        write_batch(
+            _winnowing_fp_hashes(batch, "doc_id", "text", 8, 8), f"{store}/winnow", batch_id
+        )
 
     if chunks:
         # per-batch partials are one chunk's rows; 32-partition

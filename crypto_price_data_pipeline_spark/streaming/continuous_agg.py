@@ -28,6 +28,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .partial_store import write_batch
+
 BUCKET_AGGS = lambda: [  # noqa: E731 - one grain definition, two call sites
     F.count(F.lit(1)).alias("n"),
     F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"),
@@ -52,9 +54,7 @@ def write_batch_partials(buckets: DataFrame, rollup_dir: str, batch_id: int) -> 
     OWNS ``batch_<id>/`` and overwrites it, so a foreachBatch replay
     after partial failure rewrites identical rows (no double counting).
     """
-    buckets.write.mode("overwrite").parquet(
-        os.path.join(rollup_dir, f"batch_{batch_id:010d}")
-    )
+    write_batch(buckets, rollup_dir, batch_id)
 
 
 def read_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame | None:

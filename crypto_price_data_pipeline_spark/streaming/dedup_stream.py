@@ -42,26 +42,8 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import band_buckets, minhash_signatures
 from ..session import scoped_conf, scratch_dir
-
-
-def _write_batch(df: DataFrame, store: str, batch_id: int) -> None:
-    """Idempotent per-batch store write: each micro-batch owns the
-    subdirectory ``batch_<id>`` and OVERWRITES it. foreachBatch replays
-    a batch_id after partial failure; an append here would duplicate
-    store rows and break the "survivor set ≡ batch anti-join rule"
-    invariant — overwrite makes the replay rewrite identical content
-    instead. Readers use ``recursiveFileLookup`` so the subdirs (plus
-    the root-level empty seed) read as one table without partition
-    inference."""
-    df.write.mode("overwrite").parquet(os.path.join(store, f"batch_{batch_id:010d}"))
-
-
-def _read_store(spark: SparkSession, schema, store: str) -> DataFrame:
-    return (
-        spark.read.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-    )
+from .partial_store import read_store as _read_store
+from .partial_store import write_batch as _write_batch
 
 
 def make_batch_processor(

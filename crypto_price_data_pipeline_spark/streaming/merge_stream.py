@@ -4,7 +4,7 @@ partials + merge-on-read reduction.
 The batch path (``operators/merge.merge_upsert``) applies ONE change
 row per key. At ingest time the change events arrive in micro-batches
 with a key's events possibly split across batches, so the streaming
-decomposition mirrors ``scd_stream``/``continuous_agg``:
+decomposition mirrors ``continuous_agg``:
 
 - **write path** (per micro-batch): reduce the batch to its latest
   event per key (argmax by the (ts, tiebreak) order — a batch-local,
@@ -15,18 +15,20 @@ decomposition mirrors ``scd_stream``/``continuous_agg``:
   winners reduced again ≡ the global latest-per-key — which is why the
   streamed merge matches the batch oracle whatever the chunking.
 
-State stays bounded by |keys| per batch, not |events|; the partial log
-compacts with ``continuous_agg.compact_rollup``'s staged-swap pattern.
+Both paths reduce with ``operators.merge.latest_per_key``, the partial
+the registry pair q_merge_upsert / q_stream_merge shares (that twin
+streams through ``partial_store.stream_partials``; this module is the
+same log over a caller-staged source directory). State stays bounded
+by |keys| per batch, not |events|; the partial log compacts with
+``continuous_agg.compact_rollup``'s staged-swap pattern.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from pyspark.sql.window import Window
-
-from .partial_store import run_partial_stream
+from ..operators.merge import latest_per_key
+from .partial_store import read_store, run_partial_stream, write_batch
 
 
 def stream_cdc_log(
@@ -44,15 +46,8 @@ def stream_cdc_log(
     (ORDER BY ts DESC, tiebreak DESC) and land it per-batch_id."""
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy(key_col).orderBy(
-            F.col(ts_col).desc(), F.col(tiebreak_col).desc()
-        )
-        latest = (
-            batch.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select(key_col, ts_col, tiebreak_col, *payload_cols)
-        )
-        latest.write.mode("overwrite").parquet(f"{log_dir}/batch_{batch_id:05d}")
+        latest = latest_per_key(batch, key_col, ts_col, tiebreak_col)
+        write_batch(latest.select(key_col, ts_col, tiebreak_col, *payload_cols), log_dir, batch_id)
 
     run_partial_stream(
         spark, src=src, schema=schema, sink=sink, ckpt=checkpoint_dir
@@ -70,14 +65,4 @@ def read_cdc_changes(
     """Merge-on-read: union the per-batch winners, re-reduce to the
     global latest per key (same argmax — associative), return one
     change row per key."""
-    log = spark.read.schema(read_schema).option(
-        "recursiveFileLookup", "true"
-    ).parquet(log_dir)
-    w = Window.partitionBy(key_col).orderBy(
-        F.col(ts_col).desc(), F.col(tiebreak_col).desc()
-    )
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return latest_per_key(read_store(spark, read_schema, log_dir), key_col, ts_col, tiebreak_col)

@@ -1,21 +1,34 @@
-"""Shared runner for the per-batch_id partial-store streams.
+"""The per-batch_id partial store: one stream helper for every
+streamed≡batch twin in the registry.
 
-Every streamed≡batch twin in the registry follows one discipline: a
-file-chunked source replayed with ``maxFilesPerTrigger=1`` under an
-``availableNow`` trigger, a ``foreachBatch`` sink that computes a
-DETERMINISTIC partial of the micro-batch and lands it under
-``.../batch_<id>`` with OVERWRITE (so a replayed batch rewrites
-identical content — exactly-once without a transactional sink), and a
-read side that merges the partial store. This module owns the runner
-block those queries previously inlined, for two reasons:
+A twin is a batch query split as ``partial`` / ``merge`` / ``finish``:
+``partial(rows)`` is a deterministic summary of any subset of the rows,
+``merge(stored)`` folds a union of partials into the partial of their
+union, and the batch query is ``finish(partial(all rows))``. The
+streamed twin is ``finish(merge(stream_partials(...)))``, so batch and
+stream agree by construction.
 
-1. one definition of the replay contract instead of fifteen copies;
-2. a test seam: the parameterized crash/restart test
-   (``tests/test_stream_restart.py``) injects a crash AFTER a batch's
-   store write but BEFORE its checkpoint commit — the worst replay
-   window — restarts from the checkpoint, and asserts the store is
-   row-identical to an uninterrupted run, for EVERY store builder
-   that routes through here.
+:func:`stream_partials` owns the stream around that split:
+
+- it writes the source frame as 3 single-file parquet chunks (one per
+  value of the caller's ``chunk`` Column) under ``<scratch>/src``;
+- :func:`run_partial_stream` replays them one file per micro-batch
+  (``maxFilesPerTrigger=1``, ``availableNow``, checkpoint under
+  ``<scratch>/ckpt``);
+- the ``foreachBatch`` sink lands ``partial(batch)`` under
+  ``<scratch>/store[/<name>]/batch_<id>`` with OVERWRITE
+  (:func:`write_batch`), so a replayed batch rewrites identical content
+  — exactly-once without a transactional sink;
+- it returns the stored partials read with ``partial(frame).schema``
+  (:func:`read_store`): no inference job, and no schema string that
+  can drift from what the sink wrote.
+
+The parameterized crash/restart test (``tests/test_stream_restart.py``)
+walks that ``src`` / ``ckpt`` / store layout: it injects a crash AFTER
+a batch's store write but BEFORE its checkpoint commit — the worst
+replay window — through the ``_test_hook`` seam below, restarts from
+the checkpoint, and asserts the store is row-identical to an
+uninterrupted run, for every stream that routes through here.
 
 Reference parity: the reference's crawler appends one row per poll with
 no replay story (`bpi_crawler.py:43-214`); the per-batch_id overwrite
@@ -28,10 +41,16 @@ callers never touch ``_test_hook``.
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
+
+from ..session import scratch_dir
+
+# the replayed source is this many single-file chunks, one per batch
+N_CHUNKS = 3
 
 Sink = Callable[["DataFrame", int], None]  # noqa: F821 - doc alias
 
@@ -64,7 +83,6 @@ def fold_partials(dir_path: str, merged_fn: Callable[[], "DataFrame"]) -> int:
     the last committed checkpoint offset — a crashed batch replaying
     AFTER its partial was folded would re-create its subdir and
     double-count."""
-    import os
     import shutil
 
     if not os.path.isdir(dir_path):
@@ -85,8 +103,8 @@ def fold_partials(dir_path: str, merged_fn: Callable[[], "DataFrame"]) -> int:
     return len(subdirs)
 
 
-def day_chunk_expr(n: int = 3):
-    """Chunk id in [0, n) from an event's day-of-month, used to split
+def day_chunk_expr():
+    """Chunk id in [0, 3) from an event's day-of-month, used to split
     the events table into the replayed micro-batch files. Clamped with
     least(): a naive ``(dayofmonth-1) div 10`` maps day 31 to chunk 3,
     which ``range(3)`` never writes — rows born on the 31st would be
@@ -94,20 +112,79 @@ def day_chunk_expr(n: int = 3):
     """
     from pyspark.sql import functions as F
 
-    return F.expr(
-        f"least(cast((dayofmonth(ts) - 1) div 10 as int), {int(n) - 1})"
+    return F.expr(f"least(cast((dayofmonth(ts) - 1) div 10 as int), {N_CHUNKS - 1})")
+
+
+def write_batch(df: "DataFrame", store: str, batch_id: int) -> None:
+    """Idempotent per-batch store write: each micro-batch owns the
+    subdirectory ``batch_<id>`` and OVERWRITES it. foreachBatch replays
+    a batch_id after partial failure; an append here would duplicate
+    store rows — overwrite makes the replay rewrite identical content
+    instead. Readers use :func:`read_store`, so the subdirs read as one
+    table without partition inference."""
+    df.write.mode("overwrite").parquet(os.path.join(store, f"batch_{batch_id:010d}"))
+
+
+def read_store(spark: SparkSession, schema, store: str) -> "DataFrame":
+    """The union of every ``batch_<id>`` subdirectory under ``store``,
+    read with ``schema`` (no inference job), or with the schema of the
+    parquet footers when ``schema`` is None."""
+    reader = spark.read.option("recursiveFileLookup", "true")
+    return (reader if schema is None else reader.schema(schema)).parquet(store)
+
+
+def stream_partials(
+    spark: SparkSession,
+    frame: "DataFrame",
+    chunk: "Column",
+    partial: Callable,
+    prefix: str,
+    *,
+    infer_schema: bool = False,
+):
+    """Replay ``frame`` as a 3-file stream and return the stored
+    per-batch partials (see the module docstring for the contract).
+
+    ``frame`` is written as ``N_CHUNKS`` single-file parquet chunks,
+    chunk ``c`` holding the rows where ``chunk == c`` (every row must
+    land in exactly one chunk). Each micro-batch lands
+    ``partial(batch)`` — a DataFrame, or a dict of named DataFrames for
+    a twin with several stores — under ``store[/name]/batch_<id>``. The
+    return value mirrors ``partial``: the union of the stored batches,
+    read with ``partial(frame).schema``. ``infer_schema=True`` reads the
+    parquet footers instead, for partials whose column metadata is a
+    check on what was written (the KMV sketch stamp)."""
+    work = scratch_dir(prefix)
+    src, store = os.path.join(work, "src"), os.path.join(work, "store")
+    for c in range(N_CHUNKS):
+        frame.where(chunk == c).coalesce(1).write.parquet(os.path.join(src, f"chunk_{c}"))
+
+    def named(out) -> dict:
+        return out if isinstance(out, dict) else {"": out}
+
+    def sink(batch, batch_id: int) -> None:
+        for name, df in named(partial(batch)).items():
+            write_batch(df, os.path.join(store, name), batch_id)
+
+    run_partial_stream(
+        spark, src=src, schema=frame.schema, sink=sink, ckpt=os.path.join(work, "ckpt")
     )
+    whole = partial(frame)
+    stored = {
+        name: read_store(spark, None if infer_schema else df.schema, os.path.join(store, name))
+        for name, df in named(whole).items()
+    }
+    return stored if isinstance(whole, dict) else stored[""]
 
 
-def write_day_chunks(df, src: str, n: int = 3) -> None:
-    """Materialize ``df`` (an events projection carrying ``ts``) as
-    ``n`` single-file parquet chunks under ``src`` — the standard
-    source layout every partial-store stream replays with
-    ``maxFilesPerTrigger=1``. Every row lands in exactly one chunk
-    (day-31 clamps into the last one, see day_chunk_expr)."""
-    chunk = day_chunk_expr(n)
-    for c in range(n):
-        df.where(chunk == c).coalesce(1).write.parquet(f"{src}/chunk_{c}")
+def merge_sums(stored: "DataFrame", *keys: str) -> "DataFrame":
+    """The ``merge`` of additive partials: per ``keys`` group (one row
+    when there are none), the sum of every other column."""
+    from pyspark.sql import functions as F
+
+    return stored.groupBy(*keys).agg(
+        *[F.sum(c).alias(c) for c in stored.columns if c not in keys]
+    )
 
 
 def run_partial_stream(

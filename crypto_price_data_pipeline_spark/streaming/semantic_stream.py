@@ -45,18 +45,8 @@ from pyspark.sql import functions as F
 from ..operators.similarity import cosine_pairs, norm_vectors
 from ..session import materialize, scratch_dir
 from ..operators.text import feature_hash_embed
-
-
-def _write_batch(df: DataFrame, store: str, batch_id: int) -> None:
-    df.write.mode("overwrite").parquet(os.path.join(store, f"batch_{batch_id:010d}"))
-
-
-def _read_store(spark: SparkSession, schema, store: str) -> DataFrame:
-    return (
-        spark.read.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(store)
-    )
+from .partial_store import read_store as _read_store
+from .partial_store import write_batch as _write_batch
 
 
 def make_semantic_processor(
