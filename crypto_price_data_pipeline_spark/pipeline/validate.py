@@ -47,8 +47,9 @@ STRING_COLS = [
 
 
 class ValidationError(ValueError):
-    """Raised when a batch fails the expectation gate. With a sink, it is
-    raised after the sink's write (see ``run_pipeline``)."""
+    """Raised when a batch fails the expectation gate. With a staging
+    sink, it is raised before the batch is committed (see
+    ``run_pipeline``)."""
 
 
 def _bad_format(col: str):

@@ -305,18 +305,19 @@ def _changepoint_partial(ev: DataFrame) -> DataFrame:
 
 
 def _changepoint_finish(daily: DataFrame) -> DataFrame:
+    """The statistic per candidate split from the daily sums, then the
+    argmax. The totals are whole-frame windows in the same single
+    partition as the cumulative window, so no second pass over the day
+    table and no join back."""
     wcum = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    cum = daily.select(
+    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    scored = daily.select(
         "day",
         F.sum("s").over(wcum).alias("st"),
         F.sum("c").over(wcum).alias("nt"),
-    )
-    tot = daily.agg(
-        F.sum("s").alias("s_tot"), F.sum("c").alias("n_tot")
-    )
-    scored = cum.crossJoin(F.broadcast(tot)).where(
-        F.col("nt") < F.col("n_tot")
-    )
+        F.sum("s").over(wall).alias("s_tot"),
+        F.sum("c").over(wall).alias("n_tot"),
+    ).where(F.col("nt") < F.col("n_tot"))
     # the statistic stays DECIMAL end-to-end: st*N and s_tot*nt reach
     # ~1e11, where double ulp (~3e-5) exceeds the 1e-6 rounding grain —
     # a double product here could flip the last rounded digit between

@@ -55,21 +55,29 @@ def q_survival_curve(spark: SparkSession, sf: str) -> DataFrame:
     # (≤ the calendar window in days), never the per-user table — the
     # curve's cost is |users|-independent past the one user hash agg.
     hist = spans.groupBy("span").agg(F.count(F.lit(1)).alias("n_span"))
-    n_users = spans.count()
     ks = spark.createDataFrame([(k,) for k in range(30)], "k long")
-    return (
+    return _survival_ladder(
         hist.join(F.broadcast(ks), F.col("span") >= F.col("k"))
         .groupBy("k")
         .agg(F.sum("n_span").alias("n_surviving"))
-        .select(
-            "k",
-            "n_surviving",
-            F.round(
-                F.col("n_surviving").cast("double") / F.lit(float(n_users)), 9
-            ).alias("survival_r9"),
-        )
-        .orderBy("k")
     )
+
+
+def _survival_ladder(counts: DataFrame) -> DataFrame:
+    """(k, n_surviving) → the curve. Every span is ≥ 0, so the user
+    count is ``n_surviving`` at ``k = 0``, the largest in the ladder:
+    a whole-frame max over the ≤ 30 rows, not a second pass over the
+    spans."""
+    n_users = F.max("n_surviving").over(
+        Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    return counts.select(
+        "k",
+        "n_surviving",
+        F.round(F.col("n_surviving").cast("double") / n_users.cast("double"), 9).alias(
+            "survival_r9"
+        ),
+    ).orderBy("k")
 
 
 Q_SURVIVAL_CURVE_SQL = """

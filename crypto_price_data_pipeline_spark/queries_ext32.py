@@ -186,26 +186,17 @@ def q_stream_survival(spark: SparkSession, sf: str) -> DataFrame:
     query's span histogram would add a shuffle stage (one more Spark
     job per call at sf0.001) after the merge's own per-user
     aggregation, so the two ladders stay separate."""
-    from .queries_ext31 import _survival_partial
+    from .queries_ext31 import _survival_ladder, _survival_partial
 
     ev = load_table(spark, sf, "events").select("event_id", "ts", "user_id")
     stored = stream_partials(spark, ev, day_chunk_expr(), _survival_partial, "stream_surv_")
     spans = stored.groupBy("user_id").agg(
         F.datediff(F.max("dmax"), F.min("dmin")).alias("span")
     )
-    n_users = spans.count()
     ks = spark.createDataFrame([(k,) for k in range(30)], "k long")
-    return (
+    return _survival_ladder(
         ks.crossJoin(spans)
         .where(F.col("span") >= F.col("k"))
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("n_surviving"))
-        .select(
-            "k",
-            "n_surviving",
-            F.round(
-                F.col("n_surviving").cast("double") / F.lit(float(n_users)), 9
-            ).alias("survival_r9"),
-        )
-        .orderBy("k")
     )

@@ -185,10 +185,12 @@ def scratch_dir(prefix: str) -> str:
     return d
 
 
-def materialize(df, reliable: bool | None = None):
+def materialize(df, reliable: bool | None = None, eager: bool = True):
     """Eagerly compute ``df`` and return a lineage-truncated handle —
     the engine-wide replacement for bare ``localCheckpoint(eager=True)``
     (use as ``df.transform(materialize)`` so call chains read the same).
+    With ``eager=False`` nothing runs now: the first action that reads
+    the handle computes it and truncates its lineage then.
 
     With no checkpoint directory configured (the local bench/test
     default) this IS ``localCheckpoint(eager=True)``: fastest, zero
@@ -222,8 +224,8 @@ def materialize(df, reliable: bool | None = None):
         except Exception:
             reliable = False
     if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
 
 
 def scale_out(df):

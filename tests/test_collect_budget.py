@@ -54,6 +54,12 @@ ALLOWED = {
     "operators/bpe.py": [".collect()"],
     # top-10 rank list (bounded by the preceding limit)
     "queries_ext24.py": [".collect()"],
+    # one currency pair's FX-rate slice, read as lookup literals once
+    # per rates frame: one row per rate date (a driver-sized dimension;
+    # the broadcast join it replaced also built it on the driver)
+    "pipeline/rates.py": [
+        'rows = fx_rates.where(pair).select("rate_date", "rate").collect()',
+    ],
     # the stored bpe_merges artifact read as expression literals:
     # vocab-bounded by construction (<= n_merges = 8 rows)
     "queries_ext37.py": [

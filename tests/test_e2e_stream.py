@@ -7,6 +7,7 @@ its restart and crash-replay behaviour over one checkpoint."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.errors import StreamingQueryException
@@ -146,3 +147,38 @@ def test_http_poll_crash_replay_lands_each_snapshot_once(spark, tmp_path):
         t.replace("T", " ")[:19] for t in _iso(0, 12)
     ]
     assert len({r["job_id"] for r in rows}) == len(rows) == 12
+
+
+def test_gate_failure_in_foreach_batch_commits_nothing(spark, tmp_path):
+    """A micro-batch whose dates are missing from the rates fails the
+    gate inside ``foreachBatch``: the query stops with the
+    ``ValidationError``, and the warehouse keeps the files and rows of
+    the batches before it, with no staging left."""
+    ckpt = str(tmp_path / "ckpt")
+    warehouse = str(tmp_path / "warehouse")
+
+    def land(rates):
+        def sink(d):
+            idempotent_append(spark, d, warehouse, keys=["job_id"])
+
+        return lambda batch_df, _: run_pipeline(batch_df, rates, now=NOW, sink=sink)
+
+    def state():
+        files = sorted(
+            os.path.relpath(os.path.join(root, f), warehouse)
+            for root, _, names in os.walk(warehouse)
+            for f in names
+        )
+        return files, sorted(tuple(r) for r in spark.read.parquet(warehouse).collect())
+
+    _available_now(spark, ckpt, 4, land(_rates(spark)))
+    before = state()
+    assert len(before[1]) == 4
+    no_rate = spark.createDataFrame(
+        [("USD", "IDR", "2022-12-07", 15650.25)],
+        "from_ccy string, to_ccy string, rate_date string, rate double",
+    ).withColumn("rate_date", F.to_date("rate_date"))
+    with pytest.raises(StreamingQueryException, match="expectation gate failed"):
+        _available_now(spark, ckpt, 4, land(no_rate))
+    assert state() == before
+    assert not any(f.startswith("_staging-") for f in os.listdir(warehouse))

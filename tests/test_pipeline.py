@@ -20,6 +20,7 @@ from crypto_price_data_pipeline_spark.pipeline import (
     BPI_PAYLOAD_SCHEMA,
     ENRICHED_COLUMNS,
     ValidationError,
+    join_idr_rate,
     run_pipeline,
 )
 from crypto_price_data_pipeline_spark.pipeline.schema import BPI_PAYLOAD_MAP_SCHEMA
@@ -146,6 +147,84 @@ def test_idempotent_append(spark, tmp_path):
     assert _files(path) == broken
 
 
+def _landed(spark, path):
+    """(file list, sorted rows) of a warehouse."""
+    return _files(path), sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+@pytest.mark.parametrize("fault", ["bad_updated_iso", "missing_rate"])
+def test_gate_failure_commits_nothing(spark, tmp_path, fault):
+    """A batch that fails the gate raises ``ValidationError`` from
+    ``run_pipeline(sink=idempotent_append)`` with nothing loaded: the
+    warehouse keeps its files and rows, and no staging is left."""
+    from crypto_price_data_pipeline_spark.io.sinks import idempotent_append
+
+    path = str(tmp_path / "warehouse")
+    now = "2022-12-06 14:00:03"
+
+    def sink(d):
+        idempotent_append(spark, d, path, keys=["job_id"])
+
+    run_pipeline(spark.createDataFrame([GOLDEN], BPI_PAYLOAD_SCHEMA), _rates(spark), now=now, sink=sink)
+    files, rows = _landed(spark, path)
+    assert len(rows) == 1
+
+    time = {"updated": "Dec 7, 2022 09:00:00 UTC", "updatedISO": "2022-12-07T09:00:00+00:00"}
+    rates = _rates(spark)  # 2022-12-06 only: the 7th has no rate
+    if fault == "bad_updated_iso":
+        time = {"updated": "garbage", "updatedISO": "not-iso"}
+    bad = spark.createDataFrame([(time, *GOLDEN[1:])], BPI_PAYLOAD_SCHEMA)
+    with pytest.raises(ValidationError):
+        run_pipeline(bad, rates, now=now, sink=sink)
+    assert _landed(spark, path) == (files, rows)
+    assert not any(f.startswith("_staging-") for f in os.listdir(path))
+
+
+def test_rates_lookup_plans_no_join(spark):
+    """The rates reach each row through array literals: no join in the
+    plan, a NULL for a day the dimension skips, and a fixed number of
+    py4j commands to build, whatever the number of dates."""
+    from crypto_price_data_pipeline_spark.pipeline.rates import _lookup
+
+    rates = spark.createDataFrame(
+        [("USD", "IDR", dt.date(2022, 12, 4), 2.0), ("USD", "IDR", dt.date(2022, 12, 6), 3.0),
+         ("EUR", "IDR", dt.date(2022, 12, 5), 9.0)],
+        "from_ccy string, to_ccy string, rate_date date, rate double",
+    )
+    days = [(dt.datetime(2022, 12, d, 13), 10.0) for d in range(3, 8)]
+    events = spark.createDataFrame(days, "_event_ts timestamp, bpi_usd_rate_float double")
+    out = join_idr_rate(events, rates)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan
+    got = [r["bpi_idr_rate_float"] for r in out.orderBy("_event_ts").collect()]
+    assert got == [None, 20.0, None, 30.0, None]
+
+    def build_commands(n):
+        rows = [(dt.date(2020, 1, 1) + dt.timedelta(days=i), float(i)) for i in range(n)]
+        with _py4j_commands(spark, this_thread=True) as sent:
+            _lookup(rows, "USD", "IDR")
+        return sent[0]
+
+    build_commands(3)  # first use builds the JVM handles
+    assert build_commands(3000) == build_commands(3)
+
+
+def test_rates_duplicate_date_or_stream_raises(spark):
+    twice = spark.createDataFrame(
+        [("USD", "IDR", dt.date(2022, 12, 6), 1.0), ("USD", "IDR", dt.date(2022, 12, 6), 2.0)],
+        "from_ccy string, to_ccy string, rate_date date, rate double",
+    )
+    payloads = spark.createDataFrame([GOLDEN], BPI_PAYLOAD_SCHEMA)
+    with pytest.raises(ValueError, match="more than one USD->IDR rate on 2022-12-06"):
+        run_pipeline(payloads, twice, now="2022-12-06 14:00:03")
+    stream = spark.readStream.format("rate").load().select(
+        F.lit("USD").alias("from_ccy"), F.lit("IDR").alias("to_ccy"),
+        F.to_date("timestamp").alias("rate_date"), F.col("value").cast("double").alias("rate"),
+    )
+    with pytest.raises(ValueError, match="static DataFrame"):
+        run_pipeline(payloads, stream, now="2022-12-06 14:00:03")
+
+
 def _tapped_rates(spark, rate, hits):
     """A rates frame evaluated in Python workers: ``hits`` counts every
     row the engine reads from it."""
@@ -184,7 +263,7 @@ def test_rates_read_once_per_frame(spark):
     read = hits.value
     assert read > 0
     # the same frame again: its rates are not read again, and the run
-    # issues one job fewer (the dimension's materialize)
+    # issues one job fewer (the collect of the pair's slice)
     second, second_jobs = _jobs_in_group(spark, "rates_second", run)
     assert hits.value == read
     assert len(second_jobs) == len(first_jobs) - 1
@@ -214,7 +293,7 @@ def test_rates_memo_released_with_frame(spark):
     assert len(_SLICES) == held - 1
 
 
-def test_rates_memo_one_materialize_under_threads(spark):
+def test_rates_memo_one_collect_under_threads(spark):
     from crypto_price_data_pipeline_spark.pipeline.rates import _rate_slice
 
     hits = spark.sparkContext.accumulator(0)
@@ -234,20 +313,24 @@ def test_rates_memo_one_materialize_under_threads(spark):
     finally:
         sys.setswitchinterval(switch)
     assert not any(t.is_alive() for t in threads)
-    # every thread got the one slice, and the rates were read by one job
+    # every thread got the one lookup, and the rates were read by one job
     assert len(got) == 8 and all(g is got[0] for g in got)
     assert hits.value == 1
 
 
 @contextmanager
-def _py4j_commands(spark):
-    """Count the py4j commands this process sends to the JVM in the block."""
+def _py4j_commands(spark, this_thread=False):
+    """Count the py4j commands this process (or only this thread: py4j
+    releases dead objects from a thread of its own) sends to the JVM in
+    the block."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     sent = [0]
+    me = threading.get_ident()
 
     def counting(*args, **kwargs):
-        sent[0] += 1
+        if not this_thread or threading.get_ident() == me:
+            sent[0] += 1
         return send(*args, **kwargs)
 
     client.send_command = counting

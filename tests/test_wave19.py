@@ -153,3 +153,13 @@ def test_rfm_partitions_all_customers(spark):
         assert 1 <= r["r_score"] <= 4
         assert 1 <= r["f_score"] <= 4
         assert 1 <= r["m_score"] <= 4
+
+
+def test_changepoint_scans_events_once(spark):
+    """The totals are whole-frame windows beside the cumulative one: one
+    scan of ``events`` and no join in the optimized plan."""
+    from crypto_price_data_pipeline_spark.queries import QUERIES
+
+    plan = QUERIES["q_changepoint"](spark, SF)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation ") == 1
+    assert "Join" not in plan

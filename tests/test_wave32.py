@@ -41,3 +41,23 @@ def test_stream_survival_equals_batch(spark):
     streamed = [tuple(r) for r in QUERIES["q_stream_survival"](spark, SF).collect()]
     batch = [tuple(r) for r in QUERIES["q_survival_curve"](spark, SF).collect()]
     assert streamed == batch
+
+
+def test_stream_survival_construct_starts_only_the_stream(spark):
+    """The curve's user count is read from its own k = 0 row, so
+    constructing the twin starts only the partial-store stream's jobs
+    (3 at sf0.001), not a second pass over the merged spans for a
+    ``count()``."""
+    import uuid
+
+    from crypto_price_data_pipeline_spark.queries import QUERIES
+
+    QUERIES["q_stream_survival"](spark, SF)  # first use infers the source schema
+    sc = spark.sparkContext
+    group = f"survival-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        QUERIES["q_stream_survival"](spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
