@@ -29,20 +29,60 @@ directory that readers skip; the replay's anti-join on the key then
 appends only the rows still missing, so exactly-once holds through the
 key.
 
-The key set. The anti-join needs the keys already in the table, and
+The key set. The append must skip the keys already in the table, and
 reading them back from every file costs a footer read per file, so a
 scan grows with the table, one file per trigger. Instead each (session,
-qualified table path, keys) keeps the table's key set as a lazily
-checkpointed DataFrame (``session.materialize(eager=False)``), with the
-``FileSystem.getContentSummary`` of the table it covers: file count,
-directory count and length. A call uses the key set only when the
-summary at its start equals the one recorded after this sink's last
-commit; otherwise it rebuilds the key set from a scan of the table.
-After a commit the key set is extended with the keys of just the
-promoted files (union, ``coalesce(1)``, lazy checkpoint), so it is one
-partition from then on. Nothing computes it then: the next call's
-broadcast of the anti-join does, which adds no Spark job and reads one
-trigger's files, not the table.
+qualified table path, keys) keeps the table's keys in two tiers, with
+the ``FileSystem.getContentSummary`` of the table they cover: file
+count, directory count and length.
+
+- The base is a lazily checkpointed DataFrame
+  (``session.materialize(eager=False)``) that the batch is anti-joined
+  against by broadcast: one Spark job per call.
+- The delta is a driver-side ``frozenset`` of the keys committed since
+  the base was built or last folded, at most ``_DELTA_CAP`` of them. The
+  write's own plan checks it as ``isnull(k) OR NOT k IN (...)``, so it
+  costs no job. The keys cross to the JVM as one string, joined on a
+  character none of them contains, split there and handed to
+  ``Column.isin``: a fixed number of py4j calls, where
+  ``F.col(k).isin(list)`` sends one per key. A commit whose keys leave
+  no such character folds. A NULL key passes the check, as it passes
+  the anti-join.
+
+Each commit learns its keys from the staged write's ``Observation``,
+which collects the key's set next to the row count: no file is read
+and no job added. A call uses the tiers only when the summary at its
+start equals the one recorded after this sink's last commit; otherwise
+it rebuilds the base from a scan of the table and starts an empty delta.
+A first append to a missing table starts with neither.
+
+The fold. A commit whose keys would take the delta past the cap folds
+instead: the base, the delta's keys and the keys of the files it just
+promoted are unioned, ``coalesce(1)`` and lazily checkpointed, and the
+delta starts empty. The delta's rows are made on the JVM, by exploding
+its joined string over a one-row range (``createDataFrame`` of a Python
+list would start a Python worker); the new keys are read from the
+promoted files, so a large batch never becomes a literal in a plan.
+Nothing computes the fold then: the next call's broadcast does, reading
+one trigger's files. A call that rescanned folds as it commits, even
+with no rows, so the base kept is one partition, not a partition per
+file split of the scan that each later broadcast would run as a task.
+The delta holds one plain string key; any other key shape gets a cap
+of 0 and folds on every commit.
+
+Under the cap a call runs two Spark jobs: the ``dropDuplicates``
+shuffle's map stage and the staged write. The cap is where building the
+check costs what the broadcast job costs. With the benchmark's JVM
+flags (C1, serial GC) at 4 cores, a 10-row staged write of 32-character
+keys took, in CPU over the write alone, 50 ms more with a 512-key check,
+80 ms with 1,024, 120 ms with 2,048 and 210 ms with 4,096, against
+40-70 ms more for the anti-join against a checkpointed base of the same
+size. The stored plan description lists each checked key about three
+times, some 100 bytes per 32-character key. There is no single
+whole-table ``IN`` check: at 40k keys it took 0.7 s to build and 0.45 s
+to run, and every SQL execution stored a 920 KB plan description, of
+which the status store keeps 1,000. The cap keeps the plan text and its
+analysis bounded.
 
 The recorded summary is the table this sink left: the summary at the
 start plus the promoted files, their length and the directories made
@@ -63,6 +103,8 @@ before, both may append a key that neither had seen.
 
 from __future__ import annotations
 
+import functools
+import itertools
 import threading
 import uuid
 from contextlib import contextmanager
@@ -73,14 +115,21 @@ from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructType
 
 from ..session import materialize, per_gateway
 
 _MARK_SUCCESS = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-# (session uuid, qualified table path, keys) -> (key set, the content
-# summary of the table it covers)
-_KEY_SETS: dict[tuple, tuple[DataFrame, tuple[int, int, int]]] = {}
+# (session uuid, qualified table path, keys) -> (base key set or None,
+# the keys committed since the base was built or folded, the content
+# summary of the table both cover)
+_KEY_SETS: dict[tuple, tuple[DataFrame | None, frozenset, tuple[int, int, int]]] = {}
+# most keys the delta holds before it is folded into the base (module
+# docstring: how it was set)
+_DELTA_CAP = 1024
+# code points tried, in order, for the one that joins a delta's keys
+# into one string: the unit separator, then the private use areas
+_SEPARATORS = (range(0x1F, 0x20), range(0xE000, 0xF900), range(0xF0000, 0x110000))
 _KEY_SETS_LOCK = threading.Lock()
 _PRE_COMMIT: ContextVar[tuple[Callable[[], object], ...]] = ContextVar(
     "pre_commit_checks", default=()
@@ -108,8 +157,56 @@ def _path_class():
 
 
 @per_gateway
-def _row_count() -> Column:
-    return F.count(F.lit(1)).alias("rows")
+def _observed(key: str | None) -> tuple[Column, ...]:
+    """The staged write's metrics: its row count and, given a ``key``,
+    the set of that column's values it wrote."""
+    rows = F.count(F.lit(1)).alias("rows")
+    return (rows,) if key is None else (rows, F.collect_set(key).alias("keys"))
+
+
+@per_gateway
+def _key_columns(key: str) -> tuple[Column, Column]:
+    return F.col(key), F.isnull(key)
+
+
+@per_gateway
+def _splitter(sep: str):
+    """A JVM ``Pattern`` that splits on ``sep``."""
+    return SparkContext._jvm.java.util.regex.Pattern.compile(_regex(sep))
+
+
+@per_gateway
+def _array_seq():
+    return SparkContext._jvm.scala.collection.immutable.ArraySeq
+
+
+def _regex(sep: str) -> str:
+    return "\\x{%x}" % ord(sep)
+
+
+def _separator(values: frozenset[str]) -> str | None:
+    """A character that none of ``values`` contains; None if there is
+    none among ``_SEPARATORS``."""
+    used = set().union(*values)
+    return next((chr(c) for c in itertools.chain(*_SEPARATORS) if chr(c) not in used), None)
+
+
+def _not_in(key: str, values: frozenset[str], sep: str) -> Column:
+    """``isnull(key) OR NOT key IN (values)`` in a fixed number of py4j
+    calls, whatever the number of values: they cross as one string
+    joined on ``sep`` and split on the JVM."""
+    col, isnull = _key_columns(key)
+    jvalues = _splitter(sep).split(sep.join(values), -1)
+    listed = Column(col._jc.isin(_array_seq().unsafeWrapArray(jvalues)))
+    return isnull | ~listed
+
+
+def _key_rows(spark: SparkSession, key: str, values: frozenset[str], sep: str) -> DataFrame:
+    """``values`` as a one-column relation, built on the JVM: a one-row
+    range exploding the values' string split there (no Python worker, as
+    ``createDataFrame`` of a list would start)."""
+    joined = F.split(F.lit(sep.join(values)), _regex(sep), -1)
+    return spark.range(1).select(F.explode(joined).alias(key))
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -193,9 +290,10 @@ def idempotent_append(
 ) -> int:
     """Append only rows whose ``keys`` are not already in the sink.
 
-    Left-anti join against the table's key set: kept across calls while
-    the table is as this sink left it, else read back from the table
-    with the key types of ``df`` (no schema-inference job). This is the
+    Checked against the table's keys: the newest in the write's own
+    plan, the rest by a left-anti join, both kept across calls while the
+    table is as this sink left it, else read back from the table with
+    the key types of ``df`` (no schema-inference job). This is the
     Spark-idiomatic replacement for the reference's delete-after-load
     bookkeeping (bpi_crawler.py:37-41): retries and replays are safe
     because the second attempt appends zero rows. The batch runs once:
@@ -215,17 +313,25 @@ def idempotent_append(
     with _KEY_SETS_LOCK:
         known = _KEY_SETS.get(memo_key)
     key_schema = df.select(*keys).schema
-    if known is not None and known[1] == before:
-        key_set = known[0]
+    # the delta holds one plain string key; any other key shape folds on
+    # every commit
+    one_string = len(key_schema) == 1 and key_schema[0].dataType == StringType()
+    cap = _DELTA_CAP if one_string else 0
+    rescanned = False
+    if known is not None and known[2] == before:
+        base, delta = known[0], known[1]
     elif existed:
-        key_set = materialize(_read_keys(spark, key_schema, root.toString()), eager=False)
+        base = materialize(_read_keys(spark, key_schema, root.toString()), eager=False)
+        delta, rescanned = frozenset(), True
     else:
-        key_set = None
+        base, delta = None, frozenset()
     fresh = df.dropDuplicates(keys)
-    if key_set is not None:
-        fresh = fresh.join(key_set, on=keys, how="left_anti")
+    if delta:
+        fresh = fresh.where(_not_in(keys[0], delta, _separator(delta)))
+    if base is not None:
+        fresh = fresh.join(base, on=keys, how="left_anti")
     obs = Observation()
-    fresh = fresh.observe(obs, _row_count())
+    fresh = fresh.observe(obs, *_observed(keys[0] if cap else None))
     writer = fresh.write.mode("append").option(_MARK_SUCCESS, "false")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -239,11 +345,15 @@ def idempotent_append(
         except BaseException:
             entry = known  # nothing promoted: the table is as it was
             raise
-        n = obs.get["rows"]
+        metrics = obs.get
+        n = metrics["rows"]
+        # a scanned base is folded into one partition before it is kept
         if n:
-            entry = _commit(spark, fs, staging, root, key_set, before, key_schema)
-        elif key_set is not None and before is not None:
-            entry = (key_set, before)
+            written = frozenset(metrics.get("keys", ()))
+            fold_cap = 0 if rescanned else cap
+            entry = _commit(spark, fs, staging, root, base, delta, written, before, key_schema, fold_cap)
+        elif existed and before is not None:
+            entry = (_fold(base) if rescanned else base, delta, before)
     finally:
         fs.delete(staging, True)
         # a first append of no rows leaves no table behind
@@ -257,20 +367,32 @@ def idempotent_append(
     return n
 
 
-def _commit(spark, fs, staging, root, key_set, before, key_schema):
+def _commit(spark, fs, staging, root, base, delta, written, before, key_schema, cap):
     """Promote the staged batch into ``root``. Returns the key-set memo
-    entry for the table left behind: the key set grown by the promoted
-    files' keys, and ``before`` plus the staged files, the directories
-    made and their length. None when that sum is unknown."""
+    entry for the table left behind: ``delta`` grown by the ``written``
+    keys while that fits ``cap``, else ``delta`` and the promoted files'
+    keys folded into ``base``; and ``before`` plus the staged files, the
+    directories made and their length. None when that sum is unknown."""
     staged = _summary(fs, staging)
     files, made = _promote(fs, staging, root)
     fs.delete(staging, True)
     if before is None or staged[0] != len(files):  # hidden files stayed behind
         return None
-    added = _read_keys(spark, key_schema, *files, base=root.toString())
-    grown = added if key_set is None else key_set.unionByName(added)
     after = (before[0] + staged[0], before[1] + made, before[2] + staged[2])
-    return materialize(grown.coalesce(1), eager=False), after
+    grown = delta | written
+    if cap and len(grown) <= cap and _separator(grown) is not None:
+        return base, grown, after
+    added = [_read_keys(spark, key_schema, *files, base=root.toString())]
+    if delta:
+        added.append(_key_rows(spark, key_schema.names[0], delta, _separator(delta)))
+    return _fold(base, *added), frozenset(), after
+
+
+def _fold(base: DataFrame | None, *added: DataFrame) -> DataFrame:
+    """``base`` and ``added`` as one key relation of one partition,
+    lazily checkpointed: the next call's broadcast computes it."""
+    parts = [p for p in (base, *added) if p is not None]
+    return materialize(functools.reduce(DataFrame.unionByName, parts).coalesce(1), eager=False)
 
 
 def merge_upsert(

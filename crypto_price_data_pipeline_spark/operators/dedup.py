@@ -332,15 +332,13 @@ def _band_bucket_sql(num_hashes: int, bands: int) -> list[str]:
     """Per-band bucket expressions (SQL strings) over minhash_min_cols
     columns — ONE definition shared by every banding builder so bucket
     values stay bit-compatible across the plain postings table, the
-    firstband band-vector path and the stored streaming index."""
+    firstband band-vector path and the stored streaming index. The band's
+    minima are hashed as longs, with no per-minimum string conversion."""
     rows_per_band = num_hashes // bands
     return [
-        "xxhash64(concat_ws(',', "
-        + ", ".join(
-            f"cast(_m{b * rows_per_band + j} as string)"
-            for j in range(rows_per_band)
-        )
-        + "))"
+        "xxhash64("
+        + ", ".join(f"_m{b * rows_per_band + j}" for j in range(rows_per_band))
+        + ")"
         for b in range(bands)
     ]
 
@@ -354,8 +352,10 @@ def band_buckets_from_cols(
 ) -> DataFrame:
     """LSH band postings (_id, *keep_cols, band, bucket) from a
     :func:`minhash_min_cols` table. Bucket values are bit-compatible
-    with :func:`band_buckets` (same concat_ws(",") → xxhash64 of the
-    band's minima as strings), so postings from either builder join
+    with :func:`band_buckets` (xxhash64 over the band's minima as
+    longs; Spark hashes an array as the chain of its elements, so
+    ``xxhash64(_m0, _m1)`` equals ``xxhash64(array(_m0, _m1))``; pinned
+    in ``tests/test_properties.py``), so postings from either builder join
     against the same stored index (streaming/dedup_stream.py). No
     array materialization: each band's bucket hashes ``rows_per_band``
     plain columns directly, and the exploded structs are cheap scalar
@@ -401,13 +401,7 @@ def band_buckets(
                 lambda b: F.struct(
                     b.alias("band"),
                     F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice("_minhash", b * rows_per_band + 1, rows_per_band),
-                                lambda v: v.cast("string"),
-                            ),
-                        )
+                        F.slice("_minhash", b * rows_per_band + 1, rows_per_band)
                     ).alias("bucket"),
                 ),
             )

@@ -653,6 +653,31 @@ def test_minhash_builders_match_reference(spark, num_hashes):
     assert sigs == expected
 
 
+@pytest.mark.parametrize("num_hashes,bands", [(16, 4), (64, 16)])
+def test_band_buckets_agree_across_builders(spark, num_hashes, bands):
+    """band_buckets over minhash_signatures and band_buckets_from_cols
+    over minhash_min_cols give identical (id, band, bucket) rows for the
+    same documents: the stored streaming index and the batch postings
+    join on these buckets."""
+    from crypto_price_data_pipeline_spark.operators.dedup import (
+        band_buckets,
+        band_buckets_from_cols,
+        minhash_min_cols,
+        minhash_signatures,
+        with_shingles,
+    )
+
+    df = spark.createDataFrame(_MINHASH_DOCS, "doc_id long, text string")
+    sig = minhash_signatures(df, "doc_id", "text", num_hashes, 3).localCheckpoint(eager=True)
+    mins = minhash_min_cols(with_shingles(df, "doc_id", "text", 3), "doc_id", num_hashes, 42)
+    from_sig = sorted(map(tuple, band_buckets(sig, "doc_id", num_hashes, bands).collect()))
+    from_cols = sorted(
+        map(tuple, band_buckets_from_cols(mins, "doc_id", num_hashes, bands).collect())
+    )
+    assert len(from_sig) == len(_MINHASH_DOCS) * bands
+    assert from_sig == from_cols
+
+
 @pytest.mark.parametrize("num_hashes", [0, 2**32 + 1])
 def test_minhash_builders_reject_overflowing_num_hashes(num_hashes):
     """The overflow bound is checked on the driver before anything is

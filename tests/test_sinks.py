@@ -1,7 +1,8 @@
-"""``idempotent_append``'s key set: a repeat call reads only the files
-the previous call promoted, another writer's append is seen, and a
-commit that fails midway drops the key set so the replay lands each row
-once."""
+"""``idempotent_append``'s key set: a repeat call reads no table file
+(or, for a key with no delta, only the files the previous call
+promoted), the delta folds into the base past its cap, another writer's
+append is seen, and a commit that fails midway drops the key set so the
+replay lands each row once."""
 
 from __future__ import annotations
 
@@ -36,10 +37,12 @@ def _bytes_read(spark):
     return stats.getLong("bytesRead") if stats is not None else 0
 
 
-def _append_reading(spark, df, path):
-    """(rows written, bytes of table files read) of one append."""
+def _append_reading(spark, df, path, keys=("job_id",)):
+    """(rows written, bytes of table files read) of one append. A small
+    parquet file's footer is read twice, by the scan's planning and by
+    its reader, so a read of some files can exceed their size."""
     before = _bytes_read(spark)
-    n = sinks.idempotent_append(spark, df, path, keys=["job_id"])
+    n = sinks.idempotent_append(spark, df, path, keys=list(keys))
     return n, _bytes_read(spark) - before
 
 
@@ -47,24 +50,62 @@ def _ids(spark, path):
     return sorted(r["id"] for r in spark.read.parquet(path).select("id").collect())
 
 
-def test_repeat_call_reads_only_the_files_it_promoted(spark, tmp_path):
+def test_repeat_call_reads_only_the_files_it_promoted(spark, tmp_path, monkeypatch):
     wh = str(tmp_path / "warehouse")
     _rows(spark, 0, 2000).repartition(200).write.parquet(wh)
     files = set(_data_files(wh))
     assert len(files) == 200
 
-    # the first call has no key set yet: it reads every file's keys
+    # the first call has no key set yet: it reads every file's keys and
+    # folds them with the keys of the files it promoted
     n, scanned = _append_reading(spark, _rows(spark, 1990, 2010), wh)
+    assert n == 10 and scanned > 0
+    (memo_key,) = [k for k in sinks._KEY_SETS if k[1].endswith(wh)]
+    promoted = set(_data_files(wh)) - files
+    # the next call's broadcast computes that fold, reading just those files
+    n, read = _append_reading(spark, _rows(spark, 2005, 2020), wh)
+    assert n == 10
+    assert 0 < read <= 2 * sum(os.path.getsize(f) for f in promoted) < scanned
+    for lo in (2020, 2030):
+        n, read = _append_reading(spark, _rows(spark, lo - 5, lo + 10), wh)
+        assert n == 10
+        # the keys committed since the fold are checked in the write's
+        # own plan, and each commit's keys come from the write's
+        # observation: no table file is read
+        assert read == 0
+    # past the cap the commit folds the delta and the files it promoted
+    # into the base: the next call's broadcast reads just those files
+    monkeypatch.setattr(sinks, "_DELTA_CAP", 25)
+    files = set(_data_files(wh))
+    n, read = _append_reading(spark, _rows(spark, 2035, 2050), wh)
+    assert n == 10 and read == 0
+    assert sinks._KEY_SETS[memo_key][1] == frozenset()  # folded
+    folded = set(_data_files(wh)) - files
+    n, read = _append_reading(spark, _rows(spark, 2045, 2060), wh)
+    assert n == 10
+    assert 0 < read <= 2 * sum(os.path.getsize(f) for f in folded)
+    n, read = _append_reading(spark, _rows(spark, 2055, 2070), wh)
+    assert n == 10 and read == 0
+    assert len(sinks._KEY_SETS[memo_key][1]) == 20
+    assert _ids(spark, wh) == list(range(2070))
+
+
+def test_repeat_call_on_a_long_key_reads_only_the_files_it_promoted(spark, tmp_path):
+    """A key that is not one string column has no delta: each commit
+    folds the promoted files' keys into the base, and the next call's
+    broadcast reads just those files."""
+    wh = str(tmp_path / "warehouse")
+    _rows(spark, 0, 2000).repartition(200).write.parquet(wh)
+    files = set(_data_files(wh))
+
+    n, scanned = _append_reading(spark, _rows(spark, 1990, 2010), wh, keys=["id"])
     assert n == 10
     previous = set(_data_files(wh)) - files
     for lo in (2010, 2020, 2030):
         files = set(_data_files(wh))
-        n, read = _append_reading(spark, _rows(spark, lo - 5, lo + 10), wh)
+        n, read = _append_reading(spark, _rows(spark, lo - 5, lo + 10), wh, keys=["id"])
         assert n == 10
-        # the key set already held the rest of the table: only the files
-        # the previous call promoted were read
-        assert 0 < read <= sum(os.path.getsize(f) for f in previous)
-        assert read * 100 < scanned
+        assert 0 < read <= 2 * sum(os.path.getsize(f) for f in previous) < scanned
         previous = set(_data_files(wh)) - files
     assert _ids(spark, wh) == list(range(2040))
 
@@ -75,7 +116,7 @@ def test_another_writers_append_is_seen(spark, tmp_path):
     assert sinks.idempotent_append(spark, _rows(spark, 10, 20), wh, keys=["job_id"]) == 10
     (memo_key,) = [k for k in sinks._KEY_SETS if k[1].endswith(wh)]
     fs, root = sinks._hadoop_path(spark, wh)
-    assert sinks._KEY_SETS[memo_key][1] == sinks._summary(fs, root)
+    assert sinks._KEY_SETS[memo_key][2] == sinks._summary(fs, root)
     # a plain append by another writer, between two calls of this sink
     sinks.append_parquet(_rows(spark, 20, 25), wh)
     assert sinks.idempotent_append(spark, _rows(spark, 15, 30), wh, keys=["job_id"]) == 5
@@ -126,7 +167,7 @@ def test_failed_promote_drops_the_key_set_and_replay_lands_once(spark, tmp_path,
     more = _rows(spark, 25, 30, parts=("x", "y", "z"))
     assert sinks.idempotent_append(spark, more, wh, keys=["job_id"], partition_by=["p"]) == 5
     fs, root = sinks._hadoop_path(spark, wh)
-    assert sinks._KEY_SETS[memo_key][1] == sinks._summary(fs, root)
+    assert sinks._KEY_SETS[memo_key][2] == sinks._summary(fs, root)
 
 
 def test_failing_pre_commit_check_promotes_nothing(spark, tmp_path):
@@ -182,3 +223,148 @@ def test_concurrent_appends_leave_no_stale_key_set(spark, tmp_path):
     for b in batches:
         assert sinks.idempotent_append(spark, b, wh, keys=["job_id"]) == 0
     assert _ids(spark, wh) == list(range(130))
+
+
+def _entry(wh):
+    (memo_key,) = [k for k in sinks._KEY_SETS if k[1].endswith(wh)]
+    return sinks._KEY_SETS[memo_key]
+
+
+def test_appends_across_folds_land_every_row_once(spark, tmp_path, monkeypatch):
+    """With the cap at 4, overlapping batches cross several folds: every
+    call lands just its new rows, the base and the delta together hold
+    the table's keys, and no key is in the base twice or in both."""
+    monkeypatch.setattr(sinks, "_DELTA_CAP", 4)
+    wh = str(tmp_path / "warehouse")
+    folds = 0
+    for lo in range(0, 30, 3):
+        assert sinks.idempotent_append(spark, _rows(spark, max(lo - 2, 0), lo + 3), wh, keys=["job_id"]) == 3
+        base, delta, _ = _entry(wh)
+        assert len(delta) <= 4
+        folds += not delta
+        in_base = [r["job_id"] for r in base.collect()] if base is not None else []
+        assert len(in_base) == len(set(in_base))
+        assert not set(in_base) & delta
+        table = {r["job_id"] for r in spark.read.parquet(wh).select("job_id").collect()}
+        assert set(in_base) | delta == table
+    assert folds >= 4
+    assert _ids(spark, wh) == list(range(30))
+
+
+def test_null_key_rows_append_as_before(spark, tmp_path, monkeypatch):
+    """A row with a NULL key passes the delta check, as it passes the
+    anti-join: each replay appends it again, with or without a base."""
+    wh = str(tmp_path / "warehouse")
+    batch = _rows(spark, 0, 3).unionByName(
+        spark.range(3, 4).select(F.lit(None).cast("string").alias("job_id"), "id", F.lit("x").alias("p"))
+    )
+    assert sinks.idempotent_append(spark, batch, wh, keys=["job_id"]) == 4
+    assert sinks.idempotent_append(spark, batch, wh, keys=["job_id"]) == 1  # delta only
+    assert _entry(wh)[0] is None
+    monkeypatch.setattr(sinks, "_DELTA_CAP", 1)
+    assert sinks.idempotent_append(spark, batch, wh, keys=["job_id"]) == 1  # folds
+    assert _entry(wh)[0] is not None and not _entry(wh)[1]
+    assert sinks.idempotent_append(spark, batch, wh, keys=["job_id"]) == 1  # base only
+    assert _ids(spark, wh) == [0, 1, 2, 3, 3, 3, 3]
+
+
+_ODD_KEYS = ["", "\x1f", "a\x1fb", "\x1f\x1f", "\ue000", "x\ue001", "\n", "\\", "$", "(", ",", "é", "\U0001F600"]
+
+
+def test_keys_with_separator_characters_round_trip(spark, tmp_path, monkeypatch):
+    """Keys holding the first separator candidates, regex metacharacters,
+    an empty string and a non-BMP character cross to the JVM exactly:
+    the replay lands nothing, before and after a fold."""
+    wh = str(tmp_path / "warehouse")
+    batch = spark.createDataFrame([(k, i) for i, k in enumerate(_ODD_KEYS)], "job_id string, id long")
+    assert sinks.idempotent_append(spark, batch, wh, keys=["job_id"]) == len(_ODD_KEYS)
+    assert _entry(wh)[1] == frozenset(_ODD_KEYS)
+    assert sinks.idempotent_append(spark, batch, wh, keys=["job_id"]) == 0
+    monkeypatch.setattr(sinks, "_DELTA_CAP", 4)
+    more = spark.createDataFrame([("y", 99)], "job_id string, id long")
+    assert sinks.idempotent_append(spark, more, wh, keys=["job_id"]) == 1  # folds
+    base, delta, _ = _entry(wh)
+    assert delta == frozenset()
+    assert sorted(r["job_id"] for r in base.collect()) == sorted([*_ODD_KEYS, "y"])
+    assert sinks.idempotent_append(spark, batch.unionByName(more), wh, keys=["job_id"]) == 0
+    assert sorted(r["job_id"] for r in spark.read.parquet(wh).collect()) == sorted([*_ODD_KEYS, "y"])
+
+
+def test_keys_using_every_separator_fold(spark, tmp_path, monkeypatch):
+    """A commit whose keys hold every separator candidate folds them
+    into the base, whatever the cap."""
+    monkeypatch.setattr(sinks, "_SEPARATORS", (range(0x1F, 0x20),))
+    wh = str(tmp_path / "warehouse")
+    batch = spark.createDataFrame([("a", 0), ("b", 1)], "job_id string, id long")
+    assert sinks.idempotent_append(spark, batch, wh, keys=["job_id"]) == 2
+    assert _entry(wh)[1] == frozenset(["a", "b"])
+    more = spark.createDataFrame([("c\x1f", 2)], "job_id string, id long")
+    assert sinks.idempotent_append(spark, more, wh, keys=["job_id"]) == 1
+    base, delta, _ = _entry(wh)
+    assert delta == frozenset()
+    assert sorted(r["job_id"] for r in base.collect()) == ["a", "b", "c\x1f"]
+    assert sinks.idempotent_append(spark, batch.unionByName(more), wh, keys=["job_id"]) == 0
+    assert _ids(spark, wh) == [0, 1, 2]
+
+
+def test_repeat_call_runs_two_jobs(spark, tmp_path):
+    """Under the cap a repeat call has no base to broadcast: it runs the
+    dropDuplicates shuffle's map stage and the staged write."""
+    wh = str(tmp_path / "warehouse")
+    for lo in (0, 10):
+        sinks.idempotent_append(spark, _rows(spark, lo, lo + 10), wh, keys=["job_id"])
+    sc, group = spark.sparkContext, f"repeat-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        assert sinks.idempotent_append(spark, _rows(spark, 15, 30), wh, keys=["job_id"]) == 10
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
+def _write_plan_sizes(spark, since):
+    """(execution id, length) of the stored physical plan description of
+    every write execution after ``since``."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() > since:
+            plan = e.physicalPlanDescription()
+            if "InsertIntoHadoopFsRelationCommand" in plan:
+                out.append((e.executionId(), len(plan)))
+    return out
+
+
+def test_write_plan_stays_bounded_by_the_cap(spark, tmp_path):
+    """After ten times the cap of keys, the plan description stored for
+    each write is bounded by the cap: the delta check lists at most
+    ``_DELTA_CAP`` keys, never the whole table."""
+    cap, wh = sinks._DELTA_CAP, str(tmp_path / "warehouse")
+    chunk = cap - 24
+    sinks.idempotent_append(spark, _rows(spark, 0, 10), wh, keys=["job_id"])
+    since, bare = _write_plan_sizes(spark, -1)[-1]
+    for lo in range(10, 10 * cap, chunk):
+        sinks.idempotent_append(spark, _rows(spark, lo, lo + chunk), wh, keys=["job_id"])
+    sizes = _write_plan_sizes(spark, since)
+    assert len(sizes) == len(range(10, 10 * cap, chunk))
+    # a listed key is printed at most 4 times, as 32 hex digits and a separator
+    assert max(n for _, n in sizes) < bare + 4 * cap * (32 + 2)
+    assert spark.read.parquet(wh).count() == 10 + len(sizes) * chunk
+
+
+def test_scanned_base_is_kept_as_one_partition(spark, tmp_path):
+    """A base scanned from a table of many files is folded into one
+    partition before it is kept, also by a call that writes no row, so
+    each later broadcast runs it as one task, not one per file split."""
+    wh = str(tmp_path / "warehouse")
+    _rows(spark, 0, 500).repartition(50).write.parquet(wh)
+    scan = sinks._read_keys(spark, _rows(spark, 0, 1).select("job_id").schema, wh)
+    assert scan._jdf.rdd().getNumPartitions() > 1
+    assert sinks.idempotent_append(spark, _rows(spark, 0, 10), wh, keys=["job_id"]) == 0
+    assert _entry(wh)[0]._jdf.rdd().getNumPartitions() == 1
+    (memo_key,) = [k for k in sinks._KEY_SETS if k[1].endswith(wh)]
+    del sinks._KEY_SETS[memo_key]  # the next call scans again
+    assert sinks.idempotent_append(spark, _rows(spark, 495, 505), wh, keys=["job_id"]) == 5
+    assert _entry(wh)[0]._jdf.rdd().getNumPartitions() == 1
+    assert _ids(spark, wh) == list(range(505))
