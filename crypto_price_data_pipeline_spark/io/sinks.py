@@ -42,47 +42,58 @@ count, directory count and length.
 - The delta is a driver-side ``frozenset`` of the keys committed since
   the base was built or last folded, at most ``_DELTA_CAP`` of them. The
   write's own plan checks it as ``isnull(k) OR NOT k IN (...)``, so it
-  costs no job. The keys cross to the JVM as one string, joined on a
-  character none of them contains, split there and handed to
-  ``Column.isin``: a fixed number of py4j calls, where
-  ``F.col(k).isin(list)`` sends one per key. A commit whose keys leave
-  no such character folds. A NULL key passes the check, as it passes
-  the anti-join.
+  costs no job. The keys cross to the JVM as one string joined on
+  ``\x1f`` and split there into an array, which feeds ``Column.isin``
+  (and the fold's rows): a fixed number of py4j calls, where
+  ``F.col(k).isin(list)`` sends one per key. No delta key holds
+  ``\x1f``; a commit whose keys do folds. A NULL key passes the check,
+  as it passes the anti-join.
 
 Each commit learns its keys from the staged write's ``Observation``,
 which collects the key's set next to the row count: no file is read
-and no job added. A call uses the tiers only when the summary at its
-start equals the one recorded after this sink's last commit; otherwise
-it rebuilds the base from a scan of the table and starts an empty delta.
-A first append to a missing table starts with neither.
+and no job added. The set comes back only for a write of at most
+``_DELTA_CAP`` rows (the executors still build it for any batch, one
+entry per distinct key, as the write runs); a larger write folds. A
+call uses the tiers only when the summary at its start equals the one
+recorded after this sink's last commit. Otherwise it reads the table
+back: a table of at most ``_DELTA_CAP`` files and keys becomes the
+delta, collected with a limit that stops the scan past the cap, and
+any other gets a base scanned from it and an empty delta. A first
+append to a missing table starts with neither.
 
 The fold. A commit whose keys would take the delta past the cap folds
 instead: the base, the delta's keys and the keys of the files it just
 promoted are unioned, ``coalesce(1)`` and lazily checkpointed, and the
 delta starts empty. The delta's rows are made on the JVM, by exploding
-its joined string over a one-row range (``createDataFrame`` of a Python
-list would start a Python worker); the new keys are read from the
-promoted files, so a large batch never becomes a literal in a plan.
-Nothing computes the fold then: the next call's broadcast does, reading
-one trigger's files. A call that rescanned folds as it commits, even
-with no rows, so the base kept is one partition, not a partition per
-file split of the scan that each later broadcast would run as a task.
-The delta holds one plain string key; any other key shape gets a cap
-of 0 and folds on every commit.
+its array over a one-row range (``createDataFrame`` of a Python list
+would start a Python worker); the new keys are read from the promoted
+files. Nothing computes the fold then: the next call's broadcast does,
+reading one trigger's files. A call that scanned a base folds as it
+commits, even with no rows, so the base kept is one partition, not a
+partition per file split of the scan that each later broadcast would
+run as a task. The delta holds one plain string key; any other key
+shape gets a cap of 0 and folds on every commit.
 
 Under the cap a call runs two Spark jobs: the ``dropDuplicates``
-shuffle's map stage and the staged write. The cap is where building the
-check costs what the broadcast job costs. With the benchmark's JVM
-flags (C1, serial GC) at 4 cores, a 10-row staged write of 32-character
-keys took, in CPU over the write alone, 50 ms more with a 512-key check,
-80 ms with 1,024, 120 ms with 2,048 and 210 ms with 4,096, against
-40-70 ms more for the anti-join against a checkpointed base of the same
-size. The stored plan description lists each checked key about three
-times, some 100 bytes per 32-character key. There is no single
-whole-table ``IN`` check: at 40k keys it took 0.7 s to build and 0.45 s
-to run, and every SQL execution stored a 920 KB plan description, of
-which the status store keeps 1,000. The cap keeps the plan text and its
-analysis bounded.
+shuffle's map stage and the staged write. The cap is set by CPU and by
+driver memory, with the benchmark's JVM flags (C1, serial GC) at 4
+cores and keys of 32 characters. CPU: over a 10-row staged write, a
+check of 128, 256, 512 and 1,024 keys cost 10, 20, 40 and 70 ms more,
+and the anti-join against a checkpointed base of the same size 30-40
+ms more (medians of 15, 10 ms resolution); 256 is the largest that
+costs less than the broadcast. Memory: the SQL status store keeps the
+plan text of its last 1,000 executions
+(``spark.sql.ui.retainedExecutions``), the plan description and the
+plan graph's node descriptions, and a write lists each checked key
+twice there, five times once a base exists (the optimizer copies the
+check onto the base's side of the anti-join). At the cap of 256 a write
+kept up to 21 KB of text, 50 KB with a base; 100 writes of 8 new keys
+each (three folds) kept 22.5 KB per execution, 22 MB per 1,000, and at
+most 50 MB if every kept execution were such a write at the cap.
+There is no single whole-table ``IN`` check: at 40k keys it took 0.7 s
+to build and 0.45 s to run, and every SQL execution stored a 920 KB
+plan description. The cap keeps the plan text and its analysis
+bounded.
 
 The recorded summary is the table this sink left: the summary at the
 start plus the promoted files, their length and the directories made
@@ -104,7 +115,6 @@ before, both may append a key that neither had seen.
 from __future__ import annotations
 
 import functools
-import itertools
 import threading
 import uuid
 from contextlib import contextmanager
@@ -126,10 +136,9 @@ _MARK_SUCCESS = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 _KEY_SETS: dict[tuple, tuple[DataFrame | None, frozenset, tuple[int, int, int]]] = {}
 # most keys the delta holds before it is folded into the base (module
 # docstring: how it was set)
-_DELTA_CAP = 1024
-# code points tried, in order, for the one that joins a delta's keys
-# into one string: the unit separator, then the private use areas
-_SEPARATORS = (range(0x1F, 0x20), range(0xE000, 0xF900), range(0xF0000, 0x110000))
+_DELTA_CAP = 256
+# joins a delta's keys into one string; no delta key holds it
+_SEP = "\x1f"
 _KEY_SETS_LOCK = threading.Lock()
 _PRE_COMMIT: ContextVar[tuple[Callable[[], object], ...]] = ContextVar(
     "pre_commit_checks", default=()
@@ -157,11 +166,15 @@ def _path_class():
 
 
 @per_gateway
-def _observed(key: str | None) -> tuple[Column, ...]:
+def _observed(key: str | None, cap: int) -> tuple[Column, ...]:
     """The staged write's metrics: its row count and, given a ``key``,
-    the set of that column's values it wrote."""
-    rows = F.count(F.lit(1)).alias("rows")
-    return (rows,) if key is None else (rows, F.collect_set(key).alias("keys"))
+    the set of that column's values it wrote when that is at most
+    ``cap`` rows (else null, so no more than ``cap`` keys cross to the
+    driver and to Python)."""
+    rows = F.count(F.lit(1))
+    if key is None:
+        return (rows.alias("rows"),)
+    return rows.alias("rows"), F.when(rows <= cap, F.collect_set(key)).alias("keys")
 
 
 @per_gateway
@@ -170,9 +183,9 @@ def _key_columns(key: str) -> tuple[Column, Column]:
 
 
 @per_gateway
-def _splitter(sep: str):
-    """A JVM ``Pattern`` that splits on ``sep``."""
-    return SparkContext._jvm.java.util.regex.Pattern.compile(_regex(sep))
+def _splitter():
+    """A JVM ``Pattern`` that splits on ``_SEP``."""
+    return SparkContext._jvm.java.util.regex.Pattern.compile(_SEP)
 
 
 @per_gateway
@@ -180,33 +193,32 @@ def _array_seq():
     return SparkContext._jvm.scala.collection.immutable.ArraySeq
 
 
-def _regex(sep: str) -> str:
-    return "\\x{%x}" % ord(sep)
+def _split(values: frozenset[str]):
+    """``values`` as a JVM ``String[]``, in two py4j calls whatever their
+    number: they cross as one string joined on ``_SEP``."""
+    return _splitter().split(_SEP.join(values), -1)
 
 
-def _separator(values: frozenset[str]) -> str | None:
-    """A character that none of ``values`` contains; None if there is
-    none among ``_SEPARATORS``."""
-    used = set().union(*values)
-    return next((chr(c) for c in itertools.chain(*_SEPARATORS) if chr(c) not in used), None)
-
-
-def _not_in(key: str, values: frozenset[str], sep: str) -> Column:
-    """``isnull(key) OR NOT key IN (values)`` in a fixed number of py4j
-    calls, whatever the number of values: they cross as one string
-    joined on ``sep`` and split on the JVM."""
+def _not_in(key: str, values: frozenset[str]) -> Column:
+    """``isnull(key) OR NOT key IN (values)``."""
     col, isnull = _key_columns(key)
-    jvalues = _splitter(sep).split(sep.join(values), -1)
-    listed = Column(col._jc.isin(_array_seq().unsafeWrapArray(jvalues)))
-    return isnull | ~listed
+    return isnull | ~Column(col._jc.isin(_array_seq().unsafeWrapArray(_split(values))))
 
 
-def _key_rows(spark: SparkSession, key: str, values: frozenset[str], sep: str) -> DataFrame:
+def _key_rows(spark: SparkSession, key: str, values: frozenset[str]) -> DataFrame:
     """``values`` as a one-column relation, built on the JVM: a one-row
-    range exploding the values' string split there (no Python worker, as
+    range exploding their array literal (no Python worker, as
     ``createDataFrame`` of a list would start)."""
-    joined = F.split(F.lit(sep.join(values)), _regex(sep), -1)
-    return spark.range(1).select(F.explode(joined).alias(key))
+    return spark.range(1).select(F.explode(F.lit(_split(values))).alias(key))
+
+
+def _scanned_keys(scan: DataFrame, key: str, cap: int) -> frozenset[str] | None:
+    """The non-NULL ``key`` values of ``scan`` when they are at most
+    ``cap`` rows and none holds ``_SEP``, else None. The collect stops
+    reading the table once it has ``cap + 1`` rows."""
+    rows = scan.where(F.col(key).isNotNull()).limit(cap + 1).collect()
+    found = frozenset(r[0] for r in rows)
+    return found if len(rows) <= cap and not any(_SEP in k for k in found) else None
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -317,21 +329,28 @@ def idempotent_append(
     # every commit
     one_string = len(key_schema) == 1 and key_schema[0].dataType == StringType()
     cap = _DELTA_CAP if one_string else 0
-    rescanned = False
+    scanned_base = False
     if known is not None and known[2] == before:
         base, delta = known[0], known[1]
     elif existed:
-        base = materialize(_read_keys(spark, key_schema, root.toString()), eager=False)
-        delta, rescanned = frozenset(), True
+        scan = _read_keys(spark, key_schema, root.toString())
+        # a table of at most cap files may hold few enough keys for the
+        # delta alone; a larger one, or a larger key set, gets a base
+        small = cap and before is not None and before[0] <= cap
+        delta = _scanned_keys(scan, keys[0], cap) if small else None
+        scanned_base = delta is None
+        base = materialize(scan, eager=False) if scanned_base else None
+        delta = delta or frozenset()
     else:
         base, delta = None, frozenset()
     fresh = df.dropDuplicates(keys)
     if delta:
-        fresh = fresh.where(_not_in(keys[0], delta, _separator(delta)))
+        fresh = fresh.where(_not_in(keys[0], delta))
     if base is not None:
         fresh = fresh.join(base, on=keys, how="left_anti")
     obs = Observation()
-    fresh = fresh.observe(obs, *_observed(keys[0] if cap else None))
+    # a call that scanned a base folds as it commits: its keys are not needed
+    fresh = fresh.observe(obs, *_observed(keys[0] if cap and not scanned_base else None, cap))
     writer = fresh.write.mode("append").option(_MARK_SUCCESS, "false")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -347,13 +366,13 @@ def idempotent_append(
             raise
         metrics = obs.get
         n = metrics["rows"]
-        # a scanned base is folded into one partition before it is kept
         if n:
-            written = frozenset(metrics.get("keys", ()))
-            fold_cap = 0 if rescanned else cap
-            entry = _commit(spark, fs, staging, root, base, delta, written, before, key_schema, fold_cap)
+            written = metrics.get("keys")  # None past the cap
+            written = written if written is None else frozenset(written)
+            entry = _commit(spark, fs, staging, root, base, delta, written, before, key_schema, cap)
         elif existed and before is not None:
-            entry = (_fold(base) if rescanned else base, delta, before)
+            # a scanned base is folded into one partition before it is kept
+            entry = (_fold(base) if scanned_base else base, delta, before)
     finally:
         fs.delete(staging, True)
         # a first append of no rows leaves no table behind
@@ -370,21 +389,21 @@ def idempotent_append(
 def _commit(spark, fs, staging, root, base, delta, written, before, key_schema, cap):
     """Promote the staged batch into ``root``. Returns the key-set memo
     entry for the table left behind: ``delta`` grown by the ``written``
-    keys while that fits ``cap``, else ``delta`` and the promoted files'
-    keys folded into ``base``; and ``before`` plus the staged files, the
-    directories made and their length. None when that sum is unknown."""
+    keys while that fits ``cap`` (``written`` is None when they were not
+    collected), else ``delta`` and the promoted files' keys folded into
+    ``base``; and ``before`` plus the staged files, the directories made
+    and their length. None when that sum is unknown."""
     staged = _summary(fs, staging)
     files, made = _promote(fs, staging, root)
     fs.delete(staging, True)
     if before is None or staged[0] != len(files):  # hidden files stayed behind
         return None
     after = (before[0] + staged[0], before[1] + made, before[2] + staged[2])
-    grown = delta | written
-    if cap and len(grown) <= cap and _separator(grown) is not None:
-        return base, grown, after
+    if written is not None and len(delta | written) <= cap and not any(_SEP in k for k in written):
+        return base, delta | written, after
     added = [_read_keys(spark, key_schema, *files, base=root.toString())]
     if delta:
-        added.append(_key_rows(spark, key_schema.names[0], delta, _separator(delta)))
+        added.append(_key_rows(spark, key_schema.names[0], delta))
     return _fold(base, *added), frozenset(), after
 
 

@@ -60,6 +60,11 @@ ALLOWED = {
     "pipeline/rates.py": [
         'rows = fx_rates.where(pair).select("rate_date", "rate").collect()',
     ],
+    # a read-back ingest table's keys, kept as the sink's delta only when
+    # they fit its cap: at most _DELTA_CAP + 1 rows (the preceding limit)
+    "io/sinks.py": [
+        "rows = scan.where(F.col(key).isNotNull()).limit(cap + 1).collect()",
+    ],
     # the stored bpe_merges artifact read as expression literals:
     # vocab-bounded by construction (<= n_merges = 8 rows)
     "queries_ext37.py": [

@@ -1,8 +1,9 @@
 """``idempotent_append``'s key set: a repeat call reads no table file
 (or, for a key with no delta, only the files the previous call
-promoted), the delta folds into the base past its cap, another writer's
-append is seen, and a commit that fails midway drops the key set so the
-replay lands each row once."""
+promoted), the delta folds into the base past its cap, a small table
+read back starts as a delta, another writer's append is seen, and a
+commit that fails midway drops the key set so the replay lands each row
+once."""
 
 from __future__ import annotations
 
@@ -65,7 +66,8 @@ def test_repeat_call_reads_only_the_files_it_promoted(spark, tmp_path, monkeypat
     # the next call's broadcast computes that fold, reading just those files
     n, read = _append_reading(spark, _rows(spark, 2005, 2020), wh)
     assert n == 10
-    assert 0 < read <= 2 * sum(os.path.getsize(f) for f in promoted) < scanned
+    assert 0 < read <= sum(os.path.getsize(f) for f in promoted)
+    assert read * 100 < scanned
     for lo in (2020, 2030):
         n, read = _append_reading(spark, _rows(spark, lo - 5, lo + 10), wh)
         assert n == 10
@@ -83,7 +85,8 @@ def test_repeat_call_reads_only_the_files_it_promoted(spark, tmp_path, monkeypat
     folded = set(_data_files(wh)) - files
     n, read = _append_reading(spark, _rows(spark, 2045, 2060), wh)
     assert n == 10
-    assert 0 < read <= 2 * sum(os.path.getsize(f) for f in folded)
+    assert 0 < read <= sum(os.path.getsize(f) for f in folded)
+    assert read * 100 < scanned
     n, read = _append_reading(spark, _rows(spark, 2055, 2070), wh)
     assert n == 10 and read == 0
     assert len(sinks._KEY_SETS[memo_key][1]) == 20
@@ -268,43 +271,89 @@ def test_null_key_rows_append_as_before(spark, tmp_path, monkeypatch):
     assert _ids(spark, wh) == [0, 1, 2, 3, 3, 3, 3]
 
 
-_ODD_KEYS = ["", "\x1f", "a\x1fb", "\x1f\x1f", "\ue000", "x\ue001", "\n", "\\", "$", "(", ",", "é", "\U0001F600"]
+_ODD_KEYS = ["", "\ue000", "x\ue001", "\n", "\\", "$", "(", ",", "|", "é", "\U0001F600"]
 
 
-def test_keys_with_separator_characters_round_trip(spark, tmp_path, monkeypatch):
-    """Keys holding the first separator candidates, regex metacharacters,
-    an empty string and a non-BMP character cross to the JVM exactly:
-    the replay lands nothing, before and after a fold."""
+def test_odd_keys_round_trip_and_separator_keys_fold(spark, tmp_path, monkeypatch):
+    """Keys holding regex metacharacters, an empty string and a
+    non-BMP character cross to the JVM exactly: the replay lands
+    nothing, before and after a fold. A commit whose keys hold the
+    separator folds them into the base, whatever the cap."""
     wh = str(tmp_path / "warehouse")
     batch = spark.createDataFrame([(k, i) for i, k in enumerate(_ODD_KEYS)], "job_id string, id long")
     assert sinks.idempotent_append(spark, batch, wh, keys=["job_id"]) == len(_ODD_KEYS)
     assert _entry(wh)[1] == frozenset(_ODD_KEYS)
     assert sinks.idempotent_append(spark, batch, wh, keys=["job_id"]) == 0
+    sep = spark.createDataFrame([("\x1f", 90), ("a\x1fb", 91)], "job_id string, id long")
+    assert sinks.idempotent_append(spark, sep, wh, keys=["job_id"]) == 2  # folds
+    base, delta, _ = _entry(wh)
+    assert delta == frozenset()
+    assert sorted(r["job_id"] for r in base.collect()) == sorted([*_ODD_KEYS, "\x1f", "a\x1fb"])
+    assert sinks.idempotent_append(spark, batch.unionByName(sep), wh, keys=["job_id"]) == 0
     monkeypatch.setattr(sinks, "_DELTA_CAP", 4)
-    more = spark.createDataFrame([("y", 99)], "job_id string, id long")
-    assert sinks.idempotent_append(spark, more, wh, keys=["job_id"]) == 1  # folds
-    base, delta, _ = _entry(wh)
-    assert delta == frozenset()
-    assert sorted(r["job_id"] for r in base.collect()) == sorted([*_ODD_KEYS, "y"])
-    assert sinks.idempotent_append(spark, batch.unionByName(more), wh, keys=["job_id"]) == 0
-    assert sorted(r["job_id"] for r in spark.read.parquet(wh).collect()) == sorted([*_ODD_KEYS, "y"])
+    more = spark.createDataFrame([(k + "!", 100 + i) for i, k in enumerate(_ODD_KEYS)], "job_id string, id long")
+    assert sinks.idempotent_append(spark, more.limit(3), wh, keys=["job_id"]) == 3  # delta
+    assert sinks.idempotent_append(spark, more, wh, keys=["job_id"]) == len(_ODD_KEYS) - 3  # folds
+    everything = batch.unionByName(sep).unionByName(more)
+    assert sinks.idempotent_append(spark, everything, wh, keys=["job_id"]) == 0
+    keys = sorted(r["job_id"] for r in everything.collect())
+    assert sorted(r["job_id"] for r in _entry(wh)[0].collect()) == keys
+    assert sorted(r["job_id"] for r in spark.read.parquet(wh).collect()) == keys
 
 
-def test_keys_using_every_separator_fold(spark, tmp_path, monkeypatch):
-    """A commit whose keys hold every separator candidate folds them
-    into the base, whatever the cap."""
-    monkeypatch.setattr(sinks, "_SEPARATORS", (range(0x1F, 0x20),))
+def test_batch_past_the_cap_folds_without_collecting_its_keys(spark, tmp_path, monkeypatch):
+    """A batch of more rows than the cap gets no key list back from the
+    write's observation: it folds, reading its keys from its files."""
+    monkeypatch.setattr(sinks, "_DELTA_CAP", 4)
+    seen = []
+
+    class Recording(sinks.Observation):
+        @property
+        def get(self):
+            metrics = super().get
+            seen.append(metrics)
+            return metrics
+
+    monkeypatch.setattr(sinks, "Observation", Recording)
     wh = str(tmp_path / "warehouse")
-    batch = spark.createDataFrame([("a", 0), ("b", 1)], "job_id string, id long")
-    assert sinks.idempotent_append(spark, batch, wh, keys=["job_id"]) == 2
-    assert _entry(wh)[1] == frozenset(["a", "b"])
-    more = spark.createDataFrame([("c\x1f", 2)], "job_id string, id long")
-    assert sinks.idempotent_append(spark, more, wh, keys=["job_id"]) == 1
+    assert sinks.idempotent_append(spark, _rows(spark, 0, 3), wh, keys=["job_id"]) == 3
+    assert len(seen[-1]["keys"]) == 3 and len(_entry(wh)[1]) == 3
+    assert sinks.idempotent_append(spark, _rows(spark, 0, 10), wh, keys=["job_id"]) == 7
+    assert seen[-1]["keys"] is None
     base, delta, _ = _entry(wh)
     assert delta == frozenset()
-    assert sorted(r["job_id"] for r in base.collect()) == ["a", "b", "c\x1f"]
-    assert sinks.idempotent_append(spark, batch.unionByName(more), wh, keys=["job_id"]) == 0
-    assert _ids(spark, wh) == [0, 1, 2]
+    assert sorted(r["job_id"] for r in base.collect()) == sorted(r["job_id"] for r in _rows(spark, 0, 10).collect())
+    assert sinks.idempotent_append(spark, _rows(spark, 0, 12), wh, keys=["job_id"]) == 2
+    assert _ids(spark, wh) == list(range(12))
+
+
+def _append_jobs(spark, tag, df, path):
+    """(rows written, Spark jobs run) of one append on ``job_id``; ``tag``
+    names the job group, one per call."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        n = sinks.idempotent_append(spark, df, path, keys=["job_id"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return n, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def test_rescanned_small_table_takes_the_delta(spark, tmp_path):
+    """A table this sink did not write, of at most the cap of keys, is
+    read into the delta: no base, and the next call runs two jobs."""
+    wh = str(tmp_path / "warehouse")
+    seeded = _rows(spark, 0, 100).unionByName(
+        spark.range(100, 101).select(F.lit(None).cast("string").alias("job_id"), "id", F.lit("x").alias("p"))
+    )
+    seeded.repartition(10).write.parquet(wh)
+    assert sinks.idempotent_append(spark, _rows(spark, 95, 105), wh, keys=["job_id"]) == 5
+    base, delta, _ = _entry(wh)
+    assert base is None
+    assert delta == {r["job_id"] for r in _rows(spark, 0, 105).collect()}
+    assert _append_jobs(spark, f"small-{tmp_path.name}", _rows(spark, 100, 110), wh) == (5, 2)
+    assert sinks.idempotent_append(spark, _rows(spark, 105, 115), wh, keys=["job_id"]) == 5
+    assert _ids(spark, wh) == sorted([*range(115), 100])  # the NULL-key row is id 100
 
 
 def test_repeat_call_runs_two_jobs(spark, tmp_path):
@@ -313,32 +362,30 @@ def test_repeat_call_runs_two_jobs(spark, tmp_path):
     wh = str(tmp_path / "warehouse")
     for lo in (0, 10):
         sinks.idempotent_append(spark, _rows(spark, lo, lo + 10), wh, keys=["job_id"])
-    sc, group = spark.sparkContext, f"repeat-{tmp_path.name}"
-    sc.setJobGroup(group, group)
-    try:
-        assert sinks.idempotent_append(spark, _rows(spark, 15, 30), wh, keys=["job_id"]) == 10
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert _append_jobs(spark, f"repeat-{tmp_path.name}", _rows(spark, 15, 30), wh) == (10, 2)
 
 
 def _write_plan_sizes(spark, since):
-    """(execution id, length) of the stored physical plan description of
-    every write execution after ``since``."""
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    """(execution id, characters) of the plan text that the SQL status
+    store keeps for every write execution after ``since``: the physical
+    plan description and the plan graph's node descriptions."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
     out = []
     for i in range(execs.size()):
         e = execs.apply(i)
         if e.executionId() > since:
             plan = e.physicalPlanDescription()
             if "InsertIntoHadoopFsRelationCommand" in plan:
-                out.append((e.executionId(), len(plan)))
+                nodes = store.planGraph(e.executionId()).allNodes()
+                graph = sum(len(nodes.apply(j).desc()) for j in range(nodes.size()))
+                out.append((e.executionId(), len(plan) + graph))
     return out
 
 
 def test_write_plan_stays_bounded_by_the_cap(spark, tmp_path):
-    """After ten times the cap of keys, the plan description stored for
-    each write is bounded by the cap: the delta check lists at most
+    """After ten times the cap of keys, the plan text stored for each
+    write is bounded by the cap: the delta check lists at most
     ``_DELTA_CAP`` keys, never the whole table."""
     cap, wh = sinks._DELTA_CAP, str(tmp_path / "warehouse")
     chunk = cap - 24
@@ -348,15 +395,19 @@ def test_write_plan_stays_bounded_by_the_cap(spark, tmp_path):
         sinks.idempotent_append(spark, _rows(spark, lo, lo + chunk), wh, keys=["job_id"])
     sizes = _write_plan_sizes(spark, since)
     assert len(sizes) == len(range(10, 10 * cap, chunk))
-    # a listed key is printed at most 4 times, as 32 hex digits and a separator
-    assert max(n for _, n in sizes) < bare + 4 * cap * (32 + 2)
+    # a checked key is listed at most 5 times (twice, and three more with
+    # a base), as 32 hex digits and a separator; a plan with a base has
+    # more nodes, but not twice the first write's text
+    assert max(n for _, n in sizes) < 2 * bare + 5 * cap * (32 + 2)
     assert spark.read.parquet(wh).count() == 10 + len(sizes) * chunk
 
 
-def test_scanned_base_is_kept_as_one_partition(spark, tmp_path):
-    """A base scanned from a table of many files is folded into one
-    partition before it is kept, also by a call that writes no row, so
-    each later broadcast runs it as one task, not one per file split."""
+def test_scanned_base_is_kept_as_one_partition(spark, tmp_path, monkeypatch):
+    """A base scanned from a table of many files (more keys than the
+    cap) is folded into one partition before it is kept, also by a call
+    that writes no row, so each later broadcast runs it as one task, not
+    one per file split."""
+    monkeypatch.setattr(sinks, "_DELTA_CAP", 100)
     wh = str(tmp_path / "warehouse")
     _rows(spark, 0, 500).repartition(50).write.parquet(wh)
     scan = sinks._read_keys(spark, _rows(spark, 0, 1).select("job_id").schema, wh)
