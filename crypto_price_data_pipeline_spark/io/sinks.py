@@ -9,25 +9,25 @@ races a reader against a collection drop —
 dump_with_postgres.py:149-175 — which silently loses rows; we do not
 reproduce the race).
 
+A batch that fails ``run_pipeline``'s expectation gate raises inside
+the sink's own Spark job (``pipeline.validate``), so the appending sinks
+and ``merge_upsert`` load nothing of it. A static overwrite
+(``overwrite_parquet``, ``write_orc``, ``write_sorted``'s default)
+deletes the table before its job runs.
+
 ``idempotent_append`` commits in two steps. The batch is written once,
 into a hidden ``<path>/_staging-<uuid>`` directory: Spark's file readers
 skip names that start with ``_``, so readers of ``path`` never see it.
 The staged write leaves no ``_SUCCESS`` marker (nothing reads one before
 the directory is deleted), and its row count rides on it as an
-``Observation``. Then the pre-commit checks run: callables registered
-with :func:`pre_commit` for the calling context (a ``ContextVar``, so
-each thread sees its own). ``run_pipeline`` registers its expectation
-gate there, so a batch that fails the gate raises with nothing
-promoted: the load fails closed, as the reference's validate-then-load
-order does (bpi_crawler.py:214). Only when the checks pass and the
-count is above zero are the staged data files renamed into ``path``
-(``k=v/`` subdirectories kept under ``partition_by``); the staging
-directory is deleted either way. A write of no rows would otherwise
-still leave an empty parquet file in the table. A crash between the
-renames leaves part of the batch committed and a stale staging
-directory that readers skip; the replay's anti-join on the key then
-appends only the rows still missing, so exactly-once holds through the
-key.
+``Observation``. Only when the write succeeds and the count is above
+zero are the staged data files renamed into ``path`` (``k=v/``
+subdirectories kept under ``partition_by``); the staging directory is
+deleted either way. A write of no rows would otherwise still leave an
+empty parquet file in the table. A crash between the renames leaves
+part of the batch committed and a stale staging directory that readers
+skip; the replay's anti-join on the key then appends only the rows
+still missing, so exactly-once holds through the key.
 
 The key set. The append must skip the keys already in the table, and
 reading them back from every file costs a footer read per file, so a
@@ -100,8 +100,9 @@ start plus the promoted files, their length and the directories made
 for them. It is worked out, not read, since on a local or object-store
 file system a content summary lists the whole tree. If another writer's
 files landed during the call, the next call's summary differs and it
-rescans. Any exception after the staged write, other than a failing
-pre-commit check, drops the entry, so the next call rescans too.
+rescans. An exception keeps the entry as it was at the call's start
+when it comes before the first rename, the table being as it was, and
+drops it from the first rename on, so the next call rescans.
 Another writer's append, delete or compaction changes the summary; a
 rewrite in place to the same file count, directory count and length
 would not be seen. Nor would another writer's staged files that move in
@@ -117,9 +118,6 @@ from __future__ import annotations
 import functools
 import threading
 import uuid
-from contextlib import contextmanager
-from contextvars import ContextVar
-from typing import Callable
 
 from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
@@ -140,22 +138,6 @@ _DELTA_CAP = 256
 # joins a delta's keys into one string; no delta key holds it
 _SEP = "\x1f"
 _KEY_SETS_LOCK = threading.Lock()
-_PRE_COMMIT: ContextVar[tuple[Callable[[], object], ...]] = ContextVar(
-    "pre_commit_checks", default=()
-)
-
-
-@contextmanager
-def pre_commit(check: Callable[[], object]):
-    """Run ``check()`` in every ``idempotent_append`` of the ``with``
-    block (this thread or task only), after the batch is staged and
-    before it is promoted. A check that raises fails that call: its
-    staging is deleted and nothing reaches the table."""
-    token = _PRE_COMMIT.set((*_PRE_COMMIT.get(), check))
-    try:
-        yield
-    finally:
-        _PRE_COMMIT.reset(token)
 
 
 @per_gateway
@@ -287,6 +269,10 @@ def append_parquet(df: DataFrame, path: str, partition_by: list[str] | None = No
 
 
 def overwrite_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+    """Replace the table at ``path``. This sink cannot fail closed: a
+    static overwrite deletes the table before its job runs, so a batch
+    that fails inside the job (the expectation gate, say) leaves the
+    directory empty."""
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -309,8 +295,8 @@ def idempotent_append(
     Spark-idiomatic replacement for the reference's delete-after-load
     bookkeeping (bpi_crawler.py:37-41): retries and replays are safe
     because the second attempt appends zero rows. The batch runs once:
-    one staged write, the pre-commit checks, then a rename commit (see
-    the module docstring). Returns rows written.
+    one staged write, then a rename commit (see the module docstring).
+    Returns rows written.
 
     A table that exists but cannot be read raises; it is never taken
     for an empty one.
@@ -355,20 +341,17 @@ def idempotent_append(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     staging = _path_class()(root, f"_staging-{uuid.uuid4().hex}")
-    n, entry = 0, None  # entry: the key-set memo after this call; None drops it
+    # entry: the key-set memo after this call; None drops it. It stays as
+    # at the start until the promote's first rename changes the table.
+    n, entry = 0, known
     try:
         writer.parquet(staging.toString())
-        try:
-            for check in _PRE_COMMIT.get():
-                check()
-        except BaseException:
-            entry = known  # nothing promoted: the table is as it was
-            raise
         metrics = obs.get
         n = metrics["rows"]
         if n:
             written = metrics.get("keys")  # None past the cap
             written = written if written is None else frozenset(written)
+            entry = None  # a failure from here on drops the key set
             entry = _commit(spark, fs, staging, root, base, delta, written, before, key_schema, cap)
         elif existed and before is not None:
             # a scanned base is folded into one partition before it is kept
@@ -513,8 +496,10 @@ def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -
 
 def jdbc_append(df: DataFrame, url: str, table: str, properties: dict | None = None) -> None:
     """Literal-parity warehouse sink (reference: bpi_crawler.py:173
-    pandas.to_sql append). Driver jar required; gated by caller."""
-    writer = df.write.format("jdbc").option("url", url).option("dbtable", table).mode("append")
-    for k, v in (properties or {}).items():
+    pandas.to_sql append). One partition, so one transaction: Spark's
+    JDBC writer commits per partition. Driver jar required; gated by
+    caller."""
+    writer = df.coalesce(1).write.format("jdbc").mode("append")
+    for k, v in {"url": url, "dbtable": table, **(properties or {})}.items():
         writer = writer.option(k, v)
     writer.save()

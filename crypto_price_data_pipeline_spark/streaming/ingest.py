@@ -7,7 +7,8 @@ dump_with_postgres.py:149-175). The Spark re-expression is race-free:
 
 - the *producer* is a streaming query appending validated snapshots to
   a parquet staging dir with a checkpoint (exactly-once file-source
-  progress; no manual XCom/cleanup);
+  progress; no manual XCom/cleanup), gated in its plan as the reference
+  validates before it stages (dump_with_postgres.py:200);
 - the *consumer* is an ``availableNow`` pass over staging that
   idempotently appends to the warehouse keyed on ``job_id`` — a retry
   or an overlapping run appends nothing twice, so nothing is dropped
@@ -25,6 +26,7 @@ from ..io.sinks import idempotent_append
 from ..pipeline.flatten import flatten_payload
 from ..pipeline.rates import join_idr_rate
 from ..pipeline.schema import BPI_PAYLOAD_SCHEMA, ENRICHED_COLUMNS
+from ..pipeline.validate import expectation_gate
 
 
 def start_payload_stream(
@@ -38,10 +40,11 @@ def start_payload_stream(
 ) -> StreamingQuery:
     """Producer: watch ``drop_dir`` for payload JSON files (the
     deterministic stand-in for the HTTP poll), run the flatten/enrich
-    pipeline per micro-batch, append to staging."""
+    pipeline and the expectation gate per micro-batch, append to
+    staging. A failing batch stops the query and commits nothing."""
     raw = spark.readStream.schema(BPI_PAYLOAD_SCHEMA).json(drop_dir)
-    enriched = join_idr_rate(flatten_payload(raw, now=now), fx_rates).select(
-        *ENRICHED_COLUMNS
+    enriched = expectation_gate(
+        join_idr_rate(flatten_payload(raw, now=now), fx_rates).select(*ENRICHED_COLUMNS)
     )
     writer = (
         enriched.writeStream.outputMode("append")

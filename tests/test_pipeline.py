@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import gc
+import json
 import os
 import sys
 import threading
@@ -152,32 +153,132 @@ def _landed(spark, path):
     return _files(path), sorted(tuple(r) for r in spark.read.parquet(path).collect())
 
 
-@pytest.mark.parametrize("fault", ["bad_updated_iso", "missing_rate"])
-def test_gate_failure_commits_nothing(spark, tmp_path, fault):
-    """A batch that fails the gate raises ``ValidationError`` from
-    ``run_pipeline(sink=idempotent_append)`` with nothing loaded: the
-    warehouse keeps its files and rows, and no staging is left."""
-    from crypto_price_data_pipeline_spark.io.sinks import idempotent_append
+def _payloads_bad_last(spark, fault):
+    """2,075 payloads of 2022-12-06 from 14:00:00, one per second, built
+    on the JVM with no shuffle in 4 partitions of 25, 25, 25 and 2,000
+    rows, so the gate runs in the tasks that write. The last row of the
+    long partition carries ``fault``: the short partitions finish well
+    before it is reached."""
+    spans = F.sequence(F.col("id") * 10000, F.col("id") * 10000 + F.when(F.col("id") == 3, 1999).otherwise(24))
+    i = F.col("t")
+    last = i == 31999
+    day = F.when(last & F.lit(fault == "missing_rate"), "7").otherwise("6")
+    hhmmss = F.format_string("%02d:%02d:%02d", (i / 3600 + 14).cast("int"), (i / 60 % 60).cast("int"), i % 60)
+    updated = F.concat(F.lit("Dec "), day, F.lit(", 2022 "), hhmmss, F.lit(" UTC"))
+    iso = F.concat(F.lit("2022-12-0"), day, F.lit("T"), hhmmss, F.lit("+00:00"))
+    if fault == "bad_updated_iso":
+        updated = F.when(last, "garbage").otherwise(updated)
+        iso = F.when(last, "not-iso").otherwise(iso)
+    bpi = F.from_json(F.lit(json.dumps(GOLDEN[3])), BPI_PAYLOAD_SCHEMA["bpi"].dataType)
+    return spark.range(0, 4, 1, 4).select(F.explode(spans).alias("t")).select(
+        F.struct(updated.alias("updated"), iso.alias("updatedISO")).alias("time"),
+        F.lit(GOLDEN[1]).alias("disclaimer"),
+        F.lit(GOLDEN[2]).alias("chartName"),
+        bpi.alias("bpi"),
+        "t",
+    )
+
+
+_SINKS = ["idempotent_append", "append_parquet", "merge_upsert", "jdbc_append"]
+
+
+# the idempotent_append cases keep the ids they had before the matrix
+@pytest.mark.parametrize(
+    "sink_name, fault",
+    [
+        pytest.param(s, f, id=f if s == "idempotent_append" else f"{s}-{f}")
+        for s in _SINKS
+        for f in ("bad_updated_iso", "missing_rate")
+    ],
+)
+def test_gate_failure_commits_nothing(spark, tmp_path, sink_name, fault):
+    """A batch of 2,074 good rows and one that fails the gate raises
+    ``ValidationError`` from ``run_pipeline(sink=...)`` with nothing
+    loaded, whatever the sink: the table keeps its rows (and files), and
+    no staging or ``_temporary`` is left. ``jdbc_append`` gets a
+    4-partition input, so a commit per partition would land 75 rows;
+    ``merge_upsert`` holds only because it computes the merge before it
+    overwrites."""
+    from crypto_price_data_pipeline_spark.io import sinks
+    from crypto_price_data_pipeline_spark.io.sources import jdbc_read
 
     path = str(tmp_path / "warehouse")
     now = "2022-12-06 14:00:03"
+    jdbc = ("jdbc:derby:memory:gatedb;create=true", f"gate_{fault}",
+            {"driver": "org.apache.derby.jdbc.EmbeddedDriver"})
+    sink = {
+        "idempotent_append": lambda d: sinks.idempotent_append(spark, d, path, keys=["job_id"]),
+        "append_parquet": lambda d: sinks.append_parquet(d, path),
+        "merge_upsert": lambda d: sinks.merge_upsert(spark, d, path, keys=["job_id"]),
+        "jdbc_append": lambda d: sinks.jdbc_append(d, *jdbc),
+    }[sink_name]
+
+    def landed():
+        if sink_name == "jdbc_append":
+            return sorted(tuple(r) for r in jdbc_read(spark, *jdbc).collect())
+        return _landed(spark, path)
+
+    golden = spark.createDataFrame([GOLDEN], BPI_PAYLOAD_SCHEMA)
+    try:
+        run_pipeline(golden, _rates(spark), now=now, sink=sink)
+    except Exception as e:  # pragma: no cover - driver genuinely absent
+        if sink_name != "jdbc_append":
+            raise
+        pytest.skip(f"embedded Derby unavailable: {e}")
+    before = landed()
+    assert len(before if sink_name == "jdbc_append" else before[1]) == 1
+
+    bad = _payloads_bad_last(spark, fault)
+    assert bad._jdf.rdd().getNumPartitions() == 4
+    with pytest.raises(ValidationError, match="expectation gate failed"):
+        run_pipeline(bad, _rates(spark), now=now, sink=sink)
+    assert landed() == before
+    if sink_name != "jdbc_append":
+        assert not [f for f in os.listdir(path) if f.startswith(("_staging-", "_temporary"))]
+    # the same rows without the bad one load in full
+    run_pipeline(bad.where("t < 31999"), _rates(spark), now=now, sink=sink)
+    after = landed()
+    assert len(after if sink_name == "jdbc_append" else after[1]) == 2075
+
+
+def test_only_the_gate_failure_becomes_validation_error(spark, tmp_path):
+    """A sink that fails for any other reason raises its own exception
+    through ``run_pipeline``: a ``raise_error`` of other text, and a
+    warehouse that cannot be read."""
+    from pyspark.errors import SparkRuntimeException
+
+    from crypto_price_data_pipeline_spark.io.sinks import idempotent_append
+
+    payloads = spark.createDataFrame([GOLDEN], BPI_PAYLOAD_SCHEMA)
+    now = "2022-12-06 14:00:03"
+
+    def other(d):
+        d.select(F.raise_error(F.lit("the disk is full"))).collect()
+
+    with pytest.raises(SparkRuntimeException, match="the disk is full") as raised:
+        run_pipeline(payloads, _rates(spark), now=now, sink=other)
+    assert not isinstance(raised.value, ValidationError)
+    assert raised.value.getCondition() == "USER_RAISED_EXCEPTION"
+
+    path = str(tmp_path / "warehouse")
 
     def sink(d):
         idempotent_append(spark, d, path, keys=["job_id"])
 
-    run_pipeline(spark.createDataFrame([GOLDEN], BPI_PAYLOAD_SCHEMA), _rates(spark), now=now, sink=sink)
-    files, rows = _landed(spark, path)
-    assert len(rows) == 1
-
-    time = {"updated": "Dec 7, 2022 09:00:00 UTC", "updatedISO": "2022-12-07T09:00:00+00:00"}
-    rates = _rates(spark)  # 2022-12-06 only: the 7th has no rate
-    if fault == "bad_updated_iso":
-        time = {"updated": "garbage", "updatedISO": "not-iso"}
-    bad = spark.createDataFrame([(time, *GOLDEN[1:])], BPI_PAYLOAD_SCHEMA)
-    with pytest.raises(ValidationError):
-        run_pipeline(bad, rates, now=now, sink=sink)
-    assert _landed(spark, path) == (files, rows)
-    assert not any(f.startswith("_staging-") for f in os.listdir(path))
+    run_pipeline(payloads, _rates(spark), now=now, sink=sink)
+    for f in _files(path):
+        full = os.path.join(path, f)
+        if f.endswith(".crc"):
+            os.remove(full)
+        else:
+            with open(full, "wb") as fh:
+                fh.write(b"not parquet")
+    with pytest.raises((PySparkException, Py4JJavaError)) as direct:
+        sink(run_pipeline(payloads, _rates(spark), now=now))
+    with pytest.raises((PySparkException, Py4JJavaError)) as through:
+        run_pipeline(payloads, _rates(spark), now=now, sink=sink)
+    assert type(through.value) is type(direct.value)
+    assert not isinstance(through.value, ValidationError)
 
 
 def test_rates_lookup_plans_no_join(spark):
@@ -341,7 +442,7 @@ def _py4j_commands(spark, this_thread=False):
 
 
 # A repeat call sent ~1,500 commands while it rebuilt its Column
-# expressions per call; with them built once it sends 173 from the
+# expressions per call; with them built once it sends 152-181 from the
 # calling thread (py4j's object-release thread adds up to ~200 more, so
 # it is not counted). The bound keeps the earlier headroom: 500 over 285.
 REPEAT_CALL_COMMANDS = 300

@@ -1,18 +1,21 @@
 """``idempotent_append``'s key set: a repeat call reads no table file
 (or, for a key with no delta, only the files the previous call
 promoted), the delta folds into the base past its cap, a small table
-read back starts as a delta, another writer's append is seen, and a
-commit that fails midway drops the key set so the replay lands each row
-once."""
+read back starts as a delta, another writer's append is seen, a batch
+that fails the gate keeps the key set, and a commit that fails midway
+drops it so the replay lands each row once."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from crypto_price_data_pipeline_spark.io import sinks
+from crypto_price_data_pipeline_spark.pipeline import BPI_PAYLOAD_SCHEMA, ValidationError, run_pipeline
+from crypto_price_data_pipeline_spark.streaming.http_source import default_fetch
 
 
 def _rows(spark, lo, hi, parts=("x",)):
@@ -173,22 +176,62 @@ def test_failed_promote_drops_the_key_set_and_replay_lands_once(spark, tmp_path,
     assert sinks._KEY_SETS[memo_key][2] == sinks._summary(fs, root)
 
 
-def test_failing_pre_commit_check_promotes_nothing(spark, tmp_path):
+def _payloads(spark, lo, hi, updated=None):
+    """BPI payloads of ticks ``lo..hi-1``; ``updated`` replaces each
+    one's ``time.updated``, which the job id does not hash."""
+    raw = []
+    for p in default_fetch(lo, hi):
+        p = json.loads(p)
+        p["time"]["updated"] = updated or p["time"]["updated"]
+        raw.append((json.dumps(p),))
+    return spark.createDataFrame(raw, "value string").select(
+        F.from_json("value", BPI_PAYLOAD_SCHEMA).alias("p")
+    ).select("p.*")
+
+
+@pytest.mark.parametrize("tier", ["delta", "base"])
+def test_gate_sees_every_offered_row_and_keeps_the_key_set(spark, tmp_path, monkeypatch, tier):
+    """A row that fails the gate raises ``ValidationError`` even when its
+    key is already in the table, so the key check would drop it: the
+    gate runs before ``dropDuplicates`` and the key checks. Nothing is
+    promoted, the key set is kept as it was (no rescan), and the next
+    good call runs as a repeat call does."""
+    if tier == "base":
+        monkeypatch.setattr(sinks, "_DELTA_CAP", 2)
+    rates = spark.createDataFrame(
+        [("USD", "IDR", "2022-12-06", 15650.25)],
+        "from_ccy string, to_ccy string, rate_date string, rate double",
+    ).withColumn("rate_date", F.to_date("rate_date"))
     wh = str(tmp_path / "warehouse")
-    assert sinks.idempotent_append(spark, _rows(spark, 0, 10), wh, keys=["job_id"]) == 10
+
+    def sink(d):
+        sinks.idempotent_append(spark, d, wh, keys=["job_id"])
+
+    def land(payloads, tag):
+        """The Spark jobs of one ``run_pipeline`` into the warehouse."""
+        return _jobs(spark, tag, lambda: run_pipeline(payloads, rates, now="2022-12-06 14:00:00", sink=sink))[1]
+
+    land(_payloads(spark, 0, 10), f"first-{tmp_path.name}")
+    land(_payloads(spark, 10, 20), f"second-{tmp_path.name}")
+    base, delta, _ = _entry(wh)
+    assert (base is None, len(delta)) == ((True, 20) if tier == "delta" else (False, 0))
     (memo_key,) = [k for k in sinks._KEY_SETS if k[1].endswith(wh)]
-    entry, files = sinks._KEY_SETS[memo_key], sorted(os.listdir(wh))
-
-    def check():
-        raise RuntimeError("gate failed")
-
-    with pytest.raises(RuntimeError, match="gate failed"), sinks.pre_commit(check):
-        sinks.idempotent_append(spark, _rows(spark, 10, 20), wh, keys=["job_id"])
-    # no staging left, no file promoted, the key set as it was
-    assert sorted(os.listdir(wh)) == files
-    assert sinks._KEY_SETS[memo_key] is entry
-    assert sinks.idempotent_append(spark, _rows(spark, 10, 20), wh, keys=["job_id"]) == 10
-    assert _ids(spark, wh) == list(range(20))
+    entry, files = sinks._KEY_SETS[memo_key], _data_files(wh)
+    fs, root = sinks._hadoop_path(spark, wh)
+    # tick 15's key is in the table (in the delta, or in the base); the
+    # last batch also offers it twice, so dropDuplicates keeps one row
+    garbage = _payloads(spark, 15, 16, updated="garbage")
+    for bad in (garbage, _payloads(spark, 20, 25).unionByName(garbage),
+                _payloads(spark, 15, 16).unionByName(garbage)):
+        with pytest.raises(ValidationError, match="time_updated=NULL"):
+            land(bad, f"bad-{tmp_path.name}")
+        assert sinks._KEY_SETS[memo_key] is entry
+        assert _data_files(wh) == files
+        assert not [f for f in os.listdir(wh) if f.startswith("_staging-")]
+        assert entry[2] == sinks._summary(fs, root)  # so the next call takes it
+    # a base adds its broadcast job
+    assert land(_payloads(spark, 20, 30), f"next-{tmp_path.name}") == 2 + (tier == "base")
+    assert len(spark.read.parquet(wh).collect()) == 30
 
 
 def test_concurrent_appends_leave_no_stale_key_set(spark, tmp_path):
@@ -327,16 +370,21 @@ def test_batch_past_the_cap_folds_without_collecting_its_keys(spark, tmp_path, m
     assert _ids(spark, wh) == list(range(12))
 
 
-def _append_jobs(spark, tag, df, path):
-    """(rows written, Spark jobs run) of one append on ``job_id``; ``tag``
-    names the job group, one per call."""
+def _jobs(spark, tag, fn):
+    """(``fn()``, Spark jobs it ran); ``tag`` names the job group, one
+    per call."""
     sc = spark.sparkContext
     sc.setJobGroup(tag, tag)
     try:
-        n = sinks.idempotent_append(spark, df, path, keys=["job_id"])
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return n, len(sc.statusTracker().getJobIdsForGroup(tag))
+    return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def _append_jobs(spark, tag, df, path):
+    """(rows written, Spark jobs run) of one append on ``job_id``."""
+    return _jobs(spark, tag, lambda: sinks.idempotent_append(spark, df, path, keys=["job_id"]))
 
 
 def test_rescanned_small_table_takes_the_delta(spark, tmp_path):

@@ -77,6 +77,35 @@ def test_accumulate_then_flush(spark, tmp_path):
     assert spark.read.parquet(warehouse).count() == 4
 
 
+def test_payload_stream_gate_stops_the_query_and_stages_nothing(spark, tmp_path):
+    """The producer stream runs the expectation gate in its own plan: a
+    good batch stages, then a payload whose date has no rate stops the
+    query, and staging reads back the rows it had."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from crypto_price_data_pipeline_spark.streaming.ingest import start_payload_stream
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "p0.json").write_text(json.dumps(PAYLOAD))
+    staging, ckpt = str(tmp_path / "staging"), str(tmp_path / "ckpt")
+
+    def run():
+        q = start_payload_stream(spark, str(drop), staging, ckpt, _rates(spark), now="2022-12-06 14:00:00")
+        q.awaitTermination()
+
+    run()
+    before = sorted(tuple(r) for r in spark.read.parquet(staging).collect())
+    assert len(before) == 1
+    p = dict(PAYLOAD)
+    p["time"] = {"updated": "Dec 7, 2022 09:00:00 UTC", "updatedISO": "2022-12-07T09:00:00+00:00"}
+    (drop / "p1.json").write_text(json.dumps(p))
+    with pytest.raises(StreamingQueryException, match="expectation gate failed"):
+        run()
+    assert sorted(tuple(r) for r in spark.read.parquet(staging).collect()) == before
+
+
 def test_continuous_rollup(spark, tmp_path):
     """Hypertable-rollup pattern: incremental maintenance across two
     stream batches must equal the one-shot batch aggregation, and the
