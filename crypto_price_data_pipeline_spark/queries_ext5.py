@@ -306,6 +306,22 @@ ORDER BY doc_id, chunk_idx
 # ------------------------------------------- test-set contamination
 
 
+def _grams5(tok_col):
+    """Distinct 5-grams of a token array, or the whole doc as one gram
+    when it has fewer than 5 tokens: the contamination rule shared by
+    q_contamination, q_bloom_contamination, q_contamination_prefiltered
+    and q_stream_contamination."""
+    return F.when(
+        F.size(tok_col) >= 5,
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.size(tok_col) - 4),
+                lambda i: F.array_join(F.slice(tok_col, i, 5), " "),
+            )
+        ),
+    ).otherwise(F.array(F.array_join(tok_col, " ")))
+
+
 @query
 def q_contamination(spark: SparkSession, sf: str) -> DataFrame:
     """Benchmark-contamination scan: for every eval-set document, the
@@ -328,17 +344,6 @@ def q_contamination(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
     toks = F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"), lambda t: t != "")
 
-    def grams(tok_col, k=5):
-        return F.when(
-            F.size(tok_col) >= k,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(tok_col) - k + 1),
-                    lambda i: F.array_join(F.slice(tok_col, i, k), " "),
-                )
-            ),
-        ).otherwise(F.array(F.array_join(tok_col, " ")))
-
     tokenized = docs.select("doc_id", toks.alias("_t"))
     train = tokenized.where(F.col("doc_id") % 97 != 0)
     # plant: eval text = first 30 tokens of training doc (doc_id + 1)
@@ -353,11 +358,11 @@ def q_contamination(spark: SparkSession, sf: str) -> DataFrame:
 
     e_grams = evals.select(
         F.col("doc_id").alias("eval_id"),
-        F.explode(grams(F.col("_t"))).alias("gram"),
-        F.size(grams(F.col("_t"))).alias("n_eval_grams"),
+        F.explode(_grams5(F.col("_t"))).alias("gram"),
+        F.size(_grams5(F.col("_t"))).alias("n_eval_grams"),
     )
     t_grams = train.select(
-        F.col("doc_id").alias("train_id"), F.explode(grams(F.col("_t"))).alias("gram")
+        F.col("doc_id").alias("train_id"), F.explode(_grams5(F.col("_t"))).alias("gram")
     )
     shared = (
         t_grams.join(F.broadcast(e_grams), "gram")

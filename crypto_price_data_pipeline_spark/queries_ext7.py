@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io.sources import load_table
-from .queries_ext5 import Q_CONTAMINATION_SQL
+from .queries_ext5 import Q_CONTAMINATION_SQL, _grams5
 from .registry import query
 from .session import scratch_dir
 from .streaming.partial_store import stream_partials
@@ -521,17 +521,6 @@ def q_bloom_contamination(spark: SparkSession, sf: str) -> DataFrame:
         F.split(F.lower(F.col("text")), r"[^a-z0-9]+"), lambda t: t != ""
     )
 
-    def grams(tok_col, k=5):
-        return F.when(
-            F.size(tok_col) >= k,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(tok_col) - k + 1),
-                    lambda i: F.array_join(F.slice(tok_col, i, k), " "),
-                )
-            ),
-        ).otherwise(F.array(F.array_join(tok_col, " ")))
-
     tokenized = docs.select("doc_id", toks.alias("_t"))
     donor = tokenized.select(
         (F.col("doc_id") - 1).alias("doc_id"), F.slice("_t", 1, 30).alias("_t")
@@ -541,10 +530,10 @@ def q_bloom_contamination(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_id")
         .join(donor, "doc_id")
     )
-    bench_grams = evals.select(F.explode(grams(F.col("_t"))).alias("gram"))
+    bench_grams = evals.select(F.explode(_grams5(F.col("_t"))).alias("gram"))
     bloom = bloom_build(bench_grams, m_bits=1 << 16, k=3)
     train = tokenized.where(F.col("doc_id") % 97 != 0).select(
-        F.col("doc_id").alias("train_id"), grams(F.col("_t")).alias("_g")
+        F.col("doc_id").alias("train_id"), _grams5(F.col("_t")).alias("_g")
     )
     flagged = train.crossJoin(F.broadcast(bloom)).select(
         "train_id",
@@ -589,17 +578,6 @@ def q_contamination_prefiltered(spark: SparkSession, sf: str) -> DataFrame:
         F.split(F.lower(F.col("text")), r"[^a-z0-9]+"), lambda t: t != ""
     )
 
-    def grams(tok_col, k=5):
-        return F.when(
-            F.size(tok_col) >= k,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(tok_col) - k + 1),
-                    lambda i: F.array_join(F.slice(tok_col, i, k), " "),
-                )
-            ),
-        ).otherwise(F.array(F.array_join(tok_col, " ")))
-
     tokenized = docs.select("doc_id", toks.alias("_t"))
     donor = tokenized.select(
         (F.col("doc_id") - 1).alias("doc_id"), F.slice("_t", 1, 30).alias("_t")
@@ -610,21 +588,21 @@ def q_contamination_prefiltered(spark: SparkSession, sf: str) -> DataFrame:
         .join(donor, "doc_id")
     )
     bloom = bloom_build(
-        evals.select(F.explode(grams(F.col("_t"))).alias("gram")),
+        evals.select(F.explode(_grams5(F.col("_t"))).alias("gram")),
         m_bits=1 << 16,
         k=3,
     )
     survivors = (
         tokenized.where(F.col("doc_id") % 97 != 0)
-        .select("doc_id", grams(F.col("_t")).alias("_g"))
+        .select("doc_id", _grams5(F.col("_t")).alias("_g"))
         .crossJoin(F.broadcast(bloom))
         .where(bloom_hit(F.col("_g"), F.col("words"), 1 << 16, 3))
         .select("doc_id", "_g")
     )
     e_grams = evals.select(
         F.col("doc_id").alias("eval_id"),
-        F.explode(grams(F.col("_t"))).alias("gram"),
-        F.size(grams(F.col("_t"))).alias("n_eval_grams"),
+        F.explode(_grams5(F.col("_t"))).alias("gram"),
+        F.size(_grams5(F.col("_t"))).alias("n_eval_grams"),
     )
     t_grams = survivors.select(
         F.col("doc_id").alias("train_id"), F.explode("_g").alias("gram")

@@ -44,6 +44,7 @@ from pyspark.sql.window import Window
 from .io.sources import load_table
 from .streaming.partial_store import stream_partials
 from .operators.text import tokenize
+from .queries_ext5 import _grams5
 from .registry import query
 from .session import scratch_dir
 
@@ -275,20 +276,6 @@ FROM re GROUP BY lang ORDER BY lang
 
 
 # --------------------------------- ingest-time decontamination
-
-
-def _grams5(tok_col):
-    """Distinct 5-grams of a token array (q_contamination's rule,
-    including the <5-token whole-doc fallback)."""
-    return F.when(
-        F.size(tok_col) >= 5,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(tok_col) - 4),
-                lambda i: F.array_join(F.slice(tok_col, i, 5), " "),
-            )
-        ),
-    ).otherwise(F.array(F.array_join(tok_col, " ")))
 
 
 @query

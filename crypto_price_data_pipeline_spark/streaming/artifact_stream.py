@@ -32,12 +32,10 @@ one micro-batch of signature work, never a rebuild, and the serving
 queries read the union of batch directories exactly like the batch
 artifact tables.
 
-Replay contract: every batch directory is written with OVERWRITE and
-deterministic content, so a replayed batch (crash between store write
-and checkpoint commit) rewrites identical files — exactly-once
-without a transactional sink. Covered by the parameterized
-crash/restart test (tests/test_stream_restart.py) via
-``run_partial_stream``.
+Staging, the stream and its replay contract are ``partial_store``'s
+(id-range chunks, per-batch_id overwrite stores); every partial here
+is deterministic, so the parameterized crash/restart test
+(tests/test_stream_restart.py) covers it.
 
 Reference parity: the reference crawler appends one row per poll with
 no index maintenance at all (`dags/bpi_crawler/bpi_crawler.py:43-214`);
@@ -47,13 +45,19 @@ this is [EXT] §2.11 surface (verdict r10 item 4).
 from __future__ import annotations
 
 import os
-import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import scoped_conf, scratch_dir
-from .partial_store import run_partial_stream, write_batch
+from .partial_store import (
+    fold_partials,
+    id_chunks,
+    read_store,
+    run_partial_stream,
+    stage_chunks,
+    write_batch,
+)
 
 MINS_SCHEMA = (
     "doc_id long, _n int, lang string, "
@@ -80,18 +84,10 @@ def read_artifact_store(spark: SparkSession, store: str) -> dict[str, DataFrame]
     :func:`compact_artifact_store`: previously returned DataFrames
     hold the pre-compaction file listing and go stale once the batch
     subdirs are folded."""
-
-    def _read(sub: str, schema: str) -> DataFrame:
-        path = os.path.join(store, sub)
-        if not os.path.isdir(path):
-            return spark.createDataFrame([], schema)
-        return (
-            spark.read.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(path)
-        )
-
-    return {name: _read(name, sch) for name, sch in _FAMILY_SCHEMAS.items()}
+    return {
+        name: read_store(spark, schema, os.path.join(store, name))
+        for name, schema in _FAMILY_SCHEMAS.items()
+    }
 
 
 def compact_artifact_store(spark: SparkSession, store: str) -> int:
@@ -118,18 +114,11 @@ def compact_artifact_store(spark: SparkSession, store: str) -> int:
     ``partial_store.fold_partials``; this caller supplies the settled
     form — a pure union rewrite, because artifact partials are
     disjoint rows."""
-    from .partial_store import fold_partials
-
     folded = 0
     for name, schema in _FAMILY_SCHEMAS.items():
         fam_dir = os.path.join(store, name)
         folded += fold_partials(
-            fam_dir,
-            lambda fam_dir=fam_dir, schema=schema: (
-                spark.read.schema(schema)
-                .option("recursiveFileLookup", "true")
-                .parquet(fam_dir)
-            ),
+            fam_dir, lambda fam_dir=fam_dir, schema=schema: read_store(spark, schema, fam_dir)
         )
     return folded
 
@@ -161,25 +150,7 @@ def stream_artifact_index(
     src = os.path.join(work, "src")
     store = os.path.join(work, "store")
     staged = docs.select("doc_id", "text", "lang")
-
-    # stage the replay as contiguous-id chunks with increasing mtimes
-    # (FileStreamSource orders by mtime; one file per trigger → batches
-    # arrive in id order). Only the cut points touch the driver.
-    lo, hi = staged.agg(F.min("doc_id"), F.max("doc_id")).first()
-    chunks = 0 if lo is None else n_chunks
-    cuts = [
-        lo + (hi - lo + 1) * i // max(chunks, 1) for i in range(max(chunks, 1) + 1)
-    ] if chunks else []
-    base_t = _time.time()
-    os.makedirs(src)
-    for i in range(chunks):
-        d = os.path.join(src, f"chunk_{i:05d}")
-        staged.where(
-            (F.col("doc_id") >= cuts[i]) & (F.col("doc_id") < cuts[i + 1])
-        ).coalesce(1).write.mode("overwrite").parquet(d)
-        for root, _dirs, files in os.walk(d):
-            for fname in files:
-                os.utime(os.path.join(root, fname), (base_t + i, base_t + i))
+    stage_chunks(staged, *id_chunks(staged, "doc_id", n_chunks), src)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         # all four partials are per-doc functions of THIS batch's rows
@@ -219,20 +190,19 @@ def stream_artifact_index(
             _winnowing_fp_hashes(batch, "doc_id", "text", 8, 8), f"{store}/winnow", batch_id
         )
 
-    if chunks:
-        # per-batch partials are one chunk's rows; 32-partition
-        # shuffles × 4 writes × n_chunks batches is pure scheduling
-        # overhead at test scale (cf. dedup_stream's note). Lowered
-        # for the stream (scoped_conf); size to batch volume
-        # in production.
-        with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-            run_partial_stream(
-                spark,
-                src=src,
-                schema=staged.schema,
-                sink=sink,
-                ckpt=os.path.join(work, "ckpt"),
-            )
+    # per-batch partials are one chunk's rows; 32-partition
+    # shuffles × 4 writes × n_chunks batches is pure scheduling
+    # overhead at test scale (cf. dedup_stream's note). Lowered
+    # for the stream (scoped_conf); size to batch volume
+    # in production.
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
+        run_partial_stream(
+            spark,
+            src=src,
+            schema=staged.schema,
+            sink=sink,
+            ckpt=os.path.join(work, "ckpt"),
+        )
 
     out: dict = read_artifact_store(spark, store)
     out["store_dir"] = store

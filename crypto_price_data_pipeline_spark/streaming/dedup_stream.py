@@ -24,10 +24,10 @@ jars); at warehouse scale the same two tables live as a lakehouse
 table bucketed by (band, bucket) so the candidate join co-locates
 without a shuffle.
 
-Determinism contract: chunk files are named with zero-padded indices
-and fed ``maxFilesPerTrigger=1``, so micro-batches arrive in doc_id
-order; combined with step 5 the final survivor set equals the batch
-rule regardless of chunking (unit-tested 1-chunk ≡ 5-chunk ≡ batch
+The stream is staged, run and replayed by ``partial_store`` (id-range
+chunks, so micro-batches arrive in doc_id order; per-batch_id
+overwrite stores). With step 5 the final survivor set equals the batch
+rule regardless of chunking (unit-tested 1-chunk ≡ 3-chunk ≡ batch
 oracle). LSH recall caveats are the same as q_minhash_exact (pinned
 there); the planted sf dups sit at Jaccard 1.0, where banding recall
 is exact.
@@ -42,8 +42,12 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import band_buckets, minhash_signatures
 from ..session import scoped_conf, scratch_dir
+from .partial_store import id_chunks, run_partial_stream, stage_chunks
 from .partial_store import read_store as _read_store
 from .partial_store import write_batch as _write_batch
+
+POST_SCHEMA = "_id long, band int, bucket long"
+SH_SCHEMA = "_id long, _shingles array<long>"
 
 
 def make_batch_processor(
@@ -73,55 +77,57 @@ def make_batch_processor(
             batch, id_col, text_col, num_hashes, shingle_k, seed
         ).persist()
         bands_b = band_buckets(sig, id_col, num_hashes, bands).persist()
-        stored_post = _read_store(bspark, post_schema, post_store)
-        stored_sh = _read_store(bspark, sh_schema, sh_store)
+        try:
+            stored_post = _read_store(bspark, post_schema, post_store)
+            stored_sh = _read_store(bspark, sh_schema, sh_store)
 
-        probe = bands_b.select(F.col("_id").alias("id_b"), "band", "bucket")
-        # On replay, stored_post may already hold THIS batch's postings
-        # from the failed attempt — they are identical rows, and the
-        # candidate `.distinct()` collapses them, so the survivor set is
-        # unchanged; the overwrite below then rewrites identical bytes.
-        index = stored_post.unionByName(bands_b).select(
-            F.col("_id").alias("id_a"), "band", "bucket"
-        )
-        cand = (
-            probe.join(index, ["band", "bucket"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        all_sh = stored_sh.unionByName(
-            sig.select(F.col(id_col).alias("_id"), "_shingles")
-        ).dropDuplicates(["_id"])
-        jac = (
-            F.size(F.array_intersect("_sh_a", "_sh_b"))
-            / F.size(F.array_union("_sh_a", "_sh_b"))
-        ).alias("jaccard")
-        dropped = (
-            cand.join(
-                all_sh.select(
-                    F.col("_id").alias("id_a"), F.col("_shingles").alias("_sh_a")
-                ),
-                "id_a",
+            probe = bands_b.select(F.col("_id").alias("id_b"), "band", "bucket")
+            # On replay, stored_post may already hold THIS batch's postings
+            # from the failed attempt — they are identical rows, and the
+            # candidate `.distinct()` collapses them, so the survivor set is
+            # unchanged; the overwrite below then rewrites identical bytes.
+            index = stored_post.unionByName(bands_b).select(
+                F.col("_id").alias("id_a"), "band", "bucket"
             )
-            .join(
-                sig.select(F.col(id_col).alias("id_b"), F.col("_shingles").alias("_sh_b")),
-                "id_b",
+            cand = (
+                probe.join(index, ["band", "bucket"])
+                .where(F.col("id_a") < F.col("id_b"))
+                .select("id_a", "id_b")
+                .distinct()
             )
-            .select("id_b", jac)
-            .where(F.col("jaccard") >= threshold)
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
-        )
-        survivors = batch.join(dropped, id_col, "left_anti")
-        _write_batch(survivors.select(*cols), out, batch_id)
-        # store EVERY seen doc's postings + shingles (dropped included)
-        _write_batch(bands_b, post_store, batch_id)
-        _write_batch(
-            sig.select(F.col(id_col).alias("_id"), "_shingles"), sh_store, batch_id
-        )
-        sig.unpersist()
-        bands_b.unpersist()
+            all_sh = stored_sh.unionByName(
+                sig.select(F.col(id_col).alias("_id"), "_shingles")
+            ).dropDuplicates(["_id"])
+            jac = (
+                F.size(F.array_intersect("_sh_a", "_sh_b"))
+                / F.size(F.array_union("_sh_a", "_sh_b"))
+            ).alias("jaccard")
+            dropped = (
+                cand.join(
+                    all_sh.select(
+                        F.col("_id").alias("id_a"), F.col("_shingles").alias("_sh_a")
+                    ),
+                    "id_a",
+                )
+                .join(
+                    sig.select(F.col(id_col).alias("id_b"), F.col("_shingles").alias("_sh_b")),
+                    "id_b",
+                )
+                .select("id_b", jac)
+                .where(F.col("jaccard") >= threshold)
+                .select(F.col("id_b").alias(id_col))
+                .distinct()
+            )
+            survivors = batch.join(dropped, id_col, "left_anti")
+            _write_batch(survivors.select(*cols), out, batch_id)
+            # store EVERY seen doc's postings + shingles (dropped included)
+            _write_batch(bands_b, post_store, batch_id)
+            _write_batch(
+                sig.select(F.col(id_col).alias("_id"), "_shingles"), sh_store, batch_id
+            )
+        finally:
+            sig.unpersist()
+            bands_b.unpersist()
 
     return _process
 
@@ -146,44 +152,9 @@ def stream_minhash_dedup(
     work = scratch_dir("stream_dedup_")
     src = os.path.join(work, "src")
     out = os.path.join(work, "out")
-    post_store = os.path.join(work, "postings")
-    sh_store = os.path.join(work, "shingles")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(src)
-
     cols = [id_col, text_col, *(keep_cols or [])]
     staged = docs.select(*cols)
-    # stage the replay as n_chunks parquet dirs holding contiguous id
-    # ranges, with strictly increasing mtimes: FileStreamSource orders
-    # new files by modification time, so mtime + maxFilesPerTrigger=1
-    # → micro-batches arrive in id order (see module docstring for why
-    # order matters). Only the ~n_chunks cut points touch the driver;
-    # chunk writes are distributed filters, no toPandas/collect.
-    lo, hi = staged.agg(F.min(id_col), F.max(id_col)).first()
-    if lo is None:
-        n_chunks = 0
-    cuts = [
-        lo + (hi - lo + 1) * i // max(n_chunks, 1)
-        for i in range(max(n_chunks, 1) + 1)
-    ] if n_chunks else []
-    import time as _time
-
-    base = _time.time()
-    for i in range(n_chunks):
-        d = os.path.join(src, f"chunk_{i:05d}")
-        staged.where(
-            (F.col(id_col) >= cuts[i]) & (F.col(id_col) < cuts[i + 1])
-        ).coalesce(1).write.mode("overwrite").parquet(d)
-        for root, _dirs, files in os.walk(d):
-            for fname in files:
-                os.utime(os.path.join(root, fname), (base + i, base + i))
-
-    # seed empty stores so every batch can read them unconditionally
-    empty_post = spark.createDataFrame([], "_id long, band int, bucket long")
-    empty_sh = spark.createDataFrame([], "_id long, _shingles array<long>")
-    empty_post.write.mode("overwrite").parquet(post_store)
-    empty_sh.write.mode("overwrite").parquet(sh_store)
-    spark.createDataFrame([], staged.schema).write.mode("overwrite").parquet(out)
+    stage_chunks(staged, *id_chunks(staged, id_col, n_chunks), src)
 
     _process = make_batch_processor(
         cols=cols,
@@ -194,18 +165,11 @@ def stream_minhash_dedup(
         shingle_k=shingle_k,
         seed=seed,
         threshold=threshold,
-        post_store=post_store,
-        sh_store=sh_store,
+        post_store=os.path.join(work, "postings"),
+        sh_store=os.path.join(work, "shingles"),
         out=out,
-        post_schema=empty_post.schema,
-        sh_schema=empty_sh.schema,
-    )
-
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        post_schema=POST_SCHEMA,
+        sh_schema=SH_SCHEMA,
     )
     # per-batch state is tiny (one chunk's candidates); 32-partition
     # shuffles × several joins × n_chunks batches is pure scheduling
@@ -213,15 +177,11 @@ def stream_minhash_dedup(
     # stream by scoped_conf (cf. stream_click_attribution's note;
     # at production batch sizes, size this to candidate volume).
     with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        q = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_partial_stream(
+            spark,
+            src=src,
+            schema=staged.schema,
+            sink=_process,
+            ckpt=os.path.join(work, "ckpt"),
         )
-        q.awaitTermination()
-    return (
-        spark.read.schema(staged.schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(out)
-    )
+    return _read_store(spark, staged.schema, out)

@@ -1,5 +1,5 @@
-"""The per-batch_id partial store: one stream helper for every
-streamed≡batch twin in the registry.
+"""The per-batch_id partial store: one stager, one stream runner and
+one replay contract for every streamed twin in the registry.
 
 A twin is a batch query split as ``partial`` / ``merge`` / ``finish``:
 ``partial(rows)`` is a deterministic summary of any subset of the rows,
@@ -11,7 +11,8 @@ stream agree by construction.
 :func:`stream_partials` owns the stream around that split:
 
 - it writes the source frame as 3 single-file parquet chunks (one per
-  value of the caller's ``chunk`` Column) under ``<scratch>/src``;
+  value of the caller's ``chunk`` Column) under ``<scratch>/src``
+  (:func:`stage_chunks`);
 - :func:`run_partial_stream` replays them one file per micro-batch
   (``maxFilesPerTrigger=1``, ``availableNow``, checkpoint under
   ``<scratch>/ckpt``);
@@ -22,6 +23,15 @@ stream agree by construction.
 - it returns the stored partials read with ``partial(frame).schema``
   (:func:`read_store`): no inference job, and no schema string that
   can drift from what the sink wrote.
+
+The incremental stores (``dedup_stream``, ``semantic_stream``,
+``ann_stream``, ``artifact_stream``) keep state across batches, so they
+run the same stager and runner with their own ``foreachBatch`` body:
+they stage ``n_chunks`` contiguous id ranges (:func:`id_chunks`) so
+batches arrive in id order, and write each store with
+:func:`write_batch`, read it with :func:`read_store`. A replayed batch
+may find its own earlier writes in a store it reads; each body says
+why its output is still the same.
 
 The parameterized crash/restart test (``tests/test_stream_restart.py``)
 walks that ``src`` / ``ckpt`` / store layout: it injects a crash AFTER
@@ -42,9 +52,11 @@ callers never touch ``_test_hook``.
 from __future__ import annotations
 
 import os
+import time
 from typing import Callable
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..session import scratch_dir
@@ -110,9 +122,40 @@ def day_chunk_expr():
     which ``range(3)`` never writes — rows born on the 31st would be
     silently absent from the stream while present in the batch oracle.
     """
-    from pyspark.sql import functions as F
-
     return F.expr(f"least(cast((dayofmonth(ts) - 1) div 10 as int), {N_CHUNKS - 1})")
+
+
+def id_chunks(frame: "DataFrame", id_col: str, n: int) -> tuple["Column", int]:
+    """``(chunk, n)`` for :func:`stage_chunks`: ``n`` contiguous ranges
+    of ``id_col``, cut from one min/max aggregate (the only row
+    collected). Chunk ``i`` holds ``cut(i) <= id < cut(i + 1)`` with
+    ``cut(i) = lo + (hi - lo + 1) * i // n``; a null id is in no chunk.
+    An empty frame has no chunks (``n`` is 0)."""
+    lo, hi = frame.agg(F.min(id_col), F.max(id_col)).first()
+    if lo is None:
+        return F.lit(0), 0
+    ident = F.col(id_col)
+    chunk = F.when(ident.isNotNull(), 0)
+    for i in range(1, n):
+        chunk = chunk + (ident >= lo + (hi - lo + 1) * i // n).cast("int")
+    return chunk, n
+
+
+def stage_chunks(frame: "DataFrame", chunk: "Column", n: int, src: str) -> None:
+    """Write ``frame`` under ``src`` as ``n`` single-file parquet chunks,
+    ``chunk_<i>`` holding the rows where ``chunk == i``, with strictly
+    increasing mtimes: FileStreamSource hands new files over in mtime
+    order, so with one file per trigger batch ``i`` is chunk ``i``.
+    ``src`` exists afterwards even when ``n`` is 0, and a stream over it
+    then drains without a batch."""
+    os.makedirs(src, exist_ok=True)
+    base = time.time()
+    for i in range(n):
+        d = os.path.join(src, f"chunk_{i:05d}")
+        frame.where(chunk == i).coalesce(1).write.parquet(d)
+        for root, _dirs, files in os.walk(d):
+            for name in files:
+                os.utime(os.path.join(root, name), (base + i, base + i))
 
 
 def write_batch(df: "DataFrame", store: str, batch_id: int) -> None:
@@ -128,9 +171,13 @@ def write_batch(df: "DataFrame", store: str, batch_id: int) -> None:
 def read_store(spark: SparkSession, schema, store: str) -> "DataFrame":
     """The union of every ``batch_<id>`` subdirectory under ``store``,
     read with ``schema`` (no inference job), or with the schema of the
-    parquet footers when ``schema`` is None."""
+    parquet footers when ``schema`` is None. Given a schema, a store
+    that no batch has written yet reads as an empty frame of it."""
     reader = spark.read.option("recursiveFileLookup", "true")
-    return (reader if schema is None else reader.schema(schema)).parquet(store)
+    if schema is None:
+        return reader.parquet(store)
+    reader = reader.schema(schema)
+    return reader.parquet(store) if os.path.isdir(store) else reader.parquet()
 
 
 def stream_partials(
@@ -156,8 +203,7 @@ def stream_partials(
     check on what was written (the KMV sketch stamp)."""
     work = scratch_dir(prefix)
     src, store = os.path.join(work, "src"), os.path.join(work, "store")
-    for c in range(N_CHUNKS):
-        frame.where(chunk == c).coalesce(1).write.parquet(os.path.join(src, f"chunk_{c}"))
+    stage_chunks(frame, chunk, N_CHUNKS, src)
 
     def named(out) -> dict:
         return out if isinstance(out, dict) else {"": out}
@@ -180,8 +226,6 @@ def stream_partials(
 def merge_sums(stored: "DataFrame", *keys: str) -> "DataFrame":
     """The ``merge`` of additive partials: per ``keys`` group (one row
     when there are none), the sum of every other column."""
-    from pyspark.sql import functions as F
-
     return stored.groupBy(*keys).agg(
         *[F.sum(c).alias(c) for c in stored.columns if c not in keys]
     )

@@ -31,8 +31,8 @@ near-dup partner. The two differ only on chains whose middle links are
 all larger-id (a doc can be "rescued" by the anti-join rule); both are
 standard, and the oracle for each states its own rule.
 
-Exactly-once: per-``batch_id`` OVERWRITE subdirectories, identical to
-dedup_stream (replay rewrites identical bytes).
+Staging, the stream and its replay contract are ``partial_store``'s
+(id-range chunks, per-batch_id overwrite stores).
 """
 
 from __future__ import annotations
@@ -45,8 +45,11 @@ from pyspark.sql import functions as F
 from ..operators.similarity import cosine_pairs, norm_vectors
 from ..session import materialize, scratch_dir
 from ..operators.text import feature_hash_embed
+from .partial_store import id_chunks, run_partial_stream, stage_chunks
 from .partial_store import read_store as _read_store
 from .partial_store import write_batch as _write_batch
+
+VEC_SCHEMA = "_id long, _e array<double>, _n double"
 
 
 def make_semantic_processor(
@@ -112,36 +115,9 @@ def stream_semantic_dedup(
     work = scratch_dir("stream_semdedup_")
     src = os.path.join(work, "src")
     out = os.path.join(work, "out")
-    vec_store = os.path.join(work, "vectors")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(src)
-
     cols = [id_col, text_col, *(keep_cols or [])]
     staged = docs.select(*cols)
-    lo, hi = staged.agg(F.min(id_col), F.max(id_col)).first()
-    if lo is None:
-        n_chunks = 0
-    cuts = [
-        lo + (hi - lo + 1) * i // max(n_chunks, 1)
-        for i in range(max(n_chunks, 1) + 1)
-    ] if n_chunks else []
-    import time as _time
-
-    base = _time.time()
-    for i in range(n_chunks):
-        d = os.path.join(src, f"chunk_{i:05d}")
-        staged.where(
-            (F.col(id_col) >= cuts[i]) & (F.col(id_col) < cuts[i + 1])
-        ).coalesce(1).write.mode("overwrite").parquet(d)
-        for root, _dirs, files in os.walk(d):
-            for fname in files:
-                os.utime(os.path.join(root, fname), (base + i, base + i))
-
-    empty_vec = spark.createDataFrame(
-        [], "_id long, _e array<double>, _n double"
-    )
-    empty_vec.write.mode("overwrite").parquet(vec_store)
-    spark.createDataFrame([], staged.schema).write.mode("overwrite").parquet(out)
+    stage_chunks(staged, *id_chunks(staged, id_col, n_chunks), src)
 
     _process = make_semantic_processor(
         cols=cols,
@@ -149,20 +125,11 @@ def stream_semantic_dedup(
         text_col=text_col,
         dim=dim,
         threshold=threshold,
-        vec_store=vec_store,
+        vec_store=os.path.join(work, "vectors"),
         out=out,
-        vec_schema=empty_vec.schema,
+        vec_schema=VEC_SCHEMA,
     )
-
-    q = (
-        spark.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_partial_stream(
+        spark, src=src, schema=staged.schema, sink=_process, ckpt=os.path.join(work, "ckpt")
     )
-    q.awaitTermination()
     return _read_store(spark, staged.schema, out)

@@ -1,7 +1,8 @@
 """The partial-store stream helper (streaming/partial_store.stream_partials):
 its read-back matches the partial's schema without an inference job, on
-degenerate frames too, and every registry stream goes through it — so
-each one is covered by the crash/restart test."""
+degenerate frames too, and every registry stream goes through it or
+through an incremental store built on its stager and runner — so each
+one is covered by the crash/restart test."""
 
 from __future__ import annotations
 
@@ -18,6 +19,19 @@ from crypto_price_data_pipeline_spark.streaming import partial_store
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "crypto_price_data_pipeline_spark"
 QUERY_MODULES = sorted(PKG.glob("queries*.py"))
+STORE_MODULES = [
+    PKG / "streaming" / f"{name}.py"
+    for name in ("dedup_stream", "semantic_stream", "ann_stream", "artifact_stream")
+]
+# a registry query that calls one of these streams through partial_store
+STREAM_HELPERS = {
+    "stream_partials",
+    "stream_minhash_dedup",
+    "stream_semantic_dedup",
+    "stream_lsh_index",
+    "stream_text_lsh_index",
+    "stream_artifact_index",
+}
 
 
 def _partial(df):
@@ -66,25 +80,33 @@ def test_stream_partials_reads_back_without_inference(spark, monkeypatch, n_rows
         assert sorted(df.collect()) == sorted(want[name].collect()), name
 
 
+def _names(src: str) -> set[str]:
+    nodes = list(ast.walk(ast.parse(src)))
+    names = {n.id for n in nodes if isinstance(n, ast.Name)}
+    names |= {n.attr for n in nodes if isinstance(n, ast.Attribute)}
+    return names | {a.name for n in nodes if isinstance(n, ast.ImportFrom) for a in n.names}
+
+
 def test_no_query_module_runs_its_own_stream():
     """Registry queries stream through ``stream_partials``: none calls
-    the runner or writes a per-batch store path itself."""
+    the runner or writes a per-batch store path itself. The incremental
+    stores stage and run through ``partial_store`` too: none opens a
+    ``readStream`` or sets file mtimes itself."""
     offenders = []
     for path in QUERY_MODULES:
         src = path.read_text()
-        nodes = list(ast.walk(ast.parse(src)))
-        names = {n.id for n in nodes if isinstance(n, ast.Name)}
-        names |= {n.attr for n in nodes if isinstance(n, ast.Attribute)}
-        names |= {a.name for n in nodes if isinstance(n, ast.ImportFrom) for a in n.names}
-        if "run_partial_stream" in names:
+        if "run_partial_stream" in _names(src):
             offenders.append(f"{path.name}: run_partial_stream")
         if re.search(r"batch_\{batch_id", src):
             offenders.append(f"{path.name}: batch_{{batch_id}} path")
+    for path in STORE_MODULES:
+        names = _names(path.read_text())
+        offenders += [f"{path.name}: {name}" for name in ("readStream", "utime") if name in names]
     assert not offenders, offenders
 
 
 def _helper_callers() -> set[str]:
-    """Registered query functions whose body calls ``stream_partials``."""
+    """Registered query functions whose body calls one of ``STREAM_HELPERS``."""
     found = set()
     for path in QUERY_MODULES:
         for node in ast.parse(path.read_text()).body:
@@ -92,11 +114,11 @@ def _helper_callers() -> set[str]:
                 continue
             decorators = {ast.unparse(d).split("(")[0] for d in node.decorator_list}
             calls = {
-                ast.unparse(c.func)
+                ast.unparse(c.func).split(".")[-1]
                 for c in ast.walk(node)
                 if isinstance(c, ast.Call)
             }
-            if "query" in decorators and "stream_partials" in calls:
+            if "query" in decorators and calls & STREAM_HELPERS:
                 found.add(node.name)
     return found
 
@@ -108,5 +130,5 @@ def test_every_helper_stream_has_a_restart_test():
     from test_stream_restart import PARTIAL_STORE_STREAMS
 
     callers = _helper_callers()
-    assert "q_stream_ks" in callers, "lint found no helper caller"
+    assert {"q_stream_ks", "q_stream_dedup"} <= callers, "lint missed a helper caller"
     assert callers <= set(PARTIAL_STORE_STREAMS), callers - set(PARTIAL_STORE_STREAMS)

@@ -108,90 +108,3 @@ def test_stream_semantic_dedup_empty_and_guard(spark):
     assert out.count() == 0
     with pytest.raises(ValueError, match="dim"):
         feature_hash_embed(empty, dim=0)
-
-
-def test_stream_semantic_dedup_crash_and_restart_from_checkpoint(spark, tmp_path):
-    """Kill the semantic-dedup stream AFTER a batch's store writes land
-    but BEFORE its checkpoint commit, restart from the checkpoint: the
-    replayed batch overwrites its own subdirectories (and excludes its
-    own ids from the seen side), so the final survivor set still equals
-    the batch anti-join rule (exactly-once through the worst replay
-    window)."""
-    import os
-    import time
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from crypto_price_data_pipeline_spark.io.sources import load_table
-    from crypto_price_data_pipeline_spark.streaming.semantic_stream import (
-        _read_store,
-        make_semantic_processor,
-    )
-
-    docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-
-    src = tmp_path / "src"
-    src.mkdir()
-    base = time.time()
-    cuts = [lo + (hi - lo + 1) * i // 3 for i in range(4)]
-    for i in range(3):
-        d = str(src / f"chunk_{i}")
-        docs.where(
-            (F.col("doc_id") >= cuts[i]) & (F.col("doc_id") < cuts[i + 1])
-        ).coalesce(1).write.parquet(d)
-        for root, _dirs, files in os.walk(d):
-            for fname in files:
-                os.utime(os.path.join(root, fname), (base + i, base + i))
-
-    vec_store = str(tmp_path / "vectors")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    empty_vec = spark.createDataFrame([], "_id long, _e array<double>, _n double")
-    empty_vec.write.mode("overwrite").parquet(vec_store)
-    spark.createDataFrame([], docs.schema).write.mode("overwrite").parquet(out)
-
-    process = make_semantic_processor(
-        cols=["doc_id", "text"],
-        id_col="doc_id",
-        text_col="text",
-        dim=64,
-        threshold=0.995,
-        vec_store=vec_store,
-        out=out,
-        vec_schema=empty_vec.schema,
-    )
-
-    seen: list[int] = []
-
-    def crashing_sink(batch, batch_id):
-        process(batch, batch_id)
-        seen.append(batch_id)
-        if len(seen) == 2:
-            raise RuntimeError("injected crash after store write")
-
-    def run(sink):
-        return (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(str(src))
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    q = run(crashing_sink)
-    try:
-        q.awaitTermination()
-        raise AssertionError("expected the injected crash to surface")
-    except StreamingQueryException:
-        pass
-    assert len(seen) == 2
-
-    q = run(lambda b, bid: process(b, bid))
-    q.awaitTermination()
-
-    got = {r["doc_id"] for r in _read_store(spark, docs.schema, out).collect()}
-    assert got == _batch_rule_survivors(spark, docs)

@@ -4,6 +4,7 @@ every seen doc (dropped included)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crypto_price_data_pipeline_spark.io.sources import load_table
@@ -102,3 +103,35 @@ def test_stream_dedup_chunk_invariant_and_matches_batch(spark):
         assert got == want, f"n_chunks={n_chunks}"
         # survivors keep their payload columns intact
         assert surv.columns == ["doc_id", "text", "lang"]
+
+
+def test_failed_batch_leaves_no_cached_frame(spark, tmp_path, monkeypatch):
+    """The batch body caches its signature and band frames; a batch whose
+    store write raises must still unpersist both, so the session cache
+    is as empty after the failure as before the call."""
+    from crypto_price_data_pipeline_spark.streaming import dedup_stream
+
+    def failing_write(df, store, batch_id):
+        raise RuntimeError("store write failed")
+
+    docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    process = dedup_stream.make_batch_processor(
+        cols=["doc_id", "text"],
+        id_col="doc_id",
+        text_col="text",
+        num_hashes=64,
+        bands=32,
+        shingle_k=3,
+        seed=42,
+        threshold=0.4,
+        post_store=str(tmp_path / "postings"),
+        sh_store=str(tmp_path / "shingles"),
+        out=str(tmp_path / "out"),
+        post_schema=dedup_stream.POST_SCHEMA,
+        sh_schema=dedup_stream.SH_SCHEMA,
+    )
+    spark.catalog.clearCache()
+    monkeypatch.setattr(dedup_stream, "_write_batch", failing_write)
+    with pytest.raises(RuntimeError, match="store write failed"):
+        process(docs, 0)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -11,10 +11,10 @@ subdirectory with identical content. An append-semantics sink, a
 nondeterministic partial, or a batch-id drift across restarts would
 all fail the union comparison below.
 
-The three streams with bespoke store modules (dedup_stream,
-ann_stream, semantic_stream) keep their dedicated restart tests
-(test_streaming.py, test_semantic_stream.py); this file covers the
-partial-store family those tests did not.
+The incremental stores (dedup_stream, semantic_stream, ann_stream,
+artifact_stream) run through the same runner, so their registry
+streams are listed here too; the batch-equality tests next to each
+store check that an uninterrupted run is the batch result.
 """
 
 from __future__ import annotations
@@ -51,6 +51,10 @@ PARTIAL_STORE_STREAMS = [
     "q_stream_quantile",
     "q_stream_kmv_contamination",
     "q_stream_boilerplate",
+    "q_stream_dedup",
+    "q_stream_semantic_dedup",
+    "q_stream_ann",
+    "q_stream_text_ann",
 ]
 
 

@@ -453,86 +453,6 @@ def test_stream_lsh_index_empty_and_single_row(spark):
     ]
 
 
-def test_stream_lsh_index_crash_and_restart_from_checkpoint(spark, tmp_path):
-    """Kill the index-maintenance stream AFTER a batch's store write but
-    BEFORE its checkpoint commit, restart from the checkpoint: the
-    replayed batch overwrites its own subdirectory, so the final index
-    is row-identical to a one-shot batch build (exactly-once)."""
-    import os
-    import time
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from crypto_price_data_pipeline_spark.operators.similarity import (
-        hyperplane_lsh_buckets,
-    )
-    from crypto_price_data_pipeline_spark.streaming.ann_stream import (
-        read_index,
-        start_index_maintenance,
-        write_index_batch,
-    )
-
-    dim, bits, seed = 4, 4, 42
-    rows = [(i, [float(i % 5) - 2.0, 0.5 * i, -1.0, float(i % 3)]) for i in range(30)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    src = tmp_path / "src"
-    src.mkdir()
-    base = time.time()
-    for i in range(3):
-        d = str(src / f"chunk_{i}")
-        emb.where((F.col("vec_id") >= i * 10) & (F.col("vec_id") < (i + 1) * 10)) \
-            .coalesce(1).write.parquet(d)
-        for root, _dirs, files in os.walk(d):
-            for fname in files:
-                os.utime(os.path.join(root, fname), (base + i, base + i))
-
-    store = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-    indexed_schema = hyperplane_lsh_buckets(emb, dim, bits, seed).schema
-    spark.createDataFrame([], indexed_schema).write.mode("overwrite").parquet(store)
-
-    # crash after the 2nd batch's store write lands but before its
-    # checkpoint commit — the worst replay window
-    seen: list[int] = []
-
-    def crashing_sink(batch, batch_id):
-        write_index_batch(batch, store, batch_id, dim=dim, bits=bits, seed=seed)
-        seen.append(batch_id)
-        if len(seen) == 2:
-            raise RuntimeError("injected crash after store write")
-
-    q = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-        .writeStream.foreachBatch(crashing_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        raise AssertionError("expected the injected crash to surface")
-    except StreamingQueryException:
-        pass
-    assert len(seen) == 2
-
-    q = start_index_maintenance(
-        spark, str(src), store, ckpt, emb.schema, dim=dim, bits=bits, seed=seed
-    )
-    q.awaitTermination()
-
-    got = sorted(
-        (r["vec_id"], r["_bucket"]) for r in read_index(spark, store, indexed_schema).collect()
-    )
-    want = sorted(
-        (r["vec_id"], r["_bucket"]) for r in hyperplane_lsh_buckets(emb, dim, bits, seed).collect()
-    )
-    assert got == want and len(got) == 30
-
-
 def test_compact_rollup_folds_partials_and_preserves_result(spark, tmp_path):
     """compact_rollup must fold N per-batch subdirs into one settled
     partial with the read result unchanged, be idempotent, and stay
